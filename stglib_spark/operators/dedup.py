@@ -450,20 +450,6 @@ def _capped_join_sides(
     return left, right, cond
 
 
-def bucket_size_stats(
-    stacked: DataFrame, bucket_keys: list[str], max_bucket_size: int
-) -> DataFrame:
-    """Audit companion for ``oversize='drop'``: per-bucket member counts
-    restricted to buckets above the cap — one groupBy over the banded
-    member table (no pair join), cheap to run as a separate job when a
-    pipeline needs the exact dropped-bucket census."""
-    return (
-        stacked.groupBy(*bucket_keys)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket_size)
-    )
-
-
 def lsh_pairs_from_signatures(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -1067,148 +1053,62 @@ def simhash_near_pairs(
     return pairs.filter(F.col("hamming") <= F.lit(max_hamming)).distinct()
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 25,
-    method: str = "fastsv",
-    driver_solve_max_edges: int = 1_000_000,
-) -> DataFrame:
+# Edge-count threshold of duplicate_clusters' driver union-find path.
+# The Arrow transfer of 1M edges is 16 MB, but the unpacked Python int
+# lists and the union-find parent dict peak at a few hundred MB, which
+# is what the threshold budgets for.
+DRIVER_SOLVE_MAX_EDGES = 1_000_000
+# Round budget of the distributed path's FastSV loop; O(log n) rounds
+# resolve any graph shape, so hitting it means something is wrong.
+MAX_ITERATIONS = 25
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Resolve verified duplicate pairs into clusters: every document that
     appears in a pair gets the MINIMUM doc id reachable through the
     duplicate graph as its ``canonical_id`` (connected components). The
     training-pipeline contract downstream of LSH→verify: keep one doc per
-    cluster (``doc_id == canonical_id``), drop the rest.
+    cluster (``doc_id == canonical_id``), drop the rest. The first two
+    columns of ``pairs`` are the edge endpoints; edges with a null
+    endpoint are ignored.
 
-    ``method="fastsv"`` (default): Shiloach–Vishkin-style min-label
-    propagation with pointer jumping (the FastSV family, Zhang/Azad/
-    Buluç 2020). Labels are seeded with ``min(node, min(Γ(node)))`` —
-    one hooking step folded into the same shuffle that deduplicates the
-    node set — then each round does (a) *hooking*: take the min of the
-    neighbours' labels (equi-join + map-side-combinable min aggregate),
-    and (b) *shortcutting*: ``lbl ← lbl(lbl)``, a self-equi-join of the
-    label table that jumps each pointer one level toward its root.
-    Shortcutting makes label trees halve in height every round, so
-    convergence is O(log n) rounds on ANY graph shape — a diameter-200
-    near-dup chain resolves in ~8 rounds where plain propagation needs
-    200. Per round this is three equi-joins over a (node, lbl) table of
-    two longs per doc; at 1000-executor scale each is a plain shuffle
-    hash join keyed by node/label id (AQE handles the convergent-label
-    skew on the jump join's probe side).
+    The edge table is ``localCheckpoint``-ed and counted once (so the
+    LSH→verify chain runs exactly once), and the count picks one of two
+    paths with identical component-minimum output:
 
-    ``method="hash_to_min"``: the plain one-hop propagation (min of own
-    + neighbours' labels per round, no shortcut). One join cheaper per
-    round but rounds = graph diameter; kept for comparison and as the
-    minimal-shuffle variant for graphs known to be near-cliques.
-
-    ``method="star"``: the two-phase large-star/small-star edge rewrite
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-    which converges in O(log² n) rounds by rewriting the EDGE set —
-    useful when the edge table itself must shrink monotonically (it
-    contracts toward stars), at the cost of rewriting edges rather than
-    the smaller label table.
-
-    ``method="hybrid"`` (r15): ONE star-contraction round, then FastSV
-    over the contracted edges — near-dup graphs are dominated by
-    clone-cliques, which a single star round collapses, so FastSV
-    starts almost-converged and certifies in fewer checkpointed rounds
-    (sf10 A/B: 31 jobs vs 33, identical labels). This is the
-    distributed fallback ``method="auto"`` uses past the driver
-    threshold.
-
-    All methods ``localCheckpoint`` every round: each iteration's
-    logical plan references the previous one more than once, so with
-    cache-only lineage the analyzed plan grows 2^i copies of the
-    upstream pair pipeline (LSH → verify) and plan analysis/
-    stringification OOMs the driver after ~6 rounds — caching shortcuts
-    execution, never the logical plan. Checkpointing truncates lineage
-    to the materialized blocks (the GraphFrames pattern for iterative
-    algorithms); on a cluster where executor loss must be survivable,
-    point ``spark.sparkContext.setCheckpointDir`` at durable storage
-    and swap ``localCheckpoint`` for ``checkpoint``.
-
-    ``method="auto"``: adaptive strategy selection, the same bet a
-    broadcast join makes. The verified duplicate-pair graph is usually
-    TINY relative to the corpus (LSH→verify keeps ~0.1-1% of docs), and
-    every distributed round costs fixed scheduler latency regardless of
-    data size — so when the edge set fits comfortably on the driver
-    (``driver_solve_max_edges``, default 1M edges — honestly costed:
-    the Arrow transfer is 16 MB, but the unpacked Python int lists and
-    the union-find parent dict peak at a few hundred MB, which is what
-    the threshold must actually budget for), solve components with an
-    exact union-find there in one pass and skip the iteration entirely;
-    above the threshold, fall back to the distributed hybrid
-    (star-contract once, then FastSV). The edge
-    table is ``localCheckpoint``-ed before the count so the LSH→verify
-    chain runs exactly once either way. Identical output
-    (component-minimum canonical ids) by construction.
+    - at or below ``DRIVER_SOLVE_MAX_EDGES`` edges: an exact union-find
+      on the driver, in one pass. The verified duplicate-pair graph is
+      usually TINY relative to the corpus (LSH→verify keeps ~0.1-1% of
+      docs), and every distributed round costs fixed scheduler latency
+      regardless of data size — the same bet a broadcast join makes.
+    - above it: the distributed path. ONE large-star/small-star
+      contraction round (Kiveris et al., "Connected Components in
+      MapReduce and Beyond") collapses the clone-cliques that dominate
+      near-dup graphs, then FastSV min-label propagation with pointer
+      jumping (Zhang/Azad/Buluç 2020) certifies the fixpoint in
+      O(log n) rounds on any graph shape. More than ``MAX_ITERATIONS``
+      rounds raise instead of returning a partial labelling.
     """
-    if method == "auto":
-        edges_src = pairs.select(
+    edges_src = (
+        pairs.select(
             F.col(pairs.columns[0]).alias("doc_a"),
             F.col(pairs.columns[1]).alias("doc_b"),
-        ).localCheckpoint()
-        if edges_src.count() <= driver_solve_max_edges:
-            return _duplicate_clusters_driver(edges_src)
-        # distributed fallback = hybrid (r15, VERDICT r14 task #4): one
-        # star-contraction round, then FastSV — measured on the 31.7M-
-        # edge sf10 verified-pair graph: 31 scheduled jobs vs FastSV's
-        # 33 (one fewer checkpointed iteration round) with bit-identical
-        # labels (exceptAll both ways = 0; property tests pin parity on
-        # paths/cliques/random graphs/self-loops).
-        return _duplicate_clusters_hybrid(edges_src, max_iterations)
-    if method == "star":
-        return _duplicate_clusters_star(pairs, max_iterations)
-    if method == "hybrid":
-        return _duplicate_clusters_hybrid(pairs, max_iterations)
-    if method == "fastsv":
-        return _duplicate_clusters_fastsv(pairs, max_iterations)
-    if method != "hash_to_min":
-        raise ValueError(f"unknown method {method!r}")
-    sym = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    edges = sym.localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
+        )
+        .na.drop()
         .localCheckpoint()
     )
-    for _ in range(max_iterations):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_lbl = F.least(F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl")))
-        updated = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                new_lbl.alias("lbl"),
-                (new_lbl < F.col("lbl")).alias("__chg"),
-            )
-            .localCheckpoint()
-        )
-        # change detection is a scan of the just-checkpointed blocks —
-        # no extra join against the previous label table
-        changed = updated.filter(F.col("__chg")).count()
-        labels = updated.select("node", "lbl")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iterations} rounds"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id")
-    )
+    if edges_src.count() <= DRIVER_SOLVE_MAX_EDGES:
+        return _duplicate_clusters_driver(edges_src)
+    # measured on the 31.7M-edge sf10 verified-pair graph: 31 scheduled
+    # jobs vs plain FastSV's 33 (one fewer checkpointed iteration round)
+    # with bit-identical labels
+    return _duplicate_clusters_distributed(edges_src)
 
 
 def _duplicate_clusters_driver(pairs: DataFrame) -> DataFrame:
     """Exact union-find over a bounded, already-checkpointed edge table
-    (the ``method="auto"`` small-graph path — callers gate on edge
-    count BEFORE collecting). Union-by-minimum keeps each tree's root
+    (duplicate_clusters' small-graph path — it gates on edge count
+    BEFORE collecting). Union-by-minimum keeps each tree's root
     at the smallest id seen, so after path compression every node's
     root IS the component minimum — the same canonical_id FastSV
     converges to.
@@ -1216,15 +1116,14 @@ def _duplicate_clusters_driver(pairs: DataFrame) -> DataFrame:
     Edges land via Arrow (``toPandas`` + one C-level ``tolist`` pass
     per column → plain Python ints), not ``collect()``: PySpark Row
     objects cost ~10× the memory of the bare values, which is what made
-    the old 2M-edge default unsafe on small drivers (ADVICE r7). Null
-    endpoints are dropped BEFORE the transfer (ADVICE r8): a null edge
-    is meaningless for connected components, and pandas would promote
-    the whole int64 column to float64 — silently diverging union-find
-    keys and breaking the LongType re-create."""
+    the old 2M-edge default unsafe on small drivers (ADVICE r7).
+    duplicate_clusters drops null endpoints BEFORE the transfer (ADVICE
+    r8): a null edge is meaningless for connected components, and pandas
+    would promote the whole int64 column to float64 — silently
+    diverging union-find keys and breaking the LongType re-create."""
     import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
-    pairs = pairs.na.drop(subset=pairs.columns[:2])
     id_type = pairs.schema[0].dataType
     parent: dict = {}
 
@@ -1260,13 +1159,31 @@ def _duplicate_clusters_driver(pairs: DataFrame) -> DataFrame:
     return pairs.sparkSession.createDataFrame(pd_out, schema)
 
 
-def _duplicate_clusters_fastsv(pairs: DataFrame, max_iterations: int) -> DataFrame:
-    """Min-label propagation with pointer jumping (see duplicate_clusters
-    docstring). Labels only ever decrease and always hold the id of a
-    node in the same component, so the fixpoint — where every node's
-    label equals all its neighbours' labels and its label's label — is
-    the component minimum; a round with zero strict decreases certifies
-    it."""
+def _duplicate_clusters_fastsv(pairs: DataFrame) -> DataFrame:
+    """FastSV: Shiloach–Vishkin-style min-label propagation with pointer
+    jumping, the distributed path's inner loop. Labels are seeded with
+    ``min(node, min(Γ(node)))`` — one hooking step folded into the same
+    shuffle that deduplicates the node set — then each round does (a)
+    *hooking*: take the min of the neighbours' labels (equi-join +
+    map-side-combinable min aggregate), and (b) *shortcutting*:
+    ``lbl ← lbl(lbl)``, a self-equi-join of the label table that jumps
+    each pointer one level toward its root. Shortcutting makes label
+    trees halve in height every round, so convergence is O(log n)
+    rounds on ANY graph shape. Labels only ever decrease and always
+    hold the id of a node in the same component, so the fixpoint —
+    where every node's label equals all its neighbours' labels and its
+    label's label — is the component minimum; a round with zero strict
+    decreases certifies it.
+
+    Every round is ``localCheckpoint``-ed: each iteration's logical plan
+    references the previous one more than once, so with cache-only
+    lineage the analyzed plan grows 2^i copies of the upstream pair
+    pipeline and plan analysis OOMs the driver after ~6 rounds.
+    Checkpointing truncates lineage to the materialized blocks (the
+    GraphFrames pattern for iterative algorithms); on a cluster where
+    executor loss must be survivable, point
+    ``spark.sparkContext.setCheckpointDir`` at durable storage and swap
+    ``localCheckpoint`` for ``checkpoint``."""
     sym = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -1278,7 +1195,7 @@ def _duplicate_clusters_fastsv(pairs: DataFrame, max_iterations: int) -> DataFra
         .agg(F.least(F.min("src"), F.min("dst")).alias("lbl"))
         .localCheckpoint()
     )
-    for it in range(max_iterations):
+    for it in range(MAX_ITERATIONS):
         l1 = labels.select(F.col("node").alias("n1"), F.col("lbl").alias("f1"))
         # hooking: min over neighbours' current labels; the pre-round
         # label rides along as __old so change detection needs no third
@@ -1313,12 +1230,12 @@ def _duplicate_clusters_fastsv(pairs: DataFrame, max_iterations: int) -> DataFra
         # it is still one scheduled job per round — halving the cadence
         # costs at most one extra (no-op) compute round when the
         # fixpoint lands on an unchecked round
-        if it % 2 == 1 or it == max_iterations - 1:
+        if it % 2 == 1 or it == MAX_ITERATIONS - 1:
             if updated.filter(F.col("__chg")).count() == 0:
                 break
     else:
         raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iterations} rounds"
+            f"duplicate_clusters did not converge in {MAX_ITERATIONS} rounds"
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id")
@@ -1362,33 +1279,32 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _duplicate_clusters_hybrid(
-    pairs: DataFrame, max_iterations: int
-) -> DataFrame:
+def _duplicate_clusters_distributed(pairs: DataFrame) -> DataFrame:
     """ONE large-star/small-star contraction round, then FastSV over the
-    contracted edges (VERDICT r14 task #4). Near-dup graphs are
-    overwhelmingly clone-cliques and small stars; a single star round
-    collapses a clique to a star centred on its minimum, shrinking both
-    the edge COUNT (m·k → m per clique) and the label-tree HEIGHT that
-    FastSV's pointer jumping must halve away — so FastSV starts from an
-    almost-converged graph and certifies the fixpoint in 1-2 rounds
-    instead of O(log diameter).
+    contracted edges. Near-dup graphs are overwhelmingly clone-cliques
+    and small stars; a single star round collapses a clique to a star
+    centred on its minimum, shrinking both the edge COUNT (m·k → m per
+    clique) and the label-tree HEIGHT that FastSV's pointer jumping must
+    halve away — so FastSV starts from an almost-converged graph and
+    certifies the fixpoint in 1-2 rounds instead of O(log diameter).
 
     Correctness: the star rewrites preserve connected components, every
     rewrite points at a LOCAL MINIMUM of the same component (never a
-    foreign node), and every node incident to an edge stays incident to
-    an edge (a non-minimal node is re-pointed at a smaller clustermate;
-    a local minimum keeps its tree children) — so FastSV over the
-    contracted edges sees the same node universe and the same
-    components, and its fixpoint labels are the identical
-    component-minimum canonical ids. A belt-and-braces left-join maps
-    any original node back to itself if it ever vanished (cannot happen
-    for self-edge-free input; the join is one broadcast at label
-    scale)."""
+    foreign node), and every node incident to a non-self edge stays
+    incident to an edge (a non-minimal node is re-pointed at a smaller
+    clustermate; a local minimum keeps its tree children) — so FastSV
+    over the contracted edges labels exactly the nodes with a non-self
+    edge, with the component-minimum canonical ids. A node whose only
+    edges are self-loops is its own singleton cluster. Any other node
+    left without a label breaks that argument, and fails the query
+    through ``raise_error`` in the final projection instead of mapping
+    silently to itself."""
+    linked = F.col("doc_a") != F.col("doc_b")
     nodes = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .union(pairs.select(F.col("doc_b").alias("node")))
-        .distinct()
+        pairs.select(F.col("doc_a").alias("node"), linked.alias("__linked"))
+        .union(pairs.select(F.col("doc_b").alias("node"), linked))
+        .groupBy("node")
+        .agg(F.max("__linked").alias("__linked"))
     )
     edges0 = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1400,80 +1316,20 @@ def _duplicate_clusters_hybrid(
     labels = _duplicate_clusters_fastsv(
         contracted.select(
             F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
-        ),
-        max_iterations,
-    )
-    return (
-        nodes.join(labels, nodes.node == labels.doc_id, "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce(F.col("canonical_id"), F.col("node")).alias(
-                "canonical_id"
-            ),
         )
     )
-
-
-def _duplicate_clusters_star(pairs: DataFrame, max_iterations: int) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al. 2014, §3).
-
-    Each round rewrites the edge set:
-
-    - large-star: symmetrize; per node u with neighbours Γ(u), let
-      m = min(Γ(u) ∪ {u}); emit (v, m) for every v ∈ Γ(u) with v > u.
-      (Strictly-larger neighbours re-point at u's local minimum.)
-    - small-star: orient every edge toward the smaller id (u > v);
-      per node u, m = min(Γ(u) ∪ {u}) = min(Γ(u)); emit (v, m) for
-      v ∈ Γ(u) ∪ {u}, v ≠ m.
-
-    The fixpoint is a star per component centred on its minimum id.
-    Convergence is detected by an order-independent edge-set signature
-    (count + sum of xxhash64(src,dst)) over the checkpointed edges —
-    one cheap aggregate per round, no set-difference join. O(log² n)
-    rounds on any graph shape; each phase is one aggregate + one join
-    on edge tables, shuffle-partitioned by node id.
-    """
-    nodes = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .union(pairs.select(F.col("doc_b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def signature(e: DataFrame):
-        row = e.select(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: a bigint sum of 64-bit hashes overflows under
-            # ANSI mode
-            F.sum(
-                F.xxhash64(F.col("src"), F.col("dst")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    sig = signature(edges)
-    for _ in range(max_iterations):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
-        new_sig = signature(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters(star) did not converge in {max_iterations} rounds"
+    unlabelled = F.raise_error(
+        F.concat(
+            F.lit("duplicate_clusters: no component label for node "),
+            F.col("node").cast("string"),
         )
-    # fixpoint edges are (node, component-min) stars; the roots map to
-    # themselves
-    roots = nodes.join(edges, nodes.node == edges.src, "left_anti")
-    return (
-        edges.select(F.col("src").alias("doc_id"), F.col("dst").alias("canonical_id"))
-        .union(roots.select(F.col("node").alias("doc_id"), F.col("node")))
+    )
+    return nodes.join(labels, nodes.node == labels.doc_id, "left").select(
+        F.col("node").alias("doc_id"),
+        F.when(F.col("canonical_id").isNotNull(), F.col("canonical_id"))
+        .when(~F.col("__linked"), F.col("node"))
+        .otherwise(unlabelled)
+        .alias("canonical_id"),
     )
 
 

@@ -484,10 +484,21 @@ def hll_estimate(
         ).alias("__s_present"),
         *extras,
     )
-    extra_names = [
-        c for c in agg.columns
-        if c not in groups and c not in ("__n_present", "__s_present")
-    ]
+    # the aggregate's output is groups, the two sums, then the extras in
+    # order — so their names are positional, and any that collide with
+    # another column (or each other) would be duplicated or dropped
+    extra_names = agg.columns[len(groups) + 2:]
+    taken = set(groups) | {
+        "__n_present", "__s_present", "n_zero", "raw_est", "distinct_est"
+    }
+    clashes = sorted(
+        {c for c in extra_names if c in taken or extra_names.count(c) > 1}
+    )
+    if clashes:
+        raise ValueError(
+            f"hll_estimate extra_aggs aliases collide with other columns: "
+            f"{clashes}"
+        )
     n_zero = (F.lit(m) - F.col("__n_present")).cast("int")
     s_int = (
         F.col("__s_present")

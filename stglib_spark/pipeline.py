@@ -1182,9 +1182,7 @@ def run_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
         # LSH→verify chain per iteration) and keep the (doc_id,
         # canonical_id) map as its own artifact for downstream audits
         ver = spark.read.parquet(paths["dedup"])
-        clusters = dedup_ops.duplicate_clusters(
-            ver.select("doc_a", "doc_b"), method="auto"
-        )
+        clusters = dedup_ops.duplicate_clusters(ver.select("doc_a", "doc_b"))
         history.insert_history(
             "Resolved duplicate clusters (connected components) "
             "into components zone."
@@ -1558,7 +1556,7 @@ def run_media_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, st
     edge = spark.read.parquet(paths["pairs"]).select(
         F.col(pair_cols[0]).alias("doc_a"), F.col(pair_cols[1]).alias("doc_b")
     )
-    clusters = dedup_ops.duplicate_clusters(edge, method="auto")
+    clusters = dedup_ops.duplicate_clusters(edge)
     history.insert_history("Resolved duplicate clusters (canonical ids).")
     paths["clusters"] = _write_zone(clusters, config, "clusters", history)
     return paths
@@ -1593,15 +1591,15 @@ def run_corpus_all(
     pairs = spark.read.parquet(paths["dedup"]).filter(
         F.col("jaccard") >= threshold
     )
-    # method="auto" (r15): the verified duplicate graph is ~0.1-1% of
-    # docs, so below the bounded driver threshold components resolve in
+    # the verified duplicate graph is ~0.1-1% of docs, so at or below
+    # duplicate_clusters' edge threshold components resolve in
     # ONE exact union-find pass instead of O(log n) checkpointed FastSV
     # join rounds — each round is 2-3 sequential jobs of pure scheduler
     # latency at this edge scale (profiled: the FastSV tail was ~15 of
     # e2e_corpus_all_packs' 54 stages). Above the threshold the same
     # call falls back to distributed FastSV; identical component-minimum
-    # output either way (the contract every other caller already uses).
-    clusters = dedup_ops.duplicate_clusters(pairs, method="auto")
+    # output either way.
+    clusters = dedup_ops.duplicate_clusters(pairs)
     losers = clusters.filter(
         F.col("doc_id") != F.col("canonical_id")
     ).select(F.col("doc_id").alias(id_col))

@@ -2663,12 +2663,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain: LSH candidates → exact-Jaccard verify (≥ 0.5) → connected
     components over the verified-pair graph → (doc_id, canonical_id).
     Keep ``doc_id == canonical_id``, drop the rest. The Spark side is
-    dedup.duplicate_clusters(method="auto"): the verified edge set is
-    checkpointed and counted once; below the broadcast-scale threshold
-    components resolve with an exact driver union-find (the verified
-    dup graph is ~0.1-1% of docs, and distributed rounds cost fixed
-    scheduler latency), above it distributed FastSV min-label
-    propagation runs — identical component-minimum output either way.
+    dedup.duplicate_clusters: the verified edge set is checkpointed and
+    counted once; at or below its edge threshold components resolve
+    with an exact driver union-find (the verified dup graph is ~0.1-1%
+    of docs, and distributed rounds cost fixed scheduler latency), above
+    it one star-contraction round plus FastSV min-label propagation
+    runs — identical component-minimum output either way.
     The oracle walks the same graph with a recursive CTE."""
     docs = load_table(spark, sf_dir, "documents")
     cands = dedup_ops.minhash_lsh_pairs(
@@ -2677,9 +2677,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = dedup_ops.ngram_jaccard_pairs(
         docs, candidate_pairs=cands, shingle_n=1, threshold=0.5
     )
-    return dedup_ops.duplicate_clusters(
-        verified.select("doc_a", "doc_b"), method="auto"
-    )
+    return dedup_ops.duplicate_clusters(verified.select("doc_a", "doc_b"))
 
 
 @register(
@@ -8661,7 +8659,7 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEMDEDUP_T = 0.35
 # Broadcast the semantic-duplicate drop set only when it is bounded —
-# the same order as duplicate_clusters' driver_solve_max_edges (2M longs
+# the same order as dedup.DRIVER_SOLVE_MAX_EDGES (2M longs
 # ≈ 16 MB on the wire). Past this, a forced broadcast of an O(N) id set
 # would OOM every executor at 100-TB scale; a shuffled anti-join on one
 # long column is the safe fallback.

@@ -81,6 +81,19 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
     return spark
 
 
+def _context_key(spark: SparkSession) -> str | None:
+    """The key of the once-per-SparkContext guards below: the context's
+    applicationId, or None when the lookup fails. ``id(sparkContext)``
+    is no key, because a stopped and collected context's id can be
+    reused by the next one that ``__main__.main`` builds in the same
+    process; and a failed lookup must record nothing, or every later
+    context whose lookup also fails would be skipped."""
+    try:
+        return spark.sparkContext.applicationId
+    except Exception:
+        return None
+
+
 _WARMED: set[str] = set()
 
 
@@ -104,15 +117,13 @@ def _warm_collation_support(spark: SparkSession) -> None:
     time 32-task no-op job per call (profiled: 5 of
     e2e_attrs_fidelity_roundtrip's 20 stages were warm re-runs, ~2.5 s
     of its 5.2 s wall). The warm exists to initialize a SESSION, not a
-    call site; key on applicationId exactly like the package-ship guard.
+    call site; keyed by ``_context_key`` like the package-ship guard.
     """
-    try:
-        key = spark.sparkContext.applicationId
-    except Exception:
-        key = ""
+    key = _context_key(spark)
     if key in _WARMED:
         return
-    _WARMED.add(key)
+    if key is not None:
+        _WARMED.add(key)
     try:
         spark.sql("select lower('ΣAa'), upper('σaA'), initcap('ßx')").collect()
     except Exception:
@@ -120,7 +131,7 @@ def _warm_collation_support(spark: SparkSession) -> None:
     _warm_python_workers(spark)
 
 
-_SHIPPED: set[int] = set()
+_SHIPPED: set[str] = set()
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -131,11 +142,10 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     worker must import this package; that silently works in local mode
     only while the driver's cwd is the repo root. Shipping a zip via
     ``addPyFile`` is the same mechanism as ``spark-submit --py-files`` on
-    a real cluster. Idempotent per SparkContext."""
+    a real cluster. Idempotent per SparkContext (``_context_key``)."""
     import zipfile
 
-    sc = spark.sparkContext
-    key = id(sc)
+    key = _context_key(spark)
     if key in _SHIPPED:
         return
     try:
@@ -155,8 +165,9 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                         "stglib_spark", os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
-        sc.addPyFile(zip_path)
-        _SHIPPED.add(key)
+        spark.sparkContext.addPyFile(zip_path)
+        if key is not None:
+            _SHIPPED.add(key)
     except Exception:
         pass  # best-effort; local-mode repo-cwd runs work without it
 
@@ -314,8 +325,9 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
             size += s
         per_core = size // max(1, sc.defaultParallelism)
         split = min(
-            _max_partition_bytes(spark),
-            max(_open_cost_bytes(spark), per_core),
+            _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
+            max(_conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20),
+                per_core),
         )
         est_parts = max(1, size // max(1, split))
     except Exception:
@@ -331,10 +343,11 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
 _STATS_UNKNOWN_SENTINEL = 1 << 62
 
 
-def _open_cost_bytes(spark: SparkSession) -> int:
-    raw = str(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-    ).strip().lower()
+def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-size conf as an int: ``spark.sql.files.maxPartitionBytes``
+    prints its default as '134217728b', and user values may carry
+    k/m/g(b) suffixes. An unparsable value falls back to ``default``."""
+    raw = str(spark.conf.get(key, str(default))).strip().lower()
     mult = 1
     for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
                    ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
@@ -346,27 +359,7 @@ def _open_cost_bytes(spark: SparkSession) -> int:
     try:
         return max(1, int(raw) * mult)
     except ValueError:
-        return 4 * 1024 * 1024
-
-
-def _max_partition_bytes(spark: SparkSession) -> int:
-    """spark.sql.files.maxPartitionBytes as an int (the conf default
-    prints as '134217728b'; user values may carry k/m/g suffixes)."""
-    raw = str(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    ).strip().lower()
-    mult = 1
-    for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                   ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                   ("b", 1)):
-        if raw.endswith(suf):
-            raw = raw[: -len(suf)]
-            mult = m
-            break
-    try:
-        return max(1, int(raw) * mult)
-    except ValueError:
-        return 128 * 1024 * 1024
+        return default
 
 
 def pin_grouping(df: DataFrame, *keys: str, multiplier: int = 1) -> DataFrame:

@@ -283,13 +283,35 @@ def test_lsh_oversize_bucket_star_reduction(spark):
     )
 
 
-def test_duplicate_clusters_chain_triangle_singleton(spark):
-    """Connected components over the duplicate-pair graph: a 4-node chain
-    (diameter 3, needs >1 propagation round), a triangle, and an isolated
-    pair each collapse to the minimum member id; non-members never
-    appear."""
-    from stglib_spark.operators.dedup import duplicate_clusters
+CC_PATHS = ("driver", "distributed")
 
+
+def _clusters(pairs, path):
+    """duplicate_clusters on one of its two paths: ``driver`` is what
+    every small test graph selects, ``distributed`` is forced by
+    dropping the edge threshold below 0. The path is chosen inside the
+    call, so the frame may be collected after the patch is undone."""
+    from stglib_spark.operators import dedup
+
+    with pytest.MonkeyPatch.context() as mp:
+        if path == "distributed":
+            mp.setattr(dedup, "DRIVER_SOLVE_MAX_EDGES", -1)
+        return dedup.duplicate_clusters(pairs)
+
+
+def _cc_map(pairs, path):
+    """``{doc_id: canonical_id}`` from `_clusters`."""
+    return {
+        r["doc_id"]: r["canonical_id"]
+        for r in _clusters(pairs, path).collect()
+    }
+
+
+def test_duplicate_clusters_chain_triangle_singleton(spark):
+    """Connected components over the duplicate-pair graph, on both
+    paths: a 4-node chain (diameter 3, needs >1 propagation round), a
+    triangle, and an isolated pair each collapse to the minimum member
+    id; non-members never appear."""
     pairs = spark.createDataFrame(
         [
             # chain 10-11-12-13
@@ -301,122 +323,68 @@ def test_duplicate_clusters_chain_triangle_singleton(spark):
         ],
         "doc_a long, doc_b long",
     )
-    got = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(pairs).collect()
-    }
-    assert got == {
-        10: 10, 11: 10, 12: 10, 13: 10,
-        20: 20, 21: 20, 22: 20,
-        30: 30, 31: 30,
-    }
+    for path in CC_PATHS:
+        assert _cc_map(pairs, path) == {
+            10: 10, 11: 10, 12: 10, 13: 10,
+            20: 20, 21: 20, 22: 20,
+            30: 30, 31: 30,
+        }, path
 
 
-def test_duplicate_clusters_empty_and_nonconvergence_guard(spark):
-    """Empty pair set returns an empty frame; a graph whose diameter
-    exceeds max_iterations raises instead of returning a wrong partial
-    labelling."""
-    import pytest as _pytest
-
-    from stglib_spark.operators.dedup import duplicate_clusters
+def test_duplicate_clusters_empty_and_nonconvergence_guard(spark, monkeypatch):
+    """Empty pair set returns an empty frame on both paths; on the
+    distributed path a graph that needs more FastSV rounds than the
+    budget raises instead of returning a wrong partial labelling."""
+    from stglib_spark.operators import dedup
 
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert duplicate_clusters(empty).count() == 0
-
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
     )
-    with _pytest.raises(RuntimeError, match="converge"):
-        duplicate_clusters(chain, max_iterations=2)
-    got = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(chain).collect()
-    }
-    assert got == {i: 0 for i in range(7)}
+    for path in CC_PATHS:
+        assert _cc_map(empty, path) == {}, path
+        assert _cc_map(chain, path) == {i: 0 for i in range(7)}, path
+
+    path60 = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(dedup, "DRIVER_SOLVE_MAX_EDGES", -1)
+    monkeypatch.setattr(dedup, "MAX_ITERATIONS", 2)
+    with pytest.raises(RuntimeError, match="converge in 2 rounds"):
+        dedup.duplicate_clusters(path60)
 
 
 def test_duplicate_clusters_driver_string_ids(spark):
-    """The driver union-find's pandas/Arrow return path must preserve
-    string ids exactly (content-addressed jsonl corpora cluster on hash
-    strings, where a dtype coercion or ordering slip would silently
-    re-key the canonical map)."""
-    from stglib_spark.operators.dedup import duplicate_clusters
-
+    """Both paths must preserve string ids exactly (content-addressed
+    jsonl corpora cluster on hash strings, where a dtype coercion or
+    ordering slip would silently re-key the canonical map); the driver
+    path returns them through pandas/Arrow."""
     pairs = spark.createDataFrame(
         [("sha-b", "sha-a"), ("sha-c", "sha-b"), ("sha-x", "sha-y")],
         "doc_a string, doc_b string",
     )
-    got = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(pairs, method="auto").collect()
-    }
-    assert got == {
-        "sha-a": "sha-a", "sha-b": "sha-a", "sha-c": "sha-a",
-        "sha-x": "sha-x", "sha-y": "sha-x",
-    }
-    out_schema = duplicate_clusters(pairs, method="auto").schema
-    assert [f.dataType.simpleString() for f in out_schema] == [
-        "string", "string"
-    ]
-
-
-def test_duplicate_clusters_star_matches_hash_to_min(spark):
-    """The large-star/small-star variant labels the mixed fixture (chain +
-    triangle + isolated pair) identically to the default method."""
-    from stglib_spark.operators.dedup import duplicate_clusters
-
-    pairs = spark.createDataFrame(
-        [(10, 11), (11, 12), (12, 13), (20, 21), (21, 22), (20, 22), (30, 31)],
-        "doc_a long, doc_b long",
-    )
-    want = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(pairs).collect()
-    }
-    got = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(pairs, method="star").collect()
-    }
-    assert got == want
+    for path in CC_PATHS:
+        out = _clusters(pairs, path)
+        assert {r["doc_id"]: r["canonical_id"] for r in out.collect()} == {
+            "sha-a": "sha-a", "sha-b": "sha-a", "sha-c": "sha-a",
+            "sha-x": "sha-x", "sha-y": "sha-x",
+        }, path
+        assert [f.dataType.simpleString() for f in out.schema] == [
+            "string", "string"
+        ], path
 
 
 def test_duplicate_clusters_star_deep_path(spark):
     """A 200-edge path graph (diameter 200) is the pathological case for
-    diameter-bound propagation: plain hash-to-min cannot converge in 25
-    rounds, while both logarithmic methods — the default FastSV pointer
-    jumping (O(log n)) and the star alternation (O(log² n)) — label
-    every node with the path minimum well inside the same round budget."""
-    import pytest as _pytest
-
-    from stglib_spark.operators.dedup import duplicate_clusters
-
+    diameter-bound propagation: both paths label every node with the
+    path minimum — the driver union-find in one pass, the distributed
+    star round plus FastSV pointer jumping (O(log n) rounds) well inside
+    the default round budget."""
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc_a long, doc_b long"
     )
-    with _pytest.raises(RuntimeError, match="converge"):
-        duplicate_clusters(path, max_iterations=25, method="hash_to_min")
-    want = {i: 0 for i in range(201)}
-    got_default = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(path, max_iterations=25).collect()
-    }
-    assert got_default == want
-    got_star = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(path, max_iterations=25, method="star").collect()
-    }
-    assert got_star == want
-
-
-def test_duplicate_clusters_star_empty_and_unknown_method(spark):
-    import pytest as _pytest
-
-    from stglib_spark.operators.dedup import duplicate_clusters
-
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert duplicate_clusters(empty, method="star").count() == 0
-    with _pytest.raises(ValueError, match="method"):
-        duplicate_clusters(empty, method="bogus")
+    for cc_path in CC_PATHS:
+        assert _cc_map(path, cc_path) == {i: 0 for i in range(201)}, cc_path
 
 
 def test_duplicate_ngram_fraction_known_overlap(spark):
@@ -582,40 +550,113 @@ def test_url_domain_stats(spark):
 
 
 def test_duplicate_clusters_auto_paths_agree(spark):
-    """method='auto' must produce the identical (doc_id, canonical_id)
-    map on BOTH sides of its size gate: the driver union-find path
-    (edge count under the threshold) and the distributed FastSV
-    fallback (threshold forced to 0)."""
-    from stglib_spark.operators.dedup import duplicate_clusters
+    """The two paths duplicate_clusters picks by edge count — the driver
+    union-find and the distributed star round plus FastSV — return the
+    identical (doc_id, canonical_id) map on: the mixed fixture (chain,
+    triangle, isolated pair, self-loop-only node, edges arriving
+    big-id-first), a deep path, a clone-clique (the near-dup topology
+    the star round targets), edges with a null endpoint, and seeded
+    random graphs with self-loops."""
+    import random
+
+    mixed = [
+        (10, 11), (11, 12), (12, 13),
+        (20, 21), (21, 22), (20, 22),
+        (30, 31),
+        (40, 40),
+        # order-insensitivity: edges arriving big-id-first
+        (51, 50), (52, 51),
+    ]
+    fixtures = [
+        mixed,
+        # deep path (diameter 60)
+        [(i, i + 1) for i in range(60)],
+        # clone-clique
+        [(a, b) for a in range(50, 60) for b in range(50, 60) if a < b],
+        # edges with a null endpoint are ignored
+        [(10, 11), (None, 12), (13, None)],
+    ]
+    rng = random.Random(7)
+    for _ in range(3):
+        fixtures.append(
+            [(rng.randrange(40), rng.randrange(40)) for _ in range(50)]
+        )
+    for edges in fixtures:
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        driver = _cc_map(pairs, "driver")
+        assert driver == _cc_map(pairs, "distributed"), edges
+        if edges is mixed:
+            assert driver == {
+                10: 10, 11: 10, 12: 10, 13: 10,
+                20: 20, 21: 20, 22: 20,
+                30: 30, 31: 30,
+                40: 40,
+                50: 50, 51: 50, 52: 50,
+            }
+
+
+def test_duplicate_clusters_hybrid_matches_fastsv(spark):
+    """The distributed path (one star-contraction round, then FastSV)
+    labels the mixed fixture, a deep path, a clone-clique, random
+    graphs, and degenerate inputs identically to FastSV alone on the
+    uncontracted edges — including self-loop-only nodes, which the star
+    round drops and the final node join keeps as singletons."""
+    import random
+
+    from stglib_spark.operators import dedup
+
+    def fastsv(pairs):
+        return {
+            r["doc_id"]: r["canonical_id"]
+            for r in dedup._duplicate_clusters_fastsv(pairs).collect()
+        }
+
+    fixtures = [
+        # chain + triangle + isolated pair + self-loop-only node
+        [(10, 11), (11, 12), (12, 13), (20, 21), (21, 22), (20, 22),
+         (30, 31), (40, 40)],
+        # deep path (diameter 60)
+        [(i, i + 1) for i in range(60)],
+        # clone-clique (the near-dup topology the star round targets)
+        [(a, b) for a in range(50, 60) for b in range(50, 60) if a < b],
+    ]
+    rng = random.Random(7)
+    for _ in range(3):
+        n = 40
+        fixtures.append(
+            [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
+        )
+    for edges in fixtures:
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        assert _cc_map(pairs, "distributed") == fastsv(pairs), edges
+
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert _clusters(empty, "distributed").count() == 0
+
+
+def test_duplicate_clusters_unlabelled_node_raises(spark, monkeypatch):
+    """The distributed path's final label join must not map a node that
+    FastSV failed to label onto itself: with one label dropped from the
+    FastSV result, the query fails naming the node. A self-loop-only
+    node (40) has no FastSV label by design and stays a singleton."""
+    from pyspark.sql import functions as F
+
+    from stglib_spark.operators import dedup
 
     pairs = spark.createDataFrame(
-        [
-            (10, 11), (11, 12), (12, 13),
-            (20, 21), (21, 22), (20, 22),
-            (30, 31),
-            # order-insensitivity: edges arriving big-id-first
-            (41, 40), (42, 41),
-        ],
-        "doc_a long, doc_b long",
+        [(10, 11), (11, 12), (40, 40)], "doc_a long, doc_b long"
     )
-    expect = {
-        10: 10, 11: 10, 12: 10, 13: 10,
-        20: 20, 21: 20, 22: 20,
-        30: 30, 31: 30,
-        40: 40, 41: 40, 42: 40,
-    }
-    driver = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(pairs, method="auto").collect()
-    }
-    dist = {
-        r["doc_id"]: r["canonical_id"]
-        for r in duplicate_clusters(
-            pairs, method="auto", driver_solve_max_edges=0
-        ).collect()
-    }
-    assert driver == expect
-    assert dist == expect
+    assert _cc_map(pairs, "distributed") == {10: 10, 11: 10, 12: 10, 40: 40}
+
+    fastsv = dedup._duplicate_clusters_fastsv
+    monkeypatch.setattr(
+        dedup,
+        "_duplicate_clusters_fastsv",
+        lambda p: fastsv(p).filter(F.col("doc_id") != 12),
+    )
+    monkeypatch.setattr(dedup, "DRIVER_SOLVE_MAX_EDGES", -1)
+    with pytest.raises(Exception, match="no component label for node 12"):
+        dedup.duplicate_clusters(pairs).collect()
 
 
 def test_sql_map_literal_escaping(spark):
@@ -1002,6 +1043,29 @@ def test_hll_extra_aggs_fused_truth(spark):
     assert hll_estimate(
         hll_registers(df, "tok", ["g"], p=8), ["g"], p=8
     ).columns == ["g", "n_zero", "raw_est", "distinct_est"]
+
+
+@pytest.mark.parametrize(
+    "aliases",
+    [
+        ["n_zero"], ["raw_est"], ["distinct_est"], ["g"],
+        ["__n_present"], ["__s_present"], ["t", "t"],
+    ],
+)
+def test_hll_extra_aggs_alias_collision_raises(spark, aliases):
+    """An ``extra_aggs`` alias that matches an output column, a group
+    column, an internal sum or another extra would be silently
+    duplicated or dropped from the result; it raises instead."""
+    from pyspark.sql import functions as F
+    from stglib_spark.operators.sketches import hll_estimate, hll_registers
+
+    df = spark.createDataFrame([("a", "x"), ("b", "y")], "g string, tok string")
+    regs = hll_registers(df, "tok", ["g"], p=8)
+    with pytest.raises(ValueError, match="collide"):
+        hll_estimate(
+            regs, ["g"], p=8,
+            extra_aggs=[F.max("max_rank").alias(a) for a in aliases],
+        )
 
 
 def test_bloom_filter_no_fn_fp_and_merge(spark):
@@ -1679,44 +1743,3 @@ def test_shift_time_drift_rounds_half_even(spark):
     ).dt.round("1s")
     got = [pd.Timestamp(t) for t in out["time"]]
     assert got == list(expect), (got, list(expect))
-
-
-def test_duplicate_clusters_hybrid_matches_fastsv(spark):
-    """The r15 hybrid (one star-contraction round, then FastSV) labels
-    the mixed fixture, a deep path, a clone-clique, random graphs, and
-    degenerate inputs identically to the default FastSV — including
-    self-loop-only nodes, which survive via the belt-and-braces node
-    join."""
-    import random
-
-    from stglib_spark.operators.dedup import duplicate_clusters
-
-    def labels(pairs, method):
-        return {
-            r["doc_id"]: r["canonical_id"]
-            for r in duplicate_clusters(
-                pairs, max_iterations=25, method=method
-            ).collect()
-        }
-
-    fixtures = [
-        # chain + triangle + isolated pair + self-loop-only node
-        [(10, 11), (11, 12), (12, 13), (20, 21), (21, 22), (20, 22),
-         (30, 31), (40, 40)],
-        # deep path (diameter 60)
-        [(i, i + 1) for i in range(60)],
-        # clone-clique (the near-dup topology the hybrid targets)
-        [(a, b) for a in range(50, 60) for b in range(50, 60) if a < b],
-    ]
-    rng = random.Random(7)
-    for _ in range(3):
-        n = 40
-        fixtures.append(
-            [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
-        )
-    for edges in fixtures:
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        assert labels(pairs, "hybrid") == labels(pairs, "fastsv"), edges
-
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert duplicate_clusters(empty, method="hybrid").count() == 0

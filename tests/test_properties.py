@@ -639,7 +639,7 @@ def test_video_star_mode_min_n_close_interaction(spark):
     )
     clusters = {
         r.doc_id: r.canonical_id
-        for r in duplicate_clusters(edges, method="fastsv").collect()
+        for r in duplicate_clusters(edges).collect()
     }
     assert clusters == {0: 0, 1: 0, 2: 0}, clusters
 
