@@ -7,8 +7,8 @@ alpha, filters 0-4), baseline JFIF JPEG (Annex-K huffman + dequant +
 8×8 iDCT + YCbCr, sampling factors up to 2 so 4:4:4/4:2:2/4:2:0 all
 decode), RIFF WAV (PCM 8/16-bit), and AVI (uncompressed DIB + MJPG
 streams) — plus numpy-vectorized resize and feature pooling. These back
-the ``decode_stub=False`` path of
-:mod:`stglib_spark.operators.multimodal`; progressive JPEG and
+the decoding operators of :mod:`stglib_spark.operators.multimodal`;
+progressive JPEG and
 inter-frame video codecs (H.264…) still raise ``NotImplementedError``
 at the same plug point.
 

@@ -203,16 +203,16 @@ def _minhash_from_exploded(
 #: self-joins. A bucket with m members emits m·(m−1)/2 pairs, so one
 #: mega-duplicate bucket (every boilerplate page hashing identically)
 #: turns the join quadratic no matter what AQE does to the *input* skew
-#: — the blowup is in the OUTPUT. Buckets above the cap are min-star
-#: reduced (each member pairs with the bucket's minimum id only):
-#: connectivity-equivalent for raw-candidate clustering consumers,
-#: linear in bucket size. Bucket members share ONE band hash (r =
-#: num_hashes/bands minhashes — collision probability ~ s^r for true
-#: Jaccard s), NOT the full signature, so a mega-bucket can mix true
-#: dups with moderately-similar chance colliders; see the star-center
-#: caveat in ``lsh_pairs_from_signatures`` for what that means under a
-#: downstream exact-verify threshold. 4096 is far above any honest
-#: near-dup bucket and far above test scale.
+#: — the blowup is in the OUTPUT. Buckets above the cap are star
+#: reduced (each member pairs with the bucket's two smallest members
+#: only): connectivity-equivalent for raw-candidate clustering
+#: consumers, linear in bucket size. Bucket members share ONE band hash
+#: (r = num_hashes/bands minhashes — collision probability ~ s^r for
+#: true Jaccard s), NOT the full signature, so a mega-bucket can mix
+#: true dups with moderately-similar chance colliders; see the
+#: star-center caveat in ``lsh_pairs_from_signatures`` for what that
+#: means under a downstream exact-verify threshold. 4096 is far above
+#: any honest near-dup bucket and far above test scale.
 DEFAULT_MAX_BUCKET_SIZE = 4096
 
 
@@ -225,9 +225,7 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     portable: bool = False,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    oversize: str = "star",
     observation=None,
-    star_centers: int = 2,
 ) -> DataFrame:
     """LSH candidate pairs: split the signature into ``bands`` bands of
     r = num_hashes/bands rows; documents sharing any (band, band-hash)
@@ -238,11 +236,10 @@ def minhash_lsh_pairs(
     Scale shape: self-join happens per bucket only — the band hash is the
     join key, so input skew is AQE-splittable, and the OUTPUT blowup of a
     mega-duplicate bucket (m²/2 pairs) is bounded by ``max_bucket_size``
-    min-star reduction (see ``lsh_pairs_from_signatures``)."""
+    star reduction (see ``lsh_pairs_from_signatures``)."""
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, portable)
     return lsh_pairs_from_signatures(
-        sigs, id_col, num_hashes, bands, portable,
-        max_bucket_size, oversize, observation, star_centers,
+        sigs, id_col, num_hashes, bands, portable, max_bucket_size, observation
     )
 
 
@@ -252,10 +249,9 @@ def _annotate_bucket_sizes(
     rep_cols: list[str],
     max_bucket_size: int,
     observation=None,
-    star_centers: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
-    """Front half of the bucket-size guard on the LSH / pigeonhole
-    candidate self-joins. Returns ``(pinned, annotated)``:
+    """Front half of the bucket-size guard on the LSH / pigeonhole /
+    winnow candidate self-joins. Returns ``(pinned, annotated)``:
 
     - ``pinned`` — the member table, notnull-pre-filtered and pinned
       behind an explicit ``repartition(bucket_keys)`` exchange. The
@@ -265,13 +261,7 @@ def _annotate_bucket_sizes(
       members of small buckets carry ``__bsz = NULL`` and oversize
       members carry their count and the bucket's minimum representative
       (``__mn``; a flat column for a single ``rep_cols`` entry, a
-      struct otherwise). With ``star_centers=2`` oversize members also
-      carry the bucket's SECOND-smallest representative (``__mn2``) so
-      star mode can emit two stars per oversize bucket — severing a
-      verified cluster then needs BOTH centers to be chance
-      band-colliders instead of one (ADVICE r9/r10). The pair join's
-      LEFT side filters this to ``__bsz IS NULL`` rows plus each
-      oversize bucket's center(s).
+      struct otherwise).
 
     Plan shape (r10 — the r9 every-row annotate join adjudicated at
     +40-55% on the LSH bench pair and replaced): the only information
@@ -290,9 +280,10 @@ def _annotate_bucket_sizes(
 
     ``observation`` (a ``pyspark.sql.Observation``) reports the exact
     oversize member/bucket counts during the job — no silent caps, no
-    extra action, in star AND drop mode. It hangs on the per-bucket
-    aggregate, which executes exactly once as the broadcast build
-    side (the pair join's left branch is the only consumer)."""
+    extra action, whether the caller star-reduces or drops the
+    oversize buckets. It hangs on the per-bucket aggregate, which
+    executes exactly once as the broadcast build side (the pair join's
+    left branch is the only consumer)."""
     for c in [*bucket_keys, *rep_cols]:
         stacked = stacked.filter(F.col(c).isNotNull())
     pinned = stacked.repartition(*[F.col(c) for c in bucket_keys])
@@ -303,13 +294,14 @@ def _annotate_bucket_sizes(
     )
     # __bsz counts the representative column, NOT lit(1) — identical
     # under the notnull pre-filter above, but it keeps rep_cols[0] alive
-    # in the census branch after column pruning. In drop mode __mn is
-    # pruned as dead, and with count(lit(1)) the census would then
-    # project the member table down to the bucket keys BELOW the pinned
-    # exchange — a different canonical subtree, so the exchange is not
-    # reused and the whole upstream (kernel/shingle/hash chain) executes
-    # a second time just to feed the stop list (measured r14 on
-    # dedup_winnow_candidates: two full MapInPandas stages per run).
+    # in the census branch after column pruning. When the caller drops
+    # oversize buckets __mn is pruned as dead, and with count(lit(1))
+    # the census would then project the member table down to the bucket
+    # keys BELOW the pinned exchange — a different canonical subtree, so
+    # the exchange is not reused and the whole upstream (kernel/shingle/
+    # hash chain) executes a second time just to feed the stop list
+    # (measured r14 on dedup_winnow_candidates: two full MapInPandas
+    # stages per run; pinned by test_winnow_candidates_run_the_kernel_once).
     per_bucket = pinned.groupBy(*bucket_keys).agg(
         F.count(F.col(rep_cols[0])).alias("__bsz"), mn.alias("__mn")
     )
@@ -331,60 +323,35 @@ def _annotate_bucket_sizes(
     # 1e10-doc scale can push the oversize set past driver memory, where
     # a forced F.broadcast() would OOM the driver while a shuffle join
     # degrades gracefully (r10 review finding)
-    annotated = pinned.join(over, bucket_keys, "left")
-    if star_centers >= 2:
-        # second-smallest representative, computed from `annotated`
-        # rather than a second census pass: the agg input is map-side
-        # filtered to oversize members only, so in the common
-        # no-oversize case AQE's null-column Project makes the
-        # isNotNull filter constant-false and the whole subtree folds
-        # to an empty relation — the census still executes exactly once
-        # (as the annotate join's broadcast build). Oversize buckets
-        # have ≥ 2 distinct representatives by construction (one member
-        # row per (representative, bucket)), so __mn2 is non-null for
-        # every oversize bucket; the join stays null-safe regardless.
-        rep = (
-            F.col(rep_cols[0])
-            if len(rep_cols) == 1
-            else F.struct(*[F.col(c) for c in rep_cols])
-        )
-        mn2 = (
-            annotated.filter(
-                F.col("__bsz").isNotNull() & (rep != F.col("__mn"))
-            )
-            .groupBy(*bucket_keys)
-            .agg(F.min(rep).alias("__mn2"))
-        )
-        annotated = annotated.join(mn2, bucket_keys, "left")
-    return pinned, annotated
+    return pinned, pinned.join(over, bucket_keys, "left")
 
 
-# Capped candidate self-join recipe over an `_annotate_bucket_sizes`
-# table (used by lsh_pairs_from_signatures / simhash_near_pairs /
-# winnow_candidate_pairs / multimodal.video_phash_near_pairs).
-# `annotated` carries __bsz/__mn/__mn2 ONLY for members of oversize
-# buckets (NULL otherwise — the broadcast left join against the
-# oversize key set):
+# Capped candidate self-join recipe (`_capped_join_sides`, used by
+# lsh_pairs_from_signatures / simhash_near_pairs /
+# multimodal.video_phash_near_pairs) over an `_annotate_bucket_sizes`
+# table, which carries __bsz/__mn ONLY for members of oversize buckets
+# (NULL otherwise); __mn2 is the oversize bucket's second-smallest
+# member and `order` the column a pair must differ in (the member
+# itself, or the video id of a (video, frame) member):
 #
-#   left  = annotated WHERE __bsz IS NULL
-#                        OR member IN (__mn, __mn2)            ("star")
-#           annotated WHERE __bsz IS NULL                      ("drop")
+#   left  = annotated WHERE __bsz IS NULL OR member IN (__mn, __mn2)
 #   right = pinned   (the raw member table — needs no annotation)
 #   cond  = keys equal AND (
-#             (l.__bsz IS NULL      AND l.order <  r.order)    -- small
-#          OR (l member == l.__mn   AND l.order != r.order)    -- star 1
-#          OR (l member == l.__mn2  AND r.order >  l.order) )  -- star 2
+#             (l.__bsz IS NULL     AND l.order <  r.order)      -- small
+#          OR (l member == l.__mn  AND l.order != r.order)      -- star 1
+#          OR (l member == l.__mn2 AND r member > l member
+#                                  AND l.order != r.order) )    -- star 2
 #
 # Small buckets emit every ordered pair; an oversize bucket contributes
-# exactly TWO left rows (its two smallest members — the default
-# ``star_centers=2``), so its output AND its join enumeration stay
-# LINEAR in bucket size. The star-2 branch uses a strict > so the
-# mn–mn2 edge is emitted once (by the mn row) and every emitted pair
-# stays canonically ordered (mn is the bucket minimum; any r > mn2
-# exceeds both centers). Two centers mean a downstream exact-verify
+# exactly TWO left rows (its two smallest members), so its output AND
+# its join enumeration stay LINEAR in bucket size. The star-2 branch
+# uses a strict > so the mn–mn2 edge is emitted once (by the mn row)
+# and every emitted pair stays canonically ordered (mn is the bucket
+# minimum; any r > mn2 exceeds both centers, and lexicographic member
+# order makes a greater member with a different order value strictly
+# greater in it). Two centers mean a downstream exact-verify
 # (``jaccard_threshold > 0``) severs an oversize bucket's cluster only
-# if BOTH centers are chance band-colliders — quadratically less
-# likely than the single-center caveat documented below. One
+# if BOTH centers are chance band-colliders (ADVICE r9/r10). One
 # self-join, no union: both sides reuse the same pinned exchange,
 # giving the identical two-branch plan shape as an unguarded pair
 # join. The star side's payload (simhash/phash for the Hamming verify)
@@ -393,61 +360,68 @@ def _annotate_bucket_sizes(
 
 
 def _capped_join_sides(
-    pinned: DataFrame,
-    annotated: DataFrame,
-    id_col: str,
-    oversize: str,
-    star_centers: int = 2,
-):
-    """Back half of the bucket-size guard for the single-id-column
-    consumers (LSH / SimHash / winnow buckets): build the pair join's
-    (left, right, extra-condition) per the recipe comment above.
-    ``multimodal.video_phash_near_pairs`` inlines its own variant — its
-    ordering key (vid) differs from its representative (vid, frame)."""
-    if oversize == "drop":
-        left = annotated.filter(F.col("__bsz").isNull())
-        for c in ("__mn", "__mn2"):
-            if c in left.columns:
-                left = left.drop(c)
-        left = left.alias("l")
-        right = pinned.hint("shuffle_hash").alias("r")
-        return left, right, F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    if oversize != "star":
-        raise ValueError(
-            f"oversize must be 'star' or 'drop', got {oversize!r}"
+    stacked: DataFrame,
+    bucket_keys: list[str],
+    member_cols: list[str],
+    order_col: str,
+    max_bucket_size: int | None,
+    observation=None,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """``(left, right, extra join condition)`` of the bucket self-join
+    over ``stacked`` per the recipe comment above; the caller adds the
+    bucket-key equality. ``member_cols`` identify one member row of a
+    bucket. ``max_bucket_size=None`` is the unguarded join: every pair
+    of every bucket with ``l.order_col < r.order_col``."""
+    if max_bucket_size is None:
+        cond = F.col(f"l.{order_col}") < F.col(f"r.{order_col}")
+        return stacked.alias("l"), stacked.alias("r"), cond
+    pinned, annotated = _annotate_bucket_sizes(
+        stacked, bucket_keys, member_cols, max_bucket_size, observation
+    )
+
+    def member(prefix: str = "") -> Column:
+        cols = [F.col(prefix + c) for c in member_cols]
+        return cols[0] if len(cols) == 1 else F.struct(*cols)
+
+    # second-smallest member, computed from `annotated` rather than a
+    # second census pass: the agg input is map-side filtered to
+    # oversize members only, so in the common no-oversize case AQE's
+    # null-column Project makes the isNotNull filter constant-false and
+    # the whole subtree folds to an empty relation — the census still
+    # executes exactly once (as the annotate join's broadcast build).
+    # Oversize buckets have ≥ 2 distinct members by construction, so
+    # __mn2 is non-null for every oversize bucket; the join stays
+    # null-safe regardless.
+    mn2 = (
+        annotated.filter(
+            F.col("__bsz").isNotNull() & (member() != F.col("__mn"))
         )
-    keep_left = F.col("__bsz").isNull() | (F.col(id_col) == F.col("__mn"))
-    if star_centers >= 2:
-        keep_left = keep_left | F.col(id_col).eqNullSafe(F.col("__mn2"))
-        left = (
-            annotated.filter(keep_left)
-            .withColumn("__is2", F.col(id_col).eqNullSafe(F.col("__mn2")))
-            .drop("__mn", "__mn2")
-            .alias("l")
+        .groupBy(*bucket_keys)
+        .agg(F.min(member()).alias("__mn2"))
+    )
+    annotated = annotated.join(mn2, bucket_keys, "left")
+    is_mn2 = member().eqNullSafe(F.col("__mn2"))
+    left = (
+        annotated.filter(
+            F.col("__bsz").isNull() | (member() == F.col("__mn")) | is_mn2
         )
-        cond = (
-            F.col("l.__bsz").isNull()
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        ) | (
-            F.col("l.__bsz").isNotNull()
-            & ~F.col("l.__is2")
-            & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-        ) | (
-            F.col("l.__bsz").isNotNull()
-            & F.col("l.__is2")
-            & (F.col(f"r.{id_col}") > F.col(f"l.{id_col}"))
-        )
-    else:
-        left = annotated.filter(keep_left).drop("__mn").alias("l")
-        cond = (
-            F.col("l.__bsz").isNull()
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        ) | (
-            F.col("l.__bsz").isNotNull()
-            & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-        )
-    right = pinned.hint("shuffle_hash").alias("r")
-    return left, right, cond
+        .withColumn("__is2", is_mn2)
+        .drop("__mn", "__mn2")
+        .alias("l")
+    )
+    lo, ro = F.col(f"l.{order_col}"), F.col(f"r.{order_col}")
+    star = F.col("l.__bsz").isNotNull()
+    star2 = star & F.col("l.__is2") & (member("r.") > member("l."))
+    if member_cols != [order_col]:
+        # a greater member can share l's order value (another frame of
+        # the same video); a single-column member needs no extra test
+        star2 = star2 & (lo != ro)
+    cond = (
+        (F.col("l.__bsz").isNull() & (lo < ro))
+        | (star & ~F.col("l.__is2") & (lo != ro))
+        | star2
+    )
+    return left, pinned.hint("shuffle_hash").alias("r"), cond
 
 
 def lsh_pairs_from_signatures(
@@ -457,19 +431,16 @@ def lsh_pairs_from_signatures(
     bands: int = 16,
     portable: bool = False,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    oversize: str = "star",
     observation=None,
-    star_centers: int = 2,
 ) -> DataFrame:
     """LSH banding + per-bucket self-join over precomputed MinHash
     signatures (columns ``mh_0..mh_{n-1}``) — the back half of
     ``minhash_lsh_pairs``, split out so a pipeline can materialize
     signatures/shingles once and reuse them (VERDICT r3 item 5).
 
-    Buckets larger than ``max_bucket_size`` are min-star reduced (or
-    dropped with ``oversize="drop"``): each oversize-bucket member pairs
-    only with the bucket's ``star_centers`` smallest ids (default 2)
-    instead of with every other member. Star edges are genuine
+    Buckets larger than ``max_bucket_size`` are star reduced: each
+    oversize-bucket member pairs only with the bucket's two smallest
+    ids instead of with every other member. Star edges are genuine
     co-bucketed candidates; for a consumer that clusters the RAW
     candidate graph the reduction is connectivity-equivalent. What is
     lost is *pair-level* recall inside oversize buckets (a member pair
@@ -479,20 +450,18 @@ def lsh_pairs_from_signatures(
     routes every oversize-bucket pair through the center members:
     bucket members share one band hash (collision probability ~ s^r),
     not the full signature, so if a center happens to be a chance
-    band-collider the verify stage fails that star's edges. With the
-    default TWO centers (ADVICE r9/r10 remedy — the second-smallest id
-    from the same census) severing a real cluster needs BOTH centers
-    to be chance colliders, quadratically less likely than the k=1
-    caveat; ``star_centers=1`` restores the single-star behavior (the
-    severing property test pins both). At the default cap (4096) even
-    the k=1 case needs a pathological corpus — a >4096-member bucket
-    whose minimum id is a non-duplicate — but it is a real recall
-    trade the cap makes and the default is ON; size the cap above the
-    corpus's honest dup-group sizes, or drop to
-    ``max_bucket_size=None`` when exactness inside mega-buckets
-    matters more than output bounds (SCALE.md records the trade). Pass
-    a ``pyspark.sql.Observation`` to read how many members hit the
-    cap."""
+    band-collider the verify stage fails that star's edges. With TWO
+    centers (ADVICE r9/r10 remedy — the second-smallest id from the
+    same census) severing a real cluster needs BOTH centers to be
+    chance colliders (the severing property test pins the rescue and
+    the residual case). At the default cap (4096) that needs a
+    pathological corpus — a >4096-member bucket whose two smallest ids
+    are non-duplicates — but it is a real recall trade the cap makes
+    and the default is ON; size the cap above the corpus's honest
+    dup-group sizes, or drop to ``max_bucket_size=None`` when exactness
+    inside mega-buckets matters more than output bounds (SCALE.md
+    records the trade). Pass a ``pyspark.sql.Observation`` to read how
+    many members hit the cap."""
     r = num_hashes // bands
     # per-band expressions as JVM-parsed SQL strings (r15, guide §5):
     # the Column-builder form paid ~1 s of py4j roundtrips per query
@@ -522,18 +491,9 @@ def lsh_pairs_from_signatures(
         )
         + ")) AS bb",
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    if max_bucket_size is None:
-        left = stacked.alias("l")
-        right = stacked.alias("r")
-        cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    else:
-        pinned, annotated = _annotate_bucket_sizes(
-            stacked, ["band", "bh"], [id_col], max_bucket_size, observation,
-            star_centers=star_centers if oversize == "star" else 1,
-        )
-        left, right, cond = _capped_join_sides(
-            pinned, annotated, id_col, oversize, star_centers
-        )
+    left, right, cond = _capped_join_sides(
+        stacked, ["band", "bh"], [id_col], id_col, max_bucket_size, observation
+    )
     pairs = left.join(
         right,
         (F.col("l.band") == F.col("r.band"))
@@ -743,63 +703,43 @@ def simhash(
 def winnow_candidate_pairs(
     fps_df: DataFrame,
     id_col: str = "doc_id",
-    fp_col: str = "fingerprints",
     min_shared: int = 2,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    oversize: str = "star",
     observation=None,
-    star_centers: int = 2,
-    pre_exploded: bool = False,
 ) -> DataFrame:
-    """Near-duplicate candidate pairs from winnowing fingerprints
-    (`text.winnow_fingerprints` output): explode each document's
-    fingerprint SET, equi-join on the fingerprint value (each
-    fingerprint is a bucket — never all-pairs), and keep pairs sharing
-    ≥ ``min_shared`` fingerprints. By the winnowing coverage theorem a
-    shared substring of length ≥ w + k − 1 shares at least one
-    fingerprint, so this is the substring-level analogue of the
-    MinHash-LSH candidate stage.
+    """Near-duplicate candidate pairs from winnowing fingerprints: the
+    ``(id, fp)`` rows of `text.winnow_fingerprints(exploded=True)` (one
+    per selected value; per-doc fingerprint uniqueness — which the
+    shared-count aggregation relies on — is the producer's contract)
+    equi-join on the fingerprint value (each fingerprint is a bucket —
+    never all-pairs), and pairs sharing ≥ ``min_shared`` fingerprints
+    are kept. By the winnowing coverage theorem a shared substring of
+    length ≥ w + k − 1 shares at least one fingerprint, so this is the
+    substring-level analogue of the MinHash-LSH candidate stage.
 
-    ``pre_exploded=True`` takes (id, fp) rows directly
-    (`winnow_fingerprints(exploded=True)`) instead of the array column
-    — that producer runs the Arrow kernel once instead of twice (the
-    array form's explode re-evaluates the UDF through an inferred
-    Generate filter; see the producer's docstring). Per-doc fingerprint
-    uniqueness — which the shared-count aggregation relies on — is the
-    producer's contract in both forms.
-
-    Same scale machinery as the LSH chain: the fingerprint buckets run
-    under the `_annotate_bucket_sizes` guard (a boilerplate fingerprint
-    shared by millions of documents min-star reduces instead of
-    emitting m²/2 pairs), with the same star × ``min_shared``
-    multiplicative recall interaction documented in SCALE.md for the
-    video n_close gate — an oversize bucket contributes only
-    min-member edges, each of which must clear ``min_shared`` on its
-    own. For this operator ``oversize="drop"`` with a LOW cap is
-    usually the right production setting — it is MOSS's common-match
-    exclusion: a fingerprint shared by more than ~dozens of documents
-    is boilerplate (its bucket is also where the quadratic pair
-    enumeration lives), so document-frequency-cutting it is both the
-    quality filter and the scale guard in one knob."""
-    if pre_exploded:
-        stacked = fps_df.select(F.col(id_col), F.col("fp"))
-    else:
-        stacked = fps_df.select(
-            F.col(id_col), F.explode(F.col(fp_col)).alias("fp")
+    Fingerprints held by more than ``max_bucket_size`` documents are
+    DROPPED before pairing under the `_annotate_bucket_sizes` census —
+    MOSS's common-match exclusion: a fingerprint shared by more than
+    ~dozens of documents is boilerplate, and its bucket is also where
+    the quadratic pair enumeration lives, so the document-frequency cut
+    is both the quality filter and the scale guard. The other pair
+    joins star reduce instead; here a star edge would still have to
+    clear ``min_shared`` on its own. ``observation`` counts the dropped
+    members and buckets; ``max_bucket_size=None`` pairs every
+    bucket."""
+    stacked = fps_df.select(F.col(id_col), F.col("fp"))
+    left = right = stacked
+    if max_bucket_size is not None:
+        right, annotated = _annotate_bucket_sizes(
+            stacked, ["fp"], [id_col], max_bucket_size, observation
         )
-    if max_bucket_size is None:
-        left = stacked.alias("l")
-        right = stacked.alias("r")
-        cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    else:
-        pinned, annotated = _annotate_bucket_sizes(
-            stacked, ["fp"], [id_col], max_bucket_size, observation,
-            star_centers=star_centers if oversize == "star" else 1,
-        )
-        left, right, cond = _capped_join_sides(
-            pinned, annotated, id_col, oversize, star_centers
-        )
-    pairs = left.join(right, (F.col("l.fp") == F.col("r.fp")) & cond).select(
+        left = annotated.filter(F.col("__bsz").isNull()).drop("__mn")
+        right = right.hint("shuffle_hash")
+    pairs = left.alias("l").join(
+        right.alias("r"),
+        (F.col("l.fp") == F.col("r.fp"))
+        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+    ).select(
         F.col(f"l.{id_col}").alias("doc_a"),
         F.col(f"r.{id_col}").alias("doc_b"),
     )
@@ -976,36 +916,25 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     blocks: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    oversize: str = "star",
     observation=None,
-    star_centers: int = 2,
-    materialize: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: pigeonhole on ``blocks`` 16-bit
     blocks (Hamming ≤ blocks−1 guarantees ≥1 identical block), equi-join
     per block, verify exact Hamming distance with bit_count(xor).
     The Hamming filter sits BELOW the pair distinct, so non-qualifying
     candidates never enter the dedup exchange; blocks whose bucket
-    exceeds ``max_bucket_size`` are min-star reduced (each member pairs
-    with the bucket-min member only — connectivity-equivalent for
-    clustering, linear output; see ``lsh_pairs_from_signatures``)."""
+    exceeds ``max_bucket_size`` are star reduced (each member pairs
+    with the bucket's two smallest members only — connectivity-
+    equivalent for clustering, linear output; see
+    ``lsh_pairs_from_signatures``). The bucket census and the pair join
+    both read ``fingerprints``: a caller whose fingerprints come from
+    an expensive kernel checkpoints them first (see
+    ``multimodal.phash_near_pairs``)."""
     if max_hamming > blocks - 1:
         raise ValueError(
             f"pigeonhole recall guarantee requires max_hamming ≤ blocks-1 "
             f"({max_hamming} > {blocks - 1}); raise `blocks`"
         )
-    if materialize:
-        # Lazy-materialize the (id, simhash) table when the upstream is an
-        # expensive kernel (media decode in the phash family). The banded
-        # table forks into the bucket census and the pair join; the census
-        # prunes the simhash payload below its exchange, so the two branch
-        # subtrees canonicalize differently and AQE executes the upstream
-        # once PER BRANCH (measured r14: the full decode+hash kernel ran
-        # twice per mm_*_neardup query). 16 bytes/row, so the checkpoint
-        # footprint is negligible at any corpus size; eager=False keeps the
-        # materialization inside the consuming action. Text-side callers
-        # (cheap native simhash) keep the default and stay pure lineage.
-        fingerprints = fingerprints.localCheckpoint(eager=False)
     width = 64 // blocks
     stacked = fingerprints.select(
         F.col(id_col),
@@ -1024,18 +953,9 @@ def simhash_near_pairs(
             )
         ).alias("bb"),
     ).select(id_col, "simhash", F.col("bb.blk").alias("blk"), F.col("bb.bh").alias("bh"))
-    if max_bucket_size is None:
-        left = stacked.alias("l")
-        right = stacked.alias("r")
-        cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    else:
-        pinned, annotated = _annotate_bucket_sizes(
-            stacked, ["blk", "bh"], [id_col], max_bucket_size, observation,
-            star_centers=star_centers if oversize == "star" else 1,
-        )
-        left, right, cond = _capped_join_sides(
-            pinned, annotated, id_col, oversize, star_centers
-        )
+    left, right, cond = _capped_join_sides(
+        stacked, ["blk", "bh"], [id_col], id_col, max_bucket_size, observation
+    )
     pairs = left.join(
         right,
         (F.col("l.blk") == F.col("r.blk"))

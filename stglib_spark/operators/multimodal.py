@@ -4,12 +4,10 @@ typed metadata, processed via Arrow-batched ``mapInPandas``.
 North-star component (BASELINE.json): a 100 TB training-data pipeline
 carries media as ``binary`` columns next to structured metadata. The
 Spark-side plumbing — schemas, batch iteration, partition sizing, UDF
-signatures — is real and tested. Decoding has two modes:
-``decode_stub=True`` (default) runs a deterministic fake decoder (useful
-for plumbing tests and unsupported formats); ``decode_stub=False`` runs
-REAL pure-Python codecs (:mod:`stglib_spark.functions.media`) for BMP /
-PPM / PGM images and PCM WAV audio, while compressed formats (JPEG/PNG/
-MP4) raise ``UnsupportedMediaError`` at the exact point an external codec
+signatures — is real and tested. Decoding runs pure-Python codecs
+(:mod:`stglib_spark.functions.media`) for BMP / PPM / PGM / PNG images,
+PCM WAV audio and uncompressed AVI video; any other payload raises
+``UnsupportedMediaError`` at the exact point an external codec
 (PIL/ffmpeg) plugs in.
 
 Scale notes: mapInPandas streams Arrow batches — peak memory is one batch
@@ -21,14 +19,16 @@ payloads.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from stglib_spark.operators.dedup import DEFAULT_MAX_BUCKET_SIZE
+from stglib_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET_SIZE,
+    _capped_join_sides,
+)
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -53,28 +53,16 @@ MEDIA_SCHEMA = StructType(
 )
 
 
-def _fake_decode(content: bytes, out_pixels: int) -> np.ndarray:
-    """Deterministic fake decoder: bytes → pseudo-pixel array seeded by the
-    content digest. Stands in for PIL/ffmpeg so batch shapes, dtypes and
-    determinism are testable without codecs."""
-    seed = int.from_bytes(hashlib.sha256(content).digest()[:8], "big") % (2**32)
-    rng = np.random.RandomState(seed)
-    return rng.randint(0, 256, size=out_pixels).astype(np.uint8)
-
-
 def decode_features(
     df: DataFrame,
     feature_dim: int = 64,
-    decode_stub: bool = True,
     content_col: str = "content",
     id_col: str = "media_id",
 ) -> DataFrame:
-    """binary column → fixed-width float feature vector via mapInPandas.
-
-    Real implementation decodes with PIL/ffmpeg then pools; the stub
-    derives features from the fake-decoded byte field. Either way the
-    OUTPUT CONTRACT is identical: (media_id, n_bytes, feature[float xD]).
-    """
+    """binary column → fixed-width float feature vector via mapInPandas:
+    decode (``functions.media.decode_features_real``), then mean-pool.
+    Output (media_id, n_bytes, feature[float xD]); an unsupported
+    payload raises ``UnsupportedMediaError``."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -84,21 +72,13 @@ def decode_features(
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from stglib_spark.functions.media import decode_features_real
+
         for pdf in batches:
             ids, sizes, feats = [], [], []
             for mid, content in zip(pdf[id_col], pdf[content_col]):
                 payload = bytes(content) if content is not None else b""
-                if decode_stub:
-                    pixels = _fake_decode(payload, feature_dim * 16)
-                    # mean-pool 16 pseudo-pixels per slot, scaled to [0,1]
-                    feat = pixels.reshape(feature_dim, 16).mean(axis=1) / 255.0
-                    feat = feat.astype(np.float32)
-                else:
-                    # real decode: BMP/PPM/PGM/PNG/WAV natively; JPEG and
-                    # compressed video raise UnsupportedMediaError here
-                    from stglib_spark.functions.media import decode_features_real
-
-                    feat = decode_features_real(payload, feature_dim)
+                feat = decode_features_real(payload, feature_dim)
                 ids.append(mid)
                 sizes.append(len(payload))
                 feats.append(feat.tolist())
@@ -164,34 +144,28 @@ def resize_images(
     df: DataFrame,
     target_w: int = 224,
     target_h: int = 224,
-    decode_stub: bool = True,
 ) -> DataFrame:
-    """image binary → resized binary (stub: content-digest-seeded bytes of
-    the target size; real: PIL decode→resize→encode). Output keeps the
-    MEDIA_SCHEMA contract with updated dims."""
+    """image binary → resized binary: decode (BMP/PNM/PNG), nearest
+    resize, re-encode as BMP. Output keeps the MEDIA_SCHEMA contract
+    with updated dims; an unsupported payload raises
+    ``UnsupportedMediaError``."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from stglib_spark.functions.media import (
+            decode_image,
+            encode_bmp,
+            resize_nearest,
+        )
+
         for pdf in batches:
             out = pdf.copy()
             new_content = []
             for content in pdf["content"]:
                 payload = bytes(content) if content is not None else b""
-                if decode_stub:
-                    new_content.append(
-                        _fake_decode(payload, target_w * target_h).tobytes()
-                    )
-                else:
-                    # real path: decode BMP/PPM → nearest resize → BMP
-                    from stglib_spark.functions.media import (
-                        decode_image,
-                        encode_bmp,
-                        resize_nearest,
-                    )
-
-                    img = decode_image(payload)
-                    new_content.append(
-                        encode_bmp(resize_nearest(img, target_w, target_h))
-                    )
+                img = decode_image(payload)
+                new_content.append(
+                    encode_bmp(resize_nearest(img, target_w, target_h))
+                )
             out["content"] = new_content
             out["width"] = target_w
             out["height"] = target_h
@@ -203,15 +177,13 @@ def resize_images(
 def sample_video_frames(
     df: DataFrame,
     n_frames: int = 8,
-    decode_stub: bool = True,
 ) -> DataFrame:
     """video binary → n_frames evenly-spaced frame features, one row per
     (media_id, frame_idx) — the explode-to-frames shape a video training
-    pipeline needs. Real path (decode_stub=False) decodes uncompressed-DIB
-    AVI natively (functions/media.py decode_avi) and mean-pools each
-    sampled frame to a 64-float feature; compressed codecs (MJPG/H.264…)
-    raise UnsupportedMediaError at the same plug point (ffmpeg would slot
-    in there). Stub derives per-frame features from a byte-field fake."""
+    pipeline needs. Decodes uncompressed-DIB AVI natively
+    (functions/media.py decode_avi) and mean-pools each sampled frame
+    to a 64-float feature; compressed codecs (MJPG/H.264…) raise
+    UnsupportedMediaError at the plug point ffmpeg would slot into."""
     out_schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -222,6 +194,11 @@ def sample_video_frames(
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from stglib_spark.functions.media import (
+            image_features,
+            sample_avi_frames,
+        )
+
         for pdf in batches:
             rows = {"media_id": [], "frame_idx": [], "t_ms": [], "feature": []}
             for mid, content, dur in zip(
@@ -229,31 +206,12 @@ def sample_video_frames(
             ):
                 payload = bytes(content) if content is not None else b""
                 dur = int(dur) if dur is not None else 1000
-                if decode_stub:
-                    sampled = [
-                        (
-                            int(i * dur / n_frames),
-                            _fake_decode(
-                                payload
-                                + int(i * dur / n_frames).to_bytes(4, "big"),
-                                64,
-                            ).astype(np.float32)
-                            / 255.0,
-                        )
-                        for i in range(n_frames)
-                    ]
-                else:
-                    from stglib_spark.functions.media import (
-                        image_features,
-                        sample_avi_frames,
+                sampled = [
+                    (t_ms, image_features(frame, 64))
+                    for t_ms, frame in sample_avi_frames(
+                        payload, n_frames, duration_ms=dur
                     )
-
-                    sampled = [
-                        (t_ms, image_features(frame, 64))
-                        for t_ms, frame in sample_avi_frames(
-                            payload, n_frames, duration_ms=dur
-                        )
-                    ]
+                ]
                 for i, (t_ms, feat) in enumerate(sampled):
                     rows["media_id"].append(mid)
                     rows["frame_idx"].append(i)
@@ -369,7 +327,6 @@ def phash_near_pairs(
     blocks: int = 4,
     hash_col: str = "phash",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    oversize: str = "star",
     observation=None,
 ) -> DataFrame:
     """Near-duplicate image pairs from perceptual hashes: the SimHash
@@ -380,17 +337,20 @@ def phash_near_pairs(
     are dropped before pairing."""
     from stglib_spark.operators.dedup import simhash_near_pairs
 
-    fps = hashed.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("simhash")
+    # Lazy-materialize the 16-byte/row hash table: the bucket census
+    # prunes the hash payload below its exchange, so the census and
+    # pair-join subtrees canonicalize differently and AQE would execute
+    # the media decode kernel once PER BRANCH (measured r14: twice per
+    # mm_*_neardup query). eager=False keeps the materialization inside
+    # the consuming action.
+    fps = (
+        hashed.filter(F.col(hash_col).isNotNull())
+        .select(F.col(id_col).alias("doc_id"), F.col(hash_col).alias("simhash"))
+        .localCheckpoint(eager=False)
     )
     pairs = simhash_near_pairs(
         fps, id_col="doc_id", max_hamming=max_hamming, blocks=blocks,
-        max_bucket_size=max_bucket_size, oversize=oversize,
-        observation=observation,
-        # the upstream is the media decode kernel - materialize the
-        # 16-byte/row hash table so the census and pair branches share
-        # one kernel execution (see simhash_near_pairs)
-        materialize=True,
+        max_bucket_size=max_bucket_size, observation=observation,
     )
     return pairs.select(
         F.col("doc_a").alias("id_a"),
@@ -472,9 +432,7 @@ def video_phash_near_pairs(
     max_hamming: int = 3,
     blocks: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    oversize: str = "star",
     observation=None,
-    star_centers: int = 2,
 ) -> DataFrame:
     """Cross-video near-duplicate pairs from per-frame dHashes: frame
     hashes band into 16-bit pigeonhole blocks, candidate FRAME pairs
@@ -485,12 +443,14 @@ def video_phash_near_pairs(
     (vid_a, vid_b, min_hamming, n_close) over their frame pairs within
     ``max_hamming``. The pigeonhole guarantee makes min_hamming exact:
     any frame pair at Hamming ≤ blocks−1 shares a block, so no
-    qualifying pair can be missed."""
+    qualifying pair can be missed. Blocks whose bucket exceeds
+    ``max_bucket_size`` frames are star reduced on the two smallest
+    (vid, frame) members, as in ``dedup.simhash_near_pairs``."""
     width = 64 // blocks
     # lazy-materialize the per-frame hash table: the bucket census and
     # the pair join prune different columns below their exchanges, so
     # without this the video decode kernel executes once per branch
-    # (same finding as simhash_near_pairs' materialize flag)
+    # (same finding as phash_near_pairs' checkpoint)
     frame_hashes = frame_hashes.localCheckpoint(eager=False)
     stacked = frame_hashes.select(
         F.col(id_col).alias("vid"),
@@ -513,75 +473,11 @@ def video_phash_near_pairs(
         "vid", "f", "phash",
         F.col("bb.blk").alias("blk"), F.col("bb.bh").alias("bh"),
     )
-    from stglib_spark.operators.dedup import _annotate_bucket_sizes
-
-    if max_bucket_size is None:
-        left = stacked.alias("l")
-        right = stacked.alias("r")
-        cond = F.col("l.vid") < F.col("r.vid")
-    else:
-        # min-star reduction for oversize blocks: the bucket's TWO
-        # smallest (vid, frame) members (default star_centers=2; see
-        # dedup._capped_join_sides' recipe comment) each pair with
-        # every cross-video member — LINEAR enumeration and output.
-        # Orientation: the bucket min has the smallest vid; the second
-        # center's star-2 branch pairs only with struct-greater members
-        # whose vid differs, and lexicographic struct order makes any
-        # such member's vid strictly larger, so vid_a < vid_b holds on
-        # every emitted frame pair.
-        pinned, annotated = _annotate_bucket_sizes(
-            stacked, ["blk", "bh"], ["vid", "f"], max_bucket_size,
-            observation,
-            star_centers=star_centers if oversize == "star" else 1,
-        )
-        member = F.struct(F.col("vid"), F.col("f"))
-        if oversize == "drop":
-            left = annotated.filter(F.col("__bsz").isNull())
-            for c in ("__mn", "__mn2"):
-                if c in left.columns:
-                    left = left.drop(c)
-            left = left.alias("l")
-            cond = F.col("l.vid") < F.col("r.vid")
-        elif oversize == "star":
-            is_mn = member == F.col("__mn")
-            keep_left = F.col("__bsz").isNull() | is_mn
-            if star_centers >= 2:
-                is_mn2 = member.eqNullSafe(F.col("__mn2"))
-                left = (
-                    annotated.filter(keep_left | is_mn2)
-                    .withColumn("__is2", is_mn2)
-                    .drop("__mn", "__mn2")
-                    .alias("l")
-                )
-                lmem = F.struct(F.col("l.vid"), F.col("l.f"))
-                rmem = F.struct(F.col("r.vid"), F.col("r.f"))
-                cond = (
-                    F.col("l.__bsz").isNull()
-                    & (F.col("l.vid") < F.col("r.vid"))
-                ) | (
-                    F.col("l.__bsz").isNotNull()
-                    & ~F.col("l.__is2")
-                    & (F.col("l.vid") != F.col("r.vid"))
-                ) | (
-                    F.col("l.__bsz").isNotNull()
-                    & F.col("l.__is2")
-                    & (rmem > lmem)
-                    & (F.col("l.vid") != F.col("r.vid"))
-                )
-            else:
-                left = annotated.filter(keep_left).drop("__mn").alias("l")
-                cond = (
-                    F.col("l.__bsz").isNull()
-                    & (F.col("l.vid") < F.col("r.vid"))
-                ) | (
-                    F.col("l.__bsz").isNotNull()
-                    & (F.col("l.vid") != F.col("r.vid"))
-                )
-        else:
-            raise ValueError(
-                f"oversize must be 'star' or 'drop', got {oversize!r}"
-            )
-        right = pinned.hint("shuffle_hash").alias("r")
+    # members are (vid, frame); a pair must join two different videos
+    left, right, cond = _capped_join_sides(
+        stacked, ["blk", "bh"], ["vid", "f"], "vid", max_bucket_size,
+        observation,
+    )
     frame_pairs = left.join(
         right,
         (F.col("l.blk") == F.col("r.blk"))

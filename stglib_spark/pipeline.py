@@ -1461,13 +1461,14 @@ def run_media_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, st
     intros — every gradient bit zero, dHash 0) collide across unrelated
     videos. Those frames are additionally dropped before pairing
     (``video_drop_constant_frames: false`` to keep them). Pigeonhole
-    buckets above ``max_bucket_size`` min-star reduce (see
+    buckets above ``max_bucket_size`` star reduce on their two
+    smallest (vid, frame) members (see
     ``dedup.lsh_pairs_from_signatures``). Note the star × gate recall
-    interaction: in an oversize bucket only the bucket-min (vid, frame)
-    member emits edges, so a duplicate pair whose shared frames ALL sit
-    in oversize buckets has no direct edge and merges only transitively
-    through the bucket-min video — and each transitive leg must itself
-    clear the n_close floor (pinned by
+    interaction: in an oversize bucket only the two center members emit
+    edges, so a duplicate pair whose shared frames ALL sit in oversize
+    buckets, and neither of whose videos holds a center, has no direct
+    edge and merges only transitively through a center video — and
+    each transitive leg must itself clear the n_close floor (pinned by
     ``test_properties.test_video_star_mode_min_n_close_interaction``;
     recall trade recorded in SCALE.md)."""
     from stglib_spark.operators import dedup as dedup_ops

@@ -2554,7 +2554,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the bucket-size guard (VERDICT r8 task #2) as DRIVER-HASHED evidence:
 # cap 3 is BELOW the corpus's real duplicate-group sizes (the documents
 # table holds boilerplate dup groups up to 41 members at sf0.1), so the
-# oracle replays genuine min-star reductions, not a no-op
+# oracle replays genuine two-center star reductions, not a no-op
 _LSH_CAP = 3
 
 
@@ -2581,7 +2581,7 @@ def dedup_lsh_bucket_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs under the oversize-bucket guard
     (`dedup.lsh_pairs_from_signatures` max_bucket_size): buckets above
     the cap emit member→center star edges from the bucket's TWO
-    smallest ids (star_centers=2 default, the ADVICE r9/r10 remedy —
+    smallest ids (the operator's fixed policy, the ADVICE r9/r10 remedy —
     a downstream exact-verify severs the cluster only if BOTH centers
     are chance band-colliders) instead of m²/2 pairs — linear join
     enumeration AND output, connectivity-equivalent for the clustering
@@ -11483,12 +11483,10 @@ def e2e_sonar_xy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # NOTE: the former stub-decoder registry entries (`mm_decode_features`,
-# `mm_video_frames`) are retired: the real-codec chains below
-# (`mm_decode_real_bmp/png`, `mm_video_frames_real`) exercise the same
-# mapInPandas plumbing end-to-end with oracle-checked kernels, and the
-# stub plug point (operators/multimodal.py decode_stub) stays covered by
-# tests/test_multimodal.py. Registering both real and stub variants of
-# the identical plan shape would only pad the registry.
+# `mm_video_frames`) are retired along with the stub decoder: the
+# real-codec chains below (`mm_decode_real_bmp/png`,
+# `mm_video_frames_real`) exercise the same mapInPandas plumbing
+# end-to-end with oracle-checked kernels.
 
 
 @register(
@@ -11650,7 +11648,7 @@ def mm_decode_real_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL multimodal codec path, oracle-checked end-to-end: synthesize a
     constant-color 8×8 24-bit BMP per document (color = doc_id % 256)
     inside an Arrow batch, decode with the pure-Python BMP codec
-    (functions/media.py, decode_stub=False), mean-pool to features. A
+    (functions/media.py), mean-pool to features. A
     constant image's every feature slot is exactly color/255 and the BMP
     container is exactly 246 bytes, so DuckDB reproduces the whole chain
     analytically. (Rounded to 5 decimals: the engine pools in float32,
@@ -11676,7 +11674,7 @@ def mm_decode_real_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = spread(docs.select("doc_id")).mapInPandas(
         make_bmp, "media_id long, content binary"
     )
-    out = mm.decode_features(media, feature_dim=16, decode_stub=False)
+    out = mm.decode_features(media, feature_dim=16)
     return out.select(
         "media_id",
         "n_bytes",
@@ -11698,8 +11696,8 @@ def mm_decode_real_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-image codec path, oracle-checked end-to-end:
     synthesize a constant-color 8×8 RGB PNG per document (color =
     doc_id % 256) inside an Arrow batch, decode with the pure-Python
-    zlib-DEFLATE PNG codec (functions/media.py decode_png,
-    decode_stub=False), mean-pool to features. A constant image's every
+    zlib-DEFLATE PNG codec (functions/media.py decode_png),
+    mean-pool to features. A constant image's every
     feature slot is exactly color/255, so DuckDB reproduces the chain
     analytically. n_bytes is NOT oracled: DEFLATE output length varies
     with the color byte. (5-decimal rounding: float32 pooling, same
@@ -11724,7 +11722,7 @@ def mm_decode_real_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = spread(docs.select("doc_id")).mapInPandas(
         make_png, "media_id long, content binary"
     )
-    out = mm.decode_features(media, feature_dim=16, decode_stub=False)
+    out = mm.decode_features(media, feature_dim=16)
     return out.select(
         "media_id",
         F.round(F.element_at("feature", 1).cast("double"), 5).alias("f0"),
@@ -11747,7 +11745,7 @@ def mm_decode_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG): synthesize a constant-gray 8×8 baseline JFIF per document
     inside an Arrow batch — full Annex-K huffman tables, quality-50
     quantizers — decode with the pure-Python JPEG decoder (marker parse →
-    huffman → dequant → iDCT → YCbCr, decode_stub=False), mean-pool to
+    huffman → dequant → iDCT → YCbCr), mean-pool to
     features. The gray level is 128 + 2·((doc_id % 100) − 50): an EVEN
     offset from 128 makes the quantized DC exactly (c−128)/2 with ~0.5
     float margin on every rounding (odd offsets sit ON the half-way
@@ -11781,7 +11779,7 @@ def mm_decode_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = spread(docs.select("doc_id")).mapInPandas(
         make_jpeg, "media_id long, content binary"
     )
-    out = mm.decode_features(media, feature_dim=16, decode_stub=False)
+    out = mm.decode_features(media, feature_dim=16)
     return out.select(
         "media_id",
         F.round(F.element_at("feature", 1).cast("double"), 5).alias("f0"),
@@ -11804,7 +11802,7 @@ def mm_video_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video frame sampling, oracle-checked end-to-end: synthesize an
     8-frame uncompressed-DIB AVI per document (frame k is constant color
     (doc_id + 17k) % 256, 4 fps → 2000 ms), decode with the pure-Python
-    AVI parser (functions/media.py decode_avi, decode_stub=False), sample
+    AVI parser (functions/media.py decode_avi), sample
     4 evenly-spaced frames. Sampling timing is analytic: t_ms = i·500,
     source frame = floor(t·fps) = 2i, so every feature slot of sample i
     is ((doc_id + 34i) % 256)/255 and DuckDB reproduces the chain."""
@@ -11842,7 +11840,7 @@ def mm_video_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_avi,
         "media_id long, kind string, content binary, duration_ms int",
     )
-    out = mm.sample_video_frames(media, n_frames=4, decode_stub=False)
+    out = mm.sample_video_frames(media, n_frames=4)
     return out.select(
         "media_id",
         "frame_idx",
@@ -11912,7 +11910,7 @@ def mm_video_frames_mjpg(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_avi,
         "media_id long, kind string, content binary, duration_ms int",
     )
-    out = mm.sample_video_frames(media, n_frames=4, decode_stub=False)
+    out = mm.sample_video_frames(media, n_frames=4)
     return out.select(
         "media_id",
         "frame_idx",
@@ -14444,8 +14442,8 @@ def dedup_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling-hash fingerprints — the MOSS pairing rule, the substring
     analogue of the MinHash-LSH candidate stage (any shared run of
     ≥ w+k−1 = 22 chars shares a fingerprint). Fingerprints shared by
-    more than 64 documents are DROPPED before pairing
-    (``oversize="drop"`` on the shared bucket guard) — MOSS's own
+    more than 64 documents are DROPPED before pairing (the operator's
+    fixed oversize policy on the shared bucket guard) — MOSS's own
     common-match exclusion: a run appearing in hundreds of documents is
     boilerplate, not duplication signal, and it is exactly the
     mega-bucket whose m²/2 pair enumeration melts at corpus scale
@@ -14458,8 +14456,7 @@ def dedup_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode re-evaluates it through an inferred Generate filter)
     fps = text_ops.winnow_fingerprints(docs, exploded=True)
     return dedup_ops.winnow_candidate_pairs(
-        fps, min_shared=2, max_bucket_size=64, oversize="drop",
-        pre_exploded=True,
+        fps, min_shared=2, max_bucket_size=64,
     )
 
 
@@ -14527,8 +14524,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     fps = text_ops.winnow_fingerprints(docs, exploded=True)
     cands = dedup_ops.winnow_candidate_pairs(
-        fps, min_shared=2, max_bucket_size=64, oversize="drop",
-        pre_exploded=True,
+        fps, min_shared=2, max_bucket_size=64,
     ).select("doc_a", "doc_b")
     return dedup_ops.containment_pairs(
         docs, candidate_pairs=cands, shingle_n=1, threshold=0.8

@@ -1231,6 +1231,20 @@ def streaming_pack_sequences(
     )
 
 
+#: Row budget of a static index side the streaming dedup gates
+#: broadcast to every micro-batch. Past it the stream-static join runs
+#: shuffled on the join key: the index grows without bound as ingest
+#: runs, so the broadcast is gated, never forced.
+STREAM_BROADCAST_MAX_ROWS = 2_000_000
+
+
+def _broadcast_if_small(side: DataFrame, rows: int) -> DataFrame:
+    """``side`` marked for broadcast when ``rows``, the number of rows
+    ``side`` itself holds (or an upper bound on it), is within
+    ``STREAM_BROADCAST_MAX_ROWS``; otherwise unchanged."""
+    return F.broadcast(side) if rows <= STREAM_BROADCAST_MAX_ROWS else side
+
+
 def streaming_near_dedup(
     docs: DataFrame,
     index_docs: DataFrame,
@@ -1242,8 +1256,6 @@ def streaming_near_dedup(
     shingle_n: int = 2,
     threshold: float = 0.5,
     watermark: str = "1 hour",
-    broadcast_index: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Streaming twin of ``dedup.incremental_near_dedup`` — the live
     crawl front door: every arriving document is LSH-matched against
@@ -1261,14 +1273,13 @@ def streaming_near_dedup(
     watermark-bounded (doc, match) dedup that collapses multi-band
     hits.
 
-    The index side GROWS WITHOUT BOUND as ingest runs, so the broadcast
-    is gated, never forced: ``broadcast_index=None`` (default) counts
-    the static index once at plan build and broadcasts only under
-    ``broadcast_max_rows``; past the gate (or with
-    ``broadcast_index=False``) the stream-static join runs shuffled on
-    the band/bh key — the stream side re-partitions per micro-batch,
-    the static side is a plain hash-join build. Pass
-    ``broadcast_index=True`` only for an index known to be bounded."""
+    The index side GROWS WITHOUT BOUND as ingest runs, so each static
+    side is broadcast only within ``STREAM_BROADCAST_MAX_ROWS`` of ITS
+    OWN rows: the index documents are counted once at plan build, the
+    banded table holds ``bands`` rows per document and the token table
+    one. Past the gate the stream-static join runs shuffled on its key
+    — the stream side re-partitions per micro-batch, the static side is
+    a plain hash-join build."""
     from stglib_spark.operators.dedup import word_shingles
 
     m = F.lit(4294967291)
@@ -1349,11 +1360,9 @@ def streaming_near_dedup(
         word_shingles(F.col(text_col), 1).alias("__itok"),
     )
 
-    if broadcast_index is None:
-        broadcast_index = index_docs.count() <= broadcast_max_rows
-    if broadcast_index:
-        index_banded = F.broadcast(index_banded)
-        index_tok = F.broadcast(index_tok)
+    n_index = index_docs.count()
+    index_banded = _broadcast_if_small(index_banded, n_index * bands)
+    index_tok = _broadcast_if_small(index_tok, n_index)
     cand = stream_banded.join(index_banded, ["band", "bh"]).join(
         index_tok, "match_id"
     )
@@ -2007,8 +2016,6 @@ def streaming_decontaminate(
     time_col: str = "ts",
     ngram: int = 13,
     watermark: str = "1 hour",
-    broadcast_index: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Streaming twin of ``corpus.contaminated_ids`` — the live-ingest
     benchmark-decontamination gate: every arriving document's word
@@ -2018,9 +2025,9 @@ def streaming_decontaminate(
     Eval sets are tiny next to a crawl, so the gram set almost always
     broadcasts — but "almost always" is a measurement, not a plan
     invariant, so the broadcast is size-gated exactly like
-    ``streaming_near_dedup``: counted ONCE at plan build, shuffled
-    stream-static join past ``broadcast_max_rows`` (or pass
-    ``broadcast_index`` explicitly to skip the count).
+    ``streaming_near_dedup``: the gram set is counted ONCE at plan
+    build, shuffled stream-static join past
+    ``STREAM_BROADCAST_MAX_ROWS``.
 
     Stateless except the watermark-bounded per-doc dedup that collapses
     multi-gram hits (a doc sharing 40 benchmark grams must alert once):
@@ -2036,10 +2043,7 @@ def streaming_decontaminate(
         )
         .distinct()
     )
-    if broadcast_index is None:
-        broadcast_index = bench_grams.count() <= broadcast_max_rows
-    if broadcast_index:
-        bench_grams = F.broadcast(bench_grams)
+    bench_grams = _broadcast_if_small(bench_grams, bench_grams.count())
     doc_grams = docs.select(
         F.col(id_col),
         F.col(time_col),
@@ -2063,8 +2067,6 @@ def streaming_winnow_gate(
     w: int = 8,
     max_df: int = 64,
     watermark: str = "1 hour",
-    broadcast_index: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Streaming twin of the winnow candidate stage
     (``dedup.winnow_candidate_pairs`` vs a STATIC corpus index): every
@@ -2083,10 +2085,10 @@ def streaming_winnow_gate(
     (~2/(w+1) fingerprints per char), so it must NOT be broadcast
     unconditionally. The broadcast is size-gated exactly like
     ``streaming_near_dedup``: ``kept`` is counted ONCE at plan build
-    and past ``broadcast_max_rows`` the probe falls back to a shuffled
-    stream-static join (or pass ``broadcast_index`` explicitly to skip
-    the count). Stateless except the watermark-bounded per-doc dedup
-    that collapses multi-fingerprint hits — the identical shape to
+    and past ``STREAM_BROADCAST_MAX_ROWS`` the probe falls back to a
+    shuffled stream-static join. Stateless except the watermark-bounded
+    per-doc dedup that collapses multi-fingerprint hits — the identical
+    shape to
     ``streaming_decontaminate``; the parity test pins streamed ids
     == the batch detection on the same rows."""
     from stglib_spark.operators.text import winnow_fingerprints
@@ -2103,10 +2105,7 @@ def streaming_winnow_gate(
         .filter(F.col("__nd") <= max_df)
         .select("fp")
     )
-    if broadcast_index is None:
-        broadcast_index = kept.count() <= broadcast_max_rows
-    if broadcast_index:
-        kept = F.broadcast(kept)
+    kept = _broadcast_if_small(kept, kept.count())
     hits = winnow_fingerprints(
         docs, text_col, id_col, k, w, keep_cols=(time_col,), exploded=True
     ).join(kept, "fp")
@@ -2126,8 +2125,6 @@ def streaming_phash_gate(
     max_hamming: int = 3,
     blocks: int = 4,
     watermark: str = "1 hour",
-    broadcast_index: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Streaming twin of ``multimodal.phash_near_pairs`` between a live
     media feed and a static corpus — the image front door next to
@@ -2141,10 +2138,11 @@ def streaming_phash_gate(
     The pigeonhole guarantee carries over unchanged: Hamming ≤
     blocks−1 implies an identical 16-bit block, so the block equi-join
     loses no true pair. The index broadcast is size-gated exactly like
-    ``streaming_near_dedup`` (counted once at plan build; shuffled
-    stream-static join past ``broadcast_max_rows``). Only streaming
-    state: the watermark-bounded (doc, match) dedup collapsing
-    multi-block hits. Batch parity: the emitted pair set equals
+    ``streaming_near_dedup``: the banded index holds ``blocks`` rows
+    per index image (counted once at plan build), and past
+    ``STREAM_BROADCAST_MAX_ROWS`` of them the stream-static join runs
+    shuffled. Only streaming state: the watermark-bounded (doc, match)
+    dedup collapsing multi-block hits. Batch parity: the emitted pair set equals
     ``phash_near_pairs`` restricted to (stream × index) pairs on the
     same rows — the parity test's contract."""
     from stglib_spark.operators.multimodal import perceptual_hash
@@ -2193,10 +2191,7 @@ def streaming_phash_gate(
         id_col="match_id",
     )
     ib = banded(idx_hashed, "i")
-    if broadcast_index is None:
-        broadcast_index = index_media.count() <= broadcast_max_rows
-    if broadcast_index:
-        ib = F.broadcast(ib)
+    ib = _broadcast_if_small(ib, index_media.count() * blocks)
 
     hamming = F.bit_count(
         F.col("__ph_s").bitwiseXOR(F.col("__ph_i"))

@@ -1,6 +1,6 @@
 """Real pure-Python media codecs: BMP/PPM/PGM/WAV round trips with exact
 pixel/sample values, resize, feature pooling, and the multimodal
-operators' decode_stub=False path end-to-end through mapInPandas."""
+operators' decode path end-to-end through mapInPandas."""
 
 from __future__ import annotations
 
@@ -117,7 +117,7 @@ def test_audio_features_envelope():
 
 
 def test_decode_features_real_in_spark(spark):
-    """decode_stub=False end-to-end: BMP + WAV payloads through
+    """Real decode end-to-end: BMP + WAV payloads through
     mapInPandas match the locally-computed features exactly."""
     from stglib_spark.operators.multimodal import decode_features
 
@@ -130,7 +130,7 @@ def test_decode_features_real_in_spark(spark):
     )
     out = {
         r["media_id"]: r
-        for r in decode_features(df, feature_dim=16, decode_stub=False).collect()
+        for r in decode_features(df, feature_dim=16).collect()
     }
     assert out[1]["n_bytes"] == len(bmp)
     np.testing.assert_allclose(
@@ -152,7 +152,7 @@ def test_resize_images_real_in_spark(spark):
         "media_id long, kind string, content binary, mime string, "
         "width int, height int, duration_ms int",
     )
-    out = resize_images(df, target_w=8, target_h=8, decode_stub=False).collect()[0]
+    out = resize_images(df, target_w=8, target_h=8).collect()[0]
     assert out["width"] == 8 and out["height"] == 8
     back = decode_bmp(bytes(out["content"]))
     np.testing.assert_array_equal(back, resize_nearest(img, 8, 8))

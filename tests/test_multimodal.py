@@ -1,10 +1,9 @@
 """Multimodal plumbing: schemas, mapInPandas batch shapes, determinism,
-and the stub/real seam (NotImplementedError exactly at the codec point)."""
+and the codec seam (unsupported payloads raise at the decode point)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from stglib_spark.operators.multimodal import (
     MEDIA_SCHEMA,
@@ -25,47 +24,100 @@ def media_df(spark):
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def test_decode_features_contract(spark, media_df):
-    out = decode_features(media_df, feature_dim=32)
-    rows = {r.media_id: r for r in out.collect()}
-    assert set(rows) == {0, 1, 2, 3}
+def _constant_bmp(color: int, w: int = 8, h: int = 8) -> bytes:
+    import numpy as np
+
+    from stglib_spark.functions.media import encode_bmp
+
+    return encode_bmp(np.full((h, w, 3), color, np.uint8))
+
+
+def test_decode_features_contract(spark):
+    """Output contract on real BMP payloads: one fixed-width feature row
+    per input, n_bytes is the payload length, a constant image's every
+    slot is color/255, and equal payloads give equal features."""
+    colors = {0: 10, 1: 200, 2: 10}
+    payloads = {k: _constant_bmp(c) for k, c in colors.items()}
+    df = spark.createDataFrame(
+        [
+            (k, "image", bytearray(p), "image/bmp", 8, 8, None)
+            for k, p in payloads.items()
+        ],
+        MEDIA_SCHEMA,
+    )
+    rows = {r.media_id: r for r in decode_features(df, feature_dim=32).collect()}
+    assert set(rows) == {0, 1, 2}
     assert all(len(r.feature) == 32 for r in rows.values())
-    assert rows[0].n_bytes == len(b"\x89PNG-fake-0")
-    assert all(0.0 <= x <= 1.0 for x in rows[0].feature)
-    # determinism: same content → same features
-    again = {r.media_id: r for r in decode_features(media_df, feature_dim=32).collect()}
-    assert again[1].feature == rows[1].feature
+    assert rows[0].n_bytes == len(payloads[0])
+    for k, color in colors.items():
+        assert all(abs(x - color / 255.0) < 1e-6 for x in rows[k].feature)
+    assert rows[0].feature == rows[2].feature
 
 
-def test_resize_images_keeps_schema(spark, media_df):
-    out = resize_images(media_df.filter(F.col("kind") == "image"), 64, 64)
-    rows = out.collect()
+def test_resize_images_keeps_schema(spark):
+    """Resize re-encodes each image as a BMP of the target size and
+    keeps the MEDIA_SCHEMA contract with updated dims."""
+    from stglib_spark.functions.media import decode_bmp
+
+    df = spark.createDataFrame(
+        [
+            (0, "image", bytearray(_constant_bmp(30, 16, 12)), "image/bmp",
+             16, 12, None),
+            (1, "image", bytearray(_constant_bmp(90, 20, 10)), "image/bmp",
+             20, 10, None),
+        ],
+        MEDIA_SCHEMA,
+    )
+    out = resize_images(df, 64, 48)
+    rows = {r.media_id: r for r in out.collect()}
     assert len(rows) == 2
-    assert all(r.width == 64 and r.height == 64 for r in rows)
-    assert all(len(bytes(r.content)) == 64 * 64 for r in rows)
-    assert out.schema == media_df.schema
+    assert all(r.width == 64 and r.height == 48 for r in rows.values())
+    for k, color in ((0, 30), (1, 90)):
+        img = decode_bmp(bytes(rows[k].content))
+        assert img.shape == (48, 64, 3)
+        assert (img == color).all()
+    assert out.schema == df.schema
 
 
-def test_video_frame_sampling(spark, media_df):
-    out = sample_video_frames(media_df, n_frames=4)
-    rows = out.orderBy("frame_idx").collect()
+def test_video_frame_sampling(spark):
+    """Frame sampling on a real AVI: only video rows are sampled,
+    ``duration_ms`` sets the evenly spaced timestamps, and each sampled
+    frame becomes a 64-float feature."""
+    import numpy as np
+
+    from stglib_spark.functions.media import encode_avi
+
+    avi = encode_avi(
+        [np.full((8, 8, 3), 25 * k, np.uint8) for k in range(4)], fps=1.0
+    )
+    df = spark.createDataFrame(
+        [
+            (3, "video", bytearray(avi), "video/avi", 8, 8, 4000),
+            (4, "image", bytearray(_constant_bmp(5)), "image/bmp", 8, 8, None),
+        ],
+        MEDIA_SCHEMA,
+    )
+    rows = sample_video_frames(df, n_frames=4).orderBy("frame_idx").collect()
     assert len(rows) == 4
+    assert {r.media_id for r in rows} == {3}
     assert [r.t_ms for r in rows] == [0, 1000, 2000, 3000]
-    assert all(len(r.feature) == 64 for r in rows)
+    for r, color in zip(rows, [0, 25, 50, 75]):
+        assert len(r.feature) == 64
+        assert all(abs(f - color / 255.0) < 1e-6 for f in r.feature)
 
 
 def test_real_decode_seam_raises_on_unsupported(spark, media_df):
-    """decode_stub=False now really decodes BMP/PPM/PGM/WAV
+    """decode_features really decodes BMP/PPM/PGM/PNG/WAV
     (tests/test_media_codecs.py); payloads in no recognized container
-    still raise at the plug point, naming the supported set."""
+    raise at the plug point, naming the supported set."""
     with pytest.raises(Exception) as exc:
-        decode_features(media_df, decode_stub=False).collect()
+        decode_features(media_df).collect()
     msg = str(exc.value)
     assert "UnsupportedMediaError" in msg or "BMP/PPM/PGM/WAV" in msg
 
 
 def test_video_frame_sampling_real_avi(spark):
-    """decode_stub=False really parses the AVI container: constant-color
+    """sample_video_frames really parses the AVI container: constant-color
     frames make every feature slot color/255 exactly."""
     import numpy as np
 
@@ -79,7 +131,7 @@ def test_video_frame_sampling_real_avi(spark):
         MEDIA_SCHEMA,
     )
     rows = (
-        sample_video_frames(df, n_frames=4, decode_stub=False)
+        sample_video_frames(df, n_frames=4)
         .orderBy("frame_idx")
         .collect()
     )
@@ -93,7 +145,7 @@ def test_video_frame_sampling_real_avi(spark):
 
 def test_video_real_path_raises_on_non_avi(spark, media_df):
     with pytest.raises(Exception) as exc:
-        sample_video_frames(media_df, n_frames=2, decode_stub=False).collect()
+        sample_video_frames(media_df, n_frames=2).collect()
     assert "AVI" in str(exc.value) or "ValueError" in str(exc.value)
 
 

@@ -203,17 +203,18 @@ def test_simhash_near_pairs_blocks_and_validation(spark):
 
 def test_oversize_bucket_star_reduction_and_observation(spark):
     """VERDICT r8 task #2: a pigeonhole bucket larger than
-    ``max_bucket_size`` min-star reduces — each member pairs with the
-    bucket's two smallest members only (star_centers=2 default; still
-    linear output), cluster connectivity is identical to the uncapped
-    quadratic join, and the capped-member count is surfaced through a
-    Spark Observation (no silent caps). ``oversize="drop"`` discards
-    the bucket entirely."""
+    ``max_bucket_size`` star reduces — each member pairs with the
+    bucket's two smallest members only (still linear output), cluster
+    connectivity is identical to the uncapped quadratic join, and the
+    capped-member count is surfaced through a Spark Observation (no
+    silent caps). The winnow candidate join discards an oversize
+    fingerprint bucket entirely, and counts it just the same."""
     from pyspark.sql import Observation
 
     from stglib_spark.operators.dedup import (
         duplicate_clusters,
         simhash_near_pairs,
+        winnow_candidate_pairs,
     )
 
     # six exact dups (identical fingerprint → one mega-bucket per block)
@@ -251,16 +252,23 @@ def test_oversize_bucket_star_reduction_and_observation(spark):
     }
     assert full == star  # connectivity-equivalent
 
-    # drop mode discards oversize buckets entirely — and the Observation
-    # STILL fires (the per-bucket aggregate stays in the plan as the
-    # annotate-join build side): dropping is never silent
+    # the winnow join drops oversize buckets entirely — and the
+    # Observation STILL fires (the per-bucket aggregate stays in the
+    # plan as the annotate-join build side): dropping is never silent.
+    # Fingerprint 7 is held by six documents, 8 and 9 by docs 10 and 11.
+    fp_rows = [(i, 7) for i in range(6)] + [
+        (d, fp) for d in (10, 11) for fp in (7, 8, 9)
+    ]
+    fp_df = spark.createDataFrame(fp_rows, "doc_id long, fp long")
     obs2 = Observation("oversize_drop")
-    dropped = simhash_near_pairs(
-        fps, max_bucket_size=3, oversize="drop", observation=obs2
+    dropped = winnow_candidate_pairs(
+        fp_df, min_shared=1, max_bucket_size=3, observation=obs2
     ).collect()
-    assert [(r["doc_a"], r["doc_b"]) for r in dropped] == [(10, 11)]
-    assert obs2.get["oversize_members"] > 0
-    assert obs2.get["oversize_buckets"] > 0
+    assert [(r["doc_a"], r["doc_b"], r["n_shared"]) for r in dropped] == [
+        (10, 11, 2)
+    ]
+    assert obs2.get["oversize_members"] == 8
+    assert obs2.get["oversize_buckets"] == 1
 
 
 def test_lsh_oversize_bucket_star_reduction(spark):
@@ -822,7 +830,7 @@ def test_winnow_fingerprints_reference_and_edges(spark):
     # pairing: the duplicate pair shares every fingerprint; doc 7 pairs
     # with nothing
     pairs = winnow_candidate_pairs(
-        winnow_fingerprints(df, k=k, w=w), min_shared=2
+        winnow_fingerprints(df, k=k, w=w, exploded=True), min_shared=2
     ).collect()
     bym = {(r.doc_a, r.doc_b): r.n_shared for r in pairs}
     assert bym.get((1, 6)) == len(got[1])

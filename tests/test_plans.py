@@ -579,7 +579,7 @@ def test_phash_neardup_bucketed_pairing_no_all_pairs(spark):
     assert count(plan, r"CartesianProduct") == 0, plan
     assert count(plan, r"BroadcastNestedLoopJoin") == 0, plan
     # r14: the decode+hash kernel is lazily materialized (localCheckpoint
-    # in simhash_near_pairs(materialize=True)) so the census and pair
+    # in multimodal.phash_near_pairs) so the census and pair
     # branches share ONE kernel execution — the kernel then appears as a
     # Scan ExistingRDD leaf instead of an inline MapInPandas node; both
     # forms keep payloads out of every shuffle
@@ -638,6 +638,41 @@ def test_oversize_bucket_guard_in_pairing_plans(spark):
                  "mm_video_phash_neardup"):
         plan = plan_of(spark, name)
         assert re.search(r"Window|__bsz", plan), f"{name} lost the bucket guard"
+
+
+def test_winnow_candidates_run_the_kernel_once(spark, monkeypatch):
+    """The winnow Arrow kernel feeds the bucket census, the stop-list
+    join and both pair-join sides of ``dedup_winnow_candidates``; all
+    of them must hang off the one pinned exchange, so every document
+    passes through the kernel exactly once per run. The census counts
+    the representative column, not ``lit(1)``, for this reason: the
+    ``lit(1)`` form prunes the census branch below the exchange and
+    the kernel ran twice. Counted with an accumulator wrapped around
+    every ``mapInPandas`` function, because the final adaptive plan
+    folds the empty census away and would hide a second run."""
+    from stglib_spark.session import load_table
+
+    frame_cls = type(spark.range(1))
+    rows = spark.sparkContext.accumulator(0)
+    map_in_pandas = frame_cls.mapInPandas
+
+    def counted(self, func, schema, *args, **kwargs):
+        def wrapped(batches):
+            def tally():
+                for pdf in batches:
+                    rows.add(len(pdf))
+                    yield pdf
+
+            return func(tally())
+
+        return map_in_pandas(self, wrapped, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", counted)
+    df = QUERIES["dedup_winnow_candidates"](spark, SF)
+    df.collect()
+    n_docs = load_table(spark, SF, "documents").count()
+    assert n_docs > 0
+    assert rows.value == n_docs, (rows.value, n_docs)
 
 
 def test_hll_register_aggregate_is_partial(spark):

@@ -465,12 +465,17 @@ def test_bucket_cap_star_reduction_properties(spark):
     fingerprint corpora: for ANY cap, (a) capped pairs are a SUBSET of
     the uncapped candidate pairs (star edges are genuine co-bucketed
     candidates), (b) duplicate-cluster connectivity is IDENTICAL, and
-    (c) drop mode is a subset of star mode."""
+    (c) the winnow join, which drops oversize buckets, returns exactly
+    the uncapped pairs counted over the fingerprints held by at most
+    ``cap`` documents — a subset of the uncapped pairs."""
     import random
+    from collections import Counter
+    from itertools import combinations
 
     from stglib_spark.operators.dedup import (
         duplicate_clusters,
         simhash_near_pairs,
+        winnow_candidate_pairs,
     )
 
     rng = random.Random(1789)
@@ -503,15 +508,40 @@ def test_bucket_cap_star_reduction_properties(spark):
         assert clusters_of(capped) == full_clusters, cap
         # canonical orientation must survive the second star center
         assert all(a < b for a, b in capped_pairs), cap
-        # single-center stars are a subset of the 2-center default
-        single = simhash_near_pairs(fps, max_bucket_size=cap, star_centers=1)
-        single_pairs = {(r["doc_a"], r["doc_b"]) for r in single.collect()}
-        assert single_pairs <= capped_pairs, cap
-        assert clusters_of(single) == full_clusters, cap
-        dropped = simhash_near_pairs(fps, max_bucket_size=cap, oversize="drop")
-        assert {
-            (r["doc_a"], r["doc_b"]) for r in dropped.collect()
-        } <= capped_pairs, cap
+
+    # winnow fingerprints: each doc holds a distinct set drawn from a
+    # small pool, so document frequencies span 1 to ~15
+    fp_sets = {
+        d: set(rng.sample(range(40), rng.randint(1, 12))) for d in range(50)
+    }
+    fp_df = spark.createDataFrame(
+        [(d, fp) for d, fps_ in fp_sets.items() for fp in fps_],
+        "doc_id long, fp long",
+    )
+    doc_freq = Counter(fp for fps_ in fp_sets.values() for fp in fps_)
+
+    def shared_counts(cap):
+        holders = {}
+        for d, fps_ in fp_sets.items():
+            for fp in fps_:
+                if cap is None or doc_freq[fp] <= cap:
+                    holders.setdefault(fp, []).append(d)
+        return Counter(
+            pair
+            for docs in holders.values()
+            for pair in combinations(sorted(docs), 2)
+        )
+
+    uncapped = shared_counts(None)
+    for cap in (1, 2, 5, 10, 4096):
+        got = {
+            (r["doc_a"], r["doc_b"]): r["n_shared"]
+            for r in winnow_candidate_pairs(
+                fp_df, min_shared=1, max_bucket_size=cap
+            ).collect()
+        }
+        assert got == dict(shared_counts(cap)), cap
+        assert set(got) <= set(uncapped), cap
 
 
 def test_star_center_verify_severing_and_second_center_rescue(spark):
@@ -519,12 +549,12 @@ def test_star_center_verify_severing_and_second_center_rescue(spark):
     (VERDICT r10 task #3): an oversize pigeonhole bucket whose MINIMUM
     member is a chance block-collider — it shares a 16-bit block with
     the genuine duplicates (so it co-buckets) but fails the exact
-    Hamming verify. With a single star center every verified edge of
-    the bucket dies and the real duplicate pair is silently severed;
-    with the default TWO centers the second-smallest member is one of
-    the genuine duplicates, its star edge verifies, and the cluster
-    survives. Severing then requires BOTH centers to be chance
-    colliders — pinned by the three-collider control at the end."""
+    Hamming verify. A single star center would lose every verified
+    edge of the bucket and silently sever the real duplicate pair; with
+    TWO centers the second-smallest member is one of the genuine
+    duplicates, its star edge verifies, and the cluster survives.
+    Severing then requires BOTH centers to be chance colliders — pinned
+    by the control at the end, where both are."""
     from stglib_spark.operators.dedup import simhash_near_pairs
 
     h = 0x0123456789ABCDEF
@@ -545,13 +575,6 @@ def test_star_center_verify_severing_and_second_center_rescue(spark):
     # bucket is oversize with a collider as its min.
     rows = [(b, collider(b, b)) for b in range(4)] + [(10, h), (11, h)]
     fps = spark.createDataFrame(rows, "doc_id long, simhash long")
-    k1 = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_near_pairs(
-            fps, max_hamming=3, blocks=4, max_bucket_size=2, star_centers=1
-        ).collect()
-    }
-    assert k1 == set(), k1  # severed: every star edge failed the verify
     k2 = {
         (r.doc_a, r.doc_b)
         for r in simhash_near_pairs(
@@ -585,21 +608,19 @@ def test_video_star_mode_min_n_close_interaction(spark):
     compose multiplicatively for duplicate clips whose qualifying
     frames all land in oversize pigeonhole buckets.
 
-    Case 1 — transitive merge: clips A and B are exact frame-hash dups
-    of bucket-min clip M. Under a cap smaller than the bucket, star
-    mode emits only M→A and M→B frame edges — NO direct A↔B pair — so
-    A and B still end in one cluster, but only THROUGH M, and each
-    transitive leg must clear the n_close floor on its own.
+    Case 1 — three identical clips M < A < B under a cap smaller than
+    the bucket: the two star centers are M's and A's frames, so the
+    star emits M→A, M→B and A→B frame edges, each of which must clear
+    the n_close floor on its own, and all three clips end in one
+    cluster.
 
-    Case 2 — documented sever: when every bucket containing A and B is
-    oversize and every bucket-MIN member is a chance block-collider
-    (shares a 16-bit block, fails exact Hamming), the single-center
-    (star_centers=1) star edges all fail verification and the genuine
-    A↔B duplicate surfaces NOWHERE — the uncapped run proves the pair
-    was real. This is the knowing recall trade of the single-center
-    cap (SCALE.md); the DEFAULT two-center star rescues exactly this
-    case (the second-smallest member is the genuine duplicate A, whose
-    edge to B verifies at Hamming 0)."""
+    Case 2 — rescue by the second center: every bucket containing A
+    and B is oversize and every bucket-MIN member is a chance
+    block-collider (shares a 16-bit block, fails exact Hamming), so
+    every min-center star edge fails verification. The second-smallest
+    member is the genuine duplicate A, whose edge to B verifies at
+    Hamming 0; the uncapped run proves the pair was real. Severing
+    needs both centers to be colliders (SCALE.md)."""
     from stglib_spark.operators.dedup import duplicate_clusters
     from stglib_spark.operators.multimodal import video_phash_near_pairs
 
@@ -613,18 +634,9 @@ def test_video_star_mode_min_n_close_interaction(spark):
         for f, h in ((0, h1), (1, h2))
     ]
     fh = spark.createDataFrame(rows, "vid long, frame_idx long, phash long")
-    pairs = video_phash_near_pairs(
-        fh.withColumnRenamed("vid", "media_id"),
-        id_col="media_id", max_hamming=3, blocks=4, max_bucket_size=2,
-        star_centers=1,
-    ).collect()
-    got = {(r.vid_a, r.vid_b): r.n_close for r in pairs}
-    assert (0, 1) in got and (0, 2) in got, got
-    assert (1, 2) not in got, "1-center star must not emit non-min pairs"
-    # both legs clear the default floor least(2, frames)=2 -> one cluster
-    assert all(n >= 2 for n in got.values()), got
-    # default 2-center star: the second center (clip 1's frames) adds
-    # the direct 1<->2 edge — same cluster, better pair-level recall
+    # 2-center star: besides the bucket-min clip 0, the second center
+    # (clip 1's frames) adds the direct 1<->2 edge; every edge clears
+    # the default floor least(2, frames)=2 -> one cluster
     got2 = {
         (r.vid_a, r.vid_b): r.n_close
         for r in video_phash_near_pairs(
@@ -635,7 +647,7 @@ def test_video_star_mode_min_n_close_interaction(spark):
     assert set(got2) == {(0, 1), (0, 2), (1, 2)}, got2
     assert all(n >= 2 for n in got2.values()), got2
     edges = spark.createDataFrame(
-        [(a, b) for (a, b) in got], "doc_a long, doc_b long"
+        [(a, b) for (a, b) in got2], "doc_a long, doc_b long"
     )
     clusters = {
         r.doc_id: r.canonical_id
@@ -646,8 +658,7 @@ def test_video_star_mode_min_n_close_interaction(spark):
     # --- case 2: four chance colliders C0..C3 (one per 16-bit block,
     # Hamming > 3 vs the dup pair), A(4) and B(5) exact dups, 1 frame
     # each, cap 2: every bucket holding A/B is oversize with a
-    # collider as its min -> all star edges fail Hamming -> the real
-    # A/B duplicate is severed
+    # collider as its min -> every min-center star edge fails Hamming
     def collider(block: int, salt: int) -> int:
         # keep `block` identical to h1, flip >=4 bits in the others
         mask = 0
@@ -660,17 +671,8 @@ def test_video_star_mode_min_n_close_interaction(spark):
     rows2 = [(i, 0, collider(i, i)) for i in range(4)]
     rows2 += [(4, 0, h1), (5, 0, h1)]
     fh2 = spark.createDataFrame(rows2, "vid long, frame_idx long, phash long")
-    severed = video_phash_near_pairs(
-        fh2.withColumnRenamed("vid", "media_id"),
-        id_col="media_id", max_hamming=3, blocks=4, max_bucket_size=2,
-        star_centers=1,
-    ).collect()
-    touching_dups = [
-        r for r in severed if {r.vid_a, r.vid_b} & {4, 5}
-    ]
-    assert touching_dups == [], touching_dups
-    # default 2-center star rescues the pair: the second-smallest
-    # member of every oversize bucket is genuine duplicate A(4)
+    # the 2-center star rescues the pair: the second-smallest member of
+    # every oversize bucket is genuine duplicate A(4)
     rescued = video_phash_near_pairs(
         fh2.withColumnRenamed("vid", "media_id"),
         id_col="media_id", max_hamming=3, blocks=4, max_bucket_size=2,

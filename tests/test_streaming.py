@@ -1430,9 +1430,9 @@ def test_streaming_winnow_gate_matches_batch(spark, checkpoint_dir, tmp_path):
 
 
 def test_streaming_winnow_gate_shuffled_past_broadcast_gate(
-    spark, checkpoint_dir, tmp_path
+    spark, checkpoint_dir, tmp_path, monkeypatch
 ):
-    """Past ``broadcast_max_rows`` the kept-fingerprint probe must fall
+    """Past ``STREAM_BROADCAST_MAX_ROWS`` the kept-fingerprint probe must fall
     back to a shuffled stream-static join (the kept set grows linearly
     with index volume — a 100 TB index cannot broadcast), and the
     detection must be identical to the broadcast path. Pins the
@@ -1445,7 +1445,7 @@ def test_streaming_winnow_gate_shuffled_past_broadcast_gate(
 
     import pandas as pd
 
-    from stglib_spark.streaming import streaming_winnow_gate
+    from stglib_spark.streaming import bursts, streaming_winnow_gate
 
     shared_run = (
         "this exact boilerplate sentence appears verbatim in the index "
@@ -1476,11 +1476,12 @@ def test_streaming_winnow_gate_shuffled_past_broadcast_gate(
     spark.createDataFrame(arriving).coalesce(1).write.parquet(d + "/a")
     schema = spark.read.parquet(d + "/a").schema
     stream = spark.readStream.schema(schema).parquet(d + "/*")
+    monkeypatch.setattr(bursts, "STREAM_BROADCAST_MAX_ROWS", 0)
     abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         q = (
-            streaming_winnow_gate(stream, index, broadcast_max_rows=0)
+            streaming_winnow_gate(stream, index)
             .writeStream.format("memory")
             .queryName("winnowshuf")
             .outputMode("append")
@@ -1501,6 +1502,87 @@ def test_streaming_winnow_gate_shuffled_past_broadcast_gate(
         r["doc_id"] for r in spark.sql("SELECT * FROM winnowshuf").collect()
     )
     assert streamed == [30, 32]
+
+
+def test_streaming_near_dedup_gates_the_banded_side_on_its_rows(
+    spark, checkpoint_dir, tmp_path, monkeypatch
+):
+    """The broadcast gate counts the rows each static side actually
+    holds: with N index documents and ``bands`` bands the banded index
+    holds N×bands rows and the token table N. A row budget between the
+    two must broadcast the token table and shuffle the band join — a
+    gate that counted only the N documents would broadcast N×bands
+    rows under an N-row budget. Auto-broadcast is disabled so only the
+    gate's hints can broadcast, and detection is unchanged."""
+    import contextlib
+    import io
+    import os
+    import re
+
+    import pandas as pd
+
+    from stglib_spark.streaming import bursts, streaming_near_dedup
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and runs far away "
+        "into the deep green forest tonight"
+    )
+    other = (
+        "completely unrelated prose about catalyst optimizer internals "
+        "and adaptive query execution stages in a distributed engine"
+    )
+    index_docs = spark.createDataFrame(
+        [(3, base), (6, other)], "doc_id long, text string"
+    )
+    n_docs, bands = 2, 8
+    t0 = pd.Timestamp("2024-05-01 10:00:00")
+    arriving = pd.DataFrame(
+        {
+            "doc_id": [10, 11],
+            "ts": [t0, t0 + pd.Timedelta(minutes=1)],
+            "text": [
+                base.replace("tonight", "today"),  # near-dup of 3
+                "fresh content that matches nothing in the corpus",
+            ],
+        }
+    )
+    d = str(tmp_path / "neargate")
+    os.makedirs(d)
+    spark.createDataFrame(arriving).coalesce(1).write.parquet(d + "/a")
+    schema = spark.read.parquet(d + "/a").schema
+    stream = spark.readStream.schema(schema).parquet(d + "/*")
+    monkeypatch.setattr(bursts, "STREAM_BROADCAST_MAX_ROWS", n_docs * bands - 1)
+    abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        q = (
+            streaming_near_dedup(
+                stream, index_docs, num_hashes=32, bands=bands,
+                shingle_n=2, threshold=0.5,
+            )
+            .writeStream.format("memory")
+            .queryName("neargate")
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            q.explain()
+        plan = buf.getvalue()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
+    assert re.search(
+        r"(SortMergeJoin|ShuffledHashJoin) \[band#\d+, bh#\d+L\]", plan
+    ), plan
+    assert re.search(r"BroadcastHashJoin \[match_id#\d+L\]", plan), plan
+    streamed = {
+        (r["doc_id"], r["match_id"])
+        for r in spark.sql("SELECT * FROM neargate").collect()
+    }
+    assert streamed == {(10, 3)}
 
 
 def test_streaming_cms_counts_matches_batch(spark, checkpoint_dir, tmp_path):
