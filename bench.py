@@ -27,30 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from stglib_spark import queries as registry
 from stglib_spark.session import get_spark
 
-# rows whose code or plan changed THIS round: always in the printed
-# per-query window (rotate out once adjudicated stable)
-CHANGED_THIS_ROUND = {
-    # r15: oracle SQL re-pinned (to_timestamp TIMESTAMPTZ → the
-    # make_timestamp idiom); kept in the window until driver-graded
-    "ts_sg_tide_average",
-    # r15 optimization round (see OPTIMIZATION_r15.md): JVM-parsed
-    # expression construction for the MinHash/LSH chain and the Lloyd
-    # means, reader-schema cache, Observation-fused QA/QC audit,
-    # run_corpus_all auto cluster resolution, overlapped census /
-    # vocab-train jobs. Rows below are the touched later_additions
-    # (the r1-baseline rows touched — dedup_minhash_lsh/token_jaccard/
-    # clusters/semantic etc. — print unconditionally).
-    "dedup_cluster_quality",
-    "sim_kmeans_assign",
-    "text_bigram_logprob",
-    "corpus_dsir_weights",
-    "dedup_incremental_near",
-    "dedup_incremental_batch",
-    # r15 late: estimate-vs-truth fused into the register aggregate
-    # (one tokenize pass — OPTIMIZATION_r15.md §14)
-    "corpus_hll_distinct",
-}
-
 HEADLINE = [
     "q1_pricing_summary",
     "q3_top_revenue_orders",
@@ -271,16 +247,12 @@ def main() -> None:
     # --- artifact layout (VERDICT r12 task #2): the driver captures a
     # fixed-size TAIL of stdout, and the full per-query map outgrew it in
     # r12, truncating the headline totals out of BENCH_r12.json. The
-    # printed line now (a) carries a ROTATING per-query window — the
-    # r1-comparable baseline set plus rows changed this round — instead
-    # of all ~55 rows, and (b) orders the totals LAST so a tail capture
-    # can never lose them. The COMPLETE per-query map is written to
-    # BENCH_FULL_latest.json next to this script (builder-committed per
-    # round alongside the sf1 artifact).
+    # printed line now (a) carries only the r1-comparable baseline set
+    # of per-query rows instead of all ~55, and (b) orders the totals
+    # LAST so a tail capture can never lose them. The COMPLETE per-query
+    # map is written to BENCH_FULL_latest.json next to this script.
     printed_queries = {
-        k: v
-        for k, v in times.items()
-        if k not in later_additions or k in CHANGED_THIS_ROUND
+        k: v for k, v in times.items() if k not in later_additions
     }
     payload = {
         "metric": "total_headline_query_seconds",
@@ -302,8 +274,8 @@ def main() -> None:
     line = json.dumps(payload)
     # hard guard: the driver tail window is 2000 chars; leave headroom
     assert len(line) < 1800, (
-        f"bench JSON line {len(line)} chars — shrink CHANGED_THIS_ROUND "
-        "or rotate more rows out of the printed window"
+        f"bench JSON line {len(line)} chars — rotate rows out of the "
+        "printed window"
     )
     print(line)
     spark.stop()

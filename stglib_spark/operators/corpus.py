@@ -693,7 +693,6 @@ def remove_boilerplate_lines(
     boilerplate: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast: bool = True,
 ) -> DataFrame:
     """C4-style boilerplate removal: drop every line whose TRIMMED form
     appears in the ``boilerplate`` set (built by ``frequent_lines``),
@@ -705,19 +704,16 @@ def remove_boilerplate_lines(
 
     Scale shape: with a ``min_doc_frac``-thresholded census the
     boilerplate set is the tiny high-frequency tail and is BROADCAST, so
-    the line-level anti-join never shuffles corpus lines; pass
-    ``broadcast=False`` when the set may be large (absolute low
-    thresholds on huge corpora) to fall back to a shuffled equi-join.
-    The only corpus shuffle either way is the per-document reassembly
-    aggregate, whose payload is the surviving text itself."""
+    the line-level anti-join never shuffles corpus lines (an absolute
+    low threshold on a huge corpus can make the set large: build it
+    with ``min_doc_frac``). The only corpus shuffle is the per-document
+    reassembly aggregate, whose payload is the surviving text itself."""
     exploded = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), r"\r?\n")).alias("pos", "line"),
     ).withColumn("__key", F.trim(F.col("line")))
     bp = boilerplate.select(F.col("line").alias("__key"))
-    kept = exploded.join(
-        F.broadcast(bp) if broadcast else bp, "__key", "left_anti"
-    )
+    kept = exploded.join(F.broadcast(bp), "__key", "left_anti")
     return (
         kept.groupBy(id_col)
         .agg(

@@ -424,6 +424,97 @@ def _capped_join_sides(
     return left, pinned.hint("shuffle_hash").alias("r"), cond
 
 
+def _lsh_band_rows(
+    sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    portable: bool,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(id_col, *keep, band, bh)`` rows of the MinHash signature
+    columns ``mh_0..mh_{n-1}``: ``bands`` bands of r = num_hashes/bands
+    minhashes, each hashed to ``bh`` (xxhash64, or ``hash60`` of the
+    '|'-joined band for ``portable``) and exploded to one row per band.
+    The one banding of ``lsh_pairs_from_signatures``,
+    ``lsh_pairs_between`` and ``streaming.streaming_near_dedup``."""
+    r = num_hashes // bands
+    # per-band expressions as JVM-parsed SQL strings (r15, guide §5):
+    # the Column-builder form paid ~1 s of py4j roundtrips per query
+    # construction at 8-16 bands; the parsed trees are identical (the
+    # portable branch spells out hash60's conv/substring/md5 chain).
+    if portable:
+        band_cols = [
+            "CAST(conv(substring(md5(concat_ws('|', "
+            + ", ".join(f"mh_{b * r + i}" for i in range(r))
+            + ")), 1, 15), 16, 10) AS BIGINT)"
+            f" AS band_{b}"
+            for b in range(bands)
+        ]
+    else:
+        band_cols = [
+            "xxhash64("
+            + ", ".join(f"mh_{b * r + i}" for i in range(r))
+            + f") AS band_{b}"
+            for b in range(bands)
+        ]
+    names = [id_col, *keep]
+    quoted = [f"`{c}`" for c in names]
+    return (
+        sigs.selectExpr(*quoted, *band_cols)
+        .selectExpr(
+            *quoted,
+            "explode(array("
+            + ", ".join(
+                f"named_struct('band', {b}, 'bh', band_{b})" for b in range(bands)
+            )
+            + ")) AS bb",
+        )
+        .select(*names, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    )
+
+
+def _pigeonhole_block_rows(
+    df: DataFrame,
+    hash_col: str,
+    blocks: int,
+    max_hamming: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(*keep, hash_col, blk, bh)`` rows: the 64-bit ``hash_col`` cut
+    into ``blocks`` blocks of 64/blocks bits, one row per block. Two
+    hashes within Hamming distance blocks−1 differ in at most blocks−1
+    blocks, so they share at least one identical block and meet in a
+    (blk, bh) equi-join. A ``max_hamming`` above blocks−1 breaks that
+    guarantee — qualifying pairs would be silently missed — so it
+    raises ``ValueError``. The one block explode of
+    ``simhash_near_pairs``, ``multimodal.video_phash_near_pairs`` and
+    ``streaming.streaming_phash_gate``."""
+    if max_hamming > blocks - 1:
+        raise ValueError(
+            f"pigeonhole recall guarantee requires max_hamming ≤ blocks-1 "
+            f"({max_hamming} > {blocks - 1}); raise `blocks`"
+        )
+    width = 64 // blocks
+    return df.select(
+        *keep,
+        hash_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("blk"),
+                        F.shiftrightunsigned(F.col(hash_col), b * width)
+                        .bitwiseAND(F.lit((1 << width) - 1))
+                        .alias("bh"),
+                    )
+                    for b in range(blocks)
+                ]
+            )
+        ).alias("bb"),
+    ).select(*keep, hash_col, F.col("bb.blk").alias("blk"), F.col("bb.bh").alias("bh"))
+
+
 def lsh_pairs_from_signatures(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -462,35 +553,7 @@ def lsh_pairs_from_signatures(
     inside mega-buckets matters more than output bounds (SCALE.md
     records the trade). Pass a ``pyspark.sql.Observation`` to read how
     many members hit the cap."""
-    r = num_hashes // bands
-    # per-band expressions as JVM-parsed SQL strings (r15, guide §5):
-    # the Column-builder form paid ~1 s of py4j roundtrips per query
-    # construction at 8-16 bands; the parsed trees are identical (the
-    # portable branch spells out hash60's conv/substring/md5 chain).
-    if portable:
-        band_cols = [
-            "CAST(conv(substring(md5(concat_ws('|', "
-            + ", ".join(f"mh_{b * r + i}" for i in range(r))
-            + ")), 1, 15), 16, 10) AS BIGINT)"
-            f" AS band_{b}"
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            "xxhash64("
-            + ", ".join(f"mh_{b * r + i}" for i in range(r))
-            + f") AS band_{b}"
-            for b in range(bands)
-        ]
-    banded = sigs.selectExpr(f"`{id_col}`", *band_cols)
-    stacked = banded.selectExpr(
-        f"`{id_col}`",
-        "explode(array("
-        + ", ".join(
-            f"named_struct('band', {b}, 'bh', band_{b})" for b in range(bands)
-        )
-        + ")) AS bb",
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    stacked = _lsh_band_rows(sigs, id_col, num_hashes, bands, portable)
     left, right, cond = _capped_join_sides(
         stacked, ["band", "bh"], [id_col], id_col, max_bucket_size, observation
     )
@@ -930,29 +993,9 @@ def simhash_near_pairs(
     both read ``fingerprints``: a caller whose fingerprints come from
     an expensive kernel checkpoints them first (see
     ``multimodal.phash_near_pairs``)."""
-    if max_hamming > blocks - 1:
-        raise ValueError(
-            f"pigeonhole recall guarantee requires max_hamming ≤ blocks-1 "
-            f"({max_hamming} > {blocks - 1}); raise `blocks`"
-        )
-    width = 64 // blocks
-    stacked = fingerprints.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("blk"),
-                        F.shiftrightunsigned(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bh"),
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "simhash", F.col("bb.blk").alias("blk"), F.col("bb.bh").alias("bh"))
+    stacked = _pigeonhole_block_rows(
+        fingerprints, "simhash", blocks, max_hamming, keep=(id_col,)
+    )
     left, right, cond = _capped_join_sides(
         stacked, ["blk", "bh"], [id_col], id_col, max_bucket_size, observation
     )
@@ -1291,7 +1334,6 @@ def incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     index_digest_col: str = "digest",
-    broadcast_index: bool = False,
 ) -> DataFrame:
     """Incremental ingest dedup: admit only batch documents whose
     normalized-text digest is NEW — absent from the already-ingested
@@ -1304,11 +1346,12 @@ def incremental_dedup(
     petabytes the corpus grows.
 
     Plan shape: one digest groupBy over the batch, then a LEFT ANTI join
-    against the index on the digest. The anti join shuffles digests
-    only; pass ``broadcast_index=True`` when the index is a bounded
-    recent window that fits an executor. At full scale, bucket BOTH
-    sides by digest so repeated ingests co-locate without reshuffling
-    the ever-growing index."""
+    against the index on the digest. The anti join carries no
+    broadcast hint: the index grows without bound, so AQE picks the
+    join from its measured size, and past the broadcast threshold it
+    shuffles digests only. At full scale, bucket BOTH sides by digest
+    so repeated ingests co-locate without reshuffling the ever-growing
+    index."""
     digest = F.md5(normalize_text(F.col(text_col)))
     kept = (
         batch.withColumn("__digest", digest)
@@ -1319,8 +1362,6 @@ def incremental_dedup(
         )
     )
     idx = index.select(F.col(index_digest_col).alias("__digest")).distinct()
-    if broadcast_index:
-        idx = F.broadcast(idx)
     return kept.join(idx, "__digest", "left_anti").select(
         F.col(id_col), F.col("__digest").alias("digest"), "batch_dups"
     )
@@ -1397,46 +1438,11 @@ def lsh_pairs_between(
     by (band, bh) so each arriving batch co-locates against it without
     reshuffling the ever-growing index (the near-dup analogue of
     incremental_dedup's digest index)."""
-
-    def _banded(sigs: DataFrame) -> DataFrame:
-        r = num_hashes // bands
-        if portable:
-            band_cols = [
-                hash60(
-                    F.concat_ws(
-                        "|", *[F.col(f"mh_{b * r + i}") for i in range(r)]
-                    )
-                ).alias(f"band_{b}")
-                for b in range(bands)
-            ]
-        else:
-            band_cols = [
-                F.xxhash64(
-                    *[F.col(f"mh_{b * r + i}") for i in range(r)]
-                ).alias(f"band_{b}")
-                for b in range(bands)
-            ]
-        banded = sigs.select(F.col(id_col), *band_cols)
-        return banded.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.col(f"band_{b}").alias("bh"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-
-    left = _banded(batch_sigs).alias("l")
-    right = _banded(index_sigs).alias("r")
+    left = _lsh_band_rows(batch_sigs, id_col, num_hashes, bands, portable)
+    right = _lsh_band_rows(index_sigs, id_col, num_hashes, bands, portable)
     return (
-        left.join(
-            right,
+        left.alias("l").join(
+            right.alias("r"),
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bh") == F.col("r.bh")),
         )

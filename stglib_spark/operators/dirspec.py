@@ -48,6 +48,7 @@ from stglib_spark.operators.waves import (
     make_user_cutoff_np,
     next_power_of_2,
     qkfs_np,
+    sensor_heights,
 )
 
 
@@ -108,13 +109,7 @@ def make_diwasp_ds(
     ``wave_interval``, sensor heights.
     """
     fs = 1.0 / float(config.get("sample_interval", 1.0))
-    # is-not-None chains: a sensor height of 0.0 (at the bed) is valid
-    zp = config.get("pressure_sensor_height")
-    if zp is None:
-        zp = config.get("initial_instrument_height")
-    zp = float(zp) if zp is not None else 0.0
-    zuv = config.get("velocity_sample_volume_height")
-    zuv = float(zuv) if zuv is not None else zp
+    zp, zuv = sensor_heights(config)
     # pressure-sensor horizontal offsets (vec/nc2waves.py:380-415
     # make_diwasp_layout): enter the puv/pres layout x/y rows, feeding
     # the estimator's co-array phase terms

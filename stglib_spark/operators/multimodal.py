@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from stglib_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET_SIZE,
     _capped_join_sides,
+    _pigeonhole_block_rows,
 )
 from pyspark.sql.types import (
     ArrayType,
@@ -443,35 +444,21 @@ def video_phash_near_pairs(
     (vid_a, vid_b, min_hamming, n_close) over their frame pairs within
     ``max_hamming``. The pigeonhole guarantee makes min_hamming exact:
     any frame pair at Hamming ≤ blocks−1 shares a block, so no
-    qualifying pair can be missed. Blocks whose bucket exceeds
-    ``max_bucket_size`` frames are star reduced on the two smallest
-    (vid, frame) members, as in ``dedup.simhash_near_pairs``."""
-    width = 64 // blocks
+    qualifying pair can be missed; a ``max_hamming`` above blocks−1
+    raises ``ValueError`` (``dedup._pigeonhole_block_rows``). Blocks
+    whose bucket exceeds ``max_bucket_size`` frames are star reduced on
+    the two smallest (vid, frame) members, as in
+    ``dedup.simhash_near_pairs``."""
     # lazy-materialize the per-frame hash table: the bucket census and
     # the pair join prune different columns below their exchanges, so
     # without this the video decode kernel executes once per branch
     # (same finding as phash_near_pairs' checkpoint)
     frame_hashes = frame_hashes.localCheckpoint(eager=False)
-    stacked = frame_hashes.select(
-        F.col(id_col).alias("vid"),
-        F.col("frame_idx").alias("f"),
-        F.col("phash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("blk"),
-                        F.shiftrightunsigned(F.col("phash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bh"),
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("bb"),
+    stacked = _pigeonhole_block_rows(
+        frame_hashes, "phash", blocks, max_hamming, keep=(id_col, "frame_idx")
     ).select(
-        "vid", "f", "phash",
-        F.col("bb.blk").alias("blk"), F.col("bb.bh").alias("bh"),
+        F.col(id_col).alias("vid"), F.col("frame_idx").alias("f"),
+        "phash", "blk", "bh",
     )
     # members are (vid, frame); a pair must join two different videos
     left, right, cond = _capped_join_sides(

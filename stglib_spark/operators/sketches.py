@@ -551,9 +551,8 @@ def bloom_bits(
     Scale shape: k positions compute in ONE projection (explode of a
     k-element literal array), the only shuffle is the distinct on
     positions — bounded by m_bits keys. The bit table naturally
-    shards by position range; at filter sizes past broadcast comfort
-    (~10^9 bits) probes co-partition on position instead
-    (`bloom_probe(broadcast_bits=False)`)."""
+    shards by position range, and `bloom_probe` broadcasts it: the
+    table holds at most m_bits rows whatever the data volume."""
     val = (
         F.col(value_col) if isinstance(value_col, str) else value_col
     ).cast("string")
@@ -582,7 +581,6 @@ def bloom_probe(
     k: int = 3,
     m_bits: int = 1 << 14,
     seed: str = "bloom",
-    broadcast_bits: bool = True,
 ) -> DataFrame:
     """Probe a `bloom_bits` table: one row per DISTINCT probe id with
     ``n_hit_bits`` (how many of its distinct bit positions are set) and
@@ -603,11 +601,9 @@ def bloom_probe(
     another value's misses; pre-dedupe to one value per id (or mint a
     synthetic id per value) before probing.
 
-    ``broadcast_bits``: the bit table is bounded by m_bits rows BY
-    CONSTRUCTION (not by data volume), so broadcasting is the default
-    and is safe whenever m_bits is broadcast-sized; for giant filters
-    pass False and the probe side shuffles on position instead —
-    never a corpus-proportional broadcast either way."""
+    The bit table is broadcast: it is bounded by m_bits rows BY
+    CONSTRUCTION (not by data volume), so the broadcast is never
+    corpus-proportional."""
     val = (
         F.col(value_col) if isinstance(value_col, str) else value_col
     ).cast("string")
@@ -620,9 +616,7 @@ def bloom_probe(
         F.col(id_col),
         F.explode(bloom_positions(val, k, m_bits, seed)).alias("position"),
     ).distinct()
-    bt = bits.withColumn("__set", F.lit(1))
-    if broadcast_bits:
-        bt = F.broadcast(bt)
+    bt = F.broadcast(bits.withColumn("__set", F.lit(1)))
     return (
         pp.join(bt, "position", "left")
         .groupBy(id_col)

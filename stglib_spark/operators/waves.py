@@ -23,6 +23,8 @@ with cluster size at 100 TB.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -443,30 +445,35 @@ def puv_schema(burst_col: str = "burst_time") -> StructType:
     )
 
 
-def make_puv_ds(
-    df: DataFrame,
+def sensor_heights(config: dict) -> tuple[float, float]:
+    """``(pressure, velocity)`` sensor heights above the bed in metres:
+    pressure is ``pressure_sensor_height``, else
+    ``initial_instrument_height``, else 0.0; velocity is
+    ``velocity_sample_volume_height``, else the pressure height. The
+    chains test ``is None``: a height of 0.0 (at the bed) is valid."""
+    zp = config.get("pressure_sensor_height")
+    if zp is None:
+        zp = config.get("initial_instrument_height")
+    zp = float(zp) if zp is not None else 0.0
+    zuv = config.get("velocity_sample_volume_height")
+    return zp, float(zuv) if zuv is not None else zp
+
+
+def make_puv_kernel(
     config: dict,
     burst_col: str = "burst_time",
     pressure_col: str = "P_1ac",
     u_col: str = "u_1205",
     v_col: str = "v_1206",
     sample_col: str = "sample",
-) -> DataFrame:
-    """Distributed PUV (wrapper semantics of waves.py:1847-1989 /
-    sig/nc2waves.py:550-599): shuffle on burst key, puv_quick per burst in
-    Arrow batches. Depth per burst = mean pressure + sensor height."""
+) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """The per-burst body of ``make_puv_ds`` built from ``config``: a
+    pandas batch of samples (possibly many bursts) → one ``puv_schema``
+    row per burst. Bursts under 32 samples or with all-NaN pressure are
+    skipped. Depth per burst = mean pressure + sensor height."""
     fs = 1.0 / float(config.get("sample_interval", 1.0))
-    # is-not-None chains: a sensor height of 0.0 (at the bed) is valid
-    zp = config.get("pressure_sensor_height")
-    if zp is None:
-        zp = config.get("initial_instrument_height")
-    zp = float(zp) if zp is not None else 0.0
-    _zuv = config.get("velocity_sample_volume_height")
-    zuv = float(_zuv) if _zuv is not None else zp
+    zp, zuv = sensor_heights(config)
     fft_length = int(config.get("puv_fft_length", 512))
-
-    slim = df.select(burst_col, sample_col, pressure_col, u_col, v_col)
-    schema = puv_schema(burst_col)
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -492,7 +499,24 @@ def make_puv_ds(
             rows.append(out)
         return pd.DataFrame(rows, columns=[burst_col] + _PUV_FIELDS)
 
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(apply_fn, schema)
+    return apply_fn
+
+
+def make_puv_ds(
+    df: DataFrame,
+    config: dict,
+    burst_col: str = "burst_time",
+    pressure_col: str = "P_1ac",
+    u_col: str = "u_1205",
+    v_col: str = "v_1206",
+    sample_col: str = "sample",
+) -> DataFrame:
+    """Distributed PUV (wrapper semantics of waves.py:1847-1989 /
+    sig/nc2waves.py:550-599): shuffle on burst key, ``make_puv_kernel``
+    (puv_quick per burst) in Arrow batches."""
+    slim = df.select(burst_col, sample_col, pressure_col, u_col, v_col)
+    kernel = make_puv_kernel(config, burst_col, pressure_col, u_col, v_col, sample_col)
+    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(kernel, puv_schema(burst_col))
 
 
 def wave_stats_schema(burst_col: str = "burst_time") -> StructType:
@@ -511,29 +535,21 @@ def wave_stats_schema(burst_col: str = "burst_time") -> StructType:
     )
 
 
-def make_waves_ds(
-    df: DataFrame,
+def make_waves_kernel(
     config: dict,
     burst_col: str = "burst_time",
     pressure_col: str = "P_1ac",
     sample_col: str = "sample",
-) -> DataFrame:
-    """Distributed make_waves_ds (core/waves.py:571-681): shuffle on the
-    burst key, spectral chain per burst inside Arrow batches. Only the
-    (burst, sample, pressure) columns cross into Python — project before
-    grouping so the Arrow transfer is minimal."""
+) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """The per-burst body of ``make_waves_ds`` built from ``config``:
+    ``burst_wave_stats_kernel`` over a pandas batch of samples (possibly
+    many bursts) → one ``wave_stats_schema`` row per burst it keeps."""
     sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
-    # is-not-None chain: a sensor height of 0.0 (at the bed) is valid
-    z = config.get("pressure_sensor_height")
-    if z is None:
-        z = config.get("initial_instrument_height")
-    z = float(z) if z is not None else 0.0
+    z, _ = sensor_heights(config)
     nsegs = int(config.get("spec_nsegs", 16))
     noise = float(config.get("wave_fractional_noise", 0.9))
     fcut = config.get("wave_fcut")
     kpmin = config.get("wave_Kpmin")
-
-    slim = df.select(burst_col, sample_col, pressure_col)
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return burst_wave_stats_kernel(
@@ -549,4 +565,20 @@ def make_waves_ds(
             sample_col=sample_col,
         )
 
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(apply_fn, wave_stats_schema(burst_col))
+    return apply_fn
+
+
+def make_waves_ds(
+    df: DataFrame,
+    config: dict,
+    burst_col: str = "burst_time",
+    pressure_col: str = "P_1ac",
+    sample_col: str = "sample",
+) -> DataFrame:
+    """Distributed make_waves_ds (core/waves.py:571-681): shuffle on the
+    burst key, spectral chain per burst (``make_waves_kernel``) inside
+    Arrow batches. Only the (burst, sample, pressure) columns cross into
+    Python — project before grouping so the Arrow transfer is minimal."""
+    slim = df.select(burst_col, sample_col, pressure_col)
+    kernel = make_waves_kernel(config, burst_col, pressure_col, sample_col)
+    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(kernel, wave_stats_schema(burst_col))

@@ -10,7 +10,10 @@ state never holds out-of-duration rows.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def read_events_stream(
@@ -389,20 +392,24 @@ def streaming_diff_gate(
     )
 
 
-def streaming_wave_stats(
+def _burst_window_kernel(
     events: DataFrame,
-    config: dict | None = None,
-    burst_seconds: int = 3600,
-    watermark: str = "2 hours",
-    time_col: str = "ts",
-    pressure_col: str = "value",
+    value_cols: list[str],
+    kernel: Callable,
+    out_schema: StructType,
+    burst_seconds: int,
+    watermark: str,
+    time_col: str,
 ) -> DataFrame:
-    """Streaming twin of the per-burst spectral wave statistics
-    (``make_waves_ds``, core/waves.py:571-681): samples accumulate in
-    keyed state per burst window; when the watermark passes the burst end
-    the SAME batch kernel (``burst_wave_stats_kernel``) runs over the
-    accumulated samples and one row of wave statistics is emitted —
-    batch/stream parity by construction, not by re-implementation.
+    """The state machinery of the per-burst twins: each burst's
+    (``time_col``, *``value_cols``) samples accumulate in keyed state
+    per ``burst_seconds`` window; when the watermark passes the burst
+    end, ``kernel`` — a batch operator's per-burst body — runs once
+    over them as one pandas batch (``burst_time`` = window start,
+    ``sample`` = rank in event time, one column per ``value_cols``)
+    and its rows are projected onto ``out_schema`` with ``n``, the
+    number of samples held. A burst the kernel skips emits nothing,
+    exactly as in batch.
 
     Scale shape: state per open burst = that burst's samples (bounded by
     burst length × sample rate, the same bound the batch Arrow group
@@ -412,90 +419,42 @@ def streaming_wave_stats(
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField
 
-    from stglib_spark.operators.waves import burst_wave_stats_kernel
-
-    cfg = dict(config or {})
-    sample_rate = 1.0 / float(cfg.get("sample_interval", 1.0))
-    z = cfg.get("pressure_sensor_height")
-    if z is None:
-        z = cfg.get("initial_instrument_height")
-    z = float(z) if z is not None else 0.0
-    nsegs = int(cfg.get("spec_nsegs", 16))
-    noise = float(cfg.get("wave_fractional_noise", 0.9))
-    fcut = cfg.get("wave_fcut")
-    kpmin = cfg.get("wave_Kpmin")
-
-    out_schema = StructType(
-        [
-            StructField("burst_time", TimestampType()),
-            StructField("wh_4061", DoubleType()),
-            StructField("wp_4060", DoubleType()),
-            StructField("wp_peak", DoubleType()),
-            StructField("m0", DoubleType()),
-            StructField("n", LongType()),
-        ]
-    )
     state_schema = StructType(
-        [
-            StructField("ts_us", ArrayType(LongType())),
-            StructField("vals", ArrayType(DoubleType())),
-        ]
+        [StructField("ts_us", ArrayType(LongType()))]
+        + [StructField(f"v{i}", ArrayType(DoubleType())) for i in range(len(value_cols))]
     )
     step_us = int(burst_seconds) * 1_000_000
 
-    def stats(key, pdf_iter, state):
+    def close(key, pdf_iter, state):
         burst_us = int(key[0])  # numpy int64 breaks the JSON state codec
         if state.hasTimedOut:
-            ts_us, vals = state.get
+            ts_us, *vals = state.get
             order = np.argsort(np.asarray(ts_us))
             pdf = pd.DataFrame(
                 {
                     "burst_time": pd.to_datetime(burst_us, unit="us"),
                     "sample": np.arange(len(order)),
-                    "P": np.asarray(vals, dtype=float)[order],
+                    **{
+                        c: np.asarray(v, dtype=float)[order]
+                        for c, v in zip(value_cols, vals)
+                    },
                 }
-            )
-            out = burst_wave_stats_kernel(
-                pdf,
-                sample_rate=sample_rate,
-                sensor_height=z,
-                nsegs=nsegs,
-                noise=noise,
-                fcut=fcut,
-                kpmin=kpmin,
-                burst_col="burst_time",
-                pressure_col="P",
-                sample_col="sample",
             )
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "burst_time": out["burst_time"],
-                    "wh_4061": out["wh_4061"],
-                    "wp_4060": out["wp_4060"],
-                    "wp_peak": out["wp_peak"],
-                    "m0": out["m0"],
-                    "n": len(order),
-                }
-            )
+            out = kernel(pdf).assign(n=len(order))
+            yield out[out_schema.fieldNames()]
             return
-        ts_us, vals = state.get if state.exists else ([], [])
-        ts_us, vals = list(ts_us), list(vals)
+        ts_us, *vals = state.get if state.exists else ([],) * (1 + len(value_cols))
+        ts_us, vals = list(ts_us), [list(v) for v in vals]
         for pdf in pdf_iter:
             # plain Python ints/floats: numpy scalars break the JSON
             # state serializer
             ts_us.extend(int(x) for x in pdf[time_col].astype("int64") // 1000)
-            vals.extend(float(x) for x in pdf[pressure_col].astype(float))
-        state.update((ts_us, vals))
+            for c, v in zip(value_cols, vals):
+                v.extend(float(x) for x in pdf[c].astype(float))
+        state.update((ts_us, *vals))
         # emit once the watermark passes the burst end
         burst_end_ms = (burst_us + step_us) // 1000
         state.setTimeoutTimestamp(
@@ -507,15 +466,40 @@ def streaming_wave_stats(
         "__burst_us",
         (F.unix_micros(F.col(time_col)) / step_us).cast("long") * step_us,
     )
-    return (
-        keyed.groupBy("__burst_us")
-        .applyInPandasWithState(
-            stats,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed.groupBy("__burst_us").applyInPandasWithState(
+        close, out_schema, state_schema, "append",
+        GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def streaming_wave_stats(
+    events: DataFrame,
+    config: dict | None = None,
+    burst_seconds: int = 3600,
+    watermark: str = "2 hours",
+    time_col: str = "ts",
+    pressure_col: str = "value",
+) -> DataFrame:
+    """Streaming twin of the per-burst spectral wave statistics
+    (``make_waves_ds``, core/waves.py:571-681): samples accumulate in
+    keyed state per burst window (``_burst_window_kernel``); when the
+    watermark passes the burst end the batch body
+    ``waves.make_waves_kernel`` runs over them and one row of wave
+    statistics (burst_time, wh_4061, wp_4060, wp_peak, m0, n) is
+    emitted — batch/stream parity by construction, not by
+    re-implementation."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, TimestampType
+
+    from stglib_spark.operators.waves import make_waves_kernel
+
+    out_schema = StructType(
+        [StructField("burst_time", TimestampType())]
+        + [StructField(c, DoubleType()) for c in ("wh_4061", "wp_4060", "wp_peak", "m0")]
+        + [StructField("n", LongType())]
+    )
+    kernel = make_waves_kernel(config or {}, "burst_time", pressure_col, "sample")
+    return _burst_window_kernel(
+        events, [pressure_col], kernel, out_schema, burst_seconds, watermark, time_col
     )
 
 
@@ -531,93 +515,24 @@ def streaming_puv(
 ) -> DataFrame:
     """Streaming twin of the PUV directional wave analysis
     (``make_puv_ds`` / core/waves.py:1024-1351): p/u/v triplets
-    accumulate in keyed state per burst; the batch ``puv_quick_np``
-    kernel runs when the watermark closes the burst. Same state bound as
+    accumulate in keyed state per burst (``_burst_window_kernel``); the
+    batch body ``waves.make_puv_kernel`` — its burst guard included —
+    runs when the watermark closes the burst. Same state bound as
     ``streaming_wave_stats`` (one open burst's samples × 3 channels)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import DoubleType, LongType, StructField, TimestampType
 
-    from stglib_spark.operators.waves import _PUV_FIELDS, puv_quick_np
-
-    cfg = dict(config or {})
-    fs = 1.0 / float(cfg.get("sample_interval", 1.0))
-    zp = cfg.get("pressure_sensor_height")
-    if zp is None:
-        zp = cfg.get("initial_instrument_height")
-    zp = float(zp) if zp is not None else 0.0
-    _zuv = cfg.get("velocity_sample_volume_height")
-    zuv = float(_zuv) if _zuv is not None else zp
-    fft_length = int(cfg.get("puv_fft_length", 512))
+    from stglib_spark.operators.waves import _PUV_FIELDS, make_puv_kernel
 
     out_schema = StructType(
-        [StructField("burst_time", TimestampType()),
-         StructField("n", LongType())]
+        [StructField("burst_time", TimestampType()), StructField("n", LongType())]
         + [StructField(name, DoubleType()) for name in _PUV_FIELDS]
     )
-    state_schema = StructType(
-        [
-            StructField("ts_us", ArrayType(LongType())),
-            StructField("p", ArrayType(DoubleType())),
-            StructField("u", ArrayType(DoubleType())),
-            StructField("v", ArrayType(DoubleType())),
-        ]
+    kernel = make_puv_kernel(
+        config or {}, "burst_time", pressure_col, u_col, v_col, "sample"
     )
-    step_us = int(burst_seconds) * 1_000_000
-
-    def stats(key, pdf_iter, state):
-        burst_us = int(key[0])  # numpy int64 breaks the JSON state codec
-        if state.hasTimedOut:
-            ts_us, ps, us, vs = state.get
-            order = np.argsort(np.asarray(ts_us))
-            p = np.asarray(ps, dtype=float)[order]
-            u = np.asarray(us, dtype=float)[order]
-            v = np.asarray(vs, dtype=float)[order]
-            state.remove()
-            if len(p) >= 32 and not np.isnan(p).all():
-                depth = float(np.nanmean(p)) + zp
-                out = puv_quick_np(
-                    np.nan_to_num(p, nan=float(np.nanmean(p))),
-                    np.nan_to_num(u),
-                    np.nan_to_num(v),
-                    depth, zp, zuv, fs, fft_length=fft_length,
-                )
-                rec = {"burst_time": pd.to_datetime(burst_us, unit="us"),
-                       "n": len(p)}
-                rec.update({k: out.get(k) for k in _PUV_FIELDS})
-                yield pd.DataFrame([rec], columns=["burst_time", "n"] + _PUV_FIELDS)
-            return
-        ts_us, ps, us, vs = (
-            state.get if state.exists else ([], [], [], [])
-        )
-        ts_us, ps, us, vs = list(ts_us), list(ps), list(us), list(vs)
-        for pdf in pdf_iter:
-            ts_us.extend(int(x) for x in pdf[time_col].astype("int64") // 1000)
-            ps.extend(float(x) for x in pdf[pressure_col].astype(float))
-            us.extend(float(x) for x in pdf[u_col].astype(float))
-            vs.extend(float(x) for x in pdf[v_col].astype(float))
-        state.update((ts_us, ps, us, vs))
-        burst_end_ms = (burst_us + step_us) // 1000
-        state.setTimeoutTimestamp(
-            max(burst_end_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield from ()
-
-    keyed = events.withWatermark(time_col, watermark).withColumn(
-        "__burst_us",
-        (F.unix_micros(F.col(time_col)) / step_us).cast("long") * step_us,
-    )
-    return keyed.groupBy("__burst_us").applyInPandasWithState(
-        stats, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return _burst_window_kernel(
+        events, [pressure_col, u_col, v_col], kernel, out_schema,
+        burst_seconds, watermark, time_col,
     )
 
 
@@ -1267,11 +1182,12 @@ def streaming_near_dedup(
     batch explode+groupBy path uses, so the signatures — and therefore
     the candidates — are value-identical to the batch operator): the
     batch shape would be a streaming aggregate with per-doc state,
-    while a projection needs none. The band rows then stream-static
-    equi-join the index, token Jaccard is verified inline with array
-    set ops (stateless again), and the only streaming state is the
-    watermark-bounded (doc, match) dedup that collapses multi-band
-    hits.
+    while a projection needs none. Both sides band through the batch
+    operators' ``dedup._lsh_band_rows``; the stream's band rows then
+    stream-static equi-join the index, token Jaccard is verified inline
+    with array set ops (stateless again), and the only streaming state
+    is the watermark-bounded (doc, match) dedup that collapses
+    multi-band hits.
 
     The index side GROWS WITHOUT BOUND as ingest runs, so each static
     side is broadcast only within ``STREAM_BROADCAST_MAX_ROWS`` of ITS
@@ -1280,7 +1196,11 @@ def streaming_near_dedup(
     one. Past the gate the stream-static join runs shuffled on its key
     — the stream side re-partitions per micro-batch, the static side is
     a plain hash-join build."""
-    from stglib_spark.operators.dedup import word_shingles
+    from stglib_spark.operators.dedup import (
+        _lsh_band_rows,
+        minhash_signatures,
+        word_shingles,
+    )
 
     m = F.lit(4294967291)
     sh = word_shingles(F.col(text_col), shingle_n)
@@ -1304,57 +1224,26 @@ def streaming_near_dedup(
         ).alias(f"mh_{i}")
         for i in range(num_hashes)
     ]
-    r = num_hashes // bands
     stream_sig = docs.withColumn("__hs", hs).select(
-        F.col(id_col), F.col(time_col), F.col(text_col), *sigs
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"mh_{b * r + i}") for i in range(r)]
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    tok = word_shingles(F.col(text_col), 1)
-    stream_banded = stream_sig.select(
         F.col(id_col),
         F.col(time_col),
-        tok.alias("__tok"),
-        F.explode(band_structs).alias("bb"),
-    ).select(
-        id_col, time_col, "__tok",
-        F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"),
+        word_shingles(F.col(text_col), 1).alias("__tok"),
+        *sigs,
+    )
+    stream_banded = _lsh_band_rows(
+        stream_sig, id_col, num_hashes, bands, False, keep=(time_col, "__tok")
     )
 
     # static side: the persisted banded index + per-doc token sets (in
     # production both are parquet zones maintained by the batch ingest)
-    from stglib_spark.operators.dedup import minhash_signatures
-
     isig = minhash_signatures(
         index_docs, text_col, id_col, num_hashes, shingle_n, portable=False
     )
-    index_banded = isig.select(
-        F.col(id_col).alias("match_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * r + i}") for i in range(r)]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "match_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    ).distinct()
+    index_banded = (
+        _lsh_band_rows(isig, id_col, num_hashes, bands, False)
+        .withColumnRenamed(id_col, "match_id")
+        .distinct()
+    )
     index_tok = index_docs.select(
         F.col(id_col).alias("match_id"),
         word_shingles(F.col(text_col), 1).alias("__itok"),
@@ -2135,43 +2024,21 @@ def streaming_phash_gate(
     table, and re-encoded duplicates (Hamming ≤ ``max_hamming``) are
     emitted as (media_id, match_id, hamming) the moment they arrive.
 
-    The pigeonhole guarantee carries over unchanged: Hamming ≤
-    blocks−1 implies an identical 16-bit block, so the block equi-join
-    loses no true pair. The index broadcast is size-gated exactly like
-    ``streaming_near_dedup``: the banded index holds ``blocks`` rows
-    per index image (counted once at plan build), and past
-    ``STREAM_BROADCAST_MAX_ROWS`` of them the stream-static join runs
-    shuffled. Only streaming state: the watermark-bounded (doc, match)
-    dedup collapsing multi-block hits. Batch parity: the emitted pair set equals
-    ``phash_near_pairs`` restricted to (stream × index) pairs on the
-    same rows — the parity test's contract."""
+    Both sides cut their hashes into blocks with the batch operators'
+    ``dedup._pigeonhole_block_rows``, so the pigeonhole guarantee
+    carries over unchanged: Hamming ≤ blocks−1 implies an identical
+    16-bit block, so the block equi-join loses no true pair, and a
+    ``max_hamming`` above blocks−1 raises ``ValueError``. The index
+    broadcast is size-gated exactly like ``streaming_near_dedup``: the
+    banded index holds ``blocks`` rows per index image (counted once at
+    plan build), and past ``STREAM_BROADCAST_MAX_ROWS`` of them the
+    stream-static join runs shuffled. Only streaming state: the
+    watermark-bounded (doc, match) dedup collapsing multi-block hits.
+    Batch parity: the emitted pair set equals ``phash_near_pairs``
+    restricted to (stream × index) pairs on the same rows — the parity
+    test's contract."""
+    from stglib_spark.operators.dedup import _pigeonhole_block_rows
     from stglib_spark.operators.multimodal import perceptual_hash
-
-    width = 64 // blocks
-
-    def banded(hashed: DataFrame, out_id: str) -> DataFrame:
-        return hashed.filter(F.col("phash").isNotNull()).select(
-            *[F.col(c) for c in hashed.columns if c != "phash"],
-            F.col("phash").alias(f"__ph_{out_id}"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("blk"),
-                            F.shiftrightunsigned(F.col("phash"), b * width)
-                            .bitwiseAND(F.lit((1 << width) - 1))
-                            .alias("bh"),
-                        )
-                        for b in range(blocks)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(
-            *[c for c in hashed.columns if c != "phash"],
-            f"__ph_{out_id}",
-            F.col("bb.blk").alias("blk"),
-            F.col("bb.bh").alias("bh"),
-        )
 
     # stream side: the event-time column rides THROUGH the stateless
     # hash projection (perceptual_hash keep_cols) — never a
@@ -2182,7 +2049,9 @@ def streaming_phash_gate(
         id_col=id_col,
         keep_cols=[time_col],
     )
-    sb = banded(stream_hashed, "s")
+    sb = _pigeonhole_block_rows(
+        stream_hashed, "phash", blocks, max_hamming, keep=(id_col, time_col)
+    ).withColumnRenamed("phash", "__ph_s")
 
     idx_hashed = perceptual_hash(
         index_media.select(
@@ -2190,7 +2059,9 @@ def streaming_phash_gate(
         ),
         id_col="match_id",
     )
-    ib = banded(idx_hashed, "i")
+    ib = _pigeonhole_block_rows(
+        idx_hashed, "phash", blocks, max_hamming, keep=("match_id",)
+    ).withColumnRenamed("phash", "__ph_i")
     ib = _broadcast_if_small(ib, index_media.count() * blocks)
 
     hamming = F.bit_count(

@@ -405,3 +405,34 @@ def test_cli_nc2diwasp_step(spark):
     assert len(out) == 2
     assert set(out["diwasp_type"]) == {"puv"}
     assert (out["wh_4061"] > 0).all()
+
+
+def test_cli_mediadedup_video_rejects_max_hamming_past_pigeonhole(spark):
+    """`mediadedup` on video reads `phash_max_hamming` and `phash_blocks`
+    from the config; a Hamming bound above blocks−1 would silently miss
+    near-duplicate frame pairs, so the stage raises instead of writing a
+    pairs zone."""
+    import os
+
+    from stglib_spark.functions.media import encode_avi
+
+    os.makedirs(TMP, exist_ok=True)
+    frames = [np.full((12, 22, 3), 16 * f, np.uint8) for f in range(3)]
+    media = f"{TMP}/cli_videos.parquet"
+    spark.createDataFrame(
+        [(1, bytearray(encode_avi(frames, fps=4.0)))],
+        "media_id long, content binary",
+    ).write.mode("overwrite").parquet(media)
+    open(f"{TMP}/mediadedup.yaml", "w").write(
+        "filename: climedia\n"
+        "media_kind: video\n"
+        "phash_max_hamming: 4\n"
+        "phash_blocks: 4\n"
+    )
+    shutil.rmtree(f"{TMP}/climedia_pairs", ignore_errors=True)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        main(
+            ["media", "mediadedup", None, f"{TMP}/mediadedup.yaml",
+             "--input", media, "--output-dir", TMP]
+        )
+    assert not os.path.exists(f"{TMP}/climedia_pairs")

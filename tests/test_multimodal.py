@@ -237,3 +237,21 @@ def test_perceptual_hash_string_ids_and_keep_cols(spark):
     rows = {r["media_id"]: (r["ts"], r["phash"]) for r in out.collect()}
     assert rows["img-a"][0] == 1000 and rows["img-a"][1] is not None
     assert rows["img-b"] == (2000, None)
+
+
+def test_video_phash_near_pairs_rejects_max_hamming_past_pigeonhole(spark):
+    """Hamming ≤ blocks−1 is what guarantees two close frames share a
+    block; above it qualifying frame pairs would be silently missed, so
+    the operator raises instead of answering."""
+    from stglib_spark.operators.multimodal import video_phash_near_pairs
+
+    # frames at Hamming 4: one differing bit in each 16-bit block, so
+    # no block is shared and the block join cannot find the pair
+    fh = spark.createDataFrame(
+        [(1, 0, 0), (2, 0, 1 | 1 << 16 | 1 << 32 | 1 << 48)],
+        "media_id long, frame_idx int, phash long",
+    )
+    with pytest.raises(ValueError, match="pigeonhole"):
+        video_phash_near_pairs(fh, max_hamming=4, blocks=4)
+    rows = video_phash_near_pairs(fh, max_hamming=4, blocks=8).collect()
+    assert [(r.vid_a, r.vid_b, r.min_hamming) for r in rows] == [(1, 2, 4)]

@@ -328,7 +328,8 @@ def test_streaming_wave_stats_matches_batch(spark, checkpoint_dir, tmp_path):
     """Streaming per-burst spectral wave statistics: samples accumulate in
     keyed state across micro-batches and the BATCH kernel runs when the
     watermark closes the burst — streamed Hs/Tp must equal make_waves_ds
-    on the same rows (parity by construction)."""
+    on the same rows (parity by construction). A burst the batch kernel
+    skips (over 10% NaN pressure) is not emitted by the stream either."""
     import os
     import time as _time
 
@@ -351,13 +352,23 @@ def test_streaming_wave_stats_matches_batch(spark, checkpoint_dir, tmp_path):
     ts = [t0 + pd.Timedelta(seconds=0.25 * i) for i in range(n)]
     p = 10.0 + 0.5 * np.cos(2 * np.pi * np.arange(n) * 0.25 / 8.0)
     burst = pd.DataFrame({"ts": ts, "value": p})
+    # a second burst the batch kernel rejects: 40 of its 64 samples NaN
+    t1 = pd.Timestamp("2024-06-01 02:00:00")
+    skipped = pd.DataFrame(
+        {
+            "ts": [t1 + pd.Timedelta(seconds=0.25 * i) for i in range(64)],
+            "value": np.where(np.arange(64) < 40, np.nan, 10.0),
+        }
+    )
 
     d = str(tmp_path / "feed")
     os.makedirs(d)
     # split the burst across two files → state must carry across batches
     spark.createDataFrame(burst.iloc[:300]).coalesce(1).write.parquet(d + "/a")
     _time.sleep(1.1)
-    spark.createDataFrame(burst.iloc[300:]).coalesce(1).write.parquet(d + "/b")
+    spark.createDataFrame(
+        pd.concat([burst.iloc[300:], skipped], ignore_index=True)
+    ).coalesce(1).write.parquet(d + "/b")
     _time.sleep(1.1)
     adv = pd.DataFrame(
         {"ts": [pd.Timestamp("2024-06-01 06:00:00")], "value": [10.0]}
@@ -408,11 +419,30 @@ def test_streaming_wave_stats_matches_batch(spark, checkpoint_dir, tmp_path):
     assert s["wh_4061"] > 1.0
     assert s["wp_peak"] == pytest.approx(8.0, rel=0.1)
 
+    # the stream emits exactly the bursts make_waves_ds emits over every
+    # streamed row: the NaN burst and the advancer's one-sample burst
+    # are skipped by both
+    every = pd.concat([burst, skipped, adv], ignore_index=True)
+    every["burst_time"] = every["ts"].dt.floor("h")
+    every["sample"] = every.groupby("burst_time").cumcount()
+    allb = make_waves_ds(
+        spark.createDataFrame(
+            every[["burst_time", "sample", "value"]].rename(
+                columns={"value": "P_1ac"}
+            )
+        ),
+        cfg,
+    ).collect()
+    assert [r["burst_time"] for r in allb] == list(got) == [t_burst]
+    assert allb[0]["wh_4061"] == pytest.approx(s["wh_4061"], rel=1e-9)
+
 
 def test_streaming_puv_matches_batch(spark, checkpoint_dir, tmp_path):
     """Streaming PUV directional analysis: p/u/v accumulate in state and
     the batch puv_quick kernel runs at burst close — streamed Hrms and
-    azimuth equal make_puv_ds on the same rows."""
+    azimuth equal make_puv_ds on the same rows. Bursts the batch kernel
+    skips (under 32 samples, all-NaN pressure) are not emitted by the
+    stream either."""
     import os
     import time as _time
 
@@ -443,12 +473,20 @@ def test_streaming_puv_matches_batch(spark, checkpoint_dir, tmp_path):
         {"ts": [t0 + pd.Timedelta(seconds=x) for x in tt],
          "p": p, "u": u, "v": v}
     )
+    # two bursts the batch kernel skips: 20 samples at 02:00, and 64
+    # samples of all-NaN pressure at 03:00
+    short = burst.iloc[:20].assign(ts=burst["ts"].iloc[:20] + pd.Timedelta(hours=2))
+    nan_p = burst.iloc[:64].assign(
+        ts=burst["ts"].iloc[:64] + pd.Timedelta(hours=3), p=np.nan
+    )
 
     d = str(tmp_path / "feed")
     os.makedirs(d)
     spark.createDataFrame(burst.iloc[:250]).coalesce(1).write.parquet(d + "/a")
     _time.sleep(1.1)
-    spark.createDataFrame(burst.iloc[250:]).coalesce(1).write.parquet(d + "/b")
+    spark.createDataFrame(
+        pd.concat([burst.iloc[250:], short, nan_p], ignore_index=True)
+    ).coalesce(1).write.parquet(d + "/b")
     _time.sleep(1.1)
     adv = pd.DataFrame(
         {"ts": [pd.Timestamp("2024-06-02 06:00:00")],
@@ -488,6 +526,22 @@ def test_streaming_puv_matches_batch(spark, checkpoint_dir, tmp_path):
     # physics sanity: azimuth near the travel direction (mod 180 ambiguity
     # resolved by the u-v correlation sign), Tr ≈ 8 s
     assert s["Tr"] == pytest.approx(8.0, rel=0.15)
+
+    # the stream emits exactly the bursts make_puv_ds emits over every
+    # streamed row: the short, all-NaN and advancer bursts are skipped
+    every = pd.concat([burst, short, nan_p, adv], ignore_index=True)
+    every["burst_time"] = every["ts"].dt.floor("h")
+    every["sample"] = every.groupby("burst_time").cumcount()
+    allb = make_puv_ds(
+        spark.createDataFrame(
+            every[["burst_time", "sample", "p", "u", "v"]].rename(
+                columns={"p": "P_1ac", "u": "u_1205", "v": "v_1206"}
+            )
+        ),
+        cfg,
+    ).collect()
+    assert [r["burst_time"] for r in allb] == list(got) == [t0.to_pydatetime()]
+    assert allb[0]["azr"] == pytest.approx(s["azr"], rel=1e-9)
 
 
 def test_streaming_gap_fill_late_data_lands_in_correct_tick(
@@ -1345,6 +1399,28 @@ def test_streaming_phash_gate_matches_batch(spark, checkpoint_dir, tmp_path):
     assert (10, 100) in streamed and (12, 200) in streamed
     assert streamed[(12, 200)] == 0
     assert all(mid != 11 for mid, _ in streamed)
+
+
+def test_streaming_phash_gate_rejects_max_hamming_past_pigeonhole(spark):
+    """Hamming ≤ blocks−1 is what guarantees a shared block; a gate
+    asked for more would silently miss qualifying pairs, so it raises
+    at construction — before the index is counted or any query runs."""
+    from stglib_spark.streaming import streaming_phash_gate
+
+    stream = (
+        spark.readStream.format("rate").load()
+        .select(
+            F.col("value").alias("media_id"),
+            F.col("timestamp").alias("ts"),
+            F.lit(b"").cast("binary").alias("content"),
+        )
+    )
+    index_media = spark.createDataFrame([], "media_id long, content binary")
+    with pytest.raises(ValueError, match="pigeonhole"):
+        streaming_phash_gate(stream, index_media, max_hamming=4, blocks=4)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        streaming_phash_gate(stream, index_media, max_hamming=2, blocks=2)
+    assert streaming_phash_gate(stream, index_media, max_hamming=7, blocks=8).isStreaming
 
 
 def test_streaming_winnow_gate_matches_batch(spark, checkpoint_dir, tmp_path):
