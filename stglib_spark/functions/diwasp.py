@@ -14,7 +14,9 @@ spectrum on a user grid. Reference behavior anchors (semantics, not code):
 ``infospec.py:6-57`` (Hs/Tp/DTp/Dp).
 
 Differences by design (this is not a port): the m×n×direction loops are
-einsum-vectorized, and the final (freq, dir) regrid is separable bilinear
+einsum-vectorized, IMLM is batched over frequencies (each relaxation
+iteration is one stacked inverse and two einsums over every bin, not a
+per-bin loop), and the final (freq, dir) regrid is separable bilinear
 interpolation on the polar grid with circular wraparound in direction
 instead of scipy ``griddata`` scatter interpolation (scipy is unavailable;
 the grids are regular so separable interpolation is exact to the same
@@ -118,56 +120,60 @@ def dftm(xps, trm, kx, ss, ddir):
     return ss[0][:, None] * e
 
 
+def _inv_stack(mats: np.ndarray) -> np.ndarray:
+    """Inverse of every matrix in a (..., m, m) stack in one LAPACK
+    call; when any one is singular, each slice is inverted on its own
+    and a singular one falls back to ``pinv``."""
+    try:
+        return np.linalg.inv(mats)
+    except np.linalg.LinAlgError:
+        out = np.empty_like(mats)
+        for i, mat in enumerate(mats):
+            try:
+                out[i] = np.linalg.inv(mat)
+            except np.linalg.LinAlgError:
+                out[i] = np.linalg.pinv(mat)
+        return out
+
+
 def imlm(xps, trm, kx, ss, ddir, miter=50, gamma=0.1, alpha=0.1):
     """Iterated maximum likelihood estimator (private/IMLM.py semantics),
-    einsum-vectorized; per frequency: MLE seed from inverse cross-spectral
-    matrix, then `miter` relaxation iterations toward consistency."""
-    szd, _, nf = xps.shape
-    nd = trm.shape[2]
+    batched over frequencies: MLE seed from the inverse cross-spectral
+    matrix of every bin, then `miter` relaxation iterations toward
+    consistency, each one stacked inverse and einsum over all bins."""
     expx = np.exp(1j * kx)  # (m,n,f,d)
     htemp = np.einsum("nfd,mfd,mnfd->fmnd", trm, np.conj(trm), expx)
     ihtemp = np.einsum("nfd,mfd,mnfd->fmnd", trm, np.conj(trm), np.conj(expx))
 
-    S = np.zeros((nf, nd), dtype=complex)
-    for ff in range(nf):
-        mat = xps[:, :, ff]
-        try:
-            invcps = np.linalg.inv(mat)
-        except np.linalg.LinAlgError:
-            invcps = np.linalg.pinv(mat)
-        sftmp = np.einsum("mn,mnd->d", invcps, htemp[ff])
+    invcps = _inv_stack(np.moveaxis(xps, 2, 0))  # (f,m,n)
+    sftmp = np.einsum("fmn,fmnd->fd", invcps, htemp)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        eo = 1.0 / sftmp
+    eo = eo / (ddir * np.sum(eo, axis=1, keepdims=True))
+    e = eo.copy()
+    t = eo.copy()
+    for _ in range(miter):
+        ixps = np.einsum("fmnd,fd->fmn", ihtemp, e) * ddir
+        invi = _inv_stack(ixps)
+        sftmp = np.einsum("fmn,fmnd->fd", invi, htemp)
+        told = t
         with np.errstate(divide="ignore", invalid="ignore"):
-            eo = 1.0 / sftmp
-        eo = eo / (ddir * np.sum(eo))
-        e = eo.copy()
-        t = eo.copy()
-        for _ in range(miter):
-            ixps = np.einsum("mnd,d->mn", ihtemp[ff], e) * ddir
-            try:
-                invi = np.linalg.inv(ixps)
-            except np.linalg.LinAlgError:
-                invi = np.linalg.pinv(ixps)
-            sftmp = np.einsum("mn,mnd->d", invi, htemp[ff])
-            told = t
-            with np.errstate(divide="ignore", invalid="ignore"):
-                t = 1.0 / sftmp
-            t = t / (ddir * np.sum(t))
-            e = e + gamma * ((eo - t) + alpha * (t - told))
-            e = e / (ddir * np.sum(e))
-        # energy conservation: the relaxation can leave negative side
-        # lobes; the downstream clamp (S<0 → 0) would then ADD energy.
-        # Clamp here and renormalize the spreading function to unit
-        # integral so each frequency slice conserves the observed
-        # autospectrum level ss[0,f] by construction (m0-preserving;
-        # the reference clamps without renormalizing, dirspec.py:158,
-        # which is the known IMLM Hs-inflation artifact).
-        er = np.real(np.conj(e))
-        er[~np.isfinite(er) | (er < 0)] = 0.0
-        tot = ddir * er.sum()
-        if tot > 0:
-            er = er / tot
-        S[ff, :] = np.real(ss[0, ff]) * er
-    return S
+            t = 1.0 / sftmp
+        t = t / (ddir * np.sum(t, axis=1, keepdims=True))
+        e = e + gamma * ((eo - t) + alpha * (t - told))
+        e = e / (ddir * np.sum(e, axis=1, keepdims=True))
+    # energy conservation: the relaxation can leave negative side
+    # lobes; the downstream clamp (S<0 → 0) would then ADD energy.
+    # Clamp here and renormalize the spreading function to unit
+    # integral so each frequency slice conserves the observed
+    # autospectrum level ss[0,f] by construction (m0-preserving;
+    # the reference clamps without renormalizing, dirspec.py:158,
+    # which is the known IMLM Hs-inflation artifact).
+    er = np.real(np.conj(e))
+    er[~np.isfinite(er) | (er < 0)] = 0.0
+    tot = ddir * er.sum(axis=1, keepdims=True)
+    er = np.divide(er, tot, out=er, where=tot > 0)
+    return (np.real(ss[0])[:, None] * er).astype(complex)
 
 
 def interp_spectrum(

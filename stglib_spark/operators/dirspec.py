@@ -260,6 +260,8 @@ def make_diwasp_ds(
                 fhi = 2.0 if nyq > 2 else nyq
                 freqs_out = np.arange(flo, fhi, (fhi - flo) / nfr)
             dirs_out = np.arange(0.0, 360.0, 360.0 / ndirs)
+            # a failed fit raises: skipping it would write a zone that
+            # looks complete (only the two gates above skip a burst)
             try:
                 res = dirspec(
                     data,
@@ -277,8 +279,10 @@ def make_diwasp_ds(
                     dunit=dunit,
                     xaxisdir=xaxisdir,
                 )
-            except Exception:
-                continue
+            except Exception as exc:
+                raise ValueError(
+                    f"DIWASP fit of burst {bt} failed: {exc}"
+                ) from exc
             f_out = res["freqs"]
             fspec = res["fspec"]
             S = res["S"]

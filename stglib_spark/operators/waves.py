@@ -582,3 +582,32 @@ def make_waves_ds(
     slim = df.select(burst_col, sample_col, pressure_col)
     kernel = make_waves_kernel(config, burst_col, pressure_col, sample_col)
     return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(kernel, wave_stats_schema(burst_col))
+
+
+def make_waves_puv_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
+    """``make_waves_ds`` LEFT JOIN ``make_puv_ds`` on ``burst_time`` as
+    one shuffle and one Arrow stage (the reference's nc2waves with
+    ``puv: true``, sig/nc2waves.py:550-599): the (burst, sample, p, u, v)
+    projection is shuffled once, and each batch runs
+    ``make_waves_kernel`` and ``make_puv_kernel`` and left-merges the
+    PUV row onto the wave row. A burst the wave chain keeps but PUV
+    skips (< 32 samples) carries null PUV columns. Only the pressure
+    column varies between callers; the others are the clean zone's
+    fixed names."""
+    burst_col = "burst_time"
+    slim = df.select(burst_col, "sample", pressure_col, "u_1205", "v_1206")
+    waves = make_waves_kernel(config, pressure_col=pressure_col)
+    puv = make_puv_kernel(config, pressure_col=pressure_col)
+
+    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = waves(pdf)
+        # reindex, not merge: an empty PUV frame has an object-typed key
+        matched = puv(pdf).set_index(burst_col).reindex(out[burst_col])
+        for name in _PUV_FIELDS:
+            out[name] = matched[name].to_numpy(dtype=float)
+        return out
+
+    schema = StructType(
+        wave_stats_schema(burst_col).fields + puv_schema(burst_col).fields[1:]
+    )
+    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(apply_fn, schema)

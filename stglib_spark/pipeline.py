@@ -795,19 +795,18 @@ def run_waves(spark: SparkSession, config: dict[str, Any]) -> str:
         )
         return _write_zone(waves, config, "waves", history)
     pcol = "P_1ac" if "P_1ac" in df.columns else "P_1"
-    waves = wave_ops.make_waves_ds(df, config, pressure_col=pcol)
+    puv = bool(config.get("puv")) and "u_1205" in df.columns and "v_1206" in df.columns
+    if puv:
+        # PUV directional statistics on the wave table, one Arrow stage
+        # (the reference computes both in vec/sig nc2waves when puv:
+        # true, sig/nc2waves.py:550-599); trim_max_wp touches only wave
+        # columns, so it commutes with the merge
+        waves = wave_ops.make_waves_puv_ds(df, config, pressure_col=pcol)
+    else:
+        waves = wave_ops.make_waves_ds(df, config, pressure_col=pcol)
     waves = clip_ops.trim_max_wp(waves, config)
     history.insert_history("Computed wave statistics (Welch spectral chain).")
-    if (
-        config.get("puv")
-        and "u_1205" in df.columns
-        and "v_1206" in df.columns
-    ):
-        # PUV directional statistics joined onto the wave table (the
-        # reference computes both in vec/sig nc2waves when puv: true,
-        # sig/nc2waves.py:550-599)
-        puv = wave_ops.make_puv_ds(df, config, pressure_col=pcol)
-        waves = waves.join(puv, "burst_time", "left")
+    if puv:
         history.insert_history("Computed PUV directional wave statistics.")
     return _write_zone(waves, config, "waves", history)
 

@@ -8,9 +8,14 @@ partitions sized for the local box but overridden by AQE at scale.
 
 from __future__ import annotations
 
+import logging
 import os
+import sys
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger(__name__)
 
 TABLES = (
     "region",
@@ -126,8 +131,8 @@ def _warm_collation_support(spark: SparkSession) -> None:
         _WARMED.add(key)
     try:
         spark.sql("select lower('ΣAa'), upper('σaA'), initcap('ßx')").collect()
-    except Exception:
-        pass  # warm-up must never block session creation
+    except Exception as exc:  # warm-up must never block session creation
+        logger.warning("collation warm-up failed: %s", exc)
     _warm_python_workers(spark)
 
 
@@ -168,8 +173,16 @@ def ensure_package_shipped(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zip_path)
         if key is not None:
             _SHIPPED.add(key)
-    except Exception:
-        pass  # best-effort; local-mode repo-cwd runs work without it
+    except Exception as exc:  # local-mode repo-cwd runs work without it
+        logger.warning("shipping stglib_spark to the executors failed: %s", exc)
+
+
+def _identity_batch(pdf):
+    """The worker warm-up's kernel. Module level, so cloudpickle ships
+    it by reference and every warmed worker imports this package (and
+    so installs ``guard_zip_invalidation``); a lambda would ship by
+    value and import nothing."""
+    return pdf
 
 
 def _warm_python_workers(spark: SparkSession) -> None:
@@ -186,13 +199,60 @@ def _warm_python_workers(spark: SparkSession) -> None:
         (
             spark.range(n)
             .groupBy("id")
-            .applyInPandas(lambda pdf: pdf, "id long")
+            .applyInPandas(_identity_batch, "id long")
             .write.format("noop")
             .mode("overwrite")
             .save()
         )
-    except Exception:
-        pass
+    except Exception as exc:
+        logger.warning("Python worker warm-up failed: %s", exc)
+
+
+_ZIP_SIGNATURE = "_stglib_zip_signature"
+
+
+def guard_zip_invalidation() -> bool:
+    """Make ``zipimporter.invalidate_caches`` skip an unchanged archive.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``worker_util.setup_spark_files``). Before Python 3.12 that
+    makes every ``zipimporter`` re-read its archive's whole directory:
+    about a dozen importers on ``pyspark.zip`` (1.3k entries) and two on
+    the spark-core jar (5.4k), ~0.2 s per task on a warm worker. The
+    wrapper keys each importer's last read on the archive's
+    ``(st_mtime_ns, st_size)``, the key of ``load_table``'s schema cache:
+    an unchanged archive is not re-read, a changed or missing one goes
+    through the original method. Python 3.12 made the invalidation lazy,
+    so there it changes nothing. Idempotent; returns whether the wrapper
+    is installed."""
+    if sys.version_info >= (3, 12):
+        return False
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, _ZIP_SIGNATURE, False):
+        return True
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            sig = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            sig = None
+        if sig is not None and getattr(self, _ZIP_SIGNATURE, None) == sig:
+            return
+        original(self)
+        setattr(self, _ZIP_SIGNATURE, sig)
+
+    setattr(invalidate_caches, _ZIP_SIGNATURE, True)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
+
+
+# Only inside a Python worker (it has a task context); the process that
+# builds the session keeps its import system as it is.
+if TaskContext.get() is not None:
+    guard_zip_invalidation()
 
 
 # Columns stored as parquet TIMESTAMP(NANOS), which Spark's reader rejects;
@@ -226,8 +286,8 @@ def pin_utc(spark: SparkSession) -> None:
     get_spark."""
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    except Exception as exc:
+        logger.warning("pinning the session timezone to UTC failed: %s", exc)
 
 
 # Reader-schema cache, keyed on (path, mtime_ns, size): schema inference

@@ -600,3 +600,99 @@ def test_diwasp_nsamps_pow2_and_px_py_offsets(spark):
         np.array(r_off["diwasp_dspec"], dtype=float),
         rtol=1e-6, atol=1e-12, equal_nan=True,
     )
+
+
+def _imlm_per_frequency(xps, trm, kx, ss, ddir, miter=50, gamma=0.1, alpha=0.1):
+    """The per-frequency IMLM loop the batched ``imlm`` replaced: one
+    3x3 inverse and two einsums per bin and iteration."""
+    szd, _, nf = xps.shape
+    nd = trm.shape[2]
+    expx = np.exp(1j * kx)
+    htemp = np.einsum("nfd,mfd,mnfd->fmnd", trm, np.conj(trm), expx)
+    ihtemp = np.einsum("nfd,mfd,mnfd->fmnd", trm, np.conj(trm), np.conj(expx))
+
+    def inv(mat):
+        try:
+            return np.linalg.inv(mat)
+        except np.linalg.LinAlgError:
+            return np.linalg.pinv(mat)
+
+    S = np.zeros((nf, nd), dtype=complex)
+    for ff in range(nf):
+        sftmp = np.einsum("mn,mnd->d", inv(xps[:, :, ff]), htemp[ff])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            eo = 1.0 / sftmp
+        eo = eo / (ddir * np.sum(eo))
+        e = eo.copy()
+        t = eo.copy()
+        for _ in range(miter):
+            ixps = np.einsum("mnd,d->mn", ihtemp[ff], e) * ddir
+            sftmp = np.einsum("mn,mnd->d", inv(ixps), htemp[ff])
+            told = t
+            with np.errstate(divide="ignore", invalid="ignore"):
+                t = 1.0 / sftmp
+            t = t / (ddir * np.sum(t))
+            e = e + gamma * ((eo - t) + alpha * (t - told))
+            e = e / (ddir * np.sum(e))
+        er = np.real(np.conj(e))
+        er[~np.isfinite(er) | (er < 0)] = 0.0
+        tot = ddir * er.sum()
+        if tot > 0:
+            er = er / tot
+        S[ff, :] = np.real(ss[0, ff]) * er
+    return S
+
+
+def _imlm_inputs(seed, szd=3, nf=30, nd=36):
+    rng = np.random.default_rng(seed)
+    a = rng.standard_normal((nf, szd, szd)) + 1j * rng.standard_normal((nf, szd, szd))
+    # Hermitian positive-definite cross spectra, as csd_matrix makes
+    xps = np.moveaxis(a @ np.conj(np.swapaxes(a, 1, 2)), 0, 2)
+    trm = rng.uniform(0.1, 2.0, (szd, nf, nd))
+    kx = rng.uniform(-3.0, 3.0, (szd, szd, nf, nd))
+    ss = rng.uniform(0.0, 5.0, (szd, nf)).astype(complex)
+    return xps, trm, kx, ss, 2 * np.pi / nd
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_batched_imlm_equals_per_frequency_loop(seed):
+    from stglib_spark.functions.diwasp import imlm
+
+    args = _imlm_inputs(seed)
+    np.testing.assert_array_equal(
+        imlm(*args, miter=20), _imlm_per_frequency(*args, miter=20)
+    )
+
+
+def test_batched_imlm_singular_bin_takes_the_pinv_path():
+    from stglib_spark.functions.diwasp import imlm
+
+    xps, trm, kx, ss, ddir = _imlm_inputs(3)
+    # a dead third sensor at bin 7: its row and column are zero
+    xps[2, :, 7] = 0.0
+    xps[:, 2, 7] = 0.0
+    with pytest.raises(np.linalg.LinAlgError):
+        np.linalg.inv(xps[:, :, 7])
+    got = imlm(xps, trm, kx, ss, ddir, miter=20)
+    np.testing.assert_array_equal(
+        got, _imlm_per_frequency(xps, trm, kx, ss, ddir, miter=20)
+    )
+    assert np.isfinite(got).all()
+
+
+def test_make_diwasp_ds_failed_fit_raises_with_burst_time(spark):
+    """A frequency grid above Nyquist fails the fit of every burst; that
+    must raise, naming the burst, not write an empty zone that looks
+    complete."""
+    from stglib_spark.operators.dirspec import make_diwasp_ds
+
+    cfg = {
+        "sample_interval": 0.5,
+        "pressure_sensor_height": 0.5,
+        "diwasp": "puv",
+        "diwasp_method": "IMLM",
+        "diwasp_freqs": [5.0, 6.0],
+    }
+    df = _diwasp_burst_df(spark, n_bursts=2)
+    with pytest.raises(Exception, match=r"DIWASP fit of burst 2024-03-01 0\d:00:00 failed"):
+        make_diwasp_ds(df, cfg).collect()

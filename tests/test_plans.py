@@ -827,3 +827,28 @@ def test_spread_contract_scan_width_and_sentinels(spark, tmp_path):
     # checkpointed leaf: stats sentinel => unknown => floor fires
     cp = spark.range(10).coalesce(1).localCheckpoint()
     assert spread(cp) is not cp
+
+
+def test_puv_waves_run_one_python_stage_and_no_join(spark, tmp_path, monkeypatch):
+    """run_waves with puv: true plans the wave chain and PUV as one
+    FlatMapGroupsInPandas over one shuffle, with no join."""
+    import pandas as pd
+
+    from stglib_spark import pipeline
+
+    cfg = {"filename": "puvplan", "output_dir": str(tmp_path), "puv": True,
+           "sample_interval": 0.5, "wave_interval": 16}
+    t = pd.Timestamp("2024-06-01") + pd.to_timedelta(range(64), unit="s") / 2
+    spark.createDataFrame(
+        pd.DataFrame({"time": t, "P_1ac": 10.0, "u_1205": 0.1, "v_1206": 0.1})
+    ).write.parquet(pipeline._zone_path(cfg, "clean"))
+    written = []
+    monkeypatch.setattr(
+        pipeline, "_write_zone", lambda df, *a, **k: written.append(df) or ""
+    )
+    pipeline.run_waves(spark, cfg)
+    plan = written[0]._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert count(plan, r"FlatMapGroupsInPandas") == 2, plan  # tree + detail
+    assert count(plan, r"Join") == 0, plan

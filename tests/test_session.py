@@ -1,6 +1,12 @@
-"""Unit tests for the session helpers that need no running Spark: the
-byte-size conf parser and the once-per-SparkContext guards."""
+"""Unit tests for the session helpers: the byte-size conf parser, the
+once-per-SparkContext guards, the warnings of the best-effort startup
+steps and the Python workers' zip-invalidation guard."""
 
+import importlib
+import logging
+import sys
+import zipfile
+import zipimport
 from types import SimpleNamespace
 
 import pytest
@@ -105,3 +111,118 @@ def test_failed_context_lookup_records_nothing(guards):
         assert lost.warm_queries == 1
     assert session._WARMED == set() and session._SHIPPED == set()
     assert len(guards) == 2
+
+
+class _Broken:
+    """A session whose every Spark call raises."""
+
+    def __init__(self):
+        self.sparkContext = _Context("local-broken")
+        self.sparkContext.addPyFile = self._fail
+        self.sparkContext.defaultParallelism = 4
+        self.conf = SimpleNamespace(set=self._fail)
+
+    def _fail(self, *_args, **_kwargs):
+        raise RuntimeError("boom")
+
+    sql = range = _fail
+
+
+@pytest.mark.parametrize(
+    "site",
+    [
+        "ensure_package_shipped",
+        "_warm_collation_support",
+        "_warm_python_workers",
+        "pin_utc",
+    ],
+)
+def test_failed_session_step_logs_one_warning(site, monkeypatch, tmp_path, caplog):
+    monkeypatch.setattr(session, "_WARMED", set())
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    step = getattr(session, site)
+    if site == "_warm_collation_support":
+        # the worker warm it calls next is a site of its own
+        monkeypatch.setattr(session, "_warm_python_workers", lambda _s: None)
+    caplog.set_level(logging.WARNING, logger=session.logger.name)
+    step(_Broken())
+    records = [
+        r for r in caplog.records
+        if r.name == session.logger.name and r.levelno == logging.WARNING
+    ]
+    assert len(records) == 1, [r.getMessage() for r in records]
+    assert "boom" in records[0].getMessage()
+
+
+def test_zip_invalidation_guard_rereads_only_a_changed_archive(
+    monkeypatch, tmp_path
+):
+    """``importlib.invalidate_caches()`` must still expose a module added
+    to a zip already on ``sys.path``; with the guard, an unchanged archive
+    is not re-read. The guard is installed on a monkeypatched attribute,
+    so the test process's import system is restored afterwards."""
+    archive = tmp_path / "guarded.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("_zipguard_first.py", "VALUE = 1\n")
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("_zipguard_first", "_zipguard_second"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        if path == str(archive):
+            reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    guarded = session.guard_zip_invalidation()
+    assert guarded == (sys.version_info < (3, 12))
+    assert session.guard_zip_invalidation() == guarded  # idempotent
+
+    assert importlib.import_module("_zipguard_first").VALUE == 1
+    # the first invalidation re-reads and records the signature
+    importlib.invalidate_caches()
+    before = len(reads)
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    if guarded:
+        assert len(reads) == before
+    with zipfile.ZipFile(archive, "a") as zf:
+        zf.writestr("_zipguard_second.py", "VALUE = 2\n")
+    importlib.invalidate_caches()
+    assert importlib.import_module("_zipguard_second").VALUE == 2
+    if guarded:
+        assert len(reads) == before + 1
+    sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_warmed_workers_install_the_zip_guard(spark):
+    """The worker warm ships a module-level function, so a warmed worker
+    imports the package; a worker that imports it installs the guard, and
+    this process's ``zipimporter`` stays untouched."""
+    import pandas as pd
+
+    assert session._identity_batch.__module__ == "stglib_spark.session"
+
+    def probe(pdf):
+        import zipimport as zi
+
+        import stglib_spark.session as s
+
+        flag = getattr(zi.zipimporter.invalidate_caches, s._ZIP_SIGNATURE, False)
+        return pd.DataFrame({"guarded": [bool(flag)]})
+
+    rows = (
+        spark.range(1).groupBy("id").applyInPandas(probe, "guarded boolean")
+        .collect()
+    )
+    assert [r.guarded for r in rows] == [sys.version_info < (3, 12)]
+    assert not getattr(
+        zipimport.zipimporter.invalidate_caches, session._ZIP_SIGNATURE, False
+    )

@@ -71,3 +71,61 @@ def test_puv_variance_preservation():
     out = puv_quick_np(p, u, v, h, zp, zuv, fs, fft_length=1024)
     hrms_expected = 2 * np.sqrt(2 * np.var(eta))
     assert out["Hrmsp"] == pytest.approx(hrms_expected, rel=0.15)
+
+
+def _puv_bursts(spark):
+    """Four bursts of (burst, sample, p, u, v) at 2 Hz: two full ones, one
+    of 20 samples (the wave chain keeps it, PUV needs 32) and one with
+    all-NaN pressure (both skip it)."""
+    import pandas as pd
+
+    frames = []
+    for b, (n, nan_p) in enumerate([(256, False), (256, False), (20, False), (64, True)]):
+        p, u, v, _ = _linear_wave(fs=2.0, n=n, theta=30.0 + 40 * b)
+        frames.append(
+            pd.DataFrame(
+                {
+                    "burst_time": pd.Timestamp("2024-06-01") + pd.Timedelta(hours=b),
+                    "sample": np.arange(n),
+                    "P_1ac": np.full(n, np.nan) if nan_p else p,
+                    "u_1205": u,
+                    "v_1206": v,
+                }
+            )
+        )
+    return spark.createDataFrame(pd.concat(frames, ignore_index=True))
+
+
+def test_fused_waves_puv_equals_waves_left_join_puv(spark):
+    """One Arrow stage computes what make_waves_ds LEFT JOIN make_puv_ds
+    on the burst key computed: same columns in the same order, same
+    values, and null PUV columns on the burst PUV skips."""
+    from stglib_spark.operators.waves import (
+        _PUV_FIELDS,
+        make_puv_ds,
+        make_waves_ds,
+        make_waves_puv_ds,
+    )
+
+    df = _puv_bursts(spark)
+    cfg = {"sample_interval": 0.5, "pressure_sensor_height": 0.5,
+           "velocity_sample_volume_height": 1.0, "puv_fft_length": 64,
+           "wave_Kpmin": 0.2}
+    joined = make_waves_ds(df, cfg).join(make_puv_ds(df, cfg), "burst_time", "left")
+    fused = make_waves_puv_ds(df, cfg)
+    assert fused.schema == joined.schema
+
+    want = [r.asDict() for r in joined.orderBy("burst_time").collect()]
+    got = [r.asDict() for r in fused.orderBy("burst_time").collect()]
+    assert len(got) == 3  # the all-NaN burst is skipped by both
+    short = got[2]
+    assert all(short[c] is None for c in _PUV_FIELDS)
+    assert short["wh_4061"] is not None
+    assert all(got[0][c] is not None for c in ("Hrmsp", "azr", "ubr"))
+    for g, w in zip(got, want):
+        assert g.keys() == w.keys()
+        for c in g:
+            if isinstance(g[c], float) and isinstance(w[c], float):
+                assert g[c] == w[c] or (np.isnan(g[c]) and np.isnan(w[c])), c
+            else:
+                assert g[c] == w[c], c

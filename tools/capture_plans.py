@@ -17,6 +17,11 @@ scratch directories (`.../stglib_spark_scratch/pid42/clusterq_ab12cd34/`)
 become `<scratch>/clusterq_*/`. A before/after check of a change is then
 a plain `diff -r` of the two captures. One line per query prints the
 plan's Exchange, BroadcastExchange and Python-UDF node counts.
+
+A query that runs pipeline stages while it is built (the `e2e_*`
+chains) returns a plan that only reads the last zone back; the plan of
+each zone it writes is captured too, as `<query>.<zone><suffix>.txt`
+(a zone written twice gets `.<zone>.2`).
 """
 
 from __future__ import annotations
@@ -70,7 +75,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import bench
-    from stglib_spark import queries as registry
+    from stglib_spark import pipeline, queries as registry
     from stglib_spark.session import get_spark
 
     names = bench.HEADLINE + bench.E2E_STAGE
@@ -79,27 +84,46 @@ def main() -> None:
 
     out_dir = os.path.join(REPO, "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
+
+    def explain(df) -> str:
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    zone_plans: list[tuple[str, str]] = []
+    write_zone = pipeline._write_zone
+
+    def recording_write_zone(df, config, zone, *a, **k):
+        zone_plans.append((zone, explain(df)))
+        return write_zone(df, config, zone, *a, **k)
+
+    pipeline._write_zone = recording_write_zone
     spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
+        zone_plans.clear()
         try:
-            df = registry.QUERIES[name](spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = explain(registry.QUERIES[name](spark, args.sf_dir))
         except Exception as e:  # noqa: BLE001
             plan = f"PLAN CAPTURE FAILED: {e!r}"
-        plan = normalize(plan, args.sf_dir)
-        path = os.path.join(out_dir, f"{name}{args.suffix}.txt")
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(plan)
-        counts = node_counts(plan)
-        print(
-            name,
-            " ".join(f"{node}={counts[node]}" for node in COUNTED),
-            os.path.relpath(path, REPO),
-            flush=True,
-        )
+        captures = [(name, plan)]
+        seen: Counter = Counter()
+        for zone, zplan in zone_plans:
+            seen[zone] += 1
+            label = f"{name}.{zone}" + (f".{seen[zone]}" if seen[zone] > 1 else "")
+            captures.append((label, zplan))
+        for label, text in captures:
+            text = normalize(text, args.sf_dir)
+            path = os.path.join(out_dir, f"{label}{args.suffix}.txt")
+            with open(path, "w", encoding="utf-8") as f:
+                f.write(text)
+            counts = node_counts(text)
+            print(
+                label,
+                " ".join(f"{node}={counts[node]}" for node in COUNTED),
+                os.path.relpath(path, REPO),
+                flush=True,
+            )
     spark.stop()
 
 

@@ -1,8 +1,13 @@
 """Per-query profiler: run registry queries through the noop sink on an
-event-logged session, then report per-stage wall time, task time, and
-shuffle bytes, plus the FINAL adaptive plan (after AQE re-optimization,
-including ReusedExchange/ReusedQueryStage nodes that the pre-execution
-``explain`` hides).
+event-logged session, then report per-stage wall time, task time,
+shuffle bytes and Python-worker time, plus the FINAL adaptive plan
+(after AQE re-optimization, including ReusedExchange/ReusedQueryStage
+nodes that the pre-execution ``explain`` hides).
+
+``pyInit`` and ``pyRun`` sum a stage's "time to initialize Python
+workers" and "time to run Python workers" over its tasks. The worker
+stamps its boot time before it blocks for the next task, so a reused
+worker's init time also holds its idle wait since its previous task.
 
 Usage: python tools/profile_query.py QUERY [QUERY...] [--sf-dir DIR]
        [--runs N] [--plan]
@@ -46,9 +51,16 @@ def build_session(cpus: int):
     return get_spark("stglib-profile")
 
 
+# Python-worker SQL metrics (ms) as Spark 4 names them in a stage's
+# accumulables; a stage with several Python operators carries one each
+PY_INIT = "time to initialize Python workers"
+PY_RUN = "time to run Python workers"
+
+
 def parse_eventlog(job_window: tuple[float, float]):
     """Stage rows (name, wall ms, task-time ms, shuffle read/write MB,
-    rows) for stages submitted inside the [t0, t1] window (epoch ms)."""
+    Python-worker init/run ms, tasks) for stages submitted inside the
+    [t0, t1] window (epoch ms)."""
     rows = []
     for path in _log_files():
         with open(path, encoding="utf-8") as f:
@@ -72,6 +84,10 @@ def parse_eventlog(job_window: tuple[float, float]):
                     a.get("Name"): (a.get("Value") or 0)
                     for a in si.get("Accumulables", [])
                 }
+                py = {PY_INIT: 0.0, PY_RUN: 0.0}
+                for a in si.get("Accumulables", []):
+                    if a.get("Name") in py:
+                        py[a["Name"]] += float(a.get("Value") or 0)
                 rows.append(
                     {
                         "stage": si["Stage ID"],
@@ -87,6 +103,8 @@ def parse_eventlog(job_window: tuple[float, float]):
                         "sh_write_mb": round(
                             acc.get("internal.metrics.shuffle.write.bytesWritten", 0)
                             / 1e6, 2),
+                        "py_init_ms": round(py[PY_INIT]),
+                        "py_run_ms": round(py[PY_RUN]),
                         "tasks": si.get("Number of Tasks"),
                     }
                 )
@@ -155,13 +173,16 @@ def main() -> None:
         print(
             f"last-run stages={len(stages)} sum_stage_wall="
             f"{sum(s['wall_ms'] for s in stages)/1000:.3f}s "
-            f"sum_task_time={total_task/1000:.3f}s"
+            f"sum_task_time={total_task/1000:.3f}s "
+            f"sum_py_init={sum(s['py_init_ms'] for s in stages)}ms "
+            f"sum_py_run={sum(s['py_run_ms'] for s in stages)}ms"
         )
         for s in stages:
             print(
                 f"  st{s['stage']:>4} wall={s['wall_ms']:>6}ms "
                 f"task={s['task_ms']:>7}ms n={s['tasks']:>3} "
                 f"shR={s['sh_read_mb']:>8}MB shW={s['sh_write_mb']:>8}MB "
+                f"pyInit={s['py_init_ms']:>6}ms pyRun={s['py_run_ms']:>6}ms "
                 f" {s['sname']}"
             )
         if args.plan:
