@@ -183,34 +183,6 @@ def add_min_max(df: DataFrame, value_cols: Sequence[str]) -> dict[str, tuple]:
     return {v: (row[f"{v}__min"], row[f"{v}__max"]) for v in value_cols}
 
 
-def brange_from_profile(
-    df: DataFrame,
-    time_col: str = "time",
-    bindist_col: str = "bindist",
-    amp_col: str = "amp",
-    blank_dist: float = 0.0,
-) -> DataFrame:
-    """Distance to boundary = bindist of the max-amplitude bin beyond the
-    blanking distance (sig/cdf2nc.py:1728-1777): ``max_by`` per time."""
-    return (
-        df.filter(F.col(bindist_col) > F.lit(float(blank_dist)))
-        .groupBy(time_col)
-        .agg(F.max_by(F.col(bindist_col), F.col(amp_col)).alias("brange"))
-    )
-
-
-def linregress_agg(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Closed-form least squares slope/intercept/r (indexvel.py:120-134's
-    scipy.linregress as one aggregation): slope = cov/var, r = corr."""
-    x, y = F.col(x_col), F.col(y_col)
-    return df.agg(
-        (F.covar_samp(x, y) / F.var_samp(x)).alias("slope"),
-        (F.avg(y) - F.covar_samp(x, y) / F.var_samp(x) * F.avg(x)).alias("intercept"),
-        F.corr(x, y).alias("rvalue"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def top_third_mean_threshold(
     df: DataFrame, value_col: str, factor: float = 0.85
 ) -> float:

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
 
 from stglib_spark.functions.diwasp import dirspec
 from stglib_spark.operators.waves import (
+    BURST,
+    SAMPLE,
     define_cutoff_np,
     make_dspec_tail_np,
     make_tail_np,
@@ -72,10 +74,10 @@ def make_mwd(freqs: np.ndarray, dirs_deg: np.ndarray, dspec: np.ndarray) -> floa
     return float(dm)
 
 
-def diwasp_schema(burst_col: str = "burst_time") -> StructType:
+def diwasp_schema() -> StructType:
     return StructType(
         [
-            StructField(burst_col, TimestampType()),
+            StructField(BURST, TimestampType()),
             StructField("diwasp_frequency", ArrayType(DoubleType())),
             StructField("diwasp_direction", ArrayType(DoubleType())),
             StructField("diwasp_fspec", ArrayType(DoubleType())),
@@ -94,11 +96,7 @@ def diwasp_schema(burst_col: str = "burst_time") -> StructType:
 def make_diwasp_ds(
     df: DataFrame,
     config: dict,
-    burst_col: str = "burst_time",
-    sample_col: str = "sample",
     pressure_col: str = "P_1ac",
-    u_col: str = "u_1205",
-    v_col: str = "v_1206",
     ast_col: str | None = None,
 ) -> DataFrame:
     """Distributed directional wave spectra: one dirspec per burst.
@@ -167,19 +165,19 @@ def make_diwasp_ds(
         config.get("diwasp_xdir", config.get("diwasp_xaxisdir", 90.0))
     )
 
-    cols = [burst_col, sample_col, pressure_col, u_col, v_col]
+    cols = [BURST, SAMPLE, pressure_col, "u_1205", "v_1206"]
     if ast_col:
         cols.append(ast_col)
     slim = df.select(*cols)
-    schema = diwasp_schema(burst_col)
+    schema = diwasp_schema()
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
-        for bt, grp in pdf.groupby(burst_col, sort=True):
-            grp = grp.sort_values(sample_col)
+        for bt, grp in pdf.groupby(BURST, sort=True):
+            grp = grp.sort_values(SAMPLE)
             p = grp[pressure_col].to_numpy(dtype=float)
-            u = grp[u_col].to_numpy(dtype=float)
-            v = grp[v_col].to_numpy(dtype=float)
+            u = grp["u_1205"].to_numpy(dtype=float)
+            v = grp["v_1206"].to_numpy(dtype=float)
             ast = grp[ast_col].to_numpy(dtype=float) if ast_col else None
             if nsamps_cfg or pow2:
                 use = (
@@ -327,7 +325,7 @@ def make_diwasp_ds(
             dm = float(np.round(make_mwd(f_out, res["dirs_deg"], S), 0))
             rows.append(
                 {
-                    burst_col: bt,
+                    BURST: bt,
                     "diwasp_frequency": f_out.tolist(),
                     "diwasp_direction": res["dirs_deg"].tolist(),
                     "diwasp_fspec": fspec.tolist(),
@@ -344,7 +342,7 @@ def make_diwasp_ds(
         return pd.DataFrame(
             rows,
             columns=[
-                burst_col,
+                BURST,
                 "diwasp_frequency",
                 "diwasp_direction",
                 "diwasp_fspec",
@@ -359,4 +357,4 @@ def make_diwasp_ds(
             ],
         )
 
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(apply_fn, schema)
+    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(apply_fn, schema)

@@ -103,13 +103,6 @@ def qkfs(omega: Column, h: Column) -> Column:
     )
 
 
-def transfer_function_kp(k: Column, height: Column, depth: Column) -> Column:
-    """Pressure-attenuation transfer Kp = cosh(k·z)/cosh(k·h) with z the
-    sensor height above bed and h water depth (core/waves.py:778-803;
-    Kp(0 Hz) = 1 handled by cosh(0)/cosh(0))."""
-    return F.cosh(k * height) / F.cosh(k * depth)
-
-
 def make_bin_depth(
     pressure: Column, bindist: Column, orientation: str = "UP"
 ) -> Column:
@@ -247,17 +240,6 @@ def pres2dep_sql(p_dbar: str, s: str, t: str, lat: str) -> str:
     — the reference's pres2dep structure (utils.py:1966-1978) with EOS-80
     density. Use with ``F.expr`` engine-side and verbatim in the oracle."""
     return f"({p_dbar}*1.0e4 / ({_density_sql(s, t, p_dbar)} * {_gravity_sql(lat)}))"
-
-
-def seawater_density_unesco(
-    salinity_col: str, temperature_col: str, pressure_dbar_col: str
-) -> Column:
-    """EOS-80 density as a Column over named input columns (library API;
-    built from the same SQL text the oracle uses, so engine and oracle
-    share one formulation)."""
-    from pyspark.sql import functions as _F
-
-    return _F.expr(_density_sql(salinity_col, temperature_col, pressure_dbar_col))
 
 
 def pres2dep_full(

@@ -54,20 +54,3 @@ def profile_clip(
     for lo, hi in pairs:
         cond = cond | F.col(profile_col).between(F.lit(int(lo)), F.lit(int(hi)))
     return df.filter(cond)
-
-
-def profile_met_lookup(
-    df: DataFrame,
-    met: DataFrame,
-    profile_time_col: str = "profile_time",
-    met_time_col: str = "time",
-    value_cols: Sequence[str] = ("atmpres",),
-) -> DataFrame:
-    """Per-profile scalar lookup from a met table (rsk/cdf2nc.py:188-193:
-    ``met.sel(time=profile_time)``): broadcast equi-join of the tiny met
-    table on the profile start time."""
-    sel = met.select(
-        F.col(met_time_col).alias(profile_time_col),
-        *[F.col(c) for c in value_cols],
-    )
-    return df.join(F.broadcast(sel), profile_time_col, "left")

@@ -52,8 +52,6 @@ def _count_chars(col: Column, chars: str) -> Column:
 _ALPHA = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 )
-_DIGIT = "0123456789"
-_PUNCT_FULL = ".,;:!?'\"()[]{}-"
 _PUNCT6 = ".,;:!?"
 _WS_CHARS = " \t\n\x0B\f\r"
 
@@ -80,21 +78,6 @@ def bpe_ish_token_count(text: Column) -> Column:
         F.regexp_extract_all(
             text, F.lit(r"([A-Za-z]+|[0-9]|[^A-Za-z0-9 \t\n\x0B\f\r]+)"), 0
         )
-    )
-
-
-def char_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document character statistics used by quality scoring."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_chars_calc": F.length(t),
-            "n_tokens": token_count(t),
-            "n_alpha": _count_chars(t, _ALPHA),
-            "n_digit": _count_chars(t, _DIGIT),
-            "n_punct": _count_chars(t, _PUNCT_FULL),
-            "n_space": _count_chars(t, " "),
-        }
     )
 
 

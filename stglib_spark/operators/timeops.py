@@ -96,40 +96,12 @@ def burst_keys(
     return out.withColumn(sample_col, F.row_number().over(w) - 1)
 
 
-def truncate_to_whole_bursts(
-    df: DataFrame,
-    samples_per_burst: int,
-    sample_col: str = "sample",
-) -> DataFrame:
-    """Drop trailing partial-burst samples (rsk/csv2cdf.py:63-68:
-    truncate record length to a multiple of samples_per_burst — in long
-    form simply drop samples beyond the burst size)."""
-    return df.filter(F.col(sample_col) < F.lit(int(samples_per_burst)))
-
-
 def wave_duration_trim(
     df: DataFrame, nsamps: int, sample_col: str = "sample"
 ) -> DataFrame:
     """Truncate each burst to its first nsamps samples
     (rsk/nc2waves.py:33-42)."""
     return df.filter(F.col(sample_col) < F.lit(int(nsamps)))
-
-
-def drop_duplicate_times(
-    df: DataFrame, time_col: str = "time", series_cols: Sequence[str] = ()
-) -> DataFrame:
-    """First row wins per timestamp (sig/cdf2nc.py:1582
-    drop_duplicates(dim='time', keep='first') — 'first' in time order is
-    made deterministic here by taking the minimum of every other column's
-    tie-break ordering via row_number)."""
-    w = Window.partitionBy(*[F.col(c) for c in series_cols], F.col(time_col)).orderBy(
-        *[F.col(c) for c in df.columns]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def fill_time_gaps(
@@ -160,27 +132,6 @@ def fill_time_gaps(
         ).alias(time_col),
     )
     return grid.join(df, [*series_cols, time_col], "left")
-
-
-def mark_bursts_from_samples(
-    df: DataFrame,
-    time_col: str = "time",
-    sample_col: str = "sample",
-    series_cols: Sequence[str] = (),
-    burst_col: str = "burst",
-) -> DataFrame:
-    """Assign burst ids from recorded sample==first markers
-    (sig/cdf2nc.py:1597-1643): running count of boundary rows."""
-    w = (
-        Window.partitionBy(*[F.col(c) for c in series_cols])
-        .orderBy(time_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    first_sample = F.min(F.col(sample_col)).over(
-        Window.partitionBy(*[F.col(c) for c in series_cols])
-    )
-    boundary = (F.col(sample_col) == first_sample).cast("int")
-    return df.withColumn(burst_col, F.sum(boundary).over(w) - 1)
 
 
 def avg_tide_bursts(

@@ -39,6 +39,9 @@ from pyspark.sql.types import (
 from stglib_spark.session import pin_grouping
 from stglib_spark.functions.signal import next_power_of_2, welch_psd
 
+# the clean zone's burst key and within-burst sample index
+BURST, SAMPLE = "burst_time", "sample"
+
 G = 9.81
 
 
@@ -131,14 +134,12 @@ def burst_wave_stats_kernel(
     noise: float = 0.9,
     fcut: float | None = None,
     kpmin: float | None = None,
-    burst_col: str = "burst_time",
     pressure_col: str = "P_1ac",
-    sample_col: str = "sample",
 ) -> pd.DataFrame:
     """Per-burst spectral chain on a pandas batch (possibly many bursts)."""
     rows = []
-    for bt, grp in pdf.groupby(burst_col, sort=True):
-        grp = grp.sort_values(sample_col)
+    for bt, grp in pdf.groupby(BURST, sort=True):
+        grp = grp.sort_values(SAMPLE)
         p = grp[pressure_col].to_numpy(dtype=float)
         if len(p) < 8 or np.isnan(p).all():
             continue
@@ -175,7 +176,7 @@ def burst_wave_stats_kernel(
         wp_peak = 1.0 / fp if fp > 0 else float("nan")
         rows.append(
             {
-                burst_col: bt,
+                BURST: bt,
                 "frequency": f.tolist(),
                 "pspec": pspec.tolist(),
                 "m0": m0,
@@ -187,7 +188,7 @@ def burst_wave_stats_kernel(
             }
         )
     cols = [
-        burst_col,
+        BURST,
         "frequency",
         "pspec",
         "m0",
@@ -204,9 +205,7 @@ def burst_wave_stats_elev_kernel(
     pdf: pd.DataFrame,
     sample_rate: float,
     nsegs: int = 16,
-    burst_col: str = "burst_time",
     elev_col: str = "elev",
-    sample_col: str = "sample",
 ) -> pd.DataFrame:
     """Per-burst wave statistics from direct sea-surface elevation
     (core/waves.py:684-743 ``make_waves_ds_elev``): Welch PSD of the
@@ -214,8 +213,8 @@ def burst_wave_stats_elev_kernel(
     min(2 Hz, Nyquist)], Pnn = Pxx directly — no Kp transfer, no noise
     cutoff, no f⁻⁴ tail — then the same m0/m2 → Hs/Tm/Tp stats."""
     rows = []
-    for bt, grp in pdf.groupby(burst_col, sort=True):
-        grp = grp.sort_values(sample_col)
+    for bt, grp in pdf.groupby(BURST, sort=True):
+        grp = grp.sort_values(SAMPLE)
         e = grp[elev_col].to_numpy(dtype=float)
         if len(e) < 8 or np.isnan(e).all():
             continue
@@ -243,7 +242,7 @@ def burst_wave_stats_elev_kernel(
         fp = f[int(np.argmax(np.nan_to_num(pnn, nan=0.0)))]
         rows.append(
             {
-                burst_col: bt,
+                BURST: bt,
                 "frequency": f.tolist(),
                 "pspec": pnn.tolist(),
                 "m0": m0,
@@ -255,7 +254,7 @@ def burst_wave_stats_elev_kernel(
             }
         )
     cols = [
-        burst_col,
+        BURST,
         "frequency",
         "pspec",
         "m0",
@@ -271,9 +270,7 @@ def burst_wave_stats_elev_kernel(
 def make_waves_ds_elev(
     df: DataFrame,
     config: dict,
-    burst_col: str = "burst_time",
     elev_col: str = "elev",
-    sample_col: str = "sample",
 ) -> DataFrame:
     """Distributed make_waves_ds_elev (core/waves.py:684-743): wave
     statistics from a direct surface-elevation measurement (Geolux radar
@@ -281,19 +278,17 @@ def make_waves_ds_elev(
     shape as the pressure chain — one Arrow batch per burst."""
     sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
     nsegs = int(config.get("spec_nsegs", 16))
-    slim = df.select(burst_col, sample_col, elev_col)
+    slim = df.select(BURST, SAMPLE, elev_col)
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return burst_wave_stats_elev_kernel(
             pdf,
             sample_rate=sample_rate,
             nsegs=nsegs,
-            burst_col=burst_col,
             elev_col=elev_col,
-            sample_col=sample_col,
         )
 
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(apply_fn, wave_stats_schema(burst_col))
+    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(apply_fn, wave_stats_schema())
 
 
 def puv_quick_np(
@@ -438,9 +433,9 @@ _PUV_FIELDS = [
 ]
 
 
-def puv_schema(burst_col: str = "burst_time") -> StructType:
+def puv_schema() -> StructType:
     return StructType(
-        [StructField(burst_col, TimestampType())]
+        [StructField(BURST, TimestampType())]
         + [StructField(name, DoubleType()) for name in _PUV_FIELDS]
     )
 
@@ -461,11 +456,9 @@ def sensor_heights(config: dict) -> tuple[float, float]:
 
 def make_puv_kernel(
     config: dict,
-    burst_col: str = "burst_time",
     pressure_col: str = "P_1ac",
     u_col: str = "u_1205",
     v_col: str = "v_1206",
-    sample_col: str = "sample",
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """The per-burst body of ``make_puv_ds`` built from ``config``: a
     pandas batch of samples (possibly many bursts) → one ``puv_schema``
@@ -477,8 +470,8 @@ def make_puv_kernel(
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
-        for bt, grp in pdf.groupby(burst_col, sort=True):
-            grp = grp.sort_values(sample_col)
+        for bt, grp in pdf.groupby(BURST, sort=True):
+            grp = grp.sort_values(SAMPLE)
             p = grp[pressure_col].to_numpy(dtype=float)
             u = grp[u_col].to_numpy(dtype=float)
             v = grp[v_col].to_numpy(dtype=float)
@@ -495,34 +488,26 @@ def make_puv_kernel(
                 fs,
                 fft_length=fft_length,
             )
-            out[burst_col] = bt
+            out[BURST] = bt
             rows.append(out)
-        return pd.DataFrame(rows, columns=[burst_col] + _PUV_FIELDS)
+        return pd.DataFrame(rows, columns=[BURST] + _PUV_FIELDS)
 
     return apply_fn
 
 
-def make_puv_ds(
-    df: DataFrame,
-    config: dict,
-    burst_col: str = "burst_time",
-    pressure_col: str = "P_1ac",
-    u_col: str = "u_1205",
-    v_col: str = "v_1206",
-    sample_col: str = "sample",
-) -> DataFrame:
+def make_puv_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
     """Distributed PUV (wrapper semantics of waves.py:1847-1989 /
     sig/nc2waves.py:550-599): shuffle on burst key, ``make_puv_kernel``
     (puv_quick per burst) in Arrow batches."""
-    slim = df.select(burst_col, sample_col, pressure_col, u_col, v_col)
-    kernel = make_puv_kernel(config, burst_col, pressure_col, u_col, v_col, sample_col)
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(kernel, puv_schema(burst_col))
+    slim = df.select(BURST, SAMPLE, pressure_col, "u_1205", "v_1206")
+    kernel = make_puv_kernel(config, pressure_col)
+    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(kernel, puv_schema())
 
 
-def wave_stats_schema(burst_col: str = "burst_time") -> StructType:
+def wave_stats_schema() -> StructType:
     return StructType(
         [
-            StructField(burst_col, TimestampType()),
+            StructField(BURST, TimestampType()),
             StructField("frequency", ArrayType(DoubleType())),
             StructField("pspec", ArrayType(DoubleType())),
             StructField("m0", DoubleType()),
@@ -535,12 +520,7 @@ def wave_stats_schema(burst_col: str = "burst_time") -> StructType:
     )
 
 
-def make_waves_kernel(
-    config: dict,
-    burst_col: str = "burst_time",
-    pressure_col: str = "P_1ac",
-    sample_col: str = "sample",
-) -> Callable[[pd.DataFrame], pd.DataFrame]:
+def make_waves_kernel(config: dict, pressure_col: str = "P_1ac") -> Callable[[pd.DataFrame], pd.DataFrame]:
     """The per-burst body of ``make_waves_ds`` built from ``config``:
     ``burst_wave_stats_kernel`` over a pandas batch of samples (possibly
     many bursts) → one ``wave_stats_schema`` row per burst it keeps."""
@@ -560,28 +540,20 @@ def make_waves_kernel(
             noise=noise,
             fcut=fcut,
             kpmin=kpmin,
-            burst_col=burst_col,
             pressure_col=pressure_col,
-            sample_col=sample_col,
         )
 
     return apply_fn
 
 
-def make_waves_ds(
-    df: DataFrame,
-    config: dict,
-    burst_col: str = "burst_time",
-    pressure_col: str = "P_1ac",
-    sample_col: str = "sample",
-) -> DataFrame:
+def make_waves_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
     """Distributed make_waves_ds (core/waves.py:571-681): shuffle on the
     burst key, spectral chain per burst (``make_waves_kernel``) inside
     Arrow batches. Only the (burst, sample, pressure) columns cross into
     Python — project before grouping so the Arrow transfer is minimal."""
-    slim = df.select(burst_col, sample_col, pressure_col)
-    kernel = make_waves_kernel(config, burst_col, pressure_col, sample_col)
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(kernel, wave_stats_schema(burst_col))
+    slim = df.select(BURST, SAMPLE, pressure_col)
+    kernel = make_waves_kernel(config, pressure_col)
+    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(kernel, wave_stats_schema())
 
 
 def make_waves_puv_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
@@ -594,20 +566,17 @@ def make_waves_puv_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") 
     skips (< 32 samples) carries null PUV columns. Only the pressure
     column varies between callers; the others are the clean zone's
     fixed names."""
-    burst_col = "burst_time"
-    slim = df.select(burst_col, "sample", pressure_col, "u_1205", "v_1206")
-    waves = make_waves_kernel(config, pressure_col=pressure_col)
-    puv = make_puv_kernel(config, pressure_col=pressure_col)
+    slim = df.select(BURST, SAMPLE, pressure_col, "u_1205", "v_1206")
+    waves = make_waves_kernel(config, pressure_col)
+    puv = make_puv_kernel(config, pressure_col)
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = waves(pdf)
         # reindex, not merge: an empty PUV frame has an object-typed key
-        matched = puv(pdf).set_index(burst_col).reindex(out[burst_col])
+        matched = puv(pdf).set_index(BURST).reindex(out[BURST])
         for name in _PUV_FIELDS:
             out[name] = matched[name].to_numpy(dtype=float)
         return out
 
-    schema = StructType(
-        wave_stats_schema(burst_col).fields + puv_schema(burst_col).fields[1:]
-    )
-    return pin_grouping(slim, burst_col).groupBy(burst_col).applyInPandas(apply_fn, schema)
+    schema = StructType(wave_stats_schema().fields + puv_schema().fields[1:])
+    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(apply_fn, schema)

@@ -38,6 +38,10 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
     same plan survives a 1000-executor cluster; Arrow makes every
     applyInPandas/pandas_udf hop a columnar batch transfer instead of
     row-at-a-time pickling.
+
+    Launches no Spark job. Spark's one-time inits, the ICU collation
+    tables and the Python worker pool, land on the first stage that
+    needs them, so a CLI step that runs neither never pays for them.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
     builder = (
@@ -53,10 +57,7 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
         # pin_grouping shuffle is elided as redundant and the surviving
         # ENSURE_REQUIREMENTS exchange is coalescible). 64k keeps tiny
         # shuffles cheap while letting CPU-heavy ones use every core.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -82,58 +83,20 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
         builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     ensure_package_shipped(spark)
-    _warm_collation_support(spark)
     return spark
 
 
 def _context_key(spark: SparkSession) -> str | None:
-    """The key of the once-per-SparkContext guards below: the context's
-    applicationId, or None when the lookup fails. ``id(sparkContext)``
-    is no key, because a stopped and collected context's id can be
-    reused by the next one that ``__main__.main`` builds in the same
-    process; and a failed lookup must record nothing, or every later
-    context whose lookup also fails would be skipped."""
+    """The key of ``ensure_package_shipped``'s once-per-SparkContext
+    guard: the context's applicationId, or None when the lookup fails.
+    ``id(sparkContext)`` is no key, because a stopped and collected
+    context's id can be reused by the next one that ``__main__.main``
+    builds in the same process; and a failed lookup must record nothing,
+    or every later context whose lookup also fails would go unshipped."""
     try:
         return spark.sparkContext.applicationId
     except Exception:
         return None
-
-
-_WARMED: set[str] = set()
-
-
-def _warm_collation_support(spark: SparkSession) -> None:
-    """Force the one-time ICU collation class initialization at session
-    startup instead of mid-query.
-
-    Spark 4 routes ``lower``/``upper``/``initcap`` through
-    ``CollationSupport``, whose first call triggers the static initializer
-    of ``CollationAwareUTF8String`` (ICU data load). That init takes
-    seconds and serializes: every concurrent task blocks on the class
-    monitor, so the first string-heavy stage of a session stalls all its
-    tasks at once (observed 7-19 s on local[32]). Paying it here, once,
-    on an empty session keeps query times free of JVM warm-up artifacts.
-    Per-executor JVMs on a real cluster pay the same init once each —
-    amortized over the executor lifetime either way.
-
-    Idempotent per SparkContext (r15): ``get_spark`` is called by every
-    CLI stage entry (``__main__.main``), so a 4-stage e2e chain re-ran
-    the worker-pool warm FOUR times inside one session — a ~10 s-task-
-    time 32-task no-op job per call (profiled: 5 of
-    e2e_attrs_fidelity_roundtrip's 20 stages were warm re-runs, ~2.5 s
-    of its 5.2 s wall). The warm exists to initialize a SESSION, not a
-    call site; keyed by ``_context_key`` like the package-ship guard.
-    """
-    key = _context_key(spark)
-    if key in _WARMED:
-        return
-    if key is not None:
-        _WARMED.add(key)
-    try:
-        spark.sql("select lower('ΣAa'), upper('σaA'), initcap('ßx')").collect()
-    except Exception as exc:  # warm-up must never block session creation
-        logger.warning("collation warm-up failed: %s", exc)
-    _warm_python_workers(spark)
 
 
 _SHIPPED: set[str] = set()
@@ -175,37 +138,6 @@ def ensure_package_shipped(spark: SparkSession) -> None:
             _SHIPPED.add(key)
     except Exception as exc:  # local-mode repo-cwd runs work without it
         logger.warning("shipping stglib_spark to the executors failed: %s", exc)
-
-
-def _identity_batch(pdf):
-    """The worker warm-up's kernel. Module level, so cloudpickle ships
-    it by reference and every warmed worker imports this package (and
-    so installs ``guard_zip_invalidation``); a lambda would ship by
-    value and import nothing."""
-    return pdf
-
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Spawn the Python UDF worker pool at session startup.
-
-    The first applyInPandas/pandas_udf stage of a session forks one
-    pyspark.daemon worker per core and pays the pandas/Arrow import in
-    each — ~1-2 s that otherwise lands inside whichever query hits a UDF
-    first. A no-op applyInPandas over defaultParallelism groups moves
-    that cost to session build. Workers are reused afterwards
-    (spark.python.worker.reuse defaults true)."""
-    try:
-        n = spark.sparkContext.defaultParallelism
-        (
-            spark.range(n)
-            .groupBy("id")
-            .applyInPandas(_identity_batch, "id long")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-    except Exception as exc:
-        logger.warning("Python worker warm-up failed: %s", exc)
 
 
 _ZIP_SIGNATURE = "_stglib_zip_signature"
@@ -337,7 +269,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition UP to cluster parallelism when the scan produced too few
     partitions (a single small parquet file arrives as ONE partition, which
     serializes CPU-heavy per-row work on one core). Never shrinks: at real
@@ -374,7 +306,7 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
         return df
     spark = df.sparkSession
     sc = spark.sparkContext
-    target = sc.defaultParallelism * multiplier
+    target = sc.defaultParallelism
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
         size = 0
@@ -422,7 +354,7 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
-def pin_grouping(df: DataFrame, *keys: str, multiplier: int = 1) -> DataFrame:
+def pin_grouping(df: DataFrame, *keys: str) -> DataFrame:
     """Repartition on grouping keys with an EXPLICIT partition count
     before a compute-bound ``groupBy().applyInPandas`` stage. AQE's
     byte-size coalescing shrinks shuffles whose bytes are small even when
@@ -437,17 +369,13 @@ def pin_grouping(df: DataFrame, *keys: str, multiplier: int = 1) -> DataFrame:
     defaultParallelism is sampled at PLAN time, so under dynamic
     allocation a job planned on 2 warm-up executors would otherwise pin
     the stage far below the eventual cluster width — shuffle.partitions
-    is operator-sized for the cluster and provides the floor. Raise
-    ``multiplier`` for skewed group populations where minutes-long tasks
-    need work-stealing headroom (2× is the usual guidance once groups ≫
-    cores; with groups ≈ cores extra partitions are mostly empty, which
-    is why the default stays 1)."""
+    is operator-sized for the cluster and provides the floor."""
     spark = df.sparkSession
     base = max(
         spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
-    return df.repartition(base * multiplier, *keys)
+    return df.repartition(base, *keys)
 
 
 def fast_round(col: "Column", scale: int = 6) -> "Column":

@@ -521,27 +521,6 @@ def read_vec_vhd(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_vec_sen(spark: SparkSession, path: str) -> DataFrame:
-    """.sen 1 Hz system rows (dat2cdf.py:139-170): heading/pitch/roll,
-    temperature, battery, with error/status kept as raw strings."""
-    t = _read_tokens(spark, path)
-    c = lambda i: F.element_at(F.col("tok"), i + 1)  # noqa: E731
-    return t.select(
-        F.make_timestamp(
-            c(2).cast("int"), c(0).cast("int"), c(1).cast("int"),
-            c(3).cast("int"), c(4).cast("int"), c(5).cast("decimal(10,4)"),
-        ).alias("time"),
-        c(6).alias("ErrorCode"),
-        c(7).alias("StatusCode"),
-        c(8).cast("double").alias("Battery"),
-        c(9).cast("double").alias("Soundspeed"),
-        c(10).cast("double").alias("Heading"),
-        c(11).cast("double").alias("Pitch"),
-        c(12).cast("double").alias("Roll"),
-        c(13).cast("double").alias("Temperature"),
-    )
-
-
 def read_vector(
     spark: SparkSession, basefile: str, config: dict[str, Any]
 ) -> DataFrame:

@@ -497,7 +497,7 @@ def streaming_wave_stats(
         + [StructField(c, DoubleType()) for c in ("wh_4061", "wp_4060", "wp_peak", "m0")]
         + [StructField("n", LongType())]
     )
-    kernel = make_waves_kernel(config or {}, "burst_time", pressure_col, "sample")
+    kernel = make_waves_kernel(config or {}, pressure_col)
     return _burst_window_kernel(
         events, [pressure_col], kernel, out_schema, burst_seconds, watermark, time_col
     )
@@ -527,9 +527,7 @@ def streaming_puv(
         [StructField("burst_time", TimestampType()), StructField("n", LongType())]
         + [StructField(name, DoubleType()) for name in _PUV_FIELDS]
     )
-    kernel = make_puv_kernel(
-        config or {}, "burst_time", pressure_col, u_col, v_col, "sample"
-    )
+    kernel = make_puv_kernel(config or {}, pressure_col, u_col, v_col)
     return _burst_window_kernel(
         events, [pressure_col, u_col, v_col], kernel, out_schema,
         burst_seconds, watermark, time_col,

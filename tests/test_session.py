@@ -1,6 +1,7 @@
 """Unit tests for the session helpers: the byte-size conf parser, the
-once-per-SparkContext guards, the warnings of the best-effort startup
-steps and the Python workers' zip-invalidation guard."""
+once-per-SparkContext package-ship guard, the warnings of the
+best-effort session steps and the Python workers' zip-invalidation
+guard."""
 
 import importlib
 import logging
@@ -60,57 +61,37 @@ class _Context:
 class _Session:
     def __init__(self, app_id):
         self.sparkContext = _Context(app_id)
-        self.warm_queries = 0
-
-    def sql(self, _query):
-        self.warm_queries += 1
-        return SimpleNamespace(collect=list)
 
 
 @pytest.fixture
-def guards(monkeypatch, tmp_path):
-    """Fresh guard sets, the package zip in a temp dir, and the worker
-    warm-up replaced by a recorder."""
-    monkeypatch.setattr(session, "_WARMED", set())
+def shipped(monkeypatch, tmp_path):
+    """A fresh guard set and the package zip in a temp dir."""
     monkeypatch.setattr(session, "_SHIPPED", set())
     monkeypatch.setenv("TMPDIR", str(tmp_path))
-    warmed = []
-    monkeypatch.setattr(session, "_warm_python_workers", warmed.append)
-    return warmed
 
 
-def _start(spark):
-    session.ensure_package_shipped(spark)
-    session._warm_collation_support(spark)
-
-
-def test_second_context_is_shipped_and_warmed_again(guards):
+def test_second_context_is_shipped_and_warmed_again(shipped):
     spark = _Session("local-1")
-    _start(spark)
-    _start(spark)
+    session.ensure_package_shipped(spark)
+    session.ensure_package_shipped(spark)
     assert len(spark.sparkContext.py_files) == 1
-    assert spark.warm_queries == 1
 
     # __main__.main stops the context and builds a new one in the same
     # process, and the new context may get the collected one's id();
     # keeping the object and changing its applicationId models that
     spark.sparkContext._app_id = "local-2"
-    _start(spark)
+    session.ensure_package_shipped(spark)
     assert len(spark.sparkContext.py_files) == 2
-    assert spark.warm_queries == 2
-    assert guards == [spark, spark]
 
 
-def test_failed_context_lookup_records_nothing(guards):
-    # the second context's lookup fails too: it must still be shipped
-    # and warmed, not skipped on a key the first one recorded
+def test_failed_context_lookup_records_nothing(shipped):
+    # the second context's lookup fails too: it must still be shipped,
+    # not skipped on a key the first one recorded
     for _ in range(2):
         lost = _Session(None)
-        _start(lost)
+        session.ensure_package_shipped(lost)
         assert len(lost.sparkContext.py_files) == 1
-        assert lost.warm_queries == 1
-    assert session._WARMED == set() and session._SHIPPED == set()
-    assert len(guards) == 2
+    assert session._SHIPPED == set()
 
 
 class _Broken:
@@ -119,32 +100,17 @@ class _Broken:
     def __init__(self):
         self.sparkContext = _Context("local-broken")
         self.sparkContext.addPyFile = self._fail
-        self.sparkContext.defaultParallelism = 4
         self.conf = SimpleNamespace(set=self._fail)
 
     def _fail(self, *_args, **_kwargs):
         raise RuntimeError("boom")
 
-    sql = range = _fail
 
-
-@pytest.mark.parametrize(
-    "site",
-    [
-        "ensure_package_shipped",
-        "_warm_collation_support",
-        "_warm_python_workers",
-        "pin_utc",
-    ],
-)
+@pytest.mark.parametrize("site", ["ensure_package_shipped", "pin_utc"])
 def test_failed_session_step_logs_one_warning(site, monkeypatch, tmp_path, caplog):
-    monkeypatch.setattr(session, "_WARMED", set())
     monkeypatch.setattr(session, "_SHIPPED", set())
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     step = getattr(session, site)
-    if site == "_warm_collation_support":
-        # the worker warm it calls next is a site of its own
-        monkeypatch.setattr(session, "_warm_python_workers", lambda _s: None)
     caplog.set_level(logging.WARNING, logger=session.logger.name)
     step(_Broken())
     records = [
@@ -203,12 +169,9 @@ def test_zip_invalidation_guard_rereads_only_a_changed_archive(
 
 
 def test_warmed_workers_install_the_zip_guard(spark):
-    """The worker warm ships a module-level function, so a warmed worker
-    imports the package; a worker that imports it installs the guard, and
+    """A Python worker that imports the package installs the guard, and
     this process's ``zipimporter`` stays untouched."""
     import pandas as pd
-
-    assert session._identity_batch.__module__ == "stglib_spark.session"
 
     def probe(pdf):
         import zipimport as zi
