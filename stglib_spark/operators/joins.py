@@ -9,26 +9,27 @@ file (nearest within tolerance, ``aqdutils.py:551-557``), per-profile met
 lookup (``rsk/cdf2nc.py:188-193``).
 
 Spark-first design, one physical shape for both strategies: the right
-side is pre-aggregated into per-bucket sorted candidate arrays, the
-bucket table is completed with neighbour/carry information by windowing
-over the TINY bucket-summary table (never over fact rows), and the fact
-side then makes exactly ONE equi-join against that bucket table.
-Candidate selection is a single-pass ``F.aggregate`` over the (already
-sorted) candidate array — one comparison per element, no intermediate
-array allocation, no per-element timestamp casts (``__rt`` is stored as
-epoch-seconds double inside the struct).
+side is pre-aggregated into per-bucket sorted candidate arrays and the
+fact side makes exactly ONE equi-join against that bucket table; no
+window ever runs over fact rows. Candidate selection is a single-pass
+``F.aggregate`` over the (already sorted) candidate array — one
+comparison per element, no intermediate array allocation, no
+per-element timestamp casts (``__rt`` is stored as epoch-seconds double
+inside the struct).
 
 - **tolerance given (the engine default)** — bucket = floor(time/tol);
   any candidate within ±tol lives in the row's bucket or an adjacent
-  one, so the bucket table concatenates each bucket's array with its
-  immediate neighbours (lag/lead over the bucket summary) and the ±tol
-  predicate inside the scan discards everything else. Shuffle is
-  equi-join shaped (broadcastable when the companion is small) — this
-  is the 100 TB path.
+  one, so each right row is exploded into its bucket and both
+  neighbours before the per-bucket collect, and the ±tol predicate
+  inside the scan discards everything else. The bucket table is built
+  from the right side alone (no scan of the fact side for its bucket
+  keys, no window); the join is equi-join shaped and broadcast when the
+  companion is small — this is the 100 TB path.
 - **no tolerance** — same bucketed join with an adaptive width plus a
   bucket-level carry (last-preceding / first-following right struct per
-  bucket, computed over the summary table) seeding the scan, giving
-  exact unbounded-lookback semantics without ever windowing fact rows.
+  bucket) seeding the scan, giving exact unbounded-lookback semantics.
+  The carry is computed by windowing over the TINY bucket-summary table
+  (left ∪ right bucket keys), never over fact rows.
 """
 
 from __future__ import annotations
@@ -268,65 +269,41 @@ def _asof_join_bucketed(
 ) -> DataFrame:
     """Tolerance-bounded as-of join as a time-bucketed equi-join.
 
-    Right rows are collected into one sorted array per (by, bucket) with
-    bucket = floor(t/tol); any candidate within ±tol of a left row lives
-    in the left row's bucket or an adjacent one. The bucket table is
-    completed by a lag/lead window over the bucket-summary universe
-    (left ∪ right bucket keys — O(#buckets) rows, never fact rows), so
-    the fact side makes a SINGLE equi-join instead of three. A
-    neighbour array further than one bucket away is nulled out by the
-    lag/lead bucket-adjacency guard (its candidates would all fail the
-    ±tol predicate anyway — bucket width == tol). Per-bucket arrays are
-    bounded by tol × the right side's sample rate — the companion series
-    by construction (SURVEY §2.6: met/salinity/brange lookups).
+    Bucket = floor(t/tol), so any candidate within ±tol of a left row
+    lives in the left row's bucket or an adjacent one. Each right row is
+    exploded into its own bucket and both neighbours (b-1, b, b+1) and
+    collected into one sorted candidate array per (by, bucket): built
+    from the right side alone, with no scan of the fact side for its
+    bucket keys and no window. Buckets are disjoint time ranges, so the
+    array equals the concatenation of the sorted arrays of buckets
+    b-1, b and b+1; a right row further than one bucket away is never a
+    candidate (its distance exceeds tol). The fact side is scanned once
+    and makes a SINGLE equi-join against the bucket table, which Spark
+    broadcasts whenever its size estimate, that of the right side, is
+    small. Per-bucket arrays are bounded by 3 × tol × the right side's
+    sample rate — the companion series by construction (SURVEY §2.6:
+    met/salinity/brange lookups).
     """
 
     def bucket(t: Column) -> Column:
         return F.floor(t.cast("double") / F.lit(tol)).cast("long")
 
-    rb = (
+    b = bucket(F.col(on))
+    buckets_tbl = (
         right.select(
-            *[F.col(c) for c in by], F.col(on), _rstruct(on, value_cols).alias("__s")
+            *[F.col(c) for c in by],
+            _rstruct(on, value_cols).alias("__s"),
+            F.explode(F.array(b - 1, b, b + 1)).alias("__bk"),
         )
-        .withColumn("__bk", bucket(F.col(on)))
         .groupBy(*[F.col(c) for c in by], F.col("__bk"))
-        .agg(F.sort_array(F.collect_list("__s")).alias("__arr"))
+        .agg(F.sort_array(F.collect_list("__s")).alias("__cand"))
     )
-    arr_type = rb.schema["__arr"].dataType
-    empty = F.array().cast(arr_type)
-
-    # bucket-key universe (tiny): left's distinct buckets (map-side
-    # combined before the shuffle) ∪ right's buckets, so a left bucket
-    # with no right rows still sees its neighbours' arrays.
-    lkeys = (
-        left.select(*[F.col(c) for c in by], bucket(F.col(on)).alias("__bk"))
-        .distinct()
-    )
-    keys = lkeys.unionByName(
-        rb.select(*[F.col(c) for c in by], F.col("__bk"))
-    ).distinct()
-    summaries = keys.join(rb, [*by, "__bk"], "left")
-    w = Window.partitionBy(*[F.col(c) for c in by]).orderBy("__bk")
-    adj_prev = F.when(
-        F.lag("__bk").over(w) == F.col("__bk") - 1, F.lag("__arr").over(w)
-    )
-    adj_next = F.when(
-        F.lead("__bk").over(w) == F.col("__bk") + 1, F.lead("__arr").over(w)
-    )
-    buckets_tbl = summaries.select(
-        *[F.col(c) for c in by],
-        "__bk",
-        F.concat(
-            F.coalesce(adj_prev, empty),
-            F.coalesce(F.col("__arr"), empty),
-            F.coalesce(adj_next, empty),
-        ).alias("__cand"),
-    )
+    arr_type = buckets_tbl.schema["__cand"].dataType
 
     out = left.withColumn("__bk", bucket(F.col(on))).join(
         buckets_tbl, [*by, "__bk"], "left"
     )
-    cand = F.coalesce(F.col("__cand"), empty)
+    cand = F.coalesce(F.col("__cand"), F.array().cast(arr_type))
     t = F.col(on).cast("double")
     null_init = F.lit(None).cast(arr_type.elementType)
     back = (

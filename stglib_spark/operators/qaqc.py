@@ -32,6 +32,7 @@ Rules (config key → semantics, all per-variable ``<v>_...``):
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 from typing import Any
@@ -185,19 +186,39 @@ def compile_rules(
     trims."""
     rules: list[CompiledRule] = []
     prep: list[tuple[str, Column]] = []
-    w = spec.ordered_window()
 
     def add(rule: str, var: str, bad: Column) -> None:
         rules.append(CompiledRule(rule, var, bad))
 
+    # Every Column below costs py4j round trips to build, so the ordered
+    # window and each variable's lag/lead/diff Columns are built on first
+    # use, once, and shared by the rules that use them; a variable with
+    # only value gates builds none of them.
+    @functools.cache
+    def w() -> Window:
+        return spec.ordered_window()
+
     for v in variables:
         c = F.col(v)
-        prev = F.lag(c).over(w)
-        nxt = F.lead(c).over(w)
-        diff = F.when(prev.isNull(), F.lit(0.0)).otherwise(c - prev)  # ediff1d to_begin=0
-        diff_pct = F.when(
-            prev.isNull() | (prev == 0), F.lit(0.0)
-        ).otherwise(100.0 * (c - prev) / prev)
+
+        @functools.cache
+        def prev() -> Column:
+            return F.lag(c).over(w())
+
+        @functools.cache
+        def nxt() -> Column:
+            return F.lead(c).over(w())
+
+        @functools.cache
+        def diff() -> Column:
+            # ediff1d to_begin=0
+            return F.when(prev().isNull(), F.lit(0.0)).otherwise(c - prev())
+
+        @functools.cache
+        def diff_pct() -> Column:
+            return F.when(
+                prev().isNull() | (prev() == 0), F.lit(0.0)
+            ).otherwise(100.0 * (c - prev()) / prev())
 
         def has(key: str) -> bool:
             return f"{v}_{key}" in config and config[f"{v}_{key}"] is not None
@@ -210,13 +231,13 @@ def compile_rules(
         if has("max"):
             add("max", v, c > F.lit(val("max")))
         if has("min_diff"):
-            add("min_diff", v, diff < F.lit(val("min_diff")))
+            add("min_diff", v, diff() < F.lit(val("min_diff")))
         if has("max_diff"):
-            add("max_diff", v, diff > F.lit(val("max_diff")))
+            add("max_diff", v, diff() > F.lit(val("max_diff")))
         if has("min_diff_pct"):
-            add("min_diff_pct", v, diff_pct < F.lit(val("min_diff_pct")))
+            add("min_diff_pct", v, diff_pct() < F.lit(val("min_diff_pct")))
         if has("max_diff_pct"):
-            add("max_diff_pct", v, diff_pct > F.lit(val("max_diff_pct")))
+            add("max_diff_pct", v, diff_pct() > F.lit(val("max_diff_pct")))
         if has("med_diff"):
             kernel, thresh = val("med_diff")
             med = _rolling_median(v, int(kernel), spec)
@@ -232,14 +253,14 @@ def compile_rules(
             )
         if has("max_blip"):
             t = val("max_blip")
-            add("max_blip", v, ((c - prev) > F.lit(t)) & ((nxt - c) < F.lit(-t)))
+            add("max_blip", v, ((c - prev()) > F.lit(t)) & ((nxt() - c) < F.lit(-t)))
         if has("max_blip_pct"):
             t = val("max_blip_pct")
-            up = F.when(prev != 0, 100.0 * (c - prev) / prev)
-            down = F.when(c != 0, 100.0 * (nxt - c) / c)
+            up = F.when(prev() != 0, 100.0 * (c - prev()) / prev())
+            down = F.when(c != 0, 100.0 * (nxt() - c) / c)
             add("max_blip_pct", v, (up > F.lit(t)) & (down < F.lit(-t)))
         if has("maxabs_diff"):
-            add("maxabs_diff", v, F.abs(c - prev) >= F.lit(val("maxabs_diff")))
+            add("maxabs_diff", v, F.abs(c - prev()) >= F.lit(val("maxabs_diff")))
         if has("maxabs_diff_2d") and spec.bin_col:
             # (val_along_time, val_along_bin); bad where |diff| ≥ t along
             # EITHER dim (reference applies the two wheres sequentially =
@@ -280,7 +301,7 @@ def compile_rules(
                 (
                     grp_name,
                     F.sum(F.when(c.isNull(), 1).otherwise(0)).over(
-                        w.rowsBetween(Window.unboundedPreceding, 0)
+                        w().rowsBetween(Window.unboundedPreceding, 0)
                     ),
                 )
             )

@@ -29,6 +29,7 @@ from stglib_spark.config import History
 from stglib_spark.operators import clip as clip_ops
 from stglib_spark.operators import joins, physics, qaqc, timeops, transforms
 from stglib_spark.operators import waves as wave_ops
+from stglib_spark.session import read_parquet
 from stglib_spark.sources import ingest
 
 
@@ -112,7 +113,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
     """Stage 2 (cdf2nc): raw zone → clean zone (SURVEY §3.2 order:
     clip → atmos correct → derives → QA/QC → audit)."""
     history = _load_history(config, "raw")
-    df = spark.read.parquet(_zone_path(config, "raw"))
+    df = read_parquet(spark, _zone_path(config, "raw"))
 
     df = clip_ops.clip_ds(df, config)
     history.insert_history("Clipped to deployment window / good ranges.")
@@ -150,7 +151,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
         from stglib_spark.session import normalize_ntz, pin_utc
 
         pin_utc(spark)
-        met = normalize_ntz(spark.read.parquet(config["atmpres_path"]))
+        met = normalize_ntz(read_parquet(spark, config["atmpres_path"]))
         df = joins.atmos_correct(df, met, config, pressure_col=raw_pcol)
         history.insert_history("Atmospherically corrected pressure (P_1ac).")
 
@@ -417,7 +418,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
             # initial heights (son/cdf2nc.py:19-44)
             from stglib_spark.operators.joins import asof_join
 
-            hght = spark.read.parquet(config["brange_file"]).select(
+            hght = read_parquet(spark, config["brange_file"]).select(
                 "time", F.col(config["height_var"]).alias("__bed")
             )
             hght_diff = float(
@@ -516,7 +517,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
         # theta recomputed from the AVERAGED angles
         from stglib_spark.operators import sonar as sonar_ops
 
-        clean_out = spark.read.parquet(path)
+        clean_out = read_parquet(spark, path)
         avg = sonar_ops.average_sweeps(clean_out.drop("theta"))
         if "HeadAngle" in avg.columns and "Hdg_1215" in avg.columns:
             avg = avg.withColumn(
@@ -583,7 +584,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
 
         # read the zone just written — re-using `clean` would re-execute
         # the whole raw→QA/QC lineage a second time
-        clean_out = spark.read.parquet(path)
+        clean_out = read_parquet(spark, path)
         avg_vals = [
             c
             for c, t in clean_out.dtypes
@@ -745,7 +746,7 @@ def run_waves(spark: SparkSession, config: dict[str, Any]) -> str:
     # burst keys re-derived from the clock even when ingest marked bursts:
     # clipping may have removed leading rows and shifted count-based
     # burst boundaries (waves.py:2037-2091)
-    df = _burst_keyed(spark.read.parquet(_zone_path(config, "clean")), config)
+    df = _burst_keyed(read_parquet(spark, _zone_path(config, "clean")), config)
     # direct surface-elevation branch (waves.py:684-743): forced by
     # wave_data_type: elev, or taken when no pressure column exists and
     # an elevation/boundary-range variable does (elev probe chain)
@@ -817,7 +818,7 @@ def run_xy(spark: SparkSession, config: dict[str, Any]) -> str:
     from stglib_spark.operators import sonar
 
     history = _load_history(config, "clean")
-    df = spark.read.parquet(_zone_path(config, "clean"))
+    df = read_parquet(spark, _zone_path(config, "clean"))
     out = sonar.polar_to_xy(
         df,
         total_range=float(config["sonar_range"]),
@@ -903,7 +904,7 @@ def run_diwasp(spark: SparkSession, config: dict[str, Any]) -> str:
     from stglib_spark.operators import dirspec
 
     history = _load_history(config, "clean")
-    df = _burst_keyed(spark.read.parquet(_zone_path(config, "clean")), config)
+    df = _burst_keyed(read_parquet(spark, _zone_path(config, "clean")), config)
     pcol = "P_1ac" if "P_1ac" in df.columns else "P_1"
     if "u_1205" not in df.columns or "v_1206" not in df.columns:
         # pressure-only deployment: fall back to the 'pres' estimator
@@ -969,7 +970,7 @@ def export_diwasp_spec(spark: SparkSession, config: dict[str, Any]) -> str:
 
     zone_path = _zone_path(config, "diwasp")
     rows = (
-        spark.read.parquet(zone_path)
+        read_parquet(spark, zone_path)
         .select(
             "burst_time",
             "diwasp_frequency",
@@ -1014,7 +1015,7 @@ def run_export_nc(
     from stglib_spark.sources.netcdf import write_netcdf
 
     zone_path = _zone_path(config, zone)
-    df = spark.read.parquet(zone_path)
+    df = read_parquet(spark, zone_path)
     if "time" not in df.columns and "burst_time" in df.columns:
         # wave products: the burst start IS the product's time axis
         # (the reference's s-a.nc time dimension)
@@ -1090,7 +1091,7 @@ def run_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
     max_bucket = config.get("max_bucket_size", dedup_ops.DEFAULT_MAX_BUCKET_SIZE)
 
     history = History()
-    docs = spark.read.parquet(config["documents_path"]).select(id_col, text_col)
+    docs = read_parquet(spark, config["documents_path"]).select(id_col, text_col)
     paths: dict[str, str] = {}
 
     from stglib_spark.session import spread
@@ -1104,7 +1105,7 @@ def run_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
             f"Shingled corpus once ({shingle_n}-gram) into shingle zone."
         )
         paths["shingles"] = _write_zone(sh, config, "shingles", history)
-        sh = spark.read.parquet(paths["shingles"])
+        sh = read_parquet(spark, paths["shingles"])
         sigs = dedup_ops.minhash_from_shingles(
             sh, id_col, "shingles", num_hashes, portable
         )
@@ -1126,7 +1127,7 @@ def run_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
     )
     if config.get("dedup_materialize_candidates", True):
         paths["candidates"] = _write_zone(pairs, config, "candidates", history)
-        cand = spark.read.parquet(paths["candidates"])
+        cand = read_parquet(spark, paths["candidates"])
     else:
         # a consumer that only needs the VERIFIED pairs (e.g. the
         # cluster-quality audit) can skip the candidate zone round-trip;
@@ -1180,7 +1181,7 @@ def run_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
         # input, so clustering the zone avoids re-running the whole
         # LSH→verify chain per iteration) and keep the (doc_id,
         # canonical_id) map as its own artifact for downstream audits
-        ver = spark.read.parquet(paths["dedup"])
+        ver = read_parquet(spark, paths["dedup"])
         clusters = dedup_ops.duplicate_clusters(ver.select("doc_a", "doc_b"))
         history.insert_history(
             "Resolved duplicate clusters (connected components) "
@@ -1236,7 +1237,7 @@ def run_corpus(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
         )
         history.insert_history("Ingested jsonl corpus (content-addressed ids).")
     else:
-        base = spark.read.parquet(config["documents_path"])
+        base = read_parquet(spark, config["documents_path"])
     docs = spread(base.select(id_col, text_col))
     paths: dict[str, str] = {}
 
@@ -1259,7 +1260,7 @@ def run_corpus(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
             f"Stripped boilerplate lines (>= {bp_frac} of docs)."
         )
         paths["cleaned"] = _write_zone(cleaned, config, "cleaned", history)
-        docs = spark.read.parquet(paths["cleaned"])
+        docs = read_parquet(spark, paths["cleaned"])
 
     span_n = config.get("dup_span_ngram")
     if span_n:
@@ -1278,7 +1279,7 @@ def run_corpus(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
             f"Excised duplicate {span_n}-token spans (canonical kept)."
         )
         paths["despanned"] = _write_zone(despanned, config, "despanned", history)
-        docs = spark.read.parquet(paths["despanned"])
+        docs = read_parquet(spark, paths["despanned"])
 
     quality = text_ops.quality_score(
         text_ops.lang_id(docs, text_col), text_col
@@ -1292,7 +1293,7 @@ def run_corpus(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
         "Scored language, tokens, and quality per document (one scan)."
     )
     paths["quality"] = _write_zone(quality, config, "quality", history)
-    qz = spark.read.parquet(paths["quality"])
+    qz = read_parquet(spark, paths["quality"])
 
     if config.get("hard_gates"):
         # opt-in Gopher-style hard cuts between scoring and sampling:
@@ -1411,7 +1412,7 @@ def _run_corpus_mix_packs(
     paths["mix"] = _write_zone(mix, config, "mix", history)
 
     packs = corpus_ops.pack_sequences(
-        spark.read.parquet(paths["mix"]),
+        read_parquet(spark, paths["mix"]),
         id_col=id_col,
         seq_len=seq_len,
         n_shards=n_shards,
@@ -1425,7 +1426,7 @@ def _run_corpus_mix_packs(
     if config.get("pack_materialize"):
         # trainer-ready rows: concatenated token streams per (shard, pack)
         seqs = corpus_ops.build_packed_sequences(
-            spark.read.parquet(paths["mix"]),
+            read_parquet(spark, paths["mix"]),
             text_col=text_col,
             id_col=id_col,
             seq_len=seq_len,
@@ -1481,14 +1482,14 @@ def run_media_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, st
     max_bucket = config.get("max_bucket_size", dedup_ops.DEFAULT_MAX_BUCKET_SIZE)
 
     history = History()
-    media = spark.read.parquet(config["media_path"])
+    media = read_parquet(spark, config["media_path"])
     paths: dict[str, str] = {}
 
     if kind == "video":
         hashed = mm.video_phash(media, id_col=id_col, content_col=content_col)
         history.insert_history("Hashed video frames (per-frame dHash).")
         paths["phash"] = _write_zone(hashed, config, "phash", history)
-        fh = spark.read.parquet(paths["phash"])
+        fh = read_parquet(spark, paths["phash"])
         if config.get("video_drop_constant_frames", True):
             fh = fh.filter(F.col("phash") != 0)
         pairs = mm.video_phash_near_pairs(
@@ -1541,7 +1542,7 @@ def run_media_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, st
         )
         history.insert_history("Hashed images (exact-integer dHash).")
         paths["phash"] = _write_zone(hashed, config, "phash", history)
-        fh = spark.read.parquet(paths["phash"])
+        fh = read_parquet(spark, paths["phash"])
         pairs = mm.phash_near_pairs(
             fh, id_col=id_col, max_hamming=max_hamming, blocks=blocks,
             max_bucket_size=max_bucket,
@@ -1553,7 +1554,7 @@ def run_media_dedup(spark: SparkSession, config: dict[str, Any]) -> dict[str, st
     )
     paths["pairs"] = _write_zone(pairs, config, "pairs", history)
 
-    edge = spark.read.parquet(paths["pairs"]).select(
+    edge = read_parquet(spark, paths["pairs"]).select(
         F.col(pair_cols[0]).alias("doc_a"), F.col(pair_cols[1]).alias("doc_b")
     )
     clusters = dedup_ops.duplicate_clusters(edge)
@@ -1588,7 +1589,7 @@ def run_corpus_all(
     history = History()
     # belt-and-braces: never cluster below the deletion bar even if a
     # caller passed an explicit lower reporting threshold
-    pairs = spark.read.parquet(paths["dedup"]).filter(
+    pairs = read_parquet(spark, paths["dedup"]).filter(
         F.col("jaccard") >= threshold
     )
     # the verified duplicate graph is ~0.1-1% of docs, so at or below
@@ -1603,7 +1604,7 @@ def run_corpus_all(
     losers = clusters.filter(
         F.col("doc_id") != F.col("canonical_id")
     ).select(F.col("doc_id").alias(id_col))
-    docs = spark.read.parquet(config["documents_path"])
+    docs = read_parquet(spark, config["documents_path"])
     survivors = docs.join(losers, id_col, "left_anti")
     history.insert_history(
         "Removed non-canonical duplicates (one doc per verified cluster)."

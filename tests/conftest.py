@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` runs ``fn()`` under a fresh job group and
+    returns its result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_launched_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

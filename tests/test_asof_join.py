@@ -30,8 +30,46 @@ def frames(spark):
     return ldf, rdf, lp, rp
 
 
+@pytest.fixture(scope="module")
+def keyed_frames(spark):
+    """Three interleaved series: "a" and "b" on both sides with
+    different densities, "c" only on the left (never matches)."""
+    rng = np.random.RandomState(1)
+    base = pd.Timestamp("2024-01-01")
+    lt = (base + pd.to_timedelta(rng.uniform(0, 50000, 600), unit="s")).floor("us")
+    lk = rng.choice(["a", "b", "c"], 600)
+    rt = (base + pd.to_timedelta(rng.uniform(-2000, 52000, 150), unit="s")).floor("us")
+    rk = rng.choice(["a", "b"], 150, p=[0.7, 0.3])
+    vals = rng.randn(150)
+    lp = pd.DataFrame({"time": lt, "k": lk, "lid": range(600)}).sort_values("time")
+    rp = pd.DataFrame({"time": rt, "k": rk, "val": vals}).sort_values("time")
+    ldf = spark.createDataFrame(lp)
+    rdf = spark.createDataFrame(rp)
+    return ldf, rdf, lp, rp
+
+
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-def test_bucketed_matches_merge_asof(frames, direction):
+def test_bucketed_matches_merge_asof(frames, keyed_frames, direction):
+    ldf, rdf, lp, rp = keyed_frames
+    got = (
+        asof_join(ldf, rdf, by=["k"], direction=direction, tolerance_seconds=600)
+        .orderBy("lid")
+        .toPandas()["val"]
+        .to_numpy()
+    )
+    exp = (
+        pd.merge_asof(
+            lp, rp, on="time", by="k", direction=direction,
+            tolerance=pd.Timedelta(seconds=600),
+        )
+        .sort_values("lid")["val"]
+        .to_numpy()
+    )
+    both_nan = np.isnan(got) & np.isnan(exp)
+    assert (both_nan | (np.abs(got - exp) < 1e-12)).all()
+    assert np.isnan(got).any() and not np.isnan(got).all()
+    assert np.isnan(got[np.asarray(lp.sort_values("lid")["k"]) == "c"]).all()
+
     ldf, rdf, lp, rp = frames
     got = (
         asof_join(ldf, rdf, direction=direction, tolerance_seconds=600)

@@ -1297,3 +1297,75 @@ def test_average_tide_bursts_zone_full_grid_and_nan_gate(spark, tmp_path):
     assert rows[t0 + 60.0] is None
     # window 4: slice runs into the padding (10 of 30 samples)
     assert rows[t0 + 240.0] is None
+
+
+def test_burst_keyed_truncates_bursts_to_wave_duration(spark):
+    """``wave_duration`` truncates every burst to its first
+    ``wave_duration / sample_interval`` samples in time order
+    (rsk/nc2waves.py:33-42, ``timeops.wave_duration_trim``); a burst
+    already shorter is kept whole."""
+    import datetime as _dt
+
+    from stglib_spark.pipeline import _burst_keyed
+
+    t0 = _dt.datetime(2024, 6, 1)
+    lengths = {0: 12, 1: 9, 2: 5}  # samples recorded per 60 s burst
+    rows = [
+        (t0 + _dt.timedelta(seconds=60 * b + 2 * s), float(100 * b + s))
+        for b, n in lengths.items()
+        for s in range(n)
+    ]
+    df = spark.createDataFrame(rows[::-1], "time timestamp, P_1 double")
+    cfg = {"wave_interval": 60, "sample_interval": 2.0, "wave_duration": 14}
+    got = _burst_keyed(df, cfg).select("burst_time", "sample", "P_1").collect()
+    nsamps = 7
+    want = {
+        (t0 + _dt.timedelta(seconds=60 * b), s, float(100 * b + s))
+        for b, n in lengths.items()
+        for s in range(min(n, nsamps))
+    }
+    assert len(got) == len(want)
+    assert {(r.burst_time, r.sample, r.P_1) for r in got} == want
+
+
+def test_run_clean_job_count_with_spark_written_met(spark, tmp_path, jobs_launched):
+    """cdf2nc on an RBR deployment with a Spark-written met file runs
+    the atmospheric as-of correction and ``_max`` QA/QC gates in at most
+    three Spark jobs: the bucket table's aggregation and broadcast and
+    the clean-zone write. No job re-scans the raw zone for its bucket
+    keys and no zone or met read infers its schema with a job."""
+    from stglib_spark.pipeline import run_ingest
+
+    lines = ["Time,Pressure,Temperature,Turbidity"]
+    for i in range(600):
+        lines.append(
+            f"2021-09-01 {i // 60:02d}:{i % 60:02d}:00,"
+            f"{14 + (i % 97) * 0.25:.2f},{18 + (i % 41) * 0.125:.3f},"
+            f"{(i % 80) * 0.5:.1f}"
+        )
+    csv = tmp_path / "deployment.csv"
+    csv.write_text("\n".join(lines) + "\n")
+    met = str(tmp_path / "met")
+    spark.range(61).select(
+        F.timestamp_micros(
+            F.lit(1630454400000000) + (F.col("id") * 600 + 13) * F.lit(1000000)
+        ).alias("time"),
+        (10 + (F.col("id") % 16) * 0.0625).alias("atmpres"),
+    ).write.parquet(met)
+    cfg = {
+        "instrument": "rbr_csv",
+        "input_path": str(csv),
+        "output_dir": str(tmp_path),
+        "filename": "jobs",
+        "good_dates": [("2021-09-01 00:30:00", "2021-09-01 09:30:00")],
+        "atmpres_path": met,
+        "initial_instrument_height": 0.5,
+        "T_28_max": 22.0,
+        "Turb_max": 30.0,
+    }
+    run_ingest(spark, cfg)
+    path, jobs = jobs_launched(lambda: run_clean(spark, cfg))
+    clean = spark.read.parquet(path)
+    assert clean.count() == 541
+    assert clean.filter(F.col("P_1ac").isNull()).count() == 0
+    assert jobs <= 3, jobs

@@ -852,3 +852,30 @@ def test_puv_waves_run_one_python_stage_and_no_join(spark, tmp_path, monkeypatch
     )
     assert count(plan, r"FlatMapGroupsInPandas") == 2, plan  # tree + detail
     assert count(plan, r"Join") == 0, plan
+
+
+def test_tolerance_asof_scans_fact_side_once_without_window(spark, tmp_path):
+    """The tolerance as-of join (atmos_correct) builds its bucket table
+    from the met side alone: the fact side is scanned once, for the one
+    equi-join, and the plan has no Window and no single-partition
+    exchange."""
+    import pandas as pd
+
+    from stglib_spark.operators.joins import atmos_correct
+
+    t = pd.Timestamp("2024-06-01") + pd.to_timedelta(range(0, 7200, 30), unit="s")
+    fact = str(tmp_path / "fact")
+    spark.createDataFrame(
+        pd.DataFrame({"time": t, "P_1": 10.0})
+    ).write.parquet(fact)
+    met = spark.createDataFrame(
+        pd.DataFrame({"time": t[::20], "atmpres": 10.1})
+    )
+    df = atmos_correct(spark.read.parquet(fact), met)
+    qe = df._jdf.queryExecution()
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = qe.explainString(mode.fromString("formatted"))
+    simple = qe.explainString(mode.fromString("simple"))
+    assert count(plan, re.escape(f"InMemoryFileIndex [file:{fact}]")) == 1, plan
+    assert not re.findall(r"^\(\d+\) Window\b", plan, flags=re.M), plan
+    assert count(simple, r"Exchange SinglePartition") == 0, simple

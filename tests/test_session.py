@@ -189,3 +189,70 @@ def test_warmed_workers_install_the_zip_guard(spark):
     assert not getattr(
         zipimport.zipimporter.invalidate_caches, session._ZIP_SIGNATURE, False
     )
+
+
+def test_read_parquet_spark_written_zone_launches_no_job(spark, tmp_path, jobs_launched):
+    """A zone Spark wrote is read with the row schema in its footer: no
+    schema-inference job, and the schema (names, types, nullability,
+    field metadata) equals the one ``spark.read.parquet`` infers."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "zone")
+    spark.range(40, numPartitions=3).select(
+        F.col("id"),
+        F.timestamp_seconds("id").alias("time"),
+        F.col("id").cast("int").alias("n"),
+        F.lit(None).cast("double").alias("empty"),
+        F.array(F.col("id").cast("double")).alias("arr"),
+        F.lit("x").alias("s"),
+    ).withMetadata("n", {"units": "1"}).write.parquet(path)
+    schema, jobs = jobs_launched(lambda: session.read_parquet(spark, path).schema)
+    assert jobs == 0
+    inferred = spark.read.parquet(path).schema
+    assert schema == inferred
+    assert schema.jsonValue() == inferred.jsonValue()
+    got = session.read_parquet(spark, path).collect()
+    assert sorted(got) == sorted(spark.read.parquet(path).collect())
+
+
+def test_read_parquet_other_writers_and_partitions_are_inferred(spark, tmp_path):
+    """Files without Spark's footer schema (pyarrow's TIMESTAMP_NTZ) and
+    a ``split_profiles`` zone, partitioned per profile, are read through
+    schema inference as before, the partition column included."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampNTZType
+
+    from stglib_spark.config import History
+    from stglib_spark.pipeline import _write_zone
+
+    met = str(tmp_path / "met.parquet")
+    pq.write_table(
+        pa.table({
+            "time": pa.array(
+                pd.date_range("2024-06-01", periods=4, freq="10min").to_numpy(),
+                pa.timestamp("us"),
+            ),
+            "atmpres": [10.1, 10.2, 10.3, 10.4],
+        }),
+        met,
+    )
+    got = session.read_parquet(spark, met)
+    assert got.schema == spark.read.parquet(met).schema
+    assert isinstance(got.schema["time"].dataType, TimestampNTZType)
+    assert got.count() == 4
+
+    cfg = {"filename": "prof", "output_dir": str(tmp_path)}
+    zone = _write_zone(
+        spark.range(30).select(
+            (F.col("id") % 3).cast("int").alias("profile"),
+            F.col("id").cast("double").alias("P_1"),
+        ),
+        cfg, "clean", History(), partition_by="profile",
+    )
+    got = session.read_parquet(spark, zone)
+    assert got.schema == spark.read.parquet(zone).schema
+    assert "profile" in got.columns
+    assert sorted(r.profile for r in got.select("profile").distinct().collect()) == [0, 1, 2]
