@@ -23,8 +23,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return _registry.queries()
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order (the deliberate-RED probes last)."""
+    return dict(_registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -32,4 +33,4 @@ def oracle_sql() -> dict[str, str]:
     expressible operators — spectral/FFT chains, IIR filtering, and the
     multimodal/sonar kernels; the dedup/LSH family is fully oracled via a
     DuckDB-reproducible hash)."""
-    return _registry.oracle_sql()
+    return dict(_registry.ORACLES)

@@ -103,6 +103,7 @@ from stglib_spark.operators import transforms
 from stglib_spark.operators import velocity as vel_ops
 from stglib_spark.operators import waves as wave_ops
 
+# ``__spark_entry__`` returns both maps in registration order.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -1504,11 +1505,9 @@ def ts_dedup_ctrl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ts_dedup(spark, sf_dir)
 
 
-# Shared CTE for ts_sessionize and its r7 driver-bisection variants
-# (VERDICT r6 task #1): the gap rule, ordinal session ids, and per-user
-# minima are identical across the family; each variant projects a
-# different column subset so CORRECTNESS_r07's green/red pattern
-# localizes any residual divergence to a single output column.
+# Shared CTE for ts_sessionize and its deliberate-RED hugeint probe (at
+# the end of this module): the gap rule, ordinal session ids and per-user
+# minima are identical across the family.
 _SESSIONIZE_CTE = """
     WITH e AS (
       SELECT user_id, event_id, ts, epoch_us(ts) AS us, value,
@@ -1580,39 +1579,6 @@ def ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "start_rel_us",
         "duration_us",
         "value_cents",
-    )
-
-
-# --- r7 driver-bisection aftermath (VERDICT r6 task #1). ts_sessionize
-# was driver hash-red in r5 AND r6 while passing bit-exact locally; the
-# diagnosed cause is DuckDB's sum(BIGINT)→HUGEINT→float64 pandas export
-# ("123.0" vs "123" under a formatted-value hash). The fixed main query
-# CASTs the sum. The column-subset bisection variants (v1..v4) that
-# proved the diagnosis through the driver were RETIRED in r13 under the
-# registry-cap policy (fully subsumed by the green main query); the
-# deliberate-RED probe below re-registers the r6 uncast form and stays
-# as the standing documentation of the trap (expected red).
-
-
-@register(
-    "ts_sessionize_probe_hugeint",
-    _SESSIONIZE_CTE
-    + """
-    SELECT user_id, CAST(session_id AS INTEGER) AS session_id,
-           sum(CAST(sign(value) * floor(abs(value) * 100 + 0.5)
-                    AS BIGINT)) AS value_cents
-    FROM sess GROUP BY user_id, session_id
-    """,
-)
-def ts_sessionize_probe_hugeint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELIBERATE NEGATIVE PROBE — expected driver-RED. The oracle's
-    value_cents sum is intentionally left UNCAST so DuckDB returns
-    HUGEINT, which pandas export degrades to float64 ("123.0" vs
-    Spark's int "123" under a formatted-value hash). A red row here
-    alongside a green ts_sessionize confirms the r5/r6 red diagnosis
-    from inside the driver; a green row falsifies it."""
-    return _sessionize_agg(spark, sf_dir).select(
-        "user_id", "session_id", "value_cents"
     )
 
 
@@ -7241,9 +7207,8 @@ def e2e_attrs_fidelity_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e2e_diwasp_export_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIWASP PRODUCT attrs/lint fidelity oracle (the s_diwasp-a.nc
-    sibling of e2e_attrs_fidelity_roundtrip; registered r13, r14 graded
-    block): run the PRODUCTION nc2diwasp stage on a crafted 2-burst PUV
-    clean zone, export the diwasp zone through run_export_nc (the
+    sibling of e2e_attrs_fidelity_roundtrip): run the PRODUCTION
+    nc2diwasp stage on a crafted 2-burst PUV clean zone, export the diwasp zone through run_export_nc (the
     reference's s_diwasp-a.nc suffix), and emit the COMPLETE
     (scope, var, attr, value) table of the final classic netCDF-3 file
     — the pyDIWASP history line with the user-cutoff caution wording
@@ -7563,9 +7528,8 @@ def snk_cf_lint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snk_diwasp_spec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL sink path with driver-facing evidence — the DIWASP V1.4
     text-file product (reference ``lib/pyDIWASP/writespec.py``, the
-    last unported reference sink; registered r13, declared first in the
-    r14 graded block): build a synthetic 2-burst diwasp zone with
-    closed-form axes and spectrum (exact double divisions, identical in
+    last unported reference sink): build a synthetic 2-burst diwasp
+    zone with closed-form axes and spectrum (exact double divisions, identical in
     both engines), run the PRODUCTION ``pipeline.export_diwasp_spec``
     (one ``<filename>_<burst>.spec`` per burst: header triple, axes,
     999 separator, row-major S at full %.18e precision), then re-read
@@ -7708,13 +7672,10 @@ def snk_netcdf3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared CTE for corpus_datacard and its deliberate-RED hugeint probe
-# (the r7 column-subset bisection variants were retired in r13 — see the
-# registry-cap policy note above _FRONT)
-# (VERDICT r6 task #1) — see the ts_sessionize family note: the r5/r6
-# driver reds are diagnosed as DuckDB sum(BIGINT)→HUGEINT→float64
-# pandas export; the fixed queries CAST every integer-sum output, the
-# variants bisect by column, and the probe keeps one sum uncast.
+# Shared CTE for corpus_datacard and its deliberate-RED hugeint probe (at
+# the end of this module): the fixed query CASTs every integer-sum output,
+# the probe keeps one sum uncast (DuckDB sum(BIGINT) → HUGEINT → float64
+# under the pandas export).
 _DATACARD_CTE = r"""
     WITH t AS (
       SELECT doc_id, source, lang, text,
@@ -7832,27 +7793,6 @@ def _datacard_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("__micro").alias("quality_micro_sum"),
         _interp10(5).alias("quality_p50_micro10"),
         _interp10(9).alias("quality_p90_micro10"),
-    )
-
-
-@register(
-    "corpus_datacard_probe_hugeint",
-    _DATACARD_CTE
-    + """
-    SELECT source, lang,
-           sum(micro) AS quality_micro_sum
-    FROM r GROUP BY source, lang
-    """,
-)
-def corpus_datacard_probe_hugeint(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """DELIBERATE NEGATIVE PROBE — expected driver-RED: the oracle sum
-    is intentionally UNCAST (HUGEINT→float64 pandas export), mirroring
-    the exact form that was red in r5/r6. See
-    ts_sessionize_probe_hugeint."""
-    return _datacard_agg(spark, sf_dir).select(
-        "source", "lang", "quality_micro_sum"
     )
 
 
@@ -10332,8 +10272,8 @@ def wave_puv_directional(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a regression): the FFT/cross-spectral chain is not
     SQL-expressible, so this query carries a weaker rows-only check by
     design. Its MATH is driver-green through closed-form companions
-    (wave_puv_azimuth_oracle + e2e_puv_waves_roundtrip); this row exists so the full production kernel stays
-    registry-visible and smoke-run at every rotation.
+    (wave_puv_azimuth_oracle + e2e_puv_waves_roundtrip); this row keeps the full production kernel
+    registry-visible, so every registry sweep runs it.
 
     PUV directional wave parameters per burst (waves.py:1024-1351) on a
     synthetic p/u/v triplet derived from the event stream."""
@@ -10431,8 +10371,8 @@ def wave_diwasp_dirspec(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a regression): the FFT/cross-spectral chain is not
     SQL-expressible, so this query carries a weaker rows-only check by
     design. Its MATH is driver-green through closed-form companions
-    (wave_dftm_plane_oracle / wave_imlm_relax_oracle + e2e_diwasp_roundtrip(s)); this row exists so the full production kernel stays
-    registry-visible and smoke-run at every rotation.
+    (wave_dftm_plane_oracle / wave_imlm_relax_oracle + e2e_diwasp_roundtrip(s)); this row keeps the full production kernel
+    registry-visible, so every registry sweep runs it.
 
     Directional wave spectra per burst (DIWASP semantics:
     lib/pyDIWASP/dirspec.py via core/waves.py:309-568), IMLM estimator."""
@@ -10479,8 +10419,8 @@ def wave_stats_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a regression): the FFT/cross-spectral chain is not
     SQL-expressible, so this query carries a weaker rows-only check by
     design. Its MATH is driver-green through closed-form companions
-    (wave_psd_welch_oracle + wave_cutoff_tail_oracle + e2e_pressure_waves_roundtrip); this row exists so the full production kernel stays
-    registry-visible and smoke-run at every rotation.
+    (wave_psd_welch_oracle + wave_cutoff_tail_oracle + e2e_pressure_waves_roundtrip); this row keeps the full production kernel
+    registry-visible, so every registry sweep runs it.
 
     Burst wave statistics via the Welch PSD chain."""
     ev = load_table(spark, sf_dir, "events")
@@ -10955,8 +10895,8 @@ def wave_stats_elev(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a regression): the FFT/cross-spectral chain is not
     SQL-expressible, so this query carries a weaker rows-only check by
     design. Its MATH is driver-green through closed-form companions
-    (wave_elev_stats_oracle + e2e_glx_waves_roundtrip); this row exists so the full production kernel stays
-    registry-visible and smoke-run at every rotation.
+    (wave_elev_stats_oracle + e2e_glx_waves_roundtrip); this row keeps the full production kernel
+    registry-visible, so every registry sweep runs it.
 
     Direct surface-elevation wave statistics (core/waves.py:684-743):
     no Kp transfer, band-limited to [32 periods/burst, min(2 Hz, Nyq)]."""
@@ -13190,10 +13130,8 @@ def vel_vbper_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Late-round-5 corpus additions: size-weighted sampling, writer-side
-# shard manifests, URL-canonical dedup. Registered at the BACK of _FRONT
-# (graded r6; local 3-SF parity now) so they don't displace the r5
-# rotation window.
+# --- Corpus additions: size-weighted sampling, writer-side shard
+# manifests, URL-canonical dedup.
 
 _PPS_KEY = (
     "((('0x' || substring(md5('pps1' || CAST(doc_id AS VARCHAR)), 1, 15))"
@@ -14738,126 +14676,57 @@ def corpus_excise_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Registry ordering for the driver's correctness run. The driver records
-# rows for the FIRST ~50 registry entries, so ordering decides which
-# queries get driver-side evidence. Policy (round-4 fix for the r3
-# staleness finding): (a) queries new or re-planned THIS round first,
-# then (b) every query whose last driver row is oldest — rotate, don't
-# re-check only what changed.
-#
-# REFRESH SLA (re-stated in r13 per VERDICT r12 what's-wrong #2): the
-# registry outgrew the old 4-round arithmetic (236 queries / 50 graded
-# slots = 4.7 rounds per full rotation), so the standing contract is now
-# "no green row's driver evidence is older than FIVE rounds", and
-# registry growth is capped at 250 entries (5 rounds x 50 slots); adding
-# a query beyond that requires retiring or merging a subsumed row in the
-# same round. Current census: 235 registered (incl. the 2 deliberate-RED
-# hugeint probes and the 4 rows-only FFT kernels with green closed-form
-# companions). Retired r13 under that policy: the 7 column-subset
-# bisection variants ts_sessionize_v1..v4 / corpus_datacard_v1..v3 —
-# historical driver-bisection diagnostics for the DuckDB HUGEINT export
-# trap, fully subsumed by ts_sessionize / corpus_datacard (both still
-# registered and rotated; the trap itself stays documented by the two
-# deliberate-RED hugeint probes).
-#
-# Declared retirement candidates (r14, to execute if the census nears
-# the cap): (a) src_pd0_bt/_vbeam/_waves_roundtrip each pin a DISTINCT
-# PD0 section decoder (bottom-track 0x0600, Sentinel-V vbeam,
-# Wavesmon waves) and are NOT subsumed by src_pd0_roundtrip — keep
-# unless squeezed; (b) of the three diwasp e2e variants
-# (e2e_diwasp_roundtrip / _imlm_ / _nd_), the _nd_ row subsumes the
-# base row's input-selection path, so e2e_diwasp_roundtrip is the
-# first to merge if a slot is needed.
-_FRONT = [
-    # --- round 15 policy: window = first 50 entries, driver-graded.
-    # (a) ORACLE-FIXED this round first: ts_sg_tide_average (r14's one
-    #     driver-red row — the oracle's to_timestamp() returned
-    #     TIMESTAMPTZ vs Spark's tz-naive timestamp_seconds; re-pinned
-    #     to the make_timestamp(epoch_us) idiom, VERDICT r14 task #1)
-    #     and ts_mar_avg_cont (NEW late r14, same latent to_timestamp
-    #     bug, fixed before its first grading);
-    # (b) the 10 r14-optimizer-touched rows whose plan/kernel changed
-    #     without driver-side evidence (VERDICT r14 task #2 — done =
-    #     all 10 green in CORRECTNESS_r15). text_quality_score is both
-    #     optimizer-touched AND r10-aged, so it fills one slot for both
-    #     obligations;
-    # (c) agg_brange_argmax (displaced from slot 50 in r14 — ages to
-    #     r10+5 = r15, graded FIRST among aged rows per the r14
-    #     declaration) and the remaining 37 r10-aged rows of the
-    #     declared r15 rotation block.
-    # 2 + 10 + 1 + 37 = exactly 50.
-    # r16 block (if a round follows) = any row whose plan the r15
-    # optimizer touched that did not fit this window — declared in
-    # OPTIMIZATION_r15.md — then the oldest r11-graded rows.
-    # (a) oracle-fixed this round
-    "ts_sg_tide_average",
-    "ts_mar_avg_cont",
-    # (b) r14 optimizer-touched, driver evidence outstanding
-    "corpus_kmv_overlap",
-    "corpus_cms_heavy_hitters",
-    "mm_phash_neardup",
-    "mm_audio_phash_neardup",
-    "mm_video_phash_neardup",
-    "dedup_winnow_spans",
-    "dedup_winnow_candidates",
-    "dedup_clusters",
-    "dedup_cluster_quality",
-    "text_quality_score",
-    # (c) displaced-from-r14 + the 37 remaining r10-aged rows
-    "agg_brange_argmax",
-    "agg_linregress",
-    "agg_mean_minf",
-    "agg_min_max_attrs",
-    "agg_top_third_threshold",
-    "coord_beam2enu",
-    "coord_beam2enu_4beam",
-    "corpus_pps_sample",
-    "corpus_quality_funnel",
-    "corpus_shard_manifest",
-    "dedup_incremental_batch",
-    "dedup_url_canonical",
-    "e2e_corpus_all_packs",
-    "e2e_sonar_xy_roundtrip",
-    "filt_median_smoother",
-    "mm_decode_real_bmp",
-    "phys_boundary_elevation",
-    "phys_direction_conventions",
-    "qaqc_min_max",
-    "qaqc_std_gates",
-    "qaqc_trim_single_bins",
-    "qaqc_wave_stats_trims",
-    "snk_netcdf3_roundtrip",
-    "src_pd0_roundtrip",
-    "text_html_extract",
-    "text_lang_id",
-    "text_token_stats",
-    "text_winnow_fingerprints",
-    "ts_asof_atmos_correct",
-    "ts_burst_average",
-    "ts_circular_mean_daily",
-    "ts_gap_fill_hourly",
-    "ts_interval_average_duration",
-    "ts_value_percentiles",
-    "vel_agc_cor_gates",
-    "vel_snr_gate",
-    "vel_trim_sidelobe",
-    "wave_imlm_relax_oracle",
-]
+# --------------------------------------------------------------------------
+# Deliberate-RED probes. ts_sessionize and corpus_datacard were hash-red in
+# the driver while passing bit-exact locally; the cause is DuckDB's
+# sum(BIGINT) → HUGEINT, which the pandas export degrades to float64
+# ("123.0" vs "123" under a formatted-value hash). The main queries CAST
+# every integer sum; each probe keeps one sum uncast, so it must mismatch
+# and stays as the standing documentation of the trap. They are registered
+# LAST: the registry is returned in registration order, and a sweep over
+# any prefix of it must not start with an expected red.
+# Current census: 235 registered queries, these two probes last.
+# --------------------------------------------------------------------------
 
 
-def _ordered(mapping: dict) -> dict:
-    front = [k for k in _FRONT if k in mapping]
-    rest = [k for k in mapping if k not in _FRONT]
-    return {k: mapping[k] for k in front + rest}
+@register(
+    "ts_sessionize_probe_hugeint",
+    _SESSIONIZE_CTE
+    + """
+    SELECT user_id, CAST(session_id AS INTEGER) AS session_id,
+           sum(CAST(sign(value) * floor(abs(value) * 100 + 0.5)
+                    AS BIGINT)) AS value_cents
+    FROM sess GROUP BY user_id, session_id
+    """,
+)
+def ts_sessionize_probe_hugeint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DELIBERATE NEGATIVE PROBE — expected driver-RED. The oracle's
+    value_cents sum is intentionally left UNCAST so DuckDB returns
+    HUGEINT, which pandas export degrades to float64 ("123.0" vs
+    Spark's int "123" under a formatted-value hash). A red row here
+    alongside a green ts_sessionize confirms the r5/r6 red diagnosis
+    from inside the driver; a green row falsifies it."""
+    return _sessionize_agg(spark, sf_dir).select(
+        "user_id", "session_id", "value_cents"
+    )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # A _FRONT name with no registered query silently shrinks the graded
-    # window (r6 lost 4 slots to phantom entries) — fail loudly instead.
-    missing = [k for k in _FRONT if k not in QUERIES]
-    assert not missing, f"_FRONT names unregistered queries: {missing}"
-    return _ordered(QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return _ordered(ORACLES)
+@register(
+    "corpus_datacard_probe_hugeint",
+    _DATACARD_CTE
+    + """
+    SELECT source, lang,
+           sum(micro) AS quality_micro_sum
+    FROM r GROUP BY source, lang
+    """,
+)
+def corpus_datacard_probe_hugeint(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DELIBERATE NEGATIVE PROBE — expected driver-RED: the oracle sum
+    is intentionally UNCAST (HUGEINT→float64 pandas export), mirroring
+    the exact form that was red in r5/r6. See
+    ts_sessionize_probe_hugeint."""
+    return _datacard_agg(spark, sf_dir).select(
+        "source", "lang", "quality_micro_sum"
+    )

@@ -692,6 +692,40 @@ def test_hll_register_aggregate_is_partial(spark):
     )), "register aggregate not keyed on (source, bucket)"
 
 
+def _tree(node):
+    yield node
+    it = node.children().iterator()
+    while it.hasNext():
+        yield from _tree(it.next())
+
+
+def test_hll_keeps_keys_only_distinct(spark):
+    """The HLL registers must be built from the DISTINCT (source, tok)
+    stream: a keys-only Aggregate on exactly those keys must survive
+    optimization. The per-bucket count(1) riding the register aggregate
+    is what stops RemoveRedundantAggregates from eliding that distinct
+    under the max-only register consumer; without it the sketch hashes
+    every token occurrence and the plan stays numerically plausible."""
+    qe = QUERIES["corpus_hll_distinct"](spark, SF)._jdf.queryExecution()
+    keys_only = []
+    for node in _tree(qe.optimizedPlan()):
+        if node.getClass().getSimpleName() != "Aggregate":
+            continue
+        outs = node.aggregateExpressions()
+        has_agg_fn = any(
+            e.getClass().getSimpleName() == "AggregateExpression"
+            for i in range(outs.size())
+            for e in _tree(outs.apply(i))
+        )
+        if not has_agg_fn:
+            keys = node.groupingExpressions()
+            keys_only.append(sorted(
+                re.sub(r"#\d+L?$", "", keys.apply(i).toString())
+                for i in range(keys.size())
+            ))
+    assert keys_only == [["source", "tok"]], keys_only
+
+
 def test_bloom_probe_join_broadcasts_bit_table(spark):
     """The Bloom probe side must join the bounded bit table via
     BroadcastHashJoin (the table is <= m_bits rows BY CONSTRUCTION) —

@@ -1,16 +1,16 @@
 #!/usr/bin/env python
 """Per-query bench regression diff.
 
-Compares two bench results (driver ``BENCH_r{N}.json`` artifacts, raw
-``bench.py`` one-line JSON output, or a file containing it) and flags
-queries slower than ``--threshold`` (default 1.5x). Exit code 1 when any
-regression is flagged, so it can gate CI.
+Compares two bench results (a driver capture ``{"rc":..,"parsed":{...}}``,
+raw ``bench.py`` one-line JSON output, or ``BENCH_FULL_latest.json``,
+which holds every headline query) and flags queries slower than
+``--threshold`` (default 1.5x). Exit code 1 when any regression is
+flagged, so it can gate CI.
 
-Usage:
-    python tools/bench_regression.py BENCH_r01.json BENCH_r03.json
-    python tools/bench_regression.py BENCH_r01.json current_bench.json -t 1.3
-    python bench.py | tail -1 > now.json && \
-        python tools/bench_regression.py BENCH_r01.json now.json
+Usage (run ``bench.py`` on both commits, keep each full map):
+    python bench.py && cp BENCH_FULL_latest.json /tmp/before.json
+    python bench.py && cp BENCH_FULL_latest.json /tmp/after.json
+    python tools/bench_regression.py /tmp/before.json /tmp/after.json -t 1.3
 
 Adjudication mode (VERDICT r12 task #3 — ambient-drift control): with
 ``--adjudicate OUT.json --sf-dir DIR``, every flagged query is re-timed

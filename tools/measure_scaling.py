@@ -10,7 +10,7 @@ fixture.
 Usage:
     python tools/make_sf1.py                                   # sf1
     python tools/make_sf1.py --k 100 --dst /root/repo/.tmp/sf10
-    python tools/measure_scaling.py --out SCALING_r14.json
+    python tools/measure_scaling.py --out /tmp/scaling.json
 
 Protocol: one warm pass at sf0.01 (codegen+JIT), then N timed passes
 per (query, sf) — smallest sf first so page cache favors the LARGE

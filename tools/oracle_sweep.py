@@ -38,8 +38,8 @@ def main() -> int:
     from stglib_spark.session import get_spark
     from tests.oracle_harness import compare, duck_connection
 
-    qs = registry.queries()
-    oracle = registry.oracle_sql()
+    qs = registry.QUERIES
+    oracle = registry.ORACLES
     names = list(qs)
     if args.only:
         keep = set(args.only.split(","))

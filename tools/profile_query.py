@@ -4,10 +4,10 @@ shuffle bytes and Python-worker time, plus the FINAL adaptive plan
 (after AQE re-optimization, including ReusedExchange/ReusedQueryStage
 nodes that the pre-execution ``explain`` hides).
 
-``pyInit`` and ``pyRun`` sum a stage's "time to initialize Python
-workers" and "time to run Python workers" over its tasks. The worker
-stamps its boot time before it blocks for the next task, so a reused
-worker's init time also holds its idle wait since its previous task.
+``pyRun`` sums a stage's "time to run Python workers" over its tasks.
+Python-worker init time is not reported: a reused worker stamps its boot
+time before it blocks for its next task, so that metric sums idle wait
+between queries and cannot show a per-task init cost.
 
 Usage: python tools/profile_query.py QUERY [QUERY...] [--sf-dir DIR]
        [--runs N] [--plan]
@@ -53,13 +53,12 @@ def build_session(cpus: int):
 
 # Python-worker SQL metrics (ms) as Spark 4 names them in a stage's
 # accumulables; a stage with several Python operators carries one each
-PY_INIT = "time to initialize Python workers"
 PY_RUN = "time to run Python workers"
 
 
 def parse_eventlog(job_window: tuple[float, float]):
     """Stage rows (name, wall ms, task-time ms, shuffle read/write MB,
-    Python-worker init/run ms, tasks) for stages submitted inside the
+    Python-worker run ms, tasks) for stages submitted inside the
     [t0, t1] window (epoch ms)."""
     rows = []
     for path in _log_files():
@@ -84,10 +83,11 @@ def parse_eventlog(job_window: tuple[float, float]):
                     a.get("Name"): (a.get("Value") or 0)
                     for a in si.get("Accumulables", [])
                 }
-                py = {PY_INIT: 0.0, PY_RUN: 0.0}
-                for a in si.get("Accumulables", []):
-                    if a.get("Name") in py:
-                        py[a["Name"]] += float(a.get("Value") or 0)
+                py_run = sum(
+                    float(a.get("Value") or 0)
+                    for a in si.get("Accumulables", [])
+                    if a.get("Name") == PY_RUN
+                )
                 rows.append(
                     {
                         "stage": si["Stage ID"],
@@ -103,8 +103,7 @@ def parse_eventlog(job_window: tuple[float, float]):
                         "sh_write_mb": round(
                             acc.get("internal.metrics.shuffle.write.bytesWritten", 0)
                             / 1e6, 2),
-                        "py_init_ms": round(py[PY_INIT]),
-                        "py_run_ms": round(py[PY_RUN]),
+                        "py_run_ms": round(py_run),
                         "tasks": si.get("Number of Tasks"),
                     }
                 )
@@ -174,7 +173,6 @@ def main() -> None:
             f"last-run stages={len(stages)} sum_stage_wall="
             f"{sum(s['wall_ms'] for s in stages)/1000:.3f}s "
             f"sum_task_time={total_task/1000:.3f}s "
-            f"sum_py_init={sum(s['py_init_ms'] for s in stages)}ms "
             f"sum_py_run={sum(s['py_run_ms'] for s in stages)}ms"
         )
         for s in stages:
@@ -182,7 +180,7 @@ def main() -> None:
                 f"  st{s['stage']:>4} wall={s['wall_ms']:>6}ms "
                 f"task={s['task_ms']:>7}ms n={s['tasks']:>3} "
                 f"shR={s['sh_read_mb']:>8}MB shW={s['sh_write_mb']:>8}MB "
-                f"pyInit={s['py_init_ms']:>6}ms pyRun={s['py_run_ms']:>6}ms "
+                f"pyRun={s['py_run_ms']:>6}ms "
                 f" {s['sname']}"
             )
         if args.plan:
