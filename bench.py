@@ -60,7 +60,7 @@ HEADLINE = [
     # run on every arriving batch before anything above touches it
     "corpus_quality_funnel",
     "dedup_incremental_batch",
-    # analytics tier (VERDICT r5 task #7): iterative k-means, PQ-ADC
+    # analytics tier: iterative k-means, PQ-ADC
     # top-k, bigram LM scoring, HTML extraction, and sessionization —
     # the per-query artifact must expose regressions in the Python-side
     # iteration drivers and the regex/window hot paths too
@@ -121,7 +121,7 @@ HEADLINE = [
     "corpus_quality_pr_sweep",
 ]
 
-# Stage-composition oracles (VERDICT r8 task #8): timed ONCE each and
+# Stage-composition oracles: timed ONCE each and
 # reported as a SEPARATE column — their wall time is dominated by fixed
 # zone write/read cycles (the restartable-layout contract) plus
 # synthesized fixed-size corpora, so it is near-constant across scale
@@ -181,10 +181,12 @@ def main() -> None:
             times[name] = round(min(times.get(name, dt), dt), 3)
 
     total = round(sum(times.values()), 3)
-    # the headline set has grown since BENCH_r01 (corpus/cluster queries
+    # the headline set has grown since round 1 (corpus/cluster queries
     # added in r4/r5); value_baseline_set is the subtotal over the
     # original 20-query set so round-over-round and vs-baseline
-    # comparisons stay apples-to-apples
+    # comparisons stay apples-to-apples. The per-round result files this
+    # set was compared against are only in git history now; the one
+    # committed map is BENCH_FULL_latest.json
     later_additions = {
         "dedup_clusters",
         "corpus_pack_sequences",
@@ -202,8 +204,8 @@ def main() -> None:
         "corpus_hist_percentiles",
         "dedup_incremental_near",
         # r8 additions (kept out so value_baseline_set stays comparable
-        # to BENCH_r01..r07; dedup_semantic predates this guard and is
-        # left IN to match how r7's operative number was computed)
+        # to rounds 1-7; dedup_semantic predates this guard and is left
+        # IN to match how r7's operative number was computed)
         "mm_phash_neardup",
         "mm_video_phash_neardup",
         "e2e_rbr_clean_roundtrip",
@@ -236,7 +238,7 @@ def main() -> None:
 
     # single-pass stage-oracle column (fixed zone-write overhead; see
     # E2E_STAGE comment). e2e_rbr_clean_roundtrip stays in the headline
-    # loop for continuity with BENCH_r08.
+    # loop for continuity with the r8 headline.
     e2e_times: dict[str, float] = {}
     for name in E2E_STAGE:
         fn = registry.QUERIES[name]
@@ -244,12 +246,12 @@ def main() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         e2e_times[name] = round(time.perf_counter() - t0, 3)
 
-    # --- artifact layout (VERDICT r12 task #2): the driver captures a
-    # fixed-size TAIL of stdout, and the full per-query map outgrew it in
-    # r12, truncating the headline totals out of BENCH_r12.json. The
-    # printed line now (a) carries only the r1-comparable baseline set
-    # of per-query rows instead of all ~55, and (b) orders the totals
-    # LAST so a tail capture can never lose them. The COMPLETE per-query
+    # --- artifact layout: a harness that keeps a fixed-size TAIL of
+    # stdout lost the headline totals in r12, once the full per-query
+    # map outgrew that tail. The printed line now (a) carries only the
+    # r1-comparable baseline set of per-query rows instead of all ~55,
+    # and (b) orders the totals LAST so a tail capture can never lose
+    # them. The COMPLETE per-query
     # map is written to BENCH_FULL_latest.json next to this script.
     printed_queries = {
         k: v for k, v in times.items() if k not in later_additions

@@ -12,13 +12,16 @@ nperseg=next_pow2(nsamps/nsegs), nsegs default 16), ``elevation_spectra``
 Hs = 4√m0, Tm = √(m0/m2), Tp = 1/f_peak with 0-frequency guarded).
 
 Spark-first design: one ``applyInPandas`` over the burst key computes the
-whole per-burst spectral chain batch-vectorized in NumPy (the FFT-class
-math that genuinely needs Python — SURVEY §7.1); each Arrow batch carries
-MANY bursts so the per-burst loop runs inside one vectorized kernel. This
-is exactly the reference's one parallel axis (its dask Client fans out one
-future per burst, core/waves.py:263-306) — here Spark's shuffle gives the
-same embarrassing parallelism across executors for free, scaling linearly
-with cluster size at 100 TB.
+whole per-burst spectral chain vectorized in NumPy (the FFT-class math
+that genuinely needs Python — SURVEY §7.1). ``applyInPandas`` calls the
+kernel once per group, so each call gets exactly one burst; the streaming
+twins (``streaming/bursts.py``) likewise run it on one closed burst. The
+kernels' ``groupby`` loop over bursts only serves direct callers that pass
+a frame of several bursts. One burst per task-side call is exactly the
+reference's one parallel axis (its dask Client fans out one future per
+burst, core/waves.py:263-306) — here Spark's shuffle gives the same
+embarrassing parallelism across executors, scaling linearly with cluster
+size at 100 TB.
 """
 
 from __future__ import annotations
@@ -136,7 +139,9 @@ def burst_wave_stats_kernel(
     kpmin: float | None = None,
     pressure_col: str = "P_1ac",
 ) -> pd.DataFrame:
-    """Per-burst spectral chain on a pandas batch (possibly many bursts)."""
+    """Per-burst spectral chain on a pandas frame of samples: one burst
+    under ``applyInPandas``; a direct caller may pass several, which the
+    ``groupby`` loop splits."""
     rows = []
     for bt, grp in pdf.groupby(BURST, sort=True):
         grp = grp.sort_values(SAMPLE)
@@ -461,8 +466,8 @@ def make_puv_kernel(
     v_col: str = "v_1206",
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """The per-burst body of ``make_puv_ds`` built from ``config``: a
-    pandas batch of samples (possibly many bursts) → one ``puv_schema``
-    row per burst. Bursts under 32 samples or with all-NaN pressure are
+    pandas frame of samples (one burst under ``applyInPandas``; a direct
+    caller may pass several) → one ``puv_schema`` row per burst. Bursts under 32 samples or with all-NaN pressure are
     skipped. Depth per burst = mean pressure + sensor height."""
     fs = 1.0 / float(config.get("sample_interval", 1.0))
     zp, zuv = sensor_heights(config)
@@ -522,8 +527,9 @@ def wave_stats_schema() -> StructType:
 
 def make_waves_kernel(config: dict, pressure_col: str = "P_1ac") -> Callable[[pd.DataFrame], pd.DataFrame]:
     """The per-burst body of ``make_waves_ds`` built from ``config``:
-    ``burst_wave_stats_kernel`` over a pandas batch of samples (possibly
-    many bursts) → one ``wave_stats_schema`` row per burst it keeps."""
+    ``burst_wave_stats_kernel`` over a pandas frame of samples (one burst
+    under ``applyInPandas``; a direct caller may pass several) → one
+    ``wave_stats_schema`` row per burst it keeps."""
     sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
     z, _ = sensor_heights(config)
     nsegs = int(config.get("spec_nsegs", 16))

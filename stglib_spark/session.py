@@ -8,8 +8,13 @@ partitions sized for the local box but overridden by AQE at scale.
 
 from __future__ import annotations
 
+import atexit
+import glob
+import hashlib
 import logging
 import os
+import shutil
+import subprocess
 import sys
 
 from pyspark import TaskContext
@@ -42,13 +47,44 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
     Launches no Spark job. Spark's one-time inits, the ICU collation
     tables and the Python worker pool, land on the first stage that
     needs them, so a CLI step that runs neither never pays for them.
+
+    When it launches the driver JVM, it starts it from this machine's
+    class-data-sharing archive, or records that archive at JVM exit when
+    there is none yet (``_ClassDataArchive``).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    cds = _ClassDataArchive.for_launch()
+    spark = cds.build(app_name, cpus) if cds else None
+    if spark is None:
+        spark = _build(app_name, _session_confs(cpus))
+    ensure_package_shipped(spark)
+    return spark
+
+
+# every query's whole-stage-codegen class JIT-compiles into the code
+# cache; the 240 MB JVM default fills after a few dozen distinct plans,
+# HotSpot stops compiling, and hot generated methods run interpreted
+# (measured 6x slowdown on the trig-heavy transform after ~70 queries in
+# one session)
+_DRIVER_JAVA_OPTIONS = "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
+_JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
+
+
+def _session_confs(cpus: int, java_options: str = "") -> dict[str, str]:
+    """The confs ``get_spark`` builds its session with on ``cpus`` cores.
+    ``java_options`` go on the driver JVM's command line after the fixed
+    ones.
+
+    ``SPARK_GRAFT_EXTRA_CONF`` (``k=v;k=v``) is a measurement hook
+    (tools/profile_query.py, perfbench's traced runs) for confs that must
+    be set before the context builds, e.g. event logging. Its entries
+    override these confs, except ``spark.driver.extraJavaOptions``, which
+    is appended, so a measurer's ``-Xlog:class+load`` keeps the fixed
+    JVM options."""
+    confs = {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # keep AQE's parallelism-first coalescing honest for compute-bound
         # Arrow stages: the default 1 MB minPartitionSize floors the
         # per-partition target ABOVE totalBytes/defaultParallelism for
@@ -57,33 +93,239 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
         # pin_grouping shuffle is elided as redundant and the surviving
         # ENSURE_REQUIREMENTS exchange is coalescible). 64k keeps tiny
         # shuffles cheap while letting CPU-heavy ones use every core.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # every query's whole-stage-codegen class JIT-compiles into the
-        # code cache; the 240 MB JVM default fills after a few dozen
-        # distinct plans, HotSpot stops compiling, and hot generated
-        # methods run interpreted (measured 6x slowdown on the trig-heavy
-        # transform after ~70 queries in one session)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.ui.enabled", "false")
-    )
-    # measurement hook (tools/profile_query.py): extra confs that must be
-    # set before the context builds, e.g. event logging —
-    # SPARK_GRAFT_EXTRA_CONF="spark.eventLog.enabled=true;spark.eventLog.dir=/tmp/ev"
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(max(cpus * 2, 8)),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        _JAVA_OPTIONS_KEY: f"{_DRIVER_JAVA_OPTIONS} {java_options}".strip(),
+        "spark.ui.enabled": "false",
+    }
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for kv in filter(None, extra.split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
-    spark = builder.getOrCreate()
-    ensure_package_shipped(spark)
-    return spark
+        k, _, v = (s.strip() for s in kv.partition("="))
+        confs[k] = f"{confs[k]} {v}" if k == _JAVA_OPTIONS_KEY else v
+    return confs
+
+
+def _build(app_name: str, confs: dict[str, str]) -> SparkSession:
+    return SparkSession.builder.appName(app_name).config(map=confs).getOrCreate()
+
+
+class _ClassDataArchive:
+    """The driver JVM's dynamic AppCDS archive (JDK 17
+    ``-XX:SharedArchiveFile``), one per machine, Java binary and Spark
+    jar set, in ``$XDG_CACHE_HOME/stglib_spark/cds/`` (default
+    ``~/.cache``).
+
+    A fresh driver JVM spends seconds loading and verifying the same few
+    thousand classes, once while the gateway starts and again on the
+    first query; mapping them from an archive halves ``get_spark`` and
+    the first statement. The first process with no archive records one
+    (``-XX:ArchiveClassesAtExit`` into a per-process temp file) and an
+    exit hook installs it once the JVM exited cleanly, named
+    ``<key>-<size>.jsa``.
+
+    JDK 17 refuses to record with a non-empty directory on the class
+    path, and Spark puts its conf dir there. So the archive is used only
+    when that dir holds nothing but ``*.template`` files, which Spark
+    never reads; the JVM is then launched with ``SPARK_CONF_DIR`` set to
+    an empty dir in the cache instead. Any other conf dir, a gateway that
+    already exists, or a cache dir that cannot be written means a plain
+    launch.
+
+    A truncated archive crashes the JVM even under ``-Xshare:auto``
+    (SIGBUS while mapping), and the crash report goes to stdout. So an
+    archive whose size is not the one in its name is never passed to a
+    JVM, and a JVM that fails to start with an archive costs the archive
+    and one relaunch without it; either way this process runs without an
+    archive and the next one records a new one. The JVM ignores a foreign
+    or mismatched archive, and its CDS logging is off, so that adds
+    nothing to a CLI step's stdout."""
+
+    #: how long the exit hook waits for a recording JVM to write the
+    #: archive (13-14 s on 4 cores for a 180-200 MB archive)
+    DUMP_WAIT_S = 180.0
+
+    def __init__(self, cache_dir: str, key: str, path: str | None):
+        self.cache_dir = cache_dir
+        self.conf_dir = os.path.join(cache_dir, "conf")
+        self.key = key
+        #: the installed archive, or None when this launch records one
+        self.path = path
+        self.dump_path = (
+            None if path else os.path.join(cache_dir, f"{key}.jsa.{os.getpid()}.tmp")
+        )
+
+    @classmethod
+    def for_launch(cls) -> "_ClassDataArchive | None":
+        """The archive for a driver JVM that ``get_spark`` is about to
+        launch, or None for a plain launch."""
+        from pyspark import SparkContext
+        from pyspark.find_spark_home import _find_spark_home
+
+        if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+            return None
+        spark_home = _find_spark_home()
+        if not _only_templates(
+            os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        ):
+            return None
+        cache_home = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+        cache_dir = os.path.join(cache_home, "stglib_spark", "cds")
+        # the path goes into a JVM option string, which Spark's launcher
+        # splits on whitespace and parses quotes in
+        if any(c in cache_dir for c in " \t\n'\"\\"):
+            return None
+        key = _archive_key(spark_home)
+        if key is None:
+            return None
+        try:
+            os.makedirs(cache_dir, mode=0o700, exist_ok=True)
+            os.makedirs(os.path.join(cache_dir, "conf"), mode=0o700, exist_ok=True)
+            if os.listdir(os.path.join(cache_dir, "conf")) or not os.access(
+                cache_dir, os.W_OK
+            ):
+                return None
+            names = os.listdir(cache_dir)
+        except OSError:
+            return None
+        prefix = f"{key}-"
+        for name in names:
+            if not (name.startswith(prefix) and name.endswith(".jsa")):
+                continue
+            path = os.path.join(cache_dir, name)
+            if _size(path) == name[len(prefix):-len(".jsa")]:
+                return cls(cache_dir, key, path)
+            _drop(path, "is not the size it was written with")
+            return None
+        return cls(cache_dir, key, None)
+
+    def java_options(self) -> str:
+        share = (
+            f"-XX:SharedArchiveFile={self.path}"
+            if self.path
+            else f"-XX:ArchiveClassesAtExit={self.dump_path}"
+        )
+        return f"{share} -Xlog:cds=off -Xlog:cds+dynamic=off"
+
+    def build(self, app_name: str, cpus: int) -> SparkSession | None:
+        """The session, from a JVM launched with the archive; None when
+        that JVM did not start (the archive is then gone)."""
+        from pyspark import SparkContext
+        from pyspark.errors import PySparkRuntimeError
+
+        saved = os.environ.get("SPARK_CONF_DIR")
+        # PySpark copies os.environ into the spark-submit child at launch
+        os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            spark = _build(app_name, _session_confs(cpus, self.java_options()))
+        except PySparkRuntimeError as exc:
+            if SparkContext._gateway is not None or exc.getCondition() != "JAVA_GATEWAY_EXITED":
+                raise
+            _remove(self.dump_path)
+            if self.path:
+                _drop(self.path, "did not start the driver JVM")
+            return None
+        finally:
+            if saved is None:
+                os.environ.pop("SPARK_CONF_DIR", None)
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
+        if self.dump_path:
+            atexit.register(self.install, SparkContext._gateway.proc)
+        return spark
+
+    def install(self, jvm) -> None:
+        """Exit hook of the recording process: end the driver JVM (it
+        exits on EOF on its stdin and writes the archive on its way
+        out), wait for it, and move a complete archive into place. The
+        wait is what keeps a harness that kills the process's session
+        once it exits from killing the JVM mid-dump."""
+        try:
+            jvm.stdin.close()
+            code = jvm.wait(timeout=self.DUMP_WAIT_S)
+        except (OSError, subprocess.TimeoutExpired):
+            jvm.kill()
+            jvm.wait()
+            code = None
+        size = _size(self.dump_path)
+        if code != 0 or size is None:
+            _remove(self.dump_path)
+            return
+        path = os.path.join(self.cache_dir, f"{self.key}-{size}.jsa")
+        os.replace(self.dump_path, path)
+        for name in os.listdir(self.cache_dir):
+            other = os.path.join(self.cache_dir, name)
+            if name.endswith(".jsa") and other != path:
+                _remove(other)
+            elif name.endswith(".tmp") and not _pid_alive(name.rsplit(".", 2)[-2]):
+                _remove(other)
+
+
+def _only_templates(conf_dir: str) -> bool:
+    try:
+        return all(name.endswith(".template") for name in os.listdir(conf_dir))
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+
+
+def _archive_key(spark_home: str) -> str | None:
+    """A hash of what a class-data archive is only valid for: the ``java``
+    binary spark-submit runs (``$JAVA_HOME/bin/java``, else ``java`` on
+    the PATH) and every jar on its class path, each by path, size and
+    mtime. None when there is no ``java``."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java:
+        return None
+    digest = hashlib.sha256()
+    jars = sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar")))
+    try:
+        for path in (os.path.realpath(java), *jars):
+            st = os.stat(path)
+            digest.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    except OSError:
+        return None
+    return digest.hexdigest()[:16]
+
+
+def _pid_alive(pid: str) -> bool:
+    try:
+        os.kill(int(pid), 0)
+    except (ValueError, ProcessLookupError):
+        return False
+    except PermissionError:
+        return True
+    return True
+
+
+def _size(path: str | None) -> str | None:
+    try:
+        return str(os.path.getsize(path)) if path else None
+    except OSError:
+        return None
+
+
+def _drop(archive: str, why: str) -> None:
+    logger.warning(
+        "class-data archive %s %s; removed it, this process starts without one",
+        archive,
+        why,
+    )
+    _remove(archive)
+
+
+def _remove(path: str | None) -> None:
+    if path is None:
+        return
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def _context_key(spark: SparkSession) -> str | None:
@@ -111,33 +353,50 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     only while the driver's cwd is the repo root. Shipping a zip via
     ``addPyFile`` is the same mechanism as ``spark-submit --py-files`` on
     a real cluster. Idempotent per SparkContext (``_context_key``)."""
-    import zipfile
-
     key = _context_key(spark)
     if key in _SHIPPED:
         return
     try:
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        zip_path = os.path.join(
-            os.environ.get("TMPDIR", "/tmp"), "stglib_spark_pkg.zip"
+        zip_path = _package_zip(
+            os.path.dirname(os.path.abspath(__file__)),
+            os.environ.get("TMPDIR", "/tmp"),
         )
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for name in files:
-                    if not name.endswith(".py"):
-                        continue
-                    full = os.path.join(root, name)
-                    rel = os.path.join(
-                        "stglib_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
         spark.sparkContext.addPyFile(zip_path)
         if key is not None:
             _SHIPPED.add(key)
     except Exception as exc:  # local-mode repo-cwd runs work without it
         logger.warning("shipping stglib_spark to the executors failed: %s", exc)
+
+
+def _package_zip(pkg_dir: str, out_dir: str) -> str:
+    """A zip of the ``.py`` files under ``pkg_dir`` as package
+    ``stglib_spark``, in ``out_dir``, named by a hash of their paths and
+    contents: processes on one machine that ship different trees never
+    share a file, and a tree already zipped is not zipped again. It is
+    written under a per-process temp name and renamed into place, so no
+    process ships a half-written zip."""
+    import zipfile
+
+    sources = []
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for name in sorted(files):
+            if name.endswith(".py"):
+                full = os.path.join(root, name)
+                with open(full, "rb") as f:
+                    sources.append((os.path.relpath(full, pkg_dir), f.read()))
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
+    zip_path = os.path.join(out_dir, f"stglib_spark_pkg-{digest.hexdigest()[:16]}.zip")
+    if not os.path.isfile(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel, data in sources:
+                zf.writestr(os.path.join("stglib_spark", rel), data)
+        os.replace(tmp, zip_path)
+    return zip_path
 
 
 _ZIP_SIGNATURE = "_stglib_zip_signature"

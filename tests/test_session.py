@@ -1,10 +1,13 @@
 """Unit tests for the session helpers: the byte-size conf parser, the
-once-per-SparkContext package-ship guard, the warnings of the
-best-effort session steps and the Python workers' zip-invalidation
-guard."""
+once-per-SparkContext package-ship guard and its content-named zip, the
+warnings of the best-effort session steps, the Python workers'
+zip-invalidation guard, the session confs and the driver JVM's
+class-data-sharing archive."""
 
 import importlib
 import logging
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -256,3 +259,244 @@ def test_read_parquet_other_writers_and_partitions_are_inferred(spark, tmp_path)
     assert got.schema == spark.read.parquet(zone).schema
     assert "profile" in got.columns
     assert sorted(r.profile for r in got.select("profile").distinct().collect()) == [0, 1, 2]
+
+
+def test_package_zip_is_named_by_its_contents(tmp_path):
+    """Two package trees never share a zip path; the same tree maps to
+    the same zip, which holds its ``.py`` files under ``stglib_spark/``
+    and leaves no temp file behind."""
+    out = tmp_path / "out"
+    out.mkdir()
+    trees = []
+    for body in ("A = 1\n", "A = 2\n"):
+        tree = tmp_path / f"pkg{len(trees)}"
+        (tree / "sub").mkdir(parents=True)
+        (tree / "__init__.py").write_text("")
+        (tree / "sub" / "mod.py").write_text(body)
+        (tree / "notes.txt").write_text("not shipped")
+        trees.append(tree)
+    first, second = (session._package_zip(str(t), str(out)) for t in trees)
+    assert first != second
+    assert session._package_zip(str(trees[0]), str(out)) == first
+    with zipfile.ZipFile(first) as zf:
+        assert sorted(zf.namelist()) == ["stglib_spark/__init__.py", "stglib_spark/sub/mod.py"]
+        assert zf.read("stglib_spark/sub/mod.py") == b"A = 1\n"
+    assert sorted(p.name for p in out.iterdir()) == sorted(
+        [os.path.basename(first), os.path.basename(second)]
+    )
+
+
+def test_extra_conf_appends_to_the_driver_java_options(monkeypatch):
+    """A ``spark.driver.extraJavaOptions`` entry in the measurement hook
+    goes after the fixed JVM options and the archive's, instead of
+    replacing them; other entries override."""
+    monkeypatch.setenv(
+        "SPARK_GRAFT_EXTRA_CONF",
+        "spark.driver.extraJavaOptions=-Xlog:class+load; spark.ui.enabled=true",
+    )
+    confs = session._session_confs(4, "-XX:SharedArchiveFile=/a.jsa")
+    assert confs["spark.driver.extraJavaOptions"] == (
+        f"{session._DRIVER_JAVA_OPTIONS} -XX:SharedArchiveFile=/a.jsa -Xlog:class+load"
+    )
+    assert confs["spark.ui.enabled"] == "true"
+    assert confs["spark.master"] == "local[4]"
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF")
+    assert session._session_confs(2)["spark.driver.extraJavaOptions"] == (
+        session._DRIVER_JAVA_OPTIONS
+    )
+
+
+# -- the driver JVM's class-data-sharing archive ---------------------------
+
+
+@pytest.fixture
+def launch(monkeypatch, tmp_path):
+    """``get_spark`` with no gateway yet, a cache under ``tmp_path``, a
+    conf dir of templates, and ``_build`` replaced by a recorder of the
+    launch environment: no JVM starts."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf.template").write_text("# spark.master local\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf_dir))
+    monkeypatch.setattr(session, "ensure_package_shipped", lambda spark: None)
+    hooks = []
+    monkeypatch.setattr(session.atexit, "register", lambda *a: hooks.append(a))
+    calls = []
+
+    def build(app_name, confs):
+        calls.append(
+            {"conf_dir": os.environ.get("SPARK_CONF_DIR"),
+             "java": confs["spark.driver.extraJavaOptions"]}
+        )
+        if state.fail_first and len(calls) == 1:
+            from pyspark.errors import PySparkRuntimeError
+
+            raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+        monkeypatch.setattr(SparkContext, "_gateway", SimpleNamespace(proc="jvm"))
+        return "session"
+
+    monkeypatch.setattr(session, "_build", build)
+    from pyspark.find_spark_home import _find_spark_home
+
+    state = SimpleNamespace(
+        calls=calls, hooks=hooks, conf_dir=conf_dir, fail_first=False,
+        cds=tmp_path / "cache" / "stglib_spark" / "cds",
+        key=session._archive_key(_find_spark_home()),
+    )
+    return state
+
+
+def _plant(cds, name, size):
+    cds.mkdir(parents=True, exist_ok=True)
+    (cds / name).write_bytes(b"\0" * size)
+    return cds / name
+
+
+def test_templates_only_conf_dir_launches_with_the_archive(launch):
+    archive = _plant(launch.cds, f"{launch.key}-64.jsa", 64)
+    assert session.get_spark("t", cpus=2) == "session"
+    [call] = launch.calls
+    assert call["conf_dir"] == str(launch.cds / "conf")
+    assert os.listdir(call["conf_dir"]) == []
+    assert f"-XX:SharedArchiveFile={archive}" in call["java"]
+    assert "-Xlog:cds=off -Xlog:cds+dynamic=off" in call["java"]
+    assert call["java"].startswith(session._DRIVER_JAVA_OPTIONS)
+    assert os.environ["SPARK_CONF_DIR"] == str(launch.conf_dir)
+    assert launch.hooks == []  # nothing to record
+
+
+def test_real_conf_file_launches_plain(launch):
+    (launch.conf_dir / "spark-defaults.conf").write_text("spark.master local\n")
+    _plant(launch.cds, f"{launch.key}-64.jsa", 64)
+    session.get_spark("t", cpus=2)
+    [call] = launch.calls
+    assert call == {"conf_dir": str(launch.conf_dir), "java": session._DRIVER_JAVA_OPTIONS}
+
+
+def test_no_archive_flags_when_a_gateway_exists(launch, monkeypatch):
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", SimpleNamespace(proc=None))
+    assert session._ClassDataArchive.for_launch() is None
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "4711")
+    assert session._ClassDataArchive.for_launch() is None
+
+
+def test_archive_key_follows_the_jars(tmp_path, monkeypatch):
+    monkeypatch.delenv("JAVA_HOME", raising=False)
+    jars = tmp_path / "jars"
+    jars.mkdir()
+    for name in ("a.jar", "b.jar"):
+        (jars / name).write_bytes(b"PK")
+    key = session._archive_key(str(tmp_path))
+    assert key is not None and key == session._archive_key(str(tmp_path))
+    st = (jars / "b.jar").stat()
+    os.utime(jars / "b.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert session._archive_key(str(tmp_path)) != key
+
+
+class _Jvm:
+    """A recording driver JVM stand-in: on EOF it writes ``dump`` and
+    exits with ``code``."""
+
+    def __init__(self, dump, code=0):
+        self.stdin = SimpleNamespace(close=lambda: None)
+        self.dump, self.code = dump, code
+
+    def wait(self, timeout=None):
+        if self.code == 0:
+            self.dump.write_bytes(b"\1" * 100)
+        return self.code
+
+
+def test_recording_installs_the_archive_at_exit(launch):
+    """No archive: the JVM records into a per-process temp file, and the
+    exit hook installs it under its size, removes another key's archive
+    and a dead process's temp file, and keeps a live process's."""
+    stale = _plant(launch.cds, "0123456789abcdef-64.jsa", 64)
+    dead = _plant(launch.cds, f"{launch.key}.jsa.999999999.tmp", 8)
+    live = _plant(launch.cds, f"{launch.key}.jsa.1.tmp", 8)
+    session.get_spark("t", cpus=2)
+    [call] = launch.calls
+    dump = launch.cds / f"{launch.key}.jsa.{os.getpid()}.tmp"
+    assert f"-XX:ArchiveClassesAtExit={dump}" in call["java"]
+    [(hook, jvm)] = launch.hooks
+    assert jvm == "jvm"
+    hook(_Jvm(dump))
+    assert sorted(p.name for p in launch.cds.iterdir()) == sorted(
+        ["conf", f"{launch.key}-100.jsa", live.name]
+    )
+    assert not stale.exists() and not dead.exists()
+
+
+def test_failed_recording_installs_nothing(launch):
+    session.get_spark("t", cpus=2)
+    assert launch.cds.stat().st_mode & 0o777 == 0o700
+    [(hook, _)] = launch.hooks
+    dump = launch.cds / f"{launch.key}.jsa.{os.getpid()}.tmp"
+    dump.write_bytes(b"partial")
+    hook(_Jvm(dump, code=-9))
+    assert sorted(p.name for p in launch.cds.iterdir()) == ["conf"]
+
+
+def test_wrong_size_archive_is_never_launched(launch, caplog):
+    """A truncated archive would crash the JVM with its report on
+    stdout: one whose size is not the one in its name is removed and
+    this process launches plain."""
+    archive = _plant(launch.cds, f"{launch.key}-4096.jsa", 1024)
+    caplog.set_level(logging.WARNING, logger=session.logger.name)
+    session.get_spark("t", cpus=2)
+    [call] = launch.calls
+    assert call == {"conf_dir": str(launch.conf_dir), "java": session._DRIVER_JAVA_OPTIONS}
+    assert not archive.exists()
+    assert [r.levelno for r in caplog.records if r.name == session.logger.name] == [
+        logging.WARNING
+    ]
+
+
+def test_jvm_that_fails_with_the_archive_is_relaunched_without_it(launch):
+    archive = _plant(launch.cds, f"{launch.key}-64.jsa", 64)
+    launch.fail_first = True
+    assert session.get_spark("t", cpus=2) == "session"
+    first, second = launch.calls
+    assert "-XX:SharedArchiveFile" in first["java"]
+    assert second == {"conf_dir": str(launch.conf_dir), "java": session._DRIVER_JAVA_OPTIONS}
+    assert not archive.exists()
+    assert os.environ["SPARK_CONF_DIR"] == str(launch.conf_dir)
+    assert launch.hooks == []
+
+
+def test_truncated_archive_still_answers_select_1(tmp_path):
+    """End to end in a fresh process: a truncated archive is removed,
+    the session answers, and the CLI-visible stdout carries only the
+    answer."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    key = session._archive_key(_find_spark_home())
+    cds = tmp_path / "cache" / "stglib_spark" / "cds"
+    archive = _plant(cds, f"{key}-137482240.jsa", 4096)
+    env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path / "cache"), TMPDIR=str(tmp_path))
+    env.pop("SPARK_CONF_DIR", None)
+    env.pop("SPARK_GRAFT_EXTRA_CONF", None)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [root, env.get("PYTHONPATH")]))
+    code = (
+        "from stglib_spark.session import get_spark\n"
+        "print(get_spark('cds-test', cpus=1).sql('select 1 as x').collect()[0].x)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout == "1\n"
+    assert not archive.exists()
+    assert sorted(p.name for p in cds.iterdir()) == ["conf"]
+    assert not list(tmp_path.glob("hs_err_pid*"))
