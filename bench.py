@@ -5,14 +5,20 @@ JSON line. Each query is forced through the noop sink so the full plan
 skip the work being measured.
 
 Each query is first warmed once at sf0.01 (~60k rows): generated codegen
-classes are keyed by expression structure, not file paths, so the small-
-scale run JIT-compiles the exact classes the timed run uses (sf0.001 was
-too few row-iterations to trigger C2 compilation of the hot loops). Timed
-runs are best-of-2: in a shared local JVM the C2 compiler threads compete
-with the 32 executor threads, adding 2-4× jitter to individual runs that
-a 1000-executor cluster (dedicated JVMs, long-lived hot code) would not
-see. The reported numbers are steady-state throughput, not one-time
-plan-compilation latency."""
+classes are keyed by their generated source, not file paths, so the
+small-scale run compiles and JIT-compiles the classes the timed run uses
+(sf0.001 was too few row-iterations to trigger C2 compilation of the hot
+loops). Those classes are still there at the timed run only because
+``get_spark`` sizes Spark's generated-class cache to hold them: the 54
+queries need 727, and under Spark's default of 100 entries the queries
+run between a query's warm run and its timed run evicted its classes, so
+each pass recompiled ~930 classes and ran them before the JIT had.
+Timed runs are the best of 3 interleaved passes: in a shared local JVM
+the C2 compiler threads compete with the executor threads, adding 2-4×
+jitter to individual runs that a 1000-executor cluster (dedicated JVMs,
+long-lived hot code) would not see. The reported numbers are steady-state
+throughput, not one-time plan-compilation latency. The ``E2E_STAGE``
+chains are reported apart, each the best of 2 interleaved runs."""
 
 from __future__ import annotations
 
@@ -121,11 +127,12 @@ HEADLINE = [
     "corpus_quality_pr_sweep",
 ]
 
-# Stage-composition oracles: timed ONCE each and
-# reported as a SEPARATE column — their wall time is dominated by fixed
-# zone write/read cycles (the restartable-layout contract) plus
-# synthesized fixed-size corpora, so it is near-constant across scale
-# factors. Keeping them out of `value`/`value_baseline_set` keeps the
+# Stage-composition oracles: timed in two interleaved passes, each
+# chain's best of 2 (a single pass drifted up to 1.6x between runs of
+# the same code), and reported as a SEPARATE column — their wall time
+# is dominated by fixed zone write/read cycles (the restartable-layout
+# contract) plus synthesized fixed-size corpora, so it is near-constant
+# across scale factors. Keeping them out of `value`/`value_baseline_set` keeps the
 # round-over-round totals apples-to-apples while making data-cost drift
 # in the stage plumbing visible per round.
 E2E_STAGE = [
@@ -147,6 +154,7 @@ E2E_STAGE = [
     # (.81R files -> sweep sets -> clean -> sonavg zone)
     "e2e_son_average_roundtrip",
 ]
+E2E_RUNS = 2
 
 
 def main() -> None:
@@ -157,7 +165,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers, then each plan's codegen classes at
-    # a small scale factor, so timings measure steady-state execution
+    # a small scale factor; the session's generated-class cache holds all
+    # the headline queries' classes (session._session_confs), so they are
+    # reused, JIT-compiled, in the timed passes
     registry.QUERIES["q1_pricing_summary"](spark, sf_dir).count()
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
     if not os.path.isdir(warm_dir):
@@ -236,15 +246,17 @@ def main() -> None:
         sum(v for k, v in times.items() if k not in later_additions), 3
     )
 
-    # single-pass stage-oracle column (fixed zone-write overhead; see
+    # best-of-2 stage-oracle column (fixed zone-write overhead; see
     # E2E_STAGE comment). e2e_rbr_clean_roundtrip stays in the headline
     # loop for continuity with the r8 headline.
     e2e_times: dict[str, float] = {}
-    for name in E2E_STAGE:
-        fn = registry.QUERIES[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        e2e_times[name] = round(time.perf_counter() - t0, 3)
+    for _ in range(E2E_RUNS):
+        for name in E2E_STAGE:
+            fn = registry.QUERIES[name]
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time.perf_counter() - t0
+            e2e_times[name] = round(min(e2e_times.get(name, dt), dt), 3)
 
     # --- artifact layout: a harness that keeps a fixed-size TAIL of
     # stdout lost the headline totals in r12, once the full per-query
@@ -262,6 +274,7 @@ def main() -> None:
         "sf": sf,
         "queries": printed_queries,
         "e2e_stage_queries": e2e_times,
+        "e2e_stage_best_of": E2E_RUNS,
         "e2e_stage_total": round(sum(e2e_times.values()), 3),
         "value_baseline_set": baseline_set,
         "value": total,

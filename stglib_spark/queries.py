@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from stglib_spark.scratch import scratch_dir
-from stglib_spark.session import fast_round, load_table, spread
+from stglib_spark.session import fast_round, load_table, read_parquet, spread
 
 _log = logging.getLogger(__name__)
 
@@ -2731,8 +2731,8 @@ def dedup_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup_materialize_candidates": False,
     }
     paths = pipeline.run_dedup(spark, config)
-    verified = spark.read.parquet(paths["dedup"])
-    clusters = spark.read.parquet(paths["components"])
+    verified = read_parquet(spark, paths["dedup"])
+    clusters = read_parquet(spark, paths["components"])
     e = verified.join(
         clusters.withColumnsRenamed(
             {"doc_id": "doc_a", "canonical_id": "cl"}
@@ -6123,7 +6123,7 @@ def snk_profile_split_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (18 + (F.col("id") % 48) * 0.125).alias("temperature"),
     )
     src.write.mode("overwrite").partitionBy("profile").parquet(out_dir)
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     return back.select(
         "time",
         F.col("profile").cast("int").alias("profile"),
@@ -6225,7 +6225,7 @@ def e2e_rbr_clean_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     pipeline.run_ingest(spark, config)
     clean_path = pipeline.run_clean(spark, config)
-    clean = spark.read.parquet(clean_path)
+    clean = read_parquet(spark, clean_path)
     return clean.select(
         "time",
         F.col("P_1").alias("p_1"),
@@ -6381,7 +6381,7 @@ def e2e_glx_waves_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "--input", path, "--output-dir", d])
     if rc != 0:
         raise RuntimeError(f"CLI step all failed with rc={rc}")
-    w = spark.read.parquet(os.path.join(d, "e2e_glx_waves_waves"))
+    w = read_parquet(spark, os.path.join(d, "e2e_glx_waves_waves"))
     return w.select(
         "burst_time",
         _r6("m0").alias("m0"),
@@ -6551,7 +6551,7 @@ def e2e_pressure_waves_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline.run_ingest(spark, config)
     pipeline.run_clean(spark, config)
     waves_path = pipeline.run_waves(spark, config)
-    w = spark.read.parquet(waves_path)
+    w = read_parquet(spark, waves_path)
     return w.select(
         "burst_time",
         _r6("m0").alias("m0"),
@@ -6830,7 +6830,7 @@ def e2e_puv_waves_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows, "time timestamp, P_1 double, u_1205 double, v_1206 double"
     ).write.mode("overwrite").parquet(os.path.join(d, "e2e_puv_clean"))
     waves_path = pipeline.run_waves(spark, config)
-    w = spark.read.parquet(waves_path)
+    w = read_parquet(spark, waves_path)
     return w.select(
         "burst_time",
         _r6("m0").alias("m0"),
@@ -7129,7 +7129,7 @@ def e2e_attrs_fidelity_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(("var", str(name), str(k), str(v)))
     # lint the exported frame exactly as run_export_nc constructed it,
     # against the FINAL artifact's global attrs
-    frame = spark.read.parquet(os.path.join(d, "e2e_attrsfid_waves"))
+    frame = read_parquet(spark, os.path.join(d, "e2e_attrsfid_waves"))
     frame = apply_var_attrs(frame.withColumnRenamed("burst_time", "time"))
     problems = check_dataframe(frame, dict(nc["attrs"]))
     rows.append(("lint", "", "n_problems", str(len(problems))))
@@ -7275,7 +7275,7 @@ def e2e_diwasp_export_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # roundtrip bit-exactly — the parquet zone is ground truth
     import numpy as np
 
-    zone = spark.read.parquet(os.path.join(d, "dwfid_diwasp"))
+    zone = read_parquet(spark, os.path.join(d, "dwfid_diwasp"))
     zpdf = zone.select(
         "burst_time", "diwasp_direction", "diwasp_dspec"
     ).toPandas().sort_values("burst_time")
@@ -7301,7 +7301,7 @@ def e2e_diwasp_export_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
              nc["variables"]["diwasp_direction"]["data"], zdir
          ))))
     )
-    frame = spark.read.parquet(os.path.join(d, "dwfid_diwasp"))
+    frame = read_parquet(spark, os.path.join(d, "dwfid_diwasp"))
     frame = apply_var_attrs(frame.withColumnRenamed("burst_time", "time"))
     problems = check_dataframe(frame, dict(nc["attrs"]))
     rows.append(("lint", "", "n_problems", str(len(problems))))
@@ -7436,7 +7436,7 @@ def e2e_corpus_all_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mix_fractions": {"high": 1.0, "mid": 0.5, "low": 0.1},
     }
     paths = pipeline.run_corpus_all(spark, config)
-    return spark.read.parquet(paths["packs"]).select(
+    return read_parquet(spark, paths["packs"]).select(
         "doc_id", "shard", "n_tokens", "start_offset", "start_pack",
         "end_pack",
     )
@@ -11416,7 +11416,7 @@ def e2e_sonar_xy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sonar_dxy": 2.0,
     }
     zone = pipeline.run_xy(spark, config)
-    out = spark.read.parquet(zone)
+    out = read_parquet(spark, zone)
     return out.select(
         "time", "x", "y", _r6("sonar_image").alias("sonar_image")
     )
@@ -11553,7 +11553,7 @@ def e2e_son_average_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _session_conf_guard(spark):
         pipeline.run_ingest(spark, config)
         pipeline.run_clean(spark, config)
-    avg = spark.read.parquet(os.path.join(d, "sonfid_sonavg"))
+    avg = read_parquet(spark, os.path.join(d, "sonfid_sonavg"))
     img = F.col("sonar_image")
     return avg.select(
         "time",
@@ -12197,7 +12197,7 @@ def e2e_media_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "phash_blocks": 4,
     }
     paths = pipeline.run_media_dedup(spark, config)
-    return spark.read.parquet(paths["clusters"]).select(
+    return read_parquet(spark, paths["clusters"]).select(
         "doc_id", "canonical_id"
     )
 
@@ -12827,7 +12827,7 @@ def _diwasp_e2e_run(
     if miter is not None:
         config["diwasp_iter"] = miter
     zone = pipeline.run_diwasp(spark, config)
-    out = spark.read.parquet(zone)
+    out = read_parquet(spark, zone)
     return out.select(
         "burst_time",
         _r6("wh_4061").alias("wh_4061"),

@@ -51,6 +51,12 @@ def get_spark(app_name: str = "stglib_spark", cpus: int | None = None) -> SparkS
     When it launches the driver JVM, it starts it from this machine's
     class-data-sharing archive, or records that archive at JVM exit when
     there is none yet (``_ClassDataArchive``).
+
+    The cache of generated classes is sized to the registry's working
+    set (``spark.sql.codegen.cache.maxEntries``), a static conf the JVM
+    reads once. A session the caller brings, or a later session in a JVM
+    that already generated code, keeps the cache that JVM started with
+    (100 entries by default), and recompiles a working set above that.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
     cds = _ClassDataArchive.for_launch()
@@ -101,6 +107,16 @@ def _session_confs(cpus: int, java_options: str = "") -> dict[str, str]:
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         _JAVA_OPTIONS_KEY: f"{_DRIVER_JAVA_OPTIONS} {java_options}".strip(),
         "spark.ui.enabled": "false",
+        # Spark keeps the classes Janino compiled, one per distinct
+        # generated source, in a Guava cache of 100 entries split into 4
+        # LRU segments. A perfbench registry pass uses ~253 classes,
+        # bench.py's 54 headline queries 727, the whole registry 2,090:
+        # each pass recompiled its classes and ran them before the JIT
+        # had (registry pass 250-255 compiles -> 0-6; headline pass at
+        # sf0.01 925 -> 6-8 compiles, 17 -> 13 s; 4 cores). 4096 holds
+        # the whole registry with headroom per segment. Static: the JVM
+        # reads it once, on the first use of CodeGenerator.
+        "spark.sql.codegen.cache.maxEntries": "4096",
     }
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for kv in filter(None, extra.split(";")):

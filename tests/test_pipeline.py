@@ -1369,3 +1369,15 @@ def test_run_clean_job_count_with_spark_written_met(spark, tmp_path, jobs_launch
     assert clean.count() == 541
     assert clean.filter(F.col("P_1ac").isNull()).count() == 0
     assert jobs <= 3, jobs
+
+
+def test_registry_query_reads_its_zones_back_without_inference(spark, sf_dir, jobs_launched):
+    """``dedup_cluster_quality`` reads back the verified-pair and
+    component zones ``run_dedup`` wrote through ``session.read_parquet``:
+    at most 19 construction jobs, where two schema-inference reads made
+    21."""
+    from stglib_spark.queries import QUERIES
+
+    df, jobs = jobs_launched(lambda: QUERIES["dedup_cluster_quality"](spark, sf_dir))
+    assert jobs <= 19, jobs
+    assert df.count() > 0

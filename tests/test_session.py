@@ -289,21 +289,42 @@ def test_package_zip_is_named_by_its_contents(tmp_path):
 def test_extra_conf_appends_to_the_driver_java_options(monkeypatch):
     """A ``spark.driver.extraJavaOptions`` entry in the measurement hook
     goes after the fixed JVM options and the archive's, instead of
-    replacing them; other entries override."""
+    replacing them; other entries override, the sized codegen cache
+    included."""
     monkeypatch.setenv(
         "SPARK_GRAFT_EXTRA_CONF",
-        "spark.driver.extraJavaOptions=-Xlog:class+load; spark.ui.enabled=true",
+        "spark.driver.extraJavaOptions=-Xlog:class+load; spark.ui.enabled=true;"
+        "spark.sql.codegen.cache.maxEntries=100",
     )
     confs = session._session_confs(4, "-XX:SharedArchiveFile=/a.jsa")
     assert confs["spark.driver.extraJavaOptions"] == (
         f"{session._DRIVER_JAVA_OPTIONS} -XX:SharedArchiveFile=/a.jsa -Xlog:class+load"
     )
     assert confs["spark.ui.enabled"] == "true"
+    assert confs["spark.sql.codegen.cache.maxEntries"] == "100"
     assert confs["spark.master"] == "local[4]"
     monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF")
-    assert session._session_confs(2)["spark.driver.extraJavaOptions"] == (
-        session._DRIVER_JAVA_OPTIONS
-    )
+    confs = session._session_confs(2)
+    assert confs["spark.driver.extraJavaOptions"] == session._DRIVER_JAVA_OPTIONS
+    assert confs["spark.sql.codegen.cache.maxEntries"] == "4096"
+
+
+def test_generated_classes_are_reused_above_the_default_cache_size(spark):
+    """60 distinct projections generate 120 classes, more than Spark's
+    default cache of 100 holds; run twice, the second round compiles
+    nothing (a 100-entry cache recompiles ~96 of them)."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_round():
+        before = compiles.getCount()
+        for k in range(60):
+            spark.range(8).selectExpr(f"id * {k} + {k + 1} AS x").write.format(
+                "noop"
+            ).mode("overwrite").save()
+        return compiles.getCount() - before
+
+    assert run_round() > 100
+    assert run_round() == 0
 
 
 # -- the driver JVM's class-data-sharing archive ---------------------------

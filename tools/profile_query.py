@@ -9,6 +9,12 @@ Python-worker init time is not reported: a reused worker stamps its boot
 time before it blocks for its next task, so that metric sums idle wait
 between queries and cannot show a per-task init cost.
 
+``codegen`` counts the classes Janino compiled for the query and their
+compile time, once for the warm run and once summed over the timed runs,
+from the JVM's own counters. A timed run that compiles again means the
+query's generated classes fell out of Spark's class cache
+(``spark.sql.codegen.cache.maxEntries``).
+
 Usage: python tools/profile_query.py QUERY [QUERY...] [--sf-dir DIR]
        [--runs N] [--plan]
 """
@@ -54,6 +60,20 @@ def build_session(cpus: int):
 # Python-worker SQL metrics (ms) as Spark 4 names them in a stage's
 # accumulables; a stage with several Python operators carries one each
 PY_RUN = "time to run Python workers"
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) since the JVM started: the count of
+    Spark's ``CodegenMetrics`` compile-time histogram and
+    ``CodeGenerator``'s compile-time accumulator (ns)."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return compiles.getCount(), ns / 1e6
+
+
+def _delta(before: tuple[int, float], after: tuple[int, float]) -> str:
+    return f"{after[0] - before[0]} classes / {after[1] - before[1]:.0f} ms"
 
 
 def parse_eventlog(job_window: tuple[float, float]):
@@ -152,7 +172,9 @@ def main() -> None:
     for name in args.queries:
         fn = registry.QUERIES[name]
         # warm codegen at small scale
+        cg0 = codegen_counters(spark)
         fn(spark, args.warm_dir).write.format("noop").mode("overwrite").save()
+        cg1 = codegen_counters(spark)
         best = None
         spark.sparkContext.setJobDescription(f"profile:{name}")
         window = None
@@ -164,7 +186,9 @@ def main() -> None:
             window = (t0 * 1000, time.time() * 1000)  # last run's window
             best = dt if best is None else min(best, dt)
         spark.sparkContext.setJobDescription(None)
+        cg2 = codegen_counters(spark)
         print(f"\n===== {name}: best-of-{args.runs} {best:.3f}s =====")
+        print(f"codegen: warm run {_delta(cg0, cg1)}; timed runs {_delta(cg1, cg2)}")
         # give the event log writer a beat
         time.sleep(0.5)
         stages = parse_eventlog(window)
