@@ -430,14 +430,13 @@ def _lsh_band_rows(
     num_hashes: int,
     bands: int,
     portable: bool,
-    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``(id_col, *keep, band, bh)`` rows of the MinHash signature
+    """``(id_col, band, bh)`` rows of the MinHash signature
     columns ``mh_0..mh_{n-1}``: ``bands`` bands of r = num_hashes/bands
     minhashes, each hashed to ``bh`` (xxhash64, or ``hash60`` of the
     '|'-joined band for ``portable``) and exploded to one row per band.
-    The one banding of ``lsh_pairs_from_signatures``,
-    ``lsh_pairs_between`` and ``streaming.streaming_near_dedup``."""
+    The one banding of ``lsh_pairs_from_signatures`` and
+    ``lsh_pairs_between``."""
     r = num_hashes // bands
     # per-band expressions as JVM-parsed SQL strings (r15, guide §5):
     # the Column-builder form paid ~1 s of py4j roundtrips per query
@@ -458,19 +457,18 @@ def _lsh_band_rows(
             + f") AS band_{b}"
             for b in range(bands)
         ]
-    names = [id_col, *keep]
-    quoted = [f"`{c}`" for c in names]
+    quoted = f"`{id_col}`"
     return (
-        sigs.selectExpr(*quoted, *band_cols)
+        sigs.selectExpr(quoted, *band_cols)
         .selectExpr(
-            *quoted,
+            quoted,
             "explode(array("
             + ", ".join(
                 f"named_struct('band', {b}, 'bh', band_{b})" for b in range(bands)
             )
             + ")) AS bb",
         )
-        .select(*names, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+        .select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
     )
 
 
@@ -488,8 +486,7 @@ def _pigeonhole_block_rows(
     (blk, bh) equi-join. A ``max_hamming`` above blocks−1 breaks that
     guarantee — qualifying pairs would be silently missed — so it
     raises ``ValueError``. The one block explode of
-    ``simhash_near_pairs``, ``multimodal.video_phash_near_pairs`` and
-    ``streaming.streaming_phash_gate``."""
+    ``simhash_near_pairs`` and ``multimodal.video_phash_near_pairs``."""
     if max_hamming > blocks - 1:
         raise ValueError(
             f"pigeonhole recall guarantee requires max_hamming ≤ blocks-1 "
@@ -893,7 +890,7 @@ def winnow_match_spans(
     ).repartition(F.col("fp"))
     # MOSS common-match exclusion: document-frequency stop list. No
     # forced broadcast — distinct low-df fingerprints grow with corpus
-    # size (the streaming_winnow_gate r10 finding); co-partitioned on
+    # size; co-partitioned on
     # fp, the join costs no exchange, and AQE may still upgrade it to
     # broadcast from the MEASURED size. The census is a TWO-LEVEL
     # aggregate — (fp, doc) dedup then a per-fp row count — instead of

@@ -232,17 +232,11 @@ def perceptual_hash(
     content_col: str = "content",
     id_col: str = "media_id",
     out_col: str = "phash",
-    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Pixel-level dHash per image — the perceptual fingerprint that
     dedupes RE-ENCODED images (same picture, different container /
     byte stream) without an embedding model, which byte-digest exact
     dedup cannot do by construction.
-
-    ``keep_cols`` ride through the stateless projection unchanged
-    (e.g. an event-time column in `streaming_phash_gate` — carrying it
-    here avoids an unwatermarked stream-stream self-join whose state
-    would grow without bound, ADVICE r8).
 
     Kernel (Arrow-batched ``mapInPandas``, payloads never shuffled):
     real codec decode (BMP/PNM/PNG, :mod:`stglib_spark.functions.media`),
@@ -260,13 +254,13 @@ def perceptual_hash(
     here is what makes the operator oracle-checkable). Output:
     (id, phash) — 16 bytes/row; at 100 TB every downstream join
     shuffles hashes, never pixels."""
-    keep_cols = list(keep_cols or [])
-    # id/keep dtypes follow the input (string/int media ids both work —
-    # the hardcoded LongType broke configurable media_id_col, ADVICE r8)
+    # the id dtype follows the input (string/int media ids both work —
+    # a hardcoded LongType broke a configurable media_id_col)
     out_schema = StructType(
-        [StructField(id_col, df.schema[id_col].dataType)]
-        + [StructField(c, df.schema[c].dataType) for c in keep_cols]
-        + [StructField(out_col, LongType())]
+        [
+            StructField(id_col, df.schema[id_col].dataType),
+            StructField(out_col, LongType()),
+        ]
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -310,15 +304,9 @@ def perceptual_hash(
                 one(bytes(c)) if c is not None else None
                 for c in pdf[content_col]
             ]
-            out = {id_col: pdf[id_col]}
-            for c in keep_cols:
-                out[c] = pdf[c]
-            out[out_col] = hashes
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({id_col: pdf[id_col], out_col: hashes})
 
-    return df.select(id_col, *keep_cols, content_col).mapInPandas(
-        fn, out_schema
-    )
+    return df.select(id_col, content_col).mapInPandas(fn, out_schema)
 
 
 def phash_near_pairs(

@@ -396,7 +396,7 @@ def hll_bucket_rank(
     val: Column, p: int, seed: str
 ) -> tuple[Column, Column]:
     """The (bucket, rank) column pair shared by the batch register
-    aggregate, its streaming twin, and the DuckDB oracle: bucket = top
+    aggregate and the DuckDB oracle: bucket = top
     p bits of hash60, rank = leading zeros of the remaining w bits + 1.
     For rem > 0 the minimal binary string length IS floor(log2)+1,
     exactly, in both engines; rem = 0 means all w bits are zero →
@@ -411,28 +411,6 @@ def hll_bucket_rank(
         .cast("int")
     )
     return bucket, rank
-
-
-def hll_estimate_py(regs, p: int) -> tuple[int, int, float]:
-    """Python replay of `hll_estimate`'s engine arithmetic for the
-    streaming twin's per-emission estimates: arbitrary-precision
-    integer floor division (bit-identical to the decimal(38,0) plan)
-    and the SAME round(m·ln(m/V), 6) linear-counting literal values.
-    ``regs``: a length-2^p array of max ranks, 0 = empty bucket.
-    Returns (n_zero, raw_est, distinct_est)."""
-    import math
-
-    m = 1 << p
-    w = 60 - p
-    a_num, a_den = _hll_alpha(m)
-    n_zero = sum(1 for r in regs if int(r) == 0)
-    s_int = sum(1 << (w + 1 - int(r)) for r in regs)
-    raw = (a_num * m * m * (1 << (w + 1))) // (a_den * s_int)
-    if n_zero > 0 and raw <= 5 * m // 2:
-        est = round(m * math.log(m / n_zero), 6)
-    else:
-        est = float(raw)
-    return n_zero, raw, est
 
 
 def hll_estimate(
@@ -564,10 +542,10 @@ def bloom_bits(
 def bloom_positions(
     val: Column, k: int, m_bits: int, seed: str
 ) -> Column:
-    """The k-element bit-position array shared by the filter build, the
-    batch probe, and the streaming gate (the `hll_bucket_rank` pattern:
-    ONE column builder so the three paths — and the DuckDB oracle —
-    cannot drift apart): position_i = hash60(seed_i || value) % m_bits."""
+    """The k-element bit-position array shared by the filter build and
+    the probe (the `hll_bucket_rank` pattern: ONE column builder so the
+    two paths — and the DuckDB oracle — cannot drift apart):
+    position_i = hash60(seed_i || value) % m_bits."""
     return F.array(
         *[(hash60(val, seed=f"{seed}{i}") % m_bits) for i in range(k)]
     )

@@ -235,7 +235,6 @@ def winnow_fingerprints(
     k: int = 15,
     w: int = 8,
     out_col: str = "fingerprints",
-    keep_cols: tuple = (),
     exploded: bool = False,
 ) -> DataFrame:
     """Rolling-hash document fingerprints by winnowing (Schleimer,
@@ -276,7 +275,7 @@ def winnow_fingerprints(
     DuckDB oracle replays fingerprints bit-for-bit; no engine-private
     hash enters the result.
 
-    ``exploded=True`` emits one (id, *keep_cols, fp) row per selected
+    ``exploded=True`` emits one (id, fp) row per selected
     value via ``mapInPandas`` instead of the array column — same
     values, same per-doc uniqueness, but the kernel runs exactly ONCE:
     a consumer that explodes the array form pays the kernel TWICE per
@@ -284,8 +283,7 @@ def winnow_fingerprints(
     filter on the UDF column and ExtractPythonUDFs plans separate
     ArrowEvalPython nodes for the filter and the projection (measured
     with an accumulator; same-load sf1 A/B on the candidate chain:
-    12.14 s → 8.69 s). Candidate-pair producers and the streaming
-    winnow gate should prefer it."""
+    12.14 s → 8.69 s). Candidate-pair producers should prefer it."""
     import numpy as np
     from numpy.lib.stride_tricks import sliding_window_view
 
@@ -312,10 +310,7 @@ def winnow_fingerprints(
         return np.unique(sliding_window_view(hs, w).min(axis=1))
 
     if exploded:
-        carry = [id_col, *keep_cols]
-        schema = ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in carry
-        )
+        schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}"
 
         def _gen(batches):
             for pdf in batches:
@@ -329,7 +324,7 @@ def winnow_fingerprints(
                 idx = np.repeat(
                     [i for i, _ in reps], [n for _, n in reps]
                 ).astype(np.int64)
-                out = pdf.iloc[idx][carry].reset_index(drop=True)
+                out = pdf.iloc[idx][[id_col]].reset_index(drop=True)
                 out["fp"] = (
                     np.concatenate(vals)
                     if vals
@@ -338,9 +333,7 @@ def winnow_fingerprints(
                 yield out
 
         return spread(df).select(
-            F.col(id_col),
-            *[F.col(c) for c in keep_cols],
-            F.col(text_col).alias("__text"),
+            F.col(id_col), F.col(text_col).alias("__text")
         ).mapInPandas(_gen, f"{schema}, fp long")
 
     @pandas_udf("array<long>")
@@ -352,9 +345,7 @@ def winnow_fingerprints(
         return pd.Series(out)
 
     return spread(df).select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        _winnow(F.col(text_col)).alias(out_col),
+        F.col(id_col), _winnow(F.col(text_col)).alias(out_col)
     )
 
 

@@ -276,8 +276,7 @@ def sessionize(
     new per-user session. Emits one row per event with an ordinal
     ``session_id`` per user plus epoch-µs helper columns — callers
     aggregate to per-session stats (see queries.ts_sessionize for the
-    oracle-checked rollup and streaming.streaming_sessionize for the
-    session_window twin).
+    oracle-checked rollup).
 
     One window over (user, time[, tiebreakers]) — a single series
     exchange, the same shape the QA/QC diff rules share — so at 100 TB

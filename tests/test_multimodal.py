@@ -213,11 +213,9 @@ def test_perceptual_hash_invariant_across_containers(spark):
     assert got[3] is None and got[4] is None and got[5] is None
 
 
-def test_perceptual_hash_string_ids_and_keep_cols(spark):
-    """ADVICE r8: the output id dtype follows the input schema (string
-    media ids work), and ``keep_cols`` ride through the stateless hash
-    projection — the plumbing `streaming_phash_gate` uses instead of an
-    unwatermarked stream-stream self-join."""
+def test_perceptual_hash_string_ids(spark):
+    """The output id dtype follows the input schema: string media ids
+    work."""
     import numpy as np
 
     from stglib_spark.operators.multimodal import perceptual_hash
@@ -227,16 +225,16 @@ def test_perceptual_hash_string_ids_and_keep_cols(spark):
     gray = ((r * 13 + c * 7) % 256).astype(np.uint8)
     pgm = b"P5\n22 12\n255\n" + gray.tobytes()
     df = spark.createDataFrame(
-        [("img-a", 1000, bytearray(pgm)), ("img-b", 2000, None)],
-        "media_id string, ts long, content binary",
+        [("img-a", bytearray(pgm)), ("img-b", None)],
+        "media_id string, content binary",
     )
-    out = perceptual_hash(df, keep_cols=["ts"])
+    out = perceptual_hash(df)
     assert [f.dataType.simpleString() for f in out.schema.fields] == [
-        "string", "bigint", "bigint"
+        "string", "bigint"
     ]
-    rows = {r["media_id"]: (r["ts"], r["phash"]) for r in out.collect()}
-    assert rows["img-a"][0] == 1000 and rows["img-a"][1] is not None
-    assert rows["img-b"] == (2000, None)
+    rows = {r["media_id"]: r["phash"] for r in out.collect()}
+    assert rows["img-a"] is not None
+    assert rows["img-b"] is None
 
 
 def test_video_phash_near_pairs_rejects_max_hamming_past_pigeonhole(spark):

@@ -12,9 +12,10 @@ while it is built); plans are the pre-execution AQE plans
 
 Volatile text is rewritten: the `--sf-dir` path becomes `<sf-dir>`,
 expression ids (`#123`) become `#N`, `plan_id=123` becomes `plan_id=N`,
-RDD ids (`MapPartitionsRDD[141]`) become `RDD[N]`, and per-process
-scratch directories (`.../stglib_spark_scratch/pid42/clusterq_ab12cd34/`)
-become `<scratch>/clusterq_*/`. A before/after check of a change is then
+RDD ids (`MapPartitionsRDD[141]`) become `RDD[N]`, UUIDs (the id of a
+`CollectMetrics` observation) become `<uuid>`, and per-process scratch
+directories (`.../stglib_spark_scratch/pid42/clusterq_ab12cd34/`) become
+`<scratch>/clusterq_*/`. A before/after check of a change is then
 a plain `diff -r` of the two captures. One line per query prints the
 plan's Exchange, BroadcastExchange and Python-UDF node counts.
 
@@ -57,6 +58,11 @@ def normalize(plan: str, sf_dir: str) -> str:
     )
     plan = re.sub(r"#\d+", "#N", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(
+        r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b",
+        "<uuid>",
+        plan,
+    )
     return re.sub(r"\w*RDD\[\d+\]", "RDD[N]", plan)
 
 
