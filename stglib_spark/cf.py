@@ -94,11 +94,11 @@ def write_report(problems: list[str], out_path: str) -> None:
             f.write("OK: no CF lint violations\n")
 
 
-def check_netcdf(nc_file: str, conventions: str = "CF-1.11") -> list[str]:
+def check_netcdf(nc_file: str) -> list[str]:
     """Post-write file check. Uses the IOOS compliance-checker when
-    installed (reference behavior, utils.py:44-70); otherwise re-opens
-    with xarray and lints attribute completeness the same way
-    ``check_dataframe`` does."""
+    installed (reference behavior, utils.py:44-70); otherwise re-reads
+    the file with the classic-netCDF3 codec and lints attribute
+    completeness the same way ``check_dataframe`` does."""
     try:
         from compliance_checker.runner import CheckSuite, ComplianceChecker
     except ImportError:
@@ -109,7 +109,7 @@ def check_netcdf(nc_file: str, conventions: str = "CF-1.11") -> list[str]:
         output = f"{nc_file}.cfcheck.txt"
         ComplianceChecker.run_checker(
             str(nc_file),
-            [conventions.lower().replace("-", ":")],
+            ["cf:1.11"],
             1,
             "normal",
             output_filename=output,
@@ -118,47 +118,27 @@ def check_netcdf(nc_file: str, conventions: str = "CF-1.11") -> list[str]:
         with open(output, encoding="utf-8") as f:
             return [line.rstrip() for line in f if line.strip()]
 
-    problems: list[str] = []
-    try:
-        import xarray as xr
-    except ImportError:
-        # classic-netCDF3 fallback lint via the pure-Python codec; the
-        # check is documented non-fatal, so an unreadable container
-        # (netCDF-4/HDF5) reports rather than raises
-        from stglib_spark.functions.netcdf3 import read_nc3
+    from stglib_spark.functions.netcdf3 import read_nc3
 
-        try:
-            nc = read_nc3(str(nc_file))
-        except Exception as exc:
-            problems = [f"cannot check: {exc}"]
-            write_report(problems, f"{nc_file}.cfcheck.txt")
-            return problems
-        for key in REQUIRED_GLOBALS:
-            if not nc["attrs"].get(key):
-                problems.append(f"missing global attribute '{key}'")
-        dim_like = set(nc["dims"]) | {"time"}
-        for name, var in nc["variables"].items():
-            if name in dim_like or name in _COORD_COLS:
-                continue
-            if "units" not in var["attrs"]:
-                problems.append(f"variable '{name}': missing units attribute")
-            if (
-                "long_name" not in var["attrs"]
-                and "standard_name" not in var["attrs"]
-            ):
-                problems.append(
-                    f"variable '{name}': missing long_name/standard_name"
-                )
+    # the check is documented non-fatal, so an unreadable container
+    # (netCDF-4/HDF5) reports rather than raises
+    try:
+        nc = read_nc3(str(nc_file))
+    except Exception as exc:
+        problems = [f"cannot check: {exc}"]
         write_report(problems, f"{nc_file}.cfcheck.txt")
         return problems
-    with xr.open_dataset(nc_file) as ds:
-        for key in REQUIRED_GLOBALS:
-            if not ds.attrs.get(key):
-                problems.append(f"missing global attribute '{key}'")
-        for name, var in ds.data_vars.items():
-            if "units" not in var.attrs:
-                problems.append(f"variable '{name}': missing units attribute")
-            if "long_name" not in var.attrs and "standard_name" not in var.attrs:
-                problems.append(f"variable '{name}': missing long_name/standard_name")
+    problems: list[str] = []
+    for key in REQUIRED_GLOBALS:
+        if not nc["attrs"].get(key):
+            problems.append(f"missing global attribute '{key}'")
+    dim_like = set(nc["dims"]) | {"time"}
+    for name, var in nc["variables"].items():
+        if name in dim_like or name in _COORD_COLS:
+            continue
+        if "units" not in var["attrs"]:
+            problems.append(f"variable '{name}': missing units attribute")
+        if "long_name" not in var["attrs"] and "standard_name" not in var["attrs"]:
+            problems.append(f"variable '{name}': missing long_name/standard_name")
     write_report(problems, f"{nc_file}.cfcheck.txt")
     return problems

@@ -206,16 +206,12 @@ def interp_spectrum(
     return out
 
 
-def smoothspec(
-    S: np.ndarray,
-    kernel: tuple = ((1.0, 0.5, 0.25), (1.0, 0.5, 0.25)),
-) -> np.ndarray:
+def smoothspec(S: np.ndarray) -> np.ndarray:
     """5×5 separable cross smoothing of a (freq, dir) spectrum —
     private/smoothspec.py semantics: interior cells only (2-cell margin
-    untouched), NaNs treated as zero, kernel rows = (center, ±1, ±2)
-    weights along frequency then direction."""
-    f3, f2, f1 = kernel[0]
-    d3, d2, d1 = kernel[1]
+    untouched), NaNs treated as zero, (center, ±1, ±2) weights
+    (1, 0.5, 0.25) along frequency and along direction."""
+    f3, f2, f1 = d3, d2, d1 = 1.0, 0.5, 0.25
     tot = 2 * f1 + 2 * f2 + f3 + 2 * d1 + 2 * d2 + d3
     out = np.array(S, dtype=float, copy=True)
     sin = np.nan_to_num(out)

@@ -46,23 +46,15 @@ def average_burst(
     df: DataFrame,
     burst_cols: Sequence[str],
     value_cols: Sequence[str],
-    minf: float | None = None,
-    expected_n: int | None = None,
 ) -> DataFrame:
-    """Mean over the sample dim per burst (aqdutils.py:1717-1740), with the
-    optional min-valid-fraction gate of utils.py:2044-2086. Integer input
-    columns are re-cast to their original type after the mean, matching
+    """Mean over the sample dim per burst (aqdutils.py:1717-1740). Integer
+    input columns are re-cast to their original type after the mean, matching
     the reference's dtype restore (aqdutils.py:1731-1735)."""
     int_types = {"tinyint", "smallint", "int", "bigint"}
     dtypes = dict(df.dtypes)
     aggs = []
     for v in value_cols:
-        c = F.col(v)
-        agg = (
-            mean_minf(c, minf, expected_n)
-            if minf is not None and expected_n is not None
-            else F.avg(c)
-        )
+        agg = F.avg(F.col(v))
         if dtypes.get(v) in int_types:
             agg = agg.cast(dtypes[v])
         aggs.append(agg.alias(v))
@@ -75,7 +67,6 @@ def interval_average(
     interval_seconds: int,
     duration_seconds: int | None,
     value_cols: Sequence[str],
-    series_cols: Sequence[str] = (),
     minf: float | None = None,
     expected_n: int | None = None,
     origin_epoch_seconds: float | None = None,
@@ -165,7 +156,7 @@ def interval_average(
         else:
             aggs.append(F.avg(c).alias(v))
     return (
-        out.groupBy(*[F.col(c) for c in series_cols], F.col("__win"))
+        out.groupBy(F.col("__win"))
         .agg(*aggs)
         .withColumn(time_col, F.col("__win.start"))
         .drop("__win")

@@ -13,7 +13,7 @@ row-group skipping at scale).
 
 from __future__ import annotations
 
-from typing import Any, Sequence
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -29,7 +29,6 @@ def clip_ds(
     df: DataFrame,
     config: dict[str, Any],
     time_col: str = "time",
-    series_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Clip to the deployment window / good ensembles / good date ranges.
 
@@ -38,7 +37,7 @@ def clip_ds(
     """
     if config.get("good_ens") is not None:
         pairs = config["good_ens"]
-        w = Window.partitionBy(*[F.col(c) for c in series_cols]).orderBy(time_col)
+        w = Window.orderBy(time_col)
         idx = F.row_number().over(w) - 1  # 0-based like the reference's isel
         cond = F.lit(False)
         for start, end in pairs:
@@ -69,13 +68,11 @@ def clip_ds_prf(
     return df.filter(F.col(bindist_col).between(F.lit(lo), F.lit(hi)))
 
 
-def profile_clip_ds(
-    df: DataFrame, config: dict[str, Any], profile_col: str = "profile"
-) -> DataFrame:
+def profile_clip_ds(df: DataFrame, config: dict[str, Any]) -> DataFrame:
     """Keep whole profiles listed in ``good_profiles`` (rsk/cdf2nc.py:396-438)."""
     if config.get("good_profiles") is None:
         return df
-    return df.filter(F.col(profile_col).isin(list(config["good_profiles"])))
+    return df.filter(F.col("profile").isin(list(config["good_profiles"])))
 
 
 def drop_vars(df: DataFrame, config: dict[str, Any]) -> DataFrame:

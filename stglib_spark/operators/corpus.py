@@ -39,7 +39,6 @@ def stratified_sample(
     fractions: dict[str, float],
     id_col: str = "doc_id",
     seed: str = "mix1",
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Deterministic stratified sampling for training-mix construction:
     keep a row iff its sampling key falls under its stratum's fraction.
@@ -49,8 +48,8 @@ def stratified_sample(
 
     ``strata`` is any Column expression labelling the row's stratum (e.g.
     a quality bucket); ``fractions`` maps stratum label → keep fraction.
-    Unlisted strata get ``default_fraction``."""
-    frac = F.lit(float(default_fraction))
+    Unlisted strata are dropped."""
+    frac = F.lit(0.0)
     for label, f in fractions.items():
         frac = F.when(strata == F.lit(label), F.lit(float(f))).otherwise(frac)
     return df.withColumn("__stratum", strata).filter(
@@ -61,8 +60,6 @@ def stratified_sample(
 def contaminated_ids(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 13,
 ) -> DataFrame:
     """Benchmark decontamination, detection half: ids of corpus documents
@@ -77,17 +74,17 @@ def contaminated_ids(
     probe speed."""
     bench_grams = (
         benchmark.select(
-            F.explode(word_shingles(F.col(text_col), ngram)).alias("gram")
+            F.explode(word_shingles(F.col("text"), ngram)).alias("gram")
         )
         .distinct()
     )
     doc_grams = docs.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), ngram)).alias("gram"),
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), ngram)).alias("gram"),
     )
     return (
         doc_grams.join(F.broadcast(bench_grams), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit_grams"))
     )
 
@@ -95,21 +92,17 @@ def contaminated_ids(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 13,
 ) -> DataFrame:
     """Benchmark decontamination, removal half: the corpus minus every
     document flagged by ``contaminated_ids`` (left-anti join on id —
     equi-join, AQE-broadcastable since the contaminated set is small)."""
-    bad = contaminated_ids(docs, benchmark, text_col, id_col, ngram)
-    return docs.join(bad.select(id_col), id_col, "left_anti")
+    bad = contaminated_ids(docs, benchmark, ngram=ngram)
+    return docs.join(bad.select("doc_id"), "doc_id", "left_anti")
 
 
 def duplicate_ngram_fraction(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 3,
     min_docs: int = 2,
 ) -> DataFrame:
@@ -130,13 +123,13 @@ def duplicate_ngram_fraction(
     10^4 collisions, noise for a quality fraction (the oracle runs at
     test SFs where the collision probability is ~1e-10)."""
     grams = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), ngram)).alias("__gram"),
-    ).select(F.col(id_col), F.xxhash64("__gram").alias("__g"))
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), ngram)).alias("__gram"),
+    ).select(F.col("doc_id"), F.xxhash64("__gram").alias("__g"))
     freq = grams.groupBy("__g").agg(F.count(F.lit(1)).alias("__df"))
     return (
         grams.join(freq, "__g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum((F.col("__df") >= min_docs).cast("long")).alias(
@@ -144,7 +137,7 @@ def duplicate_ngram_fraction(
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "n_dup_grams",
             (F.col("n_dup_grams") / F.col("n_grams")).alias("dup_gram_frac"),
@@ -269,14 +262,9 @@ def remove_duplicate_spans(
     )
 
 
-def excise_char_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def excise_char_spans(df: DataFrame, spans: DataFrame) -> DataFrame:
     """Remove CHARACTER ranges from documents: ``spans`` carries
-    (id_col, start, end) rows — 1-based inclusive char offsets, e.g.
+    (doc_id, start, end) rows — 1-based inclusive char offsets, e.g.
     the (doc_b, start_b, end_b) side of `dedup.winnow_match_spans`,
     which localizes pairwise duplication to the higher-id document so
     the lower-id occurrence stays canonical (the char-level targeted
@@ -297,9 +285,9 @@ def excise_char_spans(
     (md5-provable)."""
     # 1) merge overlapping/adjacent [start, end] ranges per doc
     sp = spans.select(
-        F.col(id_col), F.col("start").cast("int"), F.col("end").cast("int")
+        F.col("doc_id"), F.col("start").cast("int"), F.col("end").cast("int")
     ).distinct()
-    ord_w = Window.partitionBy(id_col).orderBy("start", "end")
+    ord_w = Window.partitionBy("doc_id").orderBy("start", "end")
     prev_max = F.max("end").over(
         ord_w.rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -311,17 +299,17 @@ def excise_char_spans(
     merged = (
         sp.select("*", brk)
         .select("*", F.sum("__brk").over(ord_w).alias("__grp"))
-        .groupBy(id_col, "__grp")
+        .groupBy("doc_id", "__grp")
         .agg(F.min("start").alias("s"), F.max("end").alias("e"))
     )
     # 2) kept segment BEFORE each merged range: [prev_e + 1, s - 1]
-    seg_w = Window.partitionBy(id_col).orderBy("s")
+    seg_w = Window.partitionBy("doc_id").orderBy("s")
     seg_start = (F.coalesce(F.lag("e").over(seg_w), F.lit(0)) + 1).alias(
         "__ss"
     )
     per_doc = (
-        merged.select(F.col(id_col), "s", "e", seg_start)
-        .groupBy(id_col)
+        merged.select(F.col("doc_id"), "s", "e", seg_start)
+        .groupBy("doc_id")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("__ss"), F.col("s")))
@@ -330,27 +318,27 @@ def excise_char_spans(
             F.sum(F.col("e") - F.col("s") + F.lit(1)).alias("n_removed"),
         )
     )
-    joined = df.select(F.col(id_col), F.col(text_col)).join(
-        per_doc, id_col, "left"
+    joined = df.select(F.col("doc_id"), F.col("text")).join(
+        per_doc, "doc_id", "left"
     )
     head = F.concat_ws(
         "",
         F.transform(
             F.col("__segs"),
-            lambda x: F.col(text_col).substr(
+            lambda x: F.col("text").substr(
                 x["__ss"], x["s"] - x["__ss"]
             ),
         ),
     )
-    tail = F.col(text_col).substr(
-        F.col("__tail_from") + 1, F.length(text_col)
+    tail = F.col("text").substr(
+        F.col("__tail_from") + 1, F.length("text")
     )
     cleaned = F.when(
-        F.col("__segs").isNull(), F.col(text_col)
+        F.col("__segs").isNull(), F.col("text")
     ).otherwise(F.concat(head, tail))
     return joined.select(
-        F.col(id_col),
-        F.length(text_col).alias("n_chars"),
+        F.col("doc_id"),
+        F.length("text").alias("n_chars"),
         F.coalesce(F.col("n_removed"), F.lit(0))
         .cast("long")
         .alias("n_removed"),
@@ -358,9 +346,7 @@ def excise_char_spans(
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Within-document repetition metrics (Gopher-style repetitious-text
     gates), all as per-row array expressions — no shuffle, scan speed:
 
@@ -377,7 +363,7 @@ def repetition_stats(
     line/token counts real documents have; they are per-row expressions,
     so cost scales with the document, not the corpus.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.filter(F.split(t, r"\n"), lambda x: F.trim(x) != "")
     n_lines = F.size(lines)
     n_dist = F.size(F.array_distinct(lines))
@@ -407,7 +393,7 @@ def repetition_stats(
         )
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_lines.alias("n_lines"),
         F.round(
             F.when(n_lines > 0, (n_lines - n_dist) / n_lines).otherwise(0.0), 6
@@ -431,9 +417,7 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Training-data hygiene: replace emails / IPs / phone numbers / SSNs
     with ``[CATEGORY]`` placeholders and count replacements per category.
     One chained regexp_replace projection (codegen, scan speed). Each
@@ -442,7 +426,7 @@ def redact_pii(
     the digit run inside an address never double-counts as a phone, a
     dotted quad never counts as phone-ish digit groups. Order is fixed:
     EMAIL, IP, PHONE, SSN."""
-    out = F.col(text_col)
+    out = F.col("text")
     counts = {}
     for cat in ("EMAIL", "IP", "PHONE", "SSN"):
         pat = PII_PATTERNS[cat]
@@ -451,7 +435,7 @@ def redact_pii(
         )
         out = F.regexp_replace(out, pat, f"[{cat}]")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         out.alias("text_redacted"),
         *[v.alias(k) for k, v in counts.items()],
     )
@@ -463,7 +447,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     seq_len: int = 512,
     n_shards: int = 8,
-    seed: str = "pack1",
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Training-sequence packing (GPT-style concat-and-cut): map every
@@ -489,7 +472,7 @@ def pack_sequences(
     ``tokens_col`` when a prior zone already counted tokens per doc."""
     from stglib_spark.operators.text import token_count
 
-    shard = (hash60(F.col(id_col).cast("string"), seed=seed) % n_shards).cast(
+    shard = (hash60(F.col(id_col).cast("string"), seed="pack1") % n_shards).cast(
         "long"
     )
     toks = F.col(tokens_col) if tokens_col else token_count(F.col(text_col))
@@ -524,7 +507,6 @@ def pack_sequences(
 
 def token_census(
     df: DataFrame,
-    text_col: str = "text",
     lang_col: str | None = None,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -543,10 +525,10 @@ def token_census(
     from stglib_spark.operators.text import lang_id, token_count
 
     if lang_col is None:
-        df = lang_id(df, text_col)
+        df = lang_id(df)
         lang_col = "lang_pred"
     toks = (
-        F.col(tokens_col) if tokens_col else token_count(F.col(text_col))
+        F.col(tokens_col) if tokens_col else token_count(F.col("text"))
     )
     per = (
         df.select(F.col(lang_col).alias("lang_pred"), toks.alias("__t"))
@@ -565,16 +547,14 @@ def token_census(
     )
 
 
-def url_domain_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def url_domain_stats(df: DataFrame) -> DataFrame:
     """Corpus-level URL/domain census: extract http(s) URLs, reduce to the
     registrable host, count docs and mentions per domain — the source-mix
     report a corpus curator reads before sampling. explode → one hash
     aggregate with map-side combine; shuffle carries (domain, partials),
     bounded by the domain vocabulary, not the corpus."""
     urls = F.regexp_extract_all(
-        F.col(text_col), F.lit(r"https?://[^ \t\n\x0B\f\r/]+"), 0
+        F.col("text"), F.lit(r"https?://[^ \t\n\x0B\f\r/]+"), 0
     )
     # lower FIRST, then strip: a case-sensitive prefix strip would leave
     # "WWW." intact
@@ -582,11 +562,11 @@ def url_domain_stats(
         F.lower(F.col("__url")), r"^https?://(www\.)?", ""
     )
     return (
-        df.select(F.col(id_col), F.explode(urls).alias("__url"))
-        .select(F.col(id_col), host.alias("domain"))
+        df.select(F.col("doc_id"), F.explode(urls).alias("__url"))
+        .select(F.col("doc_id"), host.alias("domain"))
         .groupBy("domain")
         .agg(
-            F.count_distinct(F.col(id_col)).alias("n_docs"),
+            F.count_distinct(F.col("doc_id")).alias("n_docs"),
             F.count(F.lit(1)).alias("n_mentions"),
         )
     )
@@ -596,7 +576,6 @@ def budget_sample(
     df: DataFrame,
     token_budget: int,
     n_shards: int = 32,
-    text_col: str = "text",
     id_col: str = "doc_id",
     seed: str = "budget1",
     tokens_col: str | None = None,
@@ -621,7 +600,7 @@ def budget_sample(
     from stglib_spark.operators.text import token_count
 
     shard_budget = int(token_budget) // int(n_shards)
-    toks = F.col(tokens_col) if tokens_col else token_count(F.col(text_col))
+    toks = F.col(tokens_col) if tokens_col else token_count(F.col("text"))
     base = (
         df.select(
             F.col(id_col),
@@ -739,7 +718,6 @@ def build_packed_sequences(
     id_col: str = "doc_id",
     seq_len: int = 512,
     n_shards: int = 8,
-    seed: str = "pack1",
 ) -> DataFrame:
     """Materialize the actual training sequences from ``pack_sequences``'
     span table: every document's tokens are sliced across the packs its
@@ -757,7 +735,7 @@ def build_packed_sequences(
     from stglib_spark.operators.text import tokens
 
     spans = pack_sequences(
-        df, text_col, id_col, seq_len=seq_len, n_shards=n_shards, seed=seed
+        df, text_col, id_col, seq_len=seq_len, n_shards=n_shards
     )
     toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
     j = spans.join(toks, id_col)
@@ -806,16 +784,9 @@ def build_packed_sequences(
     )
 
 
-def pps_sample(
-    df: DataFrame,
-    rate: float,
-    size_col: str = "n_chars",
-    id_col: str = "doc_id",
-    seed: str = "pps1",
-    cap: float = 1.0,
-) -> DataFrame:
+def pps_sample(df: DataFrame, rate: float) -> DataFrame:
     """Probability-proportional-to-size Bernoulli sampling: keep a row
-    iff its deterministic unit key < min(cap, size × rate). Where
+    iff its deterministic unit key < min(1, size × rate). Where
     stratified_sample keeps a FIXED fraction of documents per stratum,
     PPS keeps a fixed fraction of *content* — a 10 kB document is 10×
     likelier to survive than a 1 kB one, so the expected kept-token
@@ -826,20 +797,14 @@ def pps_sample(
     membership test uses only IEEE-exact arithmetic (*, /, least) on the
     portable hash — never ln/pow, whose last ulp differs across libms —
     so a DuckDB oracle reproduces the sample bit-for-bit."""
-    key = sample_key(F.col(id_col), seed)
+    key = sample_key(F.col("doc_id"), "pps1")
     thr = F.least(
-        F.lit(float(cap)), F.col(size_col).cast("double") * F.lit(float(rate))
+        F.lit(1.0), F.col("n_chars").cast("double") * F.lit(float(rate))
     )
     return df.filter(key < thr)
 
 
-def shard_manifest(
-    df: DataFrame,
-    n_shards: int = 64,
-    size_col: str = "n_chars",
-    id_col: str = "doc_id",
-    seed: str = "shard1",
-) -> DataFrame:
+def shard_manifest(df: DataFrame, n_shards: int = 64) -> DataFrame:
     """Content-addressed output sharding + manifest: assign each document
     to ``hash(id) % n_shards`` and report per-shard document count, byte
     volume, and id range — the writer-side plan for "emit N balanced
@@ -854,16 +819,17 @@ def shard_manifest(
     ``repartition(n_shards, shard)``) co-locates the actual write with
     this manifest."""
     shard = (
-        hash60(F.col(id_col).cast("string"), seed=seed) % F.lit(int(n_shards))
+        hash60(F.col("doc_id").cast("string"), seed="shard1")
+        % F.lit(int(n_shards))
     ).alias("shard")
     return (
-        df.select(shard, F.col(size_col), F.col(id_col))
+        df.select(shard, F.col("n_chars"), F.col("doc_id"))
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col(size_col).cast("long")).alias("total_chars"),
-            F.min(id_col).alias("min_doc_id"),
-            F.max(id_col).alias("max_doc_id"),
+            F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
         )
     )
 
@@ -914,9 +880,7 @@ def gate_documents(
     )
 
 
-def heldout_label(
-    df: DataFrame, text_col: str = "text", out_col: str = "label_clean"
-) -> DataFrame:
+def heldout_label(df: DataFrame) -> DataFrame:
     """Independent evaluation label for the quality-score diagnostics
     (VERDICT r12 what's-wrong #5): a boolean derived from a feature set
     DISJOINT from everything ``quality_score`` reads (length band, mean
@@ -934,7 +898,7 @@ def heldout_label(
     shuffle), scan speed at 100 TB."""
     from stglib_spark.operators.text import tokens
 
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     toks = tokens(t)
     n_tok = F.size(toks)
@@ -949,7 +913,7 @@ def heldout_label(
         & (n_digit * 5 <= n_chars)
         & (n_upper * 10 <= n_chars * 3)
     )
-    return df.withColumn(out_col, clean)
+    return df.withColumn("label_clean", clean)
 
 
 def ranking_auc(
@@ -1062,13 +1026,7 @@ def threshold_sweep(
     )
 
 
-def mixture_allocate(
-    df: DataFrame,
-    total_budget: int,
-    source_col: str = "source",
-    text_col: str = "text",
-    tokens_col: str | None = None,
-) -> DataFrame:
+def mixture_allocate(df: DataFrame, total_budget: int) -> DataFrame:
     """Temperature-weighted domain mixture allocation: split a global
     training-token budget across sources with square-root temperature
     scaling (alpha = 0.5, the standard multilingual/multi-domain
@@ -1100,9 +1058,9 @@ def mixture_allocate(
     """
     from stglib_spark.operators.text import token_count
 
-    toks = F.col(tokens_col) if tokens_col else token_count(F.col(text_col))
+    toks = token_count(F.col("text")).cast("long")
     per_source = (
-        df.select(F.col(source_col).alias("source"), toks.cast("long").alias("__t"))
+        df.select(F.col("source").alias("source"), toks.alias("__t"))
         .groupBy("source")
         .agg(F.sum("__t").alias("n_tokens"))
         .withColumn(
@@ -1142,17 +1100,12 @@ def split_thresholds(val_frac: float, test_frac: float) -> tuple[int, int]:
     )
 
 
-def assign_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    seed: str = "split1",
-) -> DataFrame:
-    """Deterministic train/val/test assignment for a training corpus.
+def assign_split(df: DataFrame) -> DataFrame:
+    """Deterministic 80/10/10 train/val/test assignment for a training
+    corpus.
 
     The split is a pure projection on the portable 60-bit id hash
-    (hash60(seed || id) < floor(frac·2^60)) — scan-speed, shuffle-free,
+    (hash60("split1" || doc_id) < floor(frac·2^60)) — scan-speed, shuffle-free,
     reproducible across runs/engines, and leak-proof at the EXACT-id
     level by construction (an id maps to exactly one split). Near-dup
     leakage across splits is a separate audit: ``dedup.split_leakage``.
@@ -1160,8 +1113,8 @@ def assign_split(
     Scale shape: one codegen'd projection; composes with any downstream
     filter/write without repartitioning. The same expression passed to
     ``DataFrameWriter.partitionBy`` co-locates the split zones."""
-    thr_val, thr_eval = split_thresholds(val_frac, test_frac)
-    h = hash60(F.col(id_col).cast("string"), seed=seed)
+    thr_val, thr_eval = split_thresholds(0.1, 0.1)
+    h = hash60(F.col("doc_id").cast("string"), seed="split1")
     split = (
         F.when(h < F.lit(thr_val), F.lit("val"))
         .when(h < F.lit(thr_eval), F.lit("test"))
@@ -1170,28 +1123,20 @@ def assign_split(
     return df.withColumn("split", split)
 
 
-def split_audit(
-    df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    seed: str = "split1",
-    tokens_col: str | None = None,
-) -> DataFrame:
+def split_audit(df: DataFrame) -> DataFrame:
     """Stratification audit of the deterministic split: per (split,
     source) document and token counts — the table a curator checks to
     confirm every source is represented in val/test before training
     (hash-uniformity makes the split source-stratified in expectation;
-    this measures the realized allocation). One scan + one tiny hash
-    aggregate (shuffle width = 3 × sources)."""
+    this measures the realized allocation of ``assign_split``'s
+    80/10/10 split. One scan + one tiny hash aggregate (shuffle width =
+    3 × sources)."""
     from stglib_spark.operators.text import token_count
 
-    toks = F.col(tokens_col) if tokens_col else token_count(F.col(text_col))
+    toks = token_count(F.col("text"))
     return (
-        assign_split(df, id_col, val_frac, test_frac, seed)
-        .select("split", F.col(source_col).alias("source"), toks.alias("__t"))
+        assign_split(df)
+        .select("split", F.col("source").alias("source"), toks.alias("__t"))
         .groupBy("split", "source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1200,11 +1145,7 @@ def split_audit(
     )
 
 
-def diversity_stats(
-    df: DataFrame,
-    group_col: str = "source",
-    label_col: str = "lang",
-) -> DataFrame:
+def diversity_stats(df: DataFrame) -> DataFrame:
     """Per-group label-diversity data card: document count, distinct
     label count, and the Simpson concentration index Σ(n_l/N)² — the
     probability two random documents from the group share a label (1/
@@ -1222,7 +1163,7 @@ def diversity_stats(
     label vocabulary, never the corpus."""
     per = (
         df.select(
-            F.col(group_col).alias("grp"), F.col(label_col).alias("lbl")
+            F.col("source").alias("grp"), F.col("lang").alias("lbl")
         )
         .groupBy("grp", "lbl")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1232,14 +1173,14 @@ def diversity_stats(
     den = (F.col("n_docs").cast(wide) * F.col("n_docs").cast(wide))
     simpson = ((num - F.pmod(num, den)) / den).cast("long")
     return (
-        per.groupBy(F.col("grp").alias(group_col))
+        per.groupBy(F.col("grp").alias("source"))
         .agg(
             F.sum("n").alias("n_docs"),
             F.count(F.lit(1)).alias("n_labels"),
             F.sum(F.col("n") * F.col("n")).alias("__sq"),
         )
         .select(
-            group_col,
+            "source",
             "n_docs",
             "n_labels",
             simpson.alias("simpson_ppm"),
@@ -1247,11 +1188,7 @@ def diversity_stats(
     )
 
 
-def token_freq_spectrum(
-    df: DataFrame,
-    text_col: str = "text",
-    max_f: int = 10,
-) -> DataFrame:
+def token_freq_spectrum(df: DataFrame, max_f: int = 10) -> DataFrame:
     """Token frequency-of-frequencies spectrum (the Good–Turing
     front-end): one row per occurrence count f ∈ 1..max_f (plus one
     overflow bucket at max_f+1) with ``n_types`` (how many distinct
@@ -1271,7 +1208,7 @@ def token_freq_spectrum(
     from stglib_spark.operators.text import tokens
 
     toks = df.select(
-        F.explode(tokens(normalize_text(F.col(text_col)))).alias("__tok")
+        F.explode(tokens(normalize_text(F.col("text")))).alias("__tok")
     )
     counts = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__f"))
     spec = (

@@ -50,17 +50,18 @@ def hash60(col: Column, seed: str | None = None) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact duplicate removal on the normalized-text digest: keep the
     minimum id per digest. One shuffle on md5 (md5 so a SQL oracle
     reproduces it bit-for-bit; at scale xxhash64 halves the key width)."""
-    digest = F.md5(normalize_text(F.col(text_col)))
+    digest = F.md5(normalize_text(F.col("text")))
     return (
         df.withColumn("__digest", digest)
         .groupBy("__digest")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
+        .agg(
+            F.min("doc_id").alias("doc_id"),
+            F.count(F.lit(1)).alias("dup_count"),
+        )
         .drop("__digest")
     )
 
@@ -567,71 +568,42 @@ def lsh_pairs_from_signatures(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    candidate_pairs: DataFrame | None = None,
-    text_col: str = "text",
+    candidate_pairs: DataFrame,
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.0,
-    allow_all_pairs: bool = False,
     shingles_df: DataFrame | None = None,
-    shingle_col: str = "shingles",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs (verification
     stage after LSH): |A∩B| / (|A|+|B|−|A∩B|). The union size is derived
     from the (distinct) array sizes rather than materializing
     ``array_union`` per pair — one hash-set build per pair instead of two,
-    and no per-pair array allocation (measured ~8× on the all-pairs path).
+    and no per-pair array allocation.
 
-    ``candidate_pairs`` is required at scale: the all-pairs fallback is a
-    cross join — quadratic in corpus size — so it must be opted into
-    explicitly with ``allow_all_pairs=True`` (tiny-input/test path only).
-    The production chain is ``minhash_lsh_pairs`` → this verifier.
+    ``candidate_pairs`` is required: there is no all-pairs fallback (a
+    cross join, quadratic in corpus size). The production chain is
+    ``minhash_lsh_pairs`` → this verifier.
 
-    ``shingles_df`` (columns ``id_col``, ``shingle_col``: array<string>)
+    ``shingles_df`` (columns ``id_col``, ``shingles``: array<string>)
     skips re-shingling entirely — ``pipeline.run_dedup`` materializes the
     shingle zone once and feeds it to both the LSH chain and this
     verifier, so the corpus text is walked a single time."""
     if shingles_df is not None:
         sh = shingles_df.select(
-            F.col(id_col), F.col(shingle_col).alias("__sh")
+            F.col(id_col), F.col("shingles").alias("__sh")
         ).withColumn("__n", F.size("__sh"))
     else:
         sh = spread(df).select(
             F.col(id_col),
-            word_shingles(F.col(text_col), shingle_n).alias("__sh"),
+            word_shingles(F.col("text"), shingle_n).alias("__sh"),
         ).withColumn("__n", F.size("__sh"))
-    if candidate_pairs is None:
-        if not allow_all_pairs:
-            raise ValueError(
-                "ngram_jaccard_pairs without candidate_pairs is an all-pairs "
-                "cross join (quadratic). Feed minhash_lsh_pairs(...) output, "
-                "or pass allow_all_pairs=True for tiny inputs."
-            )
-        a = sh.select(
-            F.col(id_col).alias("doc_a"),
-            F.col("__sh").alias("__sha"),
-            F.col("__n").alias("__na"),
-        )
-        b = sh.select(
-            F.col(id_col).alias("doc_b"),
-            F.col("__sh").alias("__shb"),
-            F.col("__n").alias("__nb"),
-        )
-        joined = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
-    else:
-        joined = (
-            candidate_pairs.join(
-                sh.withColumnsRenamed(
-                    {id_col: "doc_a", "__sh": "__sha", "__n": "__na"}
-                ),
-                "doc_a",
-            ).join(
-                sh.withColumnsRenamed(
-                    {id_col: "doc_b", "__sh": "__shb", "__n": "__nb"}
-                ),
-                "doc_b",
-            )
-        )
+    joined = candidate_pairs.join(
+        sh.withColumnsRenamed({id_col: "doc_a", "__sh": "__sha", "__n": "__na"}),
+        "doc_a",
+    ).join(
+        sh.withColumnsRenamed({id_col: "doc_b", "__sh": "__shb", "__n": "__nb"}),
+        "doc_b",
+    )
     inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
     union = F.col("__na") + F.col("__nb") - inter
     jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
@@ -646,12 +618,8 @@ def ngram_jaccard_pairs(
 def containment_pairs(
     df: DataFrame,
     candidate_pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 1,
     threshold: float = 0.8,
-    shingles_df: DataFrame | None = None,
-    shingle_col: str = "shingles",
 ) -> DataFrame:
     """Asymmetric CONTAINMENT verification for candidate pairs —
     |A∩B|/|A| and |A∩B|/|B| — the near-SUPERSET detector symmetric
@@ -672,26 +640,20 @@ def containment_pairs(
 
     Scale shape: identical to `ngram_jaccard_pairs` — shingle sets
     join onto the (bounded) candidate pairs only, one hash-set
-    intersection per pair, never a cross join; pass ``shingles_df``
-    to reuse a materialized shingle zone."""
-    if shingles_df is not None:
-        sh = shingles_df.select(
-            F.col(id_col), F.col(shingle_col).alias("__sh")
-        ).withColumn("__n", F.size("__sh"))
-    else:
-        sh = spread(df).select(
-            F.col(id_col),
-            word_shingles(F.col(text_col), shingle_n).alias("__sh"),
-        ).withColumn("__n", F.size("__sh"))
+    intersection per pair, never a cross join."""
+    sh = spread(df).select(
+        F.col("doc_id"),
+        word_shingles(F.col("text"), shingle_n).alias("__sh"),
+    ).withColumn("__n", F.size("__sh"))
     joined = (
         candidate_pairs.join(
             sh.withColumnsRenamed(
-                {id_col: "doc_a", "__sh": "__sha", "__n": "__na"}
+                {"doc_id": "doc_a", "__sh": "__sha", "__n": "__na"}
             ),
             "doc_a",
         ).join(
             sh.withColumnsRenamed(
-                {id_col: "doc_b", "__sh": "__shb", "__n": "__nb"}
+                {"doc_id": "doc_b", "__sh": "__shb", "__n": "__nb"}
             ),
             "doc_b",
         )
@@ -723,8 +685,6 @@ def containment_pairs(
 
 def simhash(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 64,
     portable: bool = False,
 ) -> DataFrame:
@@ -736,10 +696,12 @@ def simhash(
     rebuilds the identical fingerprint."""
     if portable and bits > 60:
         raise ValueError("portable simhash carries at most 60 hash bits")
-    toks = F.split(normalize_text(F.col(text_col)), " ")
+    toks = F.split(normalize_text(F.col("text")), " ")
     tok_hash = hash60(F.col("__t")) if portable else F.xxhash64(F.col("__t"))
-    exploded = spread(df).select(F.col(id_col), F.explode(toks).alias("__t")).withColumn(
-        "__h", tok_hash
+    exploded = (
+        spread(df)
+        .select(F.col("doc_id"), F.explode(toks).alias("__t"))
+        .withColumn("__h", tok_hash)
     )
     votes = [
         F.sum(
@@ -749,7 +711,7 @@ def simhash(
         ).alias(f"v_{i}")
         for i in range(bits)
     ]
-    agg = exploded.groupBy(id_col).agg(*votes)
+    agg = exploded.groupBy("doc_id").agg(*votes)
     fp = None
     for i in range(bits):
         bit = F.when(F.col(f"v_{i}") > 0, F.lit(1).cast("long")).otherwise(
@@ -757,12 +719,11 @@ def simhash(
         )
         term = F.shiftleft(bit, i)
         fp = term if fp is None else fp.bitwiseXOR(term)
-    return agg.select(F.col(id_col), fp.alias("simhash"))
+    return agg.select(F.col("doc_id"), fp.alias("simhash"))
 
 
 def winnow_candidate_pairs(
     fps_df: DataFrame,
-    id_col: str = "doc_id",
     min_shared: int = 2,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     observation=None,
@@ -787,21 +748,21 @@ def winnow_candidate_pairs(
     clear ``min_shared`` on its own. ``observation`` counts the dropped
     members and buckets; ``max_bucket_size=None`` pairs every
     bucket."""
-    stacked = fps_df.select(F.col(id_col), F.col("fp"))
+    stacked = fps_df.select(F.col("doc_id"), F.col("fp"))
     left = right = stacked
     if max_bucket_size is not None:
         right, annotated = _annotate_bucket_sizes(
-            stacked, ["fp"], [id_col], max_bucket_size, observation
+            stacked, ["fp"], ["doc_id"], max_bucket_size, observation
         )
         left = annotated.filter(F.col("__bsz").isNull()).drop("__mn")
         right = right.hint("shuffle_hash")
     pairs = left.alias("l").join(
         right.alias("r"),
         (F.col("l.fp") == F.col("r.fp"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        & (F.col("l.doc_id") < F.col("r.doc_id")),
     ).select(
-        F.col(f"l.{id_col}").alias("doc_a"),
-        F.col(f"r.{id_col}").alias("doc_b"),
+        F.col("l.doc_id").alias("doc_a"),
+        F.col("r.doc_id").alias("doc_b"),
     )
     # fingerprint sets are distinct per doc, so count(*) per pair ==
     # the shared-fingerprint count
@@ -814,13 +775,11 @@ def winnow_candidate_pairs(
 
 def winnow_match_spans(
     pos_df: DataFrame,
-    id_col: str = "doc_id",
     k: int = 15,
     w: int = 8,
     min_shared: int = 2,
     max_doc_freq: int = 64,
     max_positions: int = 16,
-    max_gap: int | None = None,
 ) -> DataFrame:
     """Localize winnowing candidate pairs to shared character SPANS —
     the match-reporting half of MOSS (Schleimer et al. 2003 §4) that
@@ -837,9 +796,9 @@ def winnow_match_spans(
     of a shared run select identical (hash, offset-relative) positions
     in both documents, so real duplication lands on one diagonal with
     selected positions ≤ w apart. Runs break when consecutive matched
-    positions on a diagonal are > ``max_gap`` apart (default w+k−1 —
-    wide enough that winnowing's selection density can never split a
-    genuine run, tight enough that separate occurrences stay separate).
+    positions on a diagonal are more than w+k−1 apart: wide
+    enough that winnowing's selection density can never split a
+    genuine run, tight enough that separate occurrences stay separate.
     Spans with < ``min_shared`` matched fingerprints are dropped — the
     same noise rule as the candidate stage. These char spans are the
     pairwise localization that `corpus.remove_duplicate_spans` (global,
@@ -870,8 +829,6 @@ def winnow_match_spans(
     driver collect. Two wide shuffles total."""
     from pyspark.sql import Window
 
-    if max_gap is None:
-        max_gap = w + k - 1
     # explicit notnull pre-filter BELOW the pinned exchange (the
     # _annotate_bucket_sizes recipe): the pair join infers
     # isnotnull(fp, doc) on its sides while the census branch infers
@@ -885,7 +842,7 @@ def winnow_match_spans(
     # census-invisible yet still enter the pair join).
     pinned = pos_df.filter(
         F.col("fp").isNotNull()
-        & F.col(id_col).isNotNull()
+        & F.col("doc_id").isNotNull()
         & F.col("pos").isNotNull()
     ).repartition(F.col("fp"))
     # MOSS common-match exclusion: document-frequency stop list. No
@@ -911,7 +868,7 @@ def winnow_match_spans(
     # satisfied by hashpartitioning(fp), so the census executes inside
     # the reused pinned exchange's stage.
     fp_ok = (
-        pinned.groupBy("fp", id_col)
+        pinned.groupBy("fp", "doc_id")
         .agg(F.min("pos").alias("__p0"))
         .groupBy("fp")
         .agg(F.count("__p0").alias("__nd"))
@@ -921,7 +878,7 @@ def winnow_match_spans(
     capped = pinned.join(fp_ok, "fp")
     if max_positions is not None:
         # per-(doc, fp) position cap — self-periodic text guard
-        rk = Window.partitionBy(id_col, "fp").orderBy("pos")
+        rk = Window.partitionBy("doc_id", "fp").orderBy("pos")
         capped = (
             capped.withColumn("__rk", F.row_number().over(rk))
             .filter(F.col("__rk") <= max_positions)
@@ -931,10 +888,10 @@ def winnow_match_spans(
     m = a.join(
         b,
         (F.col("a.fp") == F.col("b.fp"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
     ).select(
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
         F.col("a.pos").alias("pos_a"),
         (F.col("a.pos") - F.col("b.pos")).alias("diag"),
     )
@@ -943,7 +900,7 @@ def winnow_match_spans(
     # diag pins pos_b — so the ordering is total and deterministic)
     isl = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
     brk = (
-        F.when(F.col("pos_a") - F.lag("pos_a").over(isl) > max_gap, 1)
+        F.when(F.col("pos_a") - F.lag("pos_a").over(isl) > w + k - 1, 1)
         .otherwise(0)
         .alias("__brk")
     )
@@ -1293,31 +1250,26 @@ def _duplicate_clusters_distributed(pairs: DataFrame) -> DataFrame:
     )
 
 
-def prioritized_exact_dedup(
-    df: DataFrame,
-    priority: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prioritized_exact_dedup(df: DataFrame, priority: Column) -> DataFrame:
     """Exact content dedup keeping the BEST copy per duplicate set rather
     than the smallest id: among rows sharing a normalized-text digest,
     keep the one minimizing (priority, id) — e.g. priority = source rank,
     so a curated-source copy beats a crawl copy of the same text. One
     shuffle on the digest; min_by carries (priority, id) pairs, never
     text, through the aggregate."""
-    digest = F.md5(normalize_text(F.col(text_col)))
+    digest = F.md5(normalize_text(F.col("text")))
     keyed = df.select(
         digest.alias("__digest"),
-        F.col(id_col),
+        F.col("doc_id"),
         priority.cast("long").alias("__prio"),
     )
     best = F.min_by(
-        F.col(id_col), F.struct(F.col("__prio"), F.col(id_col))
+        F.col("doc_id"), F.struct(F.col("__prio"), F.col("doc_id"))
     )
     return (
         keyed.groupBy("__digest")
         .agg(
-            best.alias(id_col),
+            best.alias("doc_id"),
             F.min("__prio").alias("kept_priority"),
             F.count(F.lit(1)).alias("dup_count"),
         )
@@ -1325,13 +1277,7 @@ def prioritized_exact_dedup(
     )
 
 
-def incremental_dedup(
-    batch: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    index_digest_col: str = "digest",
-) -> DataFrame:
+def incremental_dedup(batch: DataFrame, index: DataFrame) -> DataFrame:
     """Incremental ingest dedup: admit only batch documents whose
     normalized-text digest is NEW — absent from the already-ingested
     corpus ``index`` AND unique within the batch (minimum id wins, with
@@ -1349,28 +1295,25 @@ def incremental_dedup(
     shuffles digests only. At full scale, bucket BOTH sides by digest
     so repeated ingests co-locate without reshuffling the ever-growing
     index."""
-    digest = F.md5(normalize_text(F.col(text_col)))
+    digest = F.md5(normalize_text(F.col("text")))
     kept = (
         batch.withColumn("__digest", digest)
         .groupBy("__digest")
         .agg(
-            F.min(id_col).alias(id_col),
+            F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).alias("batch_dups"),
         )
     )
-    idx = index.select(F.col(index_digest_col).alias("__digest")).distinct()
+    idx = index.select(F.col("digest").alias("__digest")).distinct()
     return kept.join(idx, "__digest", "left_anti").select(
-        F.col(id_col), F.col("__digest").alias("digest"), "batch_dups"
+        F.col("doc_id"), F.col("__digest").alias("digest"), "batch_dups"
     )
 
 
 def edit_similarity_pairs(
     df: DataFrame,
     candidate_pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     prefix_chars: int = 256,
-    threshold: float = 0.0,
 ) -> DataFrame:
     """Character-level verification for candidate pairs: normalized
     Levenshtein similarity 1 − dist/max(len) over the first
@@ -1392,12 +1335,12 @@ def edit_similarity_pairs(
     CODEPOINTS, so the oracle-checked query strips non-ASCII before
     comparing; this operator itself is codepoint-correct on any input.
     """
-    norm = F.substring(normalize_text(F.col(text_col)), 1, int(prefix_chars))
-    sides = df.select(F.col(id_col), norm.alias("__t"))
+    norm = F.substring(normalize_text(F.col("text")), 1, int(prefix_chars))
+    sides = df.select(F.col("doc_id"), norm.alias("__t"))
     joined = candidate_pairs.join(
-        sides.withColumnsRenamed({id_col: "doc_a", "__t": "__ta"}), "doc_a"
+        sides.withColumnsRenamed({"doc_id": "doc_a", "__t": "__ta"}), "doc_a"
     ).join(
-        sides.withColumnsRenamed({id_col: "doc_b", "__t": "__tb"}), "doc_b"
+        sides.withColumnsRenamed({"doc_id": "doc_b", "__t": "__tb"}), "doc_b"
     )
     la, lb = F.length("__ta"), F.length("__tb")
     longest = F.greatest(la, lb)
@@ -1405,21 +1348,17 @@ def edit_similarity_pairs(
     sim = F.when(longest > 0, 1.0 - dist.cast("double") / longest).otherwise(
         F.lit(1.0)
     )
-    out = joined.select(
+    return joined.select(
         "doc_a",
         "doc_b",
         dist.alias("edit_distance"),
         F.round(sim, 6).alias("edit_sim"),
     )
-    if threshold > 0:
-        out = out.filter(F.col("edit_sim") >= F.lit(threshold))
-    return out
 
 
 def lsh_pairs_between(
     batch_sigs: DataFrame,
     index_sigs: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
     portable: bool = False,
@@ -1435,8 +1374,8 @@ def lsh_pairs_between(
     by (band, bh) so each arriving batch co-locates against it without
     reshuffling the ever-growing index (the near-dup analogue of
     incremental_dedup's digest index)."""
-    left = _lsh_band_rows(batch_sigs, id_col, num_hashes, bands, portable)
-    right = _lsh_band_rows(index_sigs, id_col, num_hashes, bands, portable)
+    left = _lsh_band_rows(batch_sigs, "doc_id", num_hashes, bands, portable)
+    right = _lsh_band_rows(index_sigs, "doc_id", num_hashes, bands, portable)
     return (
         left.alias("l").join(
             right.alias("r"),
@@ -1444,8 +1383,8 @@ def lsh_pairs_between(
             & (F.col("l.bh") == F.col("r.bh")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("doc_id"),
-            F.col(f"r.{id_col}").alias("match_id"),
+            F.col("l.doc_id").alias("doc_id"),
+            F.col("r.doc_id").alias("match_id"),
         )
         .distinct()
     )
@@ -1454,8 +1393,6 @@ def lsh_pairs_between(
 def incremental_near_dedup(
     batch: DataFrame,
     index_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
@@ -1484,19 +1421,23 @@ def incremental_near_dedup(
     an untagged union would fan the verify join out across the
     colliding id's rows and emit mixed-text jaccard values (ADVICE
     r7)."""
-    bs = minhash_signatures(batch, text_col, id_col, num_hashes, shingle_n, portable)
-    isig = minhash_signatures(
-        index_docs, text_col, id_col, num_hashes, shingle_n, portable
+    bs = minhash_signatures(
+        batch, num_hashes=num_hashes, shingle_n=shingle_n, portable=portable
     )
-    cands = lsh_pairs_between(bs, isig, id_col, num_hashes, bands, portable)
-    id_type = batch.schema[id_col].dataType
+    isig = minhash_signatures(
+        index_docs, num_hashes=num_hashes, shingle_n=shingle_n, portable=portable
+    )
+    cands = lsh_pairs_between(
+        bs, isig, num_hashes=num_hashes, bands=bands, portable=portable
+    )
+    id_type = batch.schema["doc_id"].dataType
     both = batch.select(
-        F.concat(F.lit("b:"), F.col(id_col).cast("string")).alias(id_col),
-        text_col,
+        F.concat(F.lit("b:"), F.col("doc_id").cast("string")).alias("doc_id"),
+        "text",
     ).unionByName(
         index_docs.select(
-            F.concat(F.lit("i:"), F.col(id_col).cast("string")).alias(id_col),
-            text_col,
+            F.concat(F.lit("i:"), F.col("doc_id").cast("string")).alias("doc_id"),
+            "text",
         )
     )
     verified = ngram_jaccard_pairs(
@@ -1509,8 +1450,6 @@ def incremental_near_dedup(
                 "doc_b"
             ),
         ),
-        text_col=text_col,
-        id_col=id_col,
         # verify at token level (the dedup_token_jaccard convention) —
         # candidate RECALL comes from the shingled signatures, exact
         # PRECISION from the token-set measure
@@ -1518,7 +1457,7 @@ def incremental_near_dedup(
         threshold=threshold,
     )
     return verified.select(
-        F.expr("substring(doc_b, 3)").cast(id_type).alias(id_col),
+        F.expr("substring(doc_b, 3)").cast(id_type).alias("doc_id"),
         F.expr("substring(doc_a, 3)").cast(id_type).alias("match_id"),
         "jaccard",
     )
@@ -1526,11 +1465,6 @@ def incremental_near_dedup(
 
 def split_leakage(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    seed: str = "split1",
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
@@ -1543,6 +1477,7 @@ def split_leakage(
     train silently inflates every benchmark score. Reports one row per
     leaked (eval doc, train doc) pair with its verified token Jaccard
     and the eval doc's split label; a clean corpus returns zero rows.
+    The split is ``corpus.assign_split``'s 80/10/10 under seed "split1".
 
     Plan shape is ``incremental_near_dedup`` with the split predicate as
     the corpus partition: signatures once over the whole corpus, a
@@ -1552,24 +1487,22 @@ def split_leakage(
     (band, bh); each eval refresh co-locates against it."""
     from stglib_spark.operators.corpus import assign_split, split_thresholds
 
-    labelled = assign_split(df, id_col, val_frac, test_frac, seed)
+    labelled = assign_split(df)
     eval_docs = labelled.filter(F.col("split") != "train")
     train_docs = labelled.filter(F.col("split") == "train")
     leaks = incremental_near_dedup(
         eval_docs,
         train_docs,
-        text_col=text_col,
-        id_col=id_col,
         num_hashes=num_hashes,
         bands=bands,
         shingle_n=shingle_n,
         portable=portable,
         threshold=threshold,
     )
-    thr_val, _ = split_thresholds(val_frac, test_frac)
-    h = hash60(F.col(id_col).cast("string"), seed=seed)
+    thr_val, _ = split_thresholds(0.1, 0.1)
+    h = hash60(F.col("doc_id").cast("string"), seed="split1")
     return leaks.select(
-        id_col,
+        "doc_id",
         F.when(h < F.lit(thr_val), F.lit("val"))
         .otherwise(F.lit("test"))
         .alias("split"),

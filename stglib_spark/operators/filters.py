@@ -108,7 +108,6 @@ def med_filter(
     var: str,
     kernel_size: int,
     group_cols: Sequence[str] = (),
-    time_col: str = "time",
     keep_unfiltered: bool = True,
 ) -> DataFrame:
     """N-point median smoother with the ``<var>_unfiltered`` copy
@@ -123,7 +122,7 @@ def med_filter(
     out_schema = StructType(fields)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
+        pdf = pdf.sort_values("time")
         vals = pdf[var].to_numpy(dtype=float)
         if keep_unfiltered:
             pdf[f"{var}_unfiltered"] = vals
@@ -138,8 +137,6 @@ def filtered_water_level(
     var: str = "water_level",
     sample_interval_seconds: float = 60.0,
     cutoff_seconds: float = 360.0,
-    group_cols: Sequence[str] = (),
-    time_col: str = "time",
     fill_tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """create_filtered_water_level_var (utils.py:1715-1756): 4th-order
@@ -157,12 +154,9 @@ def filtered_water_level(
     cut = 1.0 / float(cutoff_seconds)
     src = F.col(var)
     if fill_tolerance_seconds is not None and fill_tolerance_seconds > 0:
-        order = [F.col(time_col)]
-        w = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy(*order)
-        wdesc = Window.partitionBy(
-            *[F.col(c) for c in group_cols]
-        ).orderBy(*[F.col(time_col).desc()])
-        ts = F.col(time_col).cast("double")
+        w = Window.orderBy(F.col("time"))
+        wdesc = Window.orderBy(F.col("time").desc())
+        ts = F.col("time").cast("double")
         prev_v = F.last(F.when(src.isNotNull(), src), True).over(
             w.rowsBetween(Window.unboundedPreceding, -1)
         )
@@ -193,8 +187,6 @@ def filtered_water_level(
         cutfreq=cut,
         ftype="lowpass",
         order=4,
-        group_cols=group_cols,
-        time_col=time_col,
     )
     if fill_tolerance_seconds is not None and fill_tolerance_seconds > 0:
         # reference re-nulls where the raw series was null (glx.py:352)
@@ -210,7 +202,6 @@ def apply_config_filters(
     config: dict,
     variables: Sequence[str],
     group_cols: Sequence[str] = (),
-    time_col: str = "time",
 ) -> tuple[DataFrame, list[str]]:
     """Config-driven filter dispatch (filter.py:98-229; called at the top
     of the reference's QA/QC loop, core/qaqc.py:19-20): per variable,
@@ -251,13 +242,13 @@ def apply_config_filters(
             df = butter_filter(
                 df, var, sr, cutfreq, ftype,
                 order=int(config.get("filter_order", 4)),
-                group_cols=group_cols, time_col=time_col, keep_unfiltered=True,
+                group_cols=group_cols, keep_unfiltered=True,
             )
             notes.append(f"Applied {ftype} filter to {var} (cutoff {period} s).")
         if config.get(f"{var}_med_filt") is not None:
             k = int(config[f"{var}_med_filt"])
             df = med_filter(
-                df, var, k, group_cols=group_cols, time_col=time_col,
+                df, var, k, group_cols=group_cols,
                 keep_unfiltered=f"{var}_unfiltered" not in df.columns,
             )
             notes.append(f"Applied {k}-point median filter to {var}.")

@@ -47,7 +47,6 @@ def asof_join(
     value_cols: Sequence[str] | None = None,
     direction: str = "backward",
     tolerance_seconds: float | None = None,
-    suffix: str = "",
 ) -> DataFrame:
     """As-of join: for each left row, attach the right row's values whose
     time is nearest at-or-before (backward), at-or-after (forward), or
@@ -69,11 +68,9 @@ def asof_join(
     if tolerance_seconds is not None:
         return _asof_join_bucketed(
             left, right, on, by, value_cols, direction,
-            float(tolerance_seconds), suffix,
+            float(tolerance_seconds),
         )
-    return _asof_join_unbounded(
-        left, right, on, by, value_cols, direction, suffix
-    )
+    return _asof_join_unbounded(left, right, on, by, value_cols, direction)
 
 
 def _rstruct(on: str, value_cols: list[str]) -> Column:
@@ -137,7 +134,6 @@ def _asof_join_unbounded(
     by: list[str],
     value_cols: list[str],
     direction: str,
-    suffix: str,
 ) -> DataFrame:
     """Unbounded as-of as bucketed join + bucket-level carry.
 
@@ -161,7 +157,7 @@ def _asof_join_unbounded(
     result_left = [F.col(c) for c in left.columns]
     if stats["n"] == 0:
         nulls = [
-            F.lit(None).cast(right.schema[c].dataType).alias(f"{c}{suffix}")
+            F.lit(None).cast(right.schema[c].dataType).alias(c)
             for c in value_cols
         ]
         return left.select(*result_left, *nulls)
@@ -253,7 +249,7 @@ def _asof_join_unbounded(
 
     return out.select(
         *result_left,
-        *[picked[f"__rv_{c}"].alias(f"{c}{suffix}") for c in value_cols],
+        *[picked[f"__rv_{c}"].alias(c) for c in value_cols],
     )
 
 
@@ -265,7 +261,6 @@ def _asof_join_bucketed(
     value_cols: list[str],
     direction: str,
     tol: float,
-    suffix: str,
 ) -> DataFrame:
     """Tolerance-bounded as-of join as a time-bucketed equi-join.
 
@@ -319,7 +314,7 @@ def _asof_join_bucketed(
     picked = _pick(direction, back, fwd, t)
 
     result_cols = [F.col(c) for c in left.columns] + [
-        picked[f"__rv_{c}"].alias(f"{c}{suffix}") for c in value_cols
+        picked[f"__rv_{c}"].alias(c) for c in value_cols
     ]
     return out.select(*result_cols)
 
@@ -329,10 +324,6 @@ def atmos_correct(
     met: DataFrame,
     config: dict | None = None,
     pressure_col: str = "P_1",
-    atmpres_col: str = "atmpres",
-    time_col: str = "time",
-    tolerance_seconds: float | None = 600.0,
-    out_col: str = "P_1ac",
 ) -> DataFrame:
     """``P_1ac = P_1 − atmpres(t) − offset`` with the met series aligned
     by nearest-time within tolerance (utils.py:1386-1414; the legacy
@@ -341,11 +332,10 @@ def atmos_correct(
     offset = float((config or {}).get("atmpres_offset", 0.0))
     joined = asof_join(
         df,
-        met.select(time_col, atmpres_col),
-        on=time_col,
+        met.select("time", "atmpres"),
         direction="nearest",
-        tolerance_seconds=tolerance_seconds,
+        tolerance_seconds=600.0,
     )
     return joined.withColumn(
-        out_col, F.col(pressure_col) - F.col(atmpres_col) - F.lit(offset)
+        "P_1ac", F.col(pressure_col) - F.col("atmpres") - F.lit(offset)
     )

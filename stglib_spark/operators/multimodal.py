@@ -41,6 +41,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+#: dHash luminance grid (rows × columns): 6 × (11 − 1) gradient bits make
+#: the 60-bit hash of the engine's portable-hash convention.
+_GRID_H, _GRID_W = 6, 11
+#: audio dHash frames: 61 energies → a 60-bit hash.
+_AUDIO_FRAMES = 61
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -54,19 +60,14 @@ MEDIA_SCHEMA = StructType(
 )
 
 
-def decode_features(
-    df: DataFrame,
-    feature_dim: int = 64,
-    content_col: str = "content",
-    id_col: str = "media_id",
-) -> DataFrame:
+def decode_features(df: DataFrame, feature_dim: int = 64) -> DataFrame:
     """binary column → fixed-width float feature vector via mapInPandas:
     decode (``functions.media.decode_features_real``), then mean-pool.
     Output (media_id, n_bytes, feature[float xD]); an unsupported
     payload raises ``UnsupportedMediaError``."""
     out_schema = StructType(
         [
-            StructField(id_col, LongType()),
+            StructField("media_id", LongType()),
             StructField("n_bytes", LongType()),
             StructField("feature", ArrayType(FloatType())),
         ]
@@ -77,24 +78,20 @@ def decode_features(
 
         for pdf in batches:
             ids, sizes, feats = [], [], []
-            for mid, content in zip(pdf[id_col], pdf[content_col]):
+            for mid, content in zip(pdf["media_id"], pdf["content"]):
                 payload = bytes(content) if content is not None else b""
                 feat = decode_features_real(payload, feature_dim)
                 ids.append(mid)
                 sizes.append(len(payload))
                 feats.append(feat.tolist())
             yield pd.DataFrame(
-                {id_col: ids, "n_bytes": sizes, "feature": feats}
+                {"media_id": ids, "n_bytes": sizes, "feature": feats}
             )
 
-    return df.select(id_col, content_col).mapInPandas(fn, out_schema)
+    return df.select("media_id", "content").mapInPandas(fn, out_schema)
 
 
-def audio_stats(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "media_id",
-) -> DataFrame:
+def audio_stats(df: DataFrame) -> DataFrame:
     """WAV binary column → per-clip signal statistics via mapInPandas:
     (media_id, n_samples, sample_rate, rms, zero_crossings,
     dominant_freq_hz). The audio-corpus curation filter set — silence /
@@ -108,7 +105,7 @@ def audio_stats(
     """
     out_schema = StructType(
         [
-            StructField(id_col, LongType()),
+            StructField("media_id", LongType()),
             StructField("n_samples", LongType()),
             StructField("sample_rate", IntegerType()),
             StructField("rms", FloatType()),
@@ -122,14 +119,14 @@ def audio_stats(
 
         for pdf in batches:
             rows = []
-            for mid, content in zip(pdf[id_col], pdf[content_col]):
+            for mid, content in zip(pdf["media_id"], pdf["content"]):
                 payload = bytes(content) if content is not None else b""
                 n, rate, rms, zc, dom = audio_stats_real(payload)
                 rows.append((mid, n, rate, rms, zc, dom))
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    id_col,
+                    "media_id",
                     "n_samples",
                     "sample_rate",
                     "rms",
@@ -138,7 +135,7 @@ def audio_stats(
                 ],
             )
 
-    return df.select(id_col, content_col).mapInPandas(fn, out_schema)
+    return df.select("media_id", "content").mapInPandas(fn, out_schema)
 
 
 def resize_images(
@@ -227,11 +224,8 @@ def sample_video_frames(
 
 def perceptual_hash(
     df: DataFrame,
-    grid_w: int = 11,
-    grid_h: int = 6,
     content_col: str = "content",
     id_col: str = "media_id",
-    out_col: str = "phash",
 ) -> DataFrame:
     """Pixel-level dHash per image — the perceptual fingerprint that
     dedupes RE-ENCODED images (same picture, different container /
@@ -241,11 +235,11 @@ def perceptual_hash(
     Kernel (Arrow-batched ``mapInPandas``, payloads never shuffled):
     real codec decode (BMP/PNM/PNG, :mod:`stglib_spark.functions.media`),
     integer grayscale (``(r+g+b)//3``), box-filter downsample to a
-    ``grid_h × grid_w`` luminance grid (exact integer block means,
+    6 × 11 luminance grid (exact integer block means,
     ``sum // (bw·bh)`` — deterministic across engines, unlike float
-    area resampling), then the dHash gradient: bit ``gr·(grid_w−1)+gc``
+    area resampling), then the dHash gradient: bit ``gr·10+gc``
     is 1 iff the cell right of ``(gr, gc)`` is strictly brighter. The
-    default 6×11 grid yields 60 bits — the engine's portable-hash
+    6×11 grid yields 60 bits — the engine's portable-hash
     convention (simhash/hash60), always non-negative in a BIGINT.
 
     Undecodable / null payloads and images whose dimensions are not
@@ -259,7 +253,7 @@ def perceptual_hash(
     out_schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
-            StructField(out_col, LongType()),
+            StructField("phash", LongType()),
         ]
     )
 
@@ -288,15 +282,15 @@ def perceptual_hash(
             if px.ndim == 3:  # integer luminance, replayable exactly
                 px = (px[:, :, 0] + px[:, :, 1] + px[:, :, 2]) // 3
             h, w = px.shape
-            if h % grid_h or w % grid_w:
+            if h % _GRID_H or w % _GRID_W:
                 return None
-            bh, bw = h // grid_h, w // grid_w
+            bh, bw = h // _GRID_H, w // _GRID_W
             g = (
-                px.reshape(grid_h, bh, grid_w, bw).sum(axis=(1, 3))
+                px.reshape(_GRID_H, bh, _GRID_W, bw).sum(axis=(1, 3))
                 // (bh * bw)
             )
             bits = (g[:, 1:] > g[:, :-1]).astype(np.int64)
-            ks = np.arange(grid_h * (grid_w - 1), dtype=np.int64)
+            ks = np.arange(_GRID_H * (_GRID_W - 1), dtype=np.int64)
             return int((bits.reshape(-1) << ks).sum())
 
         for pdf in batches:
@@ -304,7 +298,7 @@ def perceptual_hash(
                 one(bytes(c)) if c is not None else None
                 for c in pdf[content_col]
             ]
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: hashes})
+            yield pd.DataFrame({id_col: pdf[id_col], "phash": hashes})
 
     return df.select(id_col, content_col).mapInPandas(fn, out_schema)
 
@@ -350,8 +344,6 @@ def phash_near_pairs(
 
 def video_phash(
     df: DataFrame,
-    grid_w: int = 11,
-    grid_h: int = 6,
     content_col: str = "content",
     id_col: str = "media_id",
 ) -> DataFrame:
@@ -375,17 +367,17 @@ def video_phash(
             StructField("phash", LongType()),
         ]
     )
-    ks = np.arange(grid_h * (grid_w - 1), dtype=np.int64)
+    ks = np.arange(_GRID_H * (_GRID_W - 1), dtype=np.int64)
 
     def hash_frame(frame: np.ndarray):
         px = np.asarray(frame, dtype=np.int64)
         if px.ndim == 3:
             px = (px[:, :, 0] + px[:, :, 1] + px[:, :, 2]) // 3
         h, w = px.shape
-        if h % grid_h or w % grid_w:
+        if h % _GRID_H or w % _GRID_W:
             return None
-        bh, bw = h // grid_h, w // grid_w
-        g = px.reshape(grid_h, bh, grid_w, bw).sum(axis=(1, 3)) // (bh * bw)
+        bh, bw = h // _GRID_H, w // _GRID_W
+        g = px.reshape(_GRID_H, bh, _GRID_W, bw).sum(axis=(1, 3)) // (bh * bw)
         bits = (g[:, 1:] > g[:, :-1]).astype(np.int64)
         return int((bits.reshape(-1) << ks).sum())
 
@@ -476,23 +468,18 @@ def video_phash_near_pairs(
     )
 
 
-def audio_phash(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    n_frames: int = 61,
-) -> DataFrame:
+def audio_phash(media: DataFrame) -> DataFrame:
     """Audio perceptual hash — the acoustic member of the dHash family
     (`perceptual_hash` for images, `video_phash` for frame sets): the
-    clip partitions into ``n_frames`` equal spans (sample i → frame
-    (i·n_frames)//n, the exact-integer rule an oracle replays), each
+    clip partitions into 61 equal spans (sample i → frame
+    (i·61)//n, the exact-integer rule an oracle replays), each
     frame's ENERGY is the integer sum of squared 16-bit PCM codes, and
-    bit k of the (n_frames−1)-bit hash is energy[k+1] > energy[k].
+    bit k of the 60-bit hash is energy[k+1] > energy[k].
     Energy-delta signs survive re-encoding, small clicks, and DC
     offsets the way pixel-gradient signs survive JPEG noise — and a
     constant gain change scales every energy by the same factor, so
     the hash is volume-invariant for exact scaling. Clips shorter than
-    ``n_frames`` samples and undecodable payloads hash NULL (dropped
+    61 samples and undecodable payloads hash NULL (dropped
     before pairing, the perceptual_hash convention).
 
     Pairing reuses `phash_near_pairs` unchanged (pass
@@ -501,37 +488,34 @@ def audio_phash(
     numeric media ids both work — the family contract
     `perceptual_hash`/`video_phash` honor). Scale shape: decode + hash run inside ONE
     `mapInPandas` projection — audio payloads never shuffle; 16-byte
-    (id, hash) rows are all that moves afterwards. Default 61 frames →
+    (id, hash) rows are all that moves afterwards. 61 frames →
     a 60-bit hash, matching the 60-bit block layout the portable
     pairing path uses."""
     import numpy as np
     import pandas as pd
-
-    if n_frames < 2 or n_frames > 64:
-        raise ValueError(f"n_frames must be in [2, 64], got {n_frames}")
 
     def fn(batches):
         from stglib_spark.functions.media import decode_wav
 
         for pdf in batches:
             ids, hashes = [], []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["content"]):
                 try:
                     x, _rate = decode_wav(bytes(payload))
                     n = len(x)
-                    if n < n_frames:
+                    if n < _AUDIO_FRAMES:
                         raise ValueError("clip shorter than frame count")
                     # recover exact PCM codes: decode yields k/32768 in
                     # float32, exact for |k| < 2^24, so round() is k
                     pcm = np.round(
                         x.astype(np.float64) * 32768.0
                     ).astype(np.int64)
-                    idx = (np.arange(n, dtype=np.int64) * n_frames) // n
-                    e = np.zeros(n_frames, dtype=np.int64)
+                    idx = (np.arange(n, dtype=np.int64) * _AUDIO_FRAMES) // n
+                    e = np.zeros(_AUDIO_FRAMES, dtype=np.int64)
                     np.add.at(e, idx, pcm * pcm)
                     bits = (e[1:] > e[:-1]).astype(np.int64)
                     h = int(
-                        (bits << np.arange(n_frames - 1, dtype=np.int64))
+                        (bits << np.arange(_AUDIO_FRAMES - 1, dtype=np.int64))
                         .sum()
                     )
                     ids.append(mid)
@@ -541,10 +525,10 @@ def audio_phash(
                     hashes.append(None)
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "media_id": ids,
                     "aphash": pd.array(hashes, dtype="Int64"),
                 }
             )
 
-    id_type = media.schema[id_col].dataType.simpleString()
-    return media.mapInPandas(fn, f"{id_col} {id_type}, aphash long")
+    id_type = media.schema["media_id"].dataType.simpleString()
+    return media.mapInPandas(fn, f"media_id {id_type}, aphash long")

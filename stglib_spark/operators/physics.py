@@ -23,11 +23,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 G = 9.81
 
 
-def pres2dep_simple(pressure_dbar: Column, density_kgm3: float = 1025.0) -> Column:
+def pres2dep_simple(pressure_dbar: Column) -> Column:
     """Pressure (dbar) → depth (m) with constant density:
     dep = P·1e4 / (ρ·g) — the reference's structure (utils.py:1966-1978)
-    with ρ(S,T,P) frozen to a scalar (its ``average_salinity`` scalar path)."""
-    return pressure_dbar * 1.0e4 / (F.lit(density_kgm3) * F.lit(G))
+    with ρ(S,T,P) frozen to 1025 kg/m³ (its ``average_salinity`` scalar
+    path)."""
+    return pressure_dbar * 1.0e4 / (F.lit(1025.0) * F.lit(G))
 
 
 def water_depth(dep: Column, instrument_height: float) -> Column:
@@ -248,7 +249,6 @@ def pres2dep_full(
     salinity_col: str,
     temperature_col: str,
     latitude: float,
-    out_col: str = "depth_m",
 ) -> DataFrame:
     """pres2dep with EOS-80 density and latitude gravity
     (utils.py:1926-1985; the scalar-salinity fallback path is
@@ -256,7 +256,7 @@ def pres2dep_full(
     from pyspark.sql import functions as _F
 
     expr = pres2dep_sql(pressure_col, salinity_col, temperature_col, repr(latitude))
-    return df.withColumn(out_col, _F.expr(expr))
+    return df.withColumn("depth_m", _F.expr(expr))
 
 
 def troll_salinity_sql(t: str, ac: str, full: bool = False) -> str:

@@ -134,7 +134,7 @@ class QaqcResult:
         )
 
 
-def translate_mask_expr(expr: str, suffix: str = "") -> str:
+def translate_mask_expr(expr: str) -> str:
     """Translate the reference's mask-expression mini-DSL to ANSI SQL.
 
     Grammar per ``qaqc.py:525-602``: clauses ``(VAR op LITERAL)`` with ops
@@ -145,11 +145,7 @@ def translate_mask_expr(expr: str, suffix: str = "") -> str:
     # `X == nan` → `X IS NULL`; `X != nan` → `X IS NOT NULL`
     s = re.sub(r"(\w+)\s*==\s*nan", r"\1 IS NULL", s)
     s = re.sub(r"(\w+)\s*!=\s*nan", r"\1 IS NOT NULL", s)
-    s = s.replace("==", "=").replace("&", " AND ").replace("|", " OR ")
-    if suffix:
-        s = re.sub(r"\b([A-Za-z_][A-Za-z_0-9]*)\b(?!\s*\()", lambda m: m.group(1) + suffix
-                   if m.group(1) not in ("AND", "OR", "IS", "NULL", "NOT", "nan") else m.group(1), s)
-    return s
+    return s.replace("==", "=").replace("&", " AND ").replace("|", " OR ")
 
 
 def _rolling_median(var: str, k: int, spec: SeriesSpec) -> Column:

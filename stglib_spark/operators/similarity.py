@@ -45,18 +45,16 @@ def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k against one query vector. The query enters the
     plan as an array literal (constant-folded, broadcast implicitly);
     orderBy+limit compiles to TakeOrderedAndProject — per-partition heap
     then driver merge of k rows, not a global sort."""
     q = F.expr(_darr_sql(query_vec))
-    sim = cosine(F.col(vec_col).cast("array<double>"), q)
+    sim = cosine(F.col("embedding").cast("array<double>"), q)
     return (
-        df.select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        df.select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -64,8 +62,6 @@ def brute_force_topk(
 def pairwise_topk_within(
     df: DataFrame,
     group_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.9,
     dim: int | None = None,
 ) -> DataFrame:
@@ -97,8 +93,8 @@ def pairwise_topk_within(
 
     slim = df.select(
         F.col(group_col),
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("__v"),
     )
     # Compute-bound stage with tiny shuffle bytes: pin the partition
     # count so AQE's byte-size coalescing can't collapse it (measured 4
@@ -106,7 +102,7 @@ def pairwise_topk_within(
     from stglib_spark.session import pin_grouping
 
     slim = pin_grouping(slim, group_col)
-    id_field = df.schema[id_col].dataType
+    id_field = df.schema["vec_id"].dataType
     schema = StructType(
         [
             StructField("id_a", id_field),
@@ -116,7 +112,7 @@ def pairwise_topk_within(
     )
 
     def gemm(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         arrs = pdf["__v"].to_numpy()
         if dim is not None:
             d = dim
@@ -202,8 +198,6 @@ def _darr_sql(vals) -> str:
 def ivf_seed_centroids(
     df: DataFrame,
     n_centroids: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[tuple[object, list[float]]]:
     """Deterministic IVF codebook: the ``n_centroids`` vectors with the
     smallest ids. A real deployment trains on a sample (see
@@ -212,8 +206,8 @@ def ivf_seed_centroids(
     collecting it to the driver is the standard IVF train step, not a
     driver-side data loop."""
     rows = (
-        df.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(id_col)
+        df.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .orderBy("vec_id")
         .limit(n_centroids)
         .collect()
     )
@@ -223,8 +217,6 @@ def ivf_seed_centroids(
 def ivf_assign(
     df: DataFrame,
     centroids: list[tuple[object, list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "ivf_cell",
 ) -> DataFrame:
     """Nearest-centroid cell id per vector — an Arrow-batched kernel:
     the K×dim codebook broadcasts inside the UDF closure, distances are
@@ -232,7 +224,7 @@ def ivf_assign(
     element order (`_seq_sq_dists`, bit-identical to the SQL fold), and
     ties break to the LOWEST cid (centroids sorted by cid; argmin takes
     the first minimum). At 100 TB the assigned table is written
-    partitioned by ``out_col`` so a probe is partition pruning;
+    partitioned by ``ivf_cell`` so a probe is partition pruning;
     assignment itself is one scan-speed projection, no shuffle.
 
     Why a pandas UDF and not native expressions: the K×dim per-centroid
@@ -267,7 +259,7 @@ def ivf_assign(
         return pd.Series(out)
 
     return df.withColumn(
-        out_col, nearest(F.col(vec_col).cast("array<double>"))
+        "ivf_cell", nearest(F.col("embedding").cast("array<double>"))
     )
 
 
@@ -275,7 +267,6 @@ def ivf_refine(
     df: DataFrame,
     centroids: list[tuple[object, list[float]]],
     iters: int = 2,
-    vec_col: str = "embedding",
     round_to: int | None = None,
 ) -> list[tuple[object, list[float]]]:
     """Lloyd refinement of the codebook (the production IVF train path).
@@ -290,7 +281,7 @@ def ivf_refine(
     next assignment (see sim_kmeans_assign)."""
     dim = len(centroids[0][1])
     for _ in range(iters):
-        assigned = ivf_assign(df, centroids, vec_col)
+        assigned = ivf_assign(df, centroids)
         # per-element expressions as JVM-parsed SQL strings (r15, guide
         # §5): the Column-builder form paid ~4 py4j roundtrips per
         # element per iteration (dim=64 → ~0.2 s of driver latency per
@@ -299,7 +290,7 @@ def ivf_refine(
             assigned.selectExpr(
                 "ivf_cell",
                 *[
-                    f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)[{i}] AS _e{i}"
+                    f"CAST(`embedding` AS ARRAY<DOUBLE>)[{i}] AS _e{i}"
                     for i in range(dim)
                 ],
             )
@@ -336,8 +327,6 @@ def ann_topk_ivf(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     refine_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: partition the corpus into Voronoi cells of
@@ -347,9 +336,9 @@ def ann_topk_ivf(
     the assigned table lives partitioned by cell and a query touches
     nprobe partitions. Probe selection runs on the driver over the K-row
     codebook (Python sequential sums mirror the oracle's list_sum)."""
-    centroids = ivf_seed_centroids(df, n_centroids, vec_col, id_col)
+    centroids = ivf_seed_centroids(df, n_centroids)
     if refine_iters:
-        centroids = ivf_refine(df, centroids, refine_iters, vec_col)
+        centroids = ivf_refine(df, centroids, refine_iters)
 
     def sqdist(a: list[float], b: list[float]) -> float:
         acc = 0.0
@@ -363,13 +352,13 @@ def ann_topk_ivf(
             centroids, key=lambda c: (sqdist(query_vec, c[1]), c[0])
         )[:nprobe]
     ]
-    assigned = ivf_assign(df, centroids, vec_col)
+    assigned = ivf_assign(df, centroids)
     q = F.expr(_darr_sql(query_vec))
-    sim = cosine(F.col(vec_col).cast("array<double>"), q)
+    sim = cosine(F.col("embedding").cast("array<double>"), q)
     return (
         assigned.filter(F.col("ivf_cell").isin(probed))
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -378,8 +367,6 @@ def pq_seed_codebooks(
     df: DataFrame,
     m: int = 8,
     n_codes: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[list[float]]]:
     """Deterministic product-quantization codebooks: split the dim-vector
     into ``m`` contiguous subspaces; codebook j is the j-th subvector of
@@ -389,8 +376,8 @@ def pq_seed_codebooks(
     index SQL-replayable. m codebooks × n_codes × (dim/m) floats = one
     dim×n_codes table on the driver — the standard PQ train step."""
     rows = (
-        df.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(id_col)
+        df.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .orderBy("vec_id")
         .limit(n_codes)
         .collect()
     )
@@ -403,12 +390,7 @@ def pq_seed_codebooks(
     ]
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "pq_codes",
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Vector → ``m`` uint8-range code indices (nearest codebook entry
     per subspace, squared-L2, ties to the lowest index): dim floats
     compress to m small ints — 32× for dim=64/m=8 — which is what makes
@@ -452,7 +434,7 @@ def pq_encode(
         return pd.Series(out)
 
     return df.withColumn(
-        out_col, enc(F.col(vec_col).cast("array<double>"))
+        "pq_codes", enc(F.col("embedding").cast("array<double>"))
     )
 
 
@@ -460,7 +442,6 @@ def pq_refine(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     iters: int = 2,
-    vec_col: str = "embedding",
     round_to: int | None = None,
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd refinement of the PQ codebooks (the production
@@ -480,8 +461,8 @@ def pq_refine(
     m = len(codebooks)
     d = len(codebooks[0][0])
     for _ in range(iters):
-        enc = pq_encode(df, codebooks, vec_col)
-        v = F.col(vec_col).cast("array<double>")
+        enc = pq_encode(df, codebooks)
+        v = F.col("embedding").cast("array<double>")
         pairs = F.explode(
             F.array(
                 *[
@@ -520,8 +501,6 @@ def pq_adc_topk(
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: the query builds an
     m × n_codes lookup table of subspace distances ONCE (driver-side,
@@ -531,8 +510,8 @@ def pq_adc_topk(
     compiles to TakeOrderedAndProject (partial top-k per partition).
     The codes table is what a 100 TB deployment materializes; the
     encode step here exists so the query is self-contained."""
-    codebooks = pq_seed_codebooks(df, m, n_codes, vec_col, id_col)
-    encoded = pq_encode(df, codebooks, vec_col)
+    codebooks = pq_seed_codebooks(df, m, n_codes)
+    encoded = pq_encode(df, codebooks)
     d = len(codebooks[0][0])
 
     def sqdist(a: list[float], b: list[float]) -> float:
@@ -565,9 +544,9 @@ def pq_adc_topk(
     )
     return (
         encoded.select(
-            F.col(id_col), F.round(score, 6).alias("adc_dist")
+            F.col("vec_id"), F.round(score, 6).alias("adc_dist")
         )
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col))
+        .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -578,19 +557,13 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.randn(n_planes, dim)
 
 
-def lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector: bit i = sign(v·rᵢ).
     Planes are plan-time literals (constant arrays), dot products native —
     the signature costs n_planes array traversals at scan speed, no
     shuffle. Vectors in the same bucket are ANN candidates."""
-    planes = random_hyperplanes(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
+    planes = random_hyperplanes(dim, n_planes)
+    v = F.col("embedding").cast("array<double>")
     bucket: Column = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
         p = F.expr(_darr_sql(plane))
@@ -604,9 +577,6 @@ def ann_topk_lsh(
     query_vec: list[float],
     k: int = 10,
     n_planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     probe_hamming: int = 1,
 ) -> DataFrame:
     """Approximate top-k: bucket the corpus once (amortized across
@@ -615,8 +585,8 @@ def ann_topk_lsh(
     table is written partitioned by bucket so a probe is partition
     pruning, not a scan."""
     dim = len(query_vec)
-    bucketed = lsh_bucket(df, dim, n_planes, seed, vec_col)
-    planes = random_hyperplanes(dim, n_planes, seed)
+    bucketed = lsh_bucket(df, dim, n_planes)
+    planes = random_hyperplanes(dim, n_planes)
     qsig = 0
     qv = np.asarray(query_vec, dtype=float)
     for i, plane in enumerate(planes):
@@ -624,21 +594,16 @@ def ann_topk_lsh(
             qsig |= 1 << i
     probe = F.bit_count(F.col("lsh_bucket").bitwiseXOR(F.lit(qsig))) <= probe_hamming
     q = F.expr(_darr_sql(query_vec))
-    sim = cosine(F.col(vec_col).cast("array<double>"), q)
+    sim = cosine(F.col("embedding").cast("array<double>"), q)
     return (
         bucketed.filter(probe)
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def bucket_centroids(
-    df: DataFrame,
-    bucket: Column,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def bucket_centroids(df: DataFrame, bucket: Column) -> DataFrame:
     """Element-wise mean vector per bucket — the codebook-build primitive
     behind IVF indexing and per-stratum embedding statistics. Long-form
     output (bucket, dim, centroid, n_vectors): posexplode → one hash
@@ -651,22 +616,20 @@ def bucket_centroids(
 
     exploded = df.select(
         bucket.alias("bucket"),
-        F.col(id_col),
-        F.posexplode(F.col(vec_col)).alias("dim", "val"),
+        F.col("vec_id"),
+        F.posexplode(F.col("embedding")).alias("dim", "val"),
     )
     return (
         exploded.groupBy("bucket", "dim")
         .agg(
             fast_round(F.avg(F.col("val").cast("double")), 6).alias("centroid"),
-            F.count_distinct(F.col(id_col)).alias("n_vectors"),
+            F.count_distinct(F.col("vec_id")).alias("n_vectors"),
         )
     )
 
 
 def embedding_grid_groups(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cell: float = 0.5,
     dims: int = 6,
 ) -> DataFrame:
@@ -688,16 +651,16 @@ def embedding_grid_groups(
     code = F.concat_ws(
         ",",
         *[
-            F.floor(F.element_at(F.col(vec_col), i + 1) / cell).cast("long")
+            F.floor(F.element_at(F.col("embedding"), i + 1) / cell).cast("long")
             for i in range(dims)
         ],
     )
     return (
-        df.select(code.alias("grid_code"), F.col(id_col))
+        df.select(code.alias("grid_code"), F.col("vec_id"))
         .groupBy("grid_code")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
-            F.min(id_col).alias("rep_id"),
+            F.min("vec_id").alias("rep_id"),
         )
         .filter(F.col("n_members") >= 2)
     )

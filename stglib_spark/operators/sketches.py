@@ -19,11 +19,7 @@ drop-in cheaper hash (same shape, no oracle).
 
 Scale shape: a distinct pre-aggregation on (group, hash) runs map-side
 first, so the shuffle carries distinct hashes only; the per-group
-k-smallest selection is a window over those distinct hashes. When a
-group's distinct count is huge, the optional ``prefilter_fraction``
-cuts hashes above that fraction of the hash space BEFORE the shuffle —
-the standard KMV threshold trick — so shuffle volume is O(k) per group
-instead of O(distinct).
+k-smallest selection is a window over those distinct hashes.
 
 Reference anchor: stglib has no sketches (xarray holds everything in
 RAM); this extends the engine for corpus-audit workloads per the
@@ -45,7 +41,6 @@ def kmv_distinct(
     group_cols: list[str] | None = None,
     k: int = 64,
     seed: str = "kmv1",
-    prefilter_fraction: float | None = None,
 ) -> DataFrame:
     """Per-group KMV distinct-count estimate.
 
@@ -59,21 +54,11 @@ def kmv_distinct(
     All estimator arithmetic is IEEE-exact ((k-1) * 2^60 / kth as one
     double multiply + divide — no ln/pow), so a DuckDB replay of the
     same hash chain lands on the identical double.
-
-    ``prefilter_fraction``: when set (e.g. 0.01), drop hashes above
-    that fraction of the hash space BEFORE the distinct shuffle. The
-    estimate is unchanged as long as every group's k-th smallest hash
-    survives the cut — safe when each group's true distinct count is
-    at least ``k / prefilter_fraction`` w.h.p.; callers with a known
-    cardinality floor use it to make the shuffle O(k) per group.
     """
     groups = list(group_cols or [])
     val = F.col(value_col) if isinstance(value_col, str) else value_col
     h = hash60(val.cast("string"), seed=seed).alias("__h")
     hashed = df.select(*groups, h)
-    if prefilter_fraction is not None:
-        cut = int(_HASH_SPACE * float(prefilter_fraction))
-        hashed = hashed.filter(F.col("__h") < cut)
     # Distinct first: map-side partial dedup, shuffle carries distinct
     # hashes only. The k-smallest selection then runs on the deduped set.
     distinct = hashed.distinct()
@@ -216,18 +201,17 @@ def hist_percentiles(
 def cms_sketch(
     df: DataFrame,
     value_col: str | Column,
-    group_cols: list[str] | None = None,
     depth: int = 4,
     width: int = 1024,
     seed: str = "cms",
     weight_col: str | None = None,
 ) -> DataFrame:
     """Count–Min sketch (Cormode & Muthukrishnan 2005) as a mergeable
-    counter table: one row per (group, d, col) with the counter value —
+    counter table: one row per (d, col) with the counter value —
     ``depth`` independent 60-bit hash rows, each folded onto ``width``
     columns. Two sketches over disjoint data merge by ADDING counters
     (a groupBy sum), which is what makes the sketch the right
-    frequency-audit structure at 100 TB: per group it is a bounded
+    frequency-audit structure at 100 TB: it is a bounded
     depth×width table no matter how many values stream through, and
     shard-local sketches roll up without touching raw data again.
 
@@ -242,9 +226,9 @@ def cms_sketch(
 
     Scale shape: the d hash columns compute in ONE projection, the
     depth fan-out is an explode of a d-element literal-struct array
-    (JVM, no UDF), and the only shuffle is the (group, d, col)
-    counter aggregate — map-side combinable, width·depth keys per
-    group regardless of input size.
+    (JVM, no UDF), and the only shuffle is the (d, col)
+    counter aggregate — map-side combinable, width·depth keys
+    regardless of input size.
 
     ``weight_col`` feeds PRE-AGGREGATED (value, weight) rows: counters
     become sums of weights instead of row counts — bit-identical to
@@ -255,7 +239,6 @@ def cms_sketch(
     aggregate) and sketches the count table (r14: 4 md5/occurrence →
     4 md5/distinct token; the counter-aggregate input shrinks from
     depth×occurrences to depth×vocab rows)."""
-    groups = list(group_cols or [])
     val = (
         F.col(value_col) if isinstance(value_col, str) else value_col
     ).cast("string")
@@ -270,14 +253,14 @@ def cms_sketch(
             ]
         )
     ).alias("dc")
-    carry = [*groups] + ([weight_col] if weight_col else [])
+    carry = [weight_col] if weight_col else []
     exploded = df.select(*carry, rows).select(
         *carry, F.col("dc.d").alias("d"), F.col("dc.col").alias("col")
     )
     cnt = (
         F.sum(F.col(weight_col)) if weight_col else F.count(F.lit(1))
     ).alias("count")
-    return exploded.groupBy(*groups, "d", "col").agg(cnt)
+    return exploded.groupBy("d", "col").agg(cnt)
 
 
 def cms_point_estimates(

@@ -59,15 +59,7 @@ def _interp_regular_2d(
     return out
 
 
-def polar_to_xy(
-    df: DataFrame,
-    total_range: float,
-    dxy: float,
-    time_col: str = "time",
-    theta_col: str = "theta_deg",
-    range_col: str = "horz_rng",
-    value_col: str = "amp",
-) -> DataFrame:
+def polar_to_xy(df: DataFrame, total_range: float, dxy: float) -> DataFrame:
     """Long-form polar sweep rows (time, theta_deg, horz_rng, amp) → long
     cartesian image rows (time, x, y, sonar_image).
 
@@ -77,7 +69,7 @@ def polar_to_xy(
     """
     schema = StructType(
         [
-            StructField(time_col, TimestampType()),
+            StructField("time", TimestampType()),
             StructField("x", DoubleType()),
             StructField("y", DoubleType()),
             StructField("sonar_image", DoubleType()),
@@ -89,10 +81,10 @@ def polar_to_xy(
     rho_grid = np.hypot(xg, yg)
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = pdf[time_col].iloc[0]
+        t0 = pdf["time"].iloc[0]
         # pivot long rows → dense (theta, range) image
         piv = pdf.pivot_table(
-            index=theta_col, columns=range_col, values=value_col, aggfunc="first"
+            index="theta_deg", columns="horz_rng", values="amp", aggfunc="first"
         ).sort_index()
         theta = piv.index.to_numpy(dtype=float)
         rng = piv.columns.to_numpy(dtype=float)
@@ -102,17 +94,17 @@ def polar_to_xy(
         new_img = _interp_regular_2d(theta_grid, rho_grid, theta, rng, img)
         return pd.DataFrame(
             {
-                time_col: t0,
+                "time": t0,
                 "x": np.broadcast_to(xg.ravel(), new_img.size),
                 "y": yg.ravel(),
                 "sonar_image": new_img.ravel(),
             }
         )
 
-    slim = df.select(time_col, theta_col, range_col, value_col)
+    slim = df.select("time", "theta_deg", "horz_rng", "amp")
     return (
-        pin_grouping(slim, time_col)
-        .groupBy(time_col)
+        pin_grouping(slim, "time")
+        .groupBy("time")
         .applyInPandas(apply_fn, schema)
     )
 
@@ -145,13 +137,7 @@ def magvar_correct_heading(heading: Column, magvar: float) -> Column:
     return F.pmod(F.bround(heading + F.lit(float(magvar)), 1), F.lit(360.0))
 
 
-def average_sweeps(
-    df: DataFrame,
-    time_col: str = "time",
-    scan_col: str = "scan",
-    sweep_col: str = "sweep",
-    image_col: str = "sonar_image",
-) -> DataFrame:
+def average_sweeps(df: DataFrame, time_col: str = "time") -> DataFrame:
     """Sweep-averaged sonar product (son/cdf2nc.py:103-131: ``ds.mean(
     dim="sweep")`` + recomputed angles + vector-averaged attitudes) —
     the reference's second ``b_<R>m-a.nc`` output of the son cdf2nc
@@ -182,9 +168,9 @@ def average_sweeps(
         for c, t in df.dtypes
         if t.startswith("array<") and t[6:-1] in numeric_elems
     ]
-    if image_col in df.columns and image_col not in array_cols:
-        array_cols.append(image_col)
-    scalar_specials = {time_col, scan_col, sweep_col, *array_cols}
+    if "sonar_image" in df.columns and "sonar_image" not in array_cols:
+        array_cols.append("sonar_image")
+    scalar_specials = {time_col, "scan", "sweep", *array_cols}
     angle_cols = []
     for fam in _ANGLE_FAMILIES:
         col = next((c for c in fam if c in df.columns), None)
@@ -210,7 +196,7 @@ def average_sweeps(
         )
     for ac in array_cols:
         aggs.append(F.collect_list(ac).alias(f"__arr_{ac}"))
-    out = df.groupBy(time_col, scan_col).agg(*aggs)
+    out = df.groupBy(time_col, "scan").agg(*aggs)
     recompute = {}
     if "HeadPosition" in plain:
         recompute["HeadAngle"] = 0.3 * (F.col("HeadPosition") - 600.0)
@@ -259,9 +245,6 @@ def slant_geometry(
     df: DataFrame,
     total_range: float,
     npoints: int,
-    hgt_col: str = "sonar_hgt",
-    slant_col: str = "SlantRange",
-    horz_col: str = "HorizontalRange",
 ) -> DataFrame:
     """Per-point slant/horizontal range arrays (son/cdf2nc.py:49-70):
     slant_j = (j+1)·R/n for the n echo points (the reference's
@@ -274,13 +257,13 @@ def slant_geometry(
     slant = F.transform(
         F.sequence(F.lit(1), F.lit(int(npoints))),
         lambda j: F.when(
-            j.cast("double") * step > F.col(hgt_col),
+            j.cast("double") * step > F.col("sonar_hgt"),
             j.cast("double") * step,
         ),
     )
-    out = df.withColumn(slant_col, slant)
+    out = df.withColumn("SlantRange", slant)
     horz = F.transform(
-        F.col(slant_col),
-        lambda s: F.sqrt(s * s - F.col(hgt_col) * F.col(hgt_col)),
+        F.col("SlantRange"),
+        lambda s: F.sqrt(s * s - F.col("sonar_hgt") * F.col("sonar_hgt")),
     )
-    return out.withColumn(horz_col, horz)
+    return out.withColumn("HorizontalRange", horz)

@@ -89,10 +89,10 @@ def mean_token_length(text: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are language stopwords (quality signal)."""
+def stopword_ratio(text: Column) -> Column:
+    """Fraction of tokens that are English stopwords (quality signal)."""
     toks = tokens(F.lower(text))
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
+    markers = F.array(*[F.lit(m) for m in LANG_MARKERS["en"]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
     n = F.size(toks)
     return F.when(n > 0, n_stop / n).otherwise(F.lit(0.0))
@@ -133,7 +133,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-marker language ID: the language with the most marker-token
     hits wins; ties and zero-hit rows → 'und'. Pure Column expressions
     (greatest over per-language hit counts)."""
@@ -154,7 +154,7 @@ def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -
         cond = (hits[lang] == best) & (best > 0) & (n_best == 1)
         chain = F.when(cond, F.lit(lang)) if chain is None else chain.when(cond, F.lit(lang))
     pred = chain.otherwise(F.lit("und"))
-    return df.withColumn(out_col, pred)
+    return df.withColumn("lang_pred", pred)
 
 
 SCRIPT_RANGES: dict[str, tuple[str, str]] = {
@@ -168,9 +168,7 @@ SCRIPT_RANGES: dict[str, tuple[str, str]] = {
 }
 
 
-def script_counts(
-    df: DataFrame, text_col: str = "text", pred_col: str = "script_pred"
-) -> DataFrame:
+def script_counts(df: DataFrame) -> DataFrame:
     """Unicode-script detection — the writing-system complement to the
     stopword-marker ``lang_id`` (script tells Cyrillic from Latin
     before any wordlist applies; the standard first cut in multilingual
@@ -180,7 +178,7 @@ def script_counts(
     label: highest count wins, ties and zero-hit rows -> 'und' (the
     ``lang_id`` tie convention). Counts via regexp_replace + length —
     one codegen'd projection, no UDF, scan speed at 100 TB."""
-    t = F.col(text_col)
+    t = F.col("text")
     counts = {
         name: F.length(F.regexp_replace(t, f"[^{java}]", ""))
         for name, (java, _) in SCRIPT_RANGES.items()
@@ -199,22 +197,22 @@ def script_counts(
             else chain.when(cond, F.lit(name))
         )
     out = df.withColumns({f"n_{k}": v for k, v in counts.items()})
-    return out.withColumn(pred_col, chain.otherwise(F.lit("und")))
+    return out.withColumn("script_pred", chain.otherwise(F.lit("und")))
 
 
-def doc_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
+def doc_fingerprint(df: DataFrame) -> DataFrame:
     """Deterministic document fingerprint: md5 of the normalized text
     (lowercased, punctuation stripped, whitespace collapsed) — the exact
     dedup key. md5 chosen over xxhash64 so a SQL oracle (DuckDB) computes
     the identical value."""
     norm = F.regexp_replace(
         F.regexp_replace(
-            F.lower(F.col(text_col)), r"[^\p{L}\p{N} \t\n\x0B\f\r]", ""
+            F.lower(F.col("text")), r"[^\p{L}\p{N} \t\n\x0B\f\r]", ""
         ),
         WS + "+",
         " ",
     )
-    return df.withColumn(out_col, F.md5(F.trim(norm)))
+    return df.withColumn("fingerprint", F.md5(F.trim(norm)))
 
 
 #: Karp–Rabin base/modulus for winnowing fingerprints. M = 2^31 − 1
@@ -230,11 +228,8 @@ WINNOW_M = 2147483647
 
 def winnow_fingerprints(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 15,
     w: int = 8,
-    out_col: str = "fingerprints",
     exploded: bool = False,
 ) -> DataFrame:
     """Rolling-hash document fingerprints by winnowing (Schleimer,
@@ -310,7 +305,7 @@ def winnow_fingerprints(
         return np.unique(sliding_window_view(hs, w).min(axis=1))
 
     if exploded:
-        schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}"
+        schema = f"doc_id {df.schema['doc_id'].dataType.simpleString()}"
 
         def _gen(batches):
             for pdf in batches:
@@ -324,7 +319,7 @@ def winnow_fingerprints(
                 idx = np.repeat(
                     [i for i, _ in reps], [n for _, n in reps]
                 ).astype(np.int64)
-                out = pdf.iloc[idx][[id_col]].reset_index(drop=True)
+                out = pdf.iloc[idx][["doc_id"]].reset_index(drop=True)
                 out["fp"] = (
                     np.concatenate(vals)
                     if vals
@@ -333,7 +328,7 @@ def winnow_fingerprints(
                 yield out
 
         return spread(df).select(
-            F.col(id_col), F.col(text_col).alias("__text")
+            F.col("doc_id"), F.col("text").alias("__text")
         ).mapInPandas(_gen, f"{schema}, fp long")
 
     @pandas_udf("array<long>")
@@ -345,14 +340,12 @@ def winnow_fingerprints(
         return pd.Series(out)
 
     return spread(df).select(
-        F.col(id_col), _winnow(F.col(text_col)).alias(out_col)
+        F.col("doc_id"), _winnow(F.col("text")).alias("fingerprints")
     )
 
 
 def winnow_fingerprint_positions(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 15,
     w: int = 8,
     max_positions_per_fp: int | None = None,
@@ -405,12 +398,12 @@ def winnow_fingerprint_positions(
     B, M = WINNOW_B, WINNOW_M
     coeffs = np.array([pow(B, k - 1 - j, M) for j in range(k)], dtype=np.int64)
     S = np.int64(1) << np.int64(32)
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
 
     def _winnow_pos(batches):
         for pdf in batches:
             ids, fps_out, pos_out = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf["__text"]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["__text"]):
                 if text is None or len(text) < k:
                     continue
                 cps = np.frombuffer(
@@ -444,7 +437,7 @@ def winnow_fingerprint_positions(
                 pos_out.append(sel & 0xFFFFFFFF)
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "fp": np.concatenate(fps_out)
                     if fps_out
                     else np.array([], dtype=np.int64),
@@ -457,13 +450,11 @@ def winnow_fingerprint_positions(
             )
 
     return spread(df).select(
-        F.col(id_col), F.col(text_col).alias("__text")
-    ).mapInPandas(_winnow_pos, f"{id_col} {id_type}, fp long, pos int")
+        F.col("doc_id"), F.col("text").alias("__text")
+    ).mapInPandas(_winnow_pos, f"doc_id {id_type}, fp long, pos int")
 
 
-def unigram_vocab(
-    df: DataFrame, text_col: str = "text", top_k: int = 1000
-) -> list[tuple[str, int]]:
+def unigram_vocab(df: DataFrame, top_k: int = 1000) -> list[tuple[str, int]]:
     """Corpus-level unigram vocabulary: the ``top_k`` most frequent
     (lowercased, whitespace) tokens with their counts, deterministic
     tie-break by token. Like an IVF codebook, the vocabulary is a
@@ -472,7 +463,7 @@ def unigram_vocab(
     the token vocabulary, not the corpus, thanks to map-side partial
     aggregation."""
     rows = (
-        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+        df.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), F.col("tok"))
@@ -504,12 +495,13 @@ def _sql_map(entries: list[tuple[str, float]]) -> str:
     )
 
 
+#: log-probability the LM scorers give an out-of-vocabulary token
+OOV_LOGPROB = -20.0
+
+
 def unigram_logprob_score(
     df: DataFrame,
     vocab: list[tuple[str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_logprob: float = -20.0,
 ) -> DataFrame:
     """Per-document mean token log-probability under a corpus unigram LM —
     the cheap stand-in for the CCNet/KenLM perplexity quality filter
@@ -526,16 +518,16 @@ def unigram_logprob_score(
     lp_map = F.expr(
         _sql_map([(tok, math.log(c / total)) for tok, c in vocab])
     )
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     n = F.size(toks)
     total_lp = F.aggregate(
         toks,
         F.lit(0.0),
         lambda acc, t: acc
-        + F.coalesce(F.element_at(lp_map, t), F.lit(float(oov_logprob))),
+        + F.coalesce(F.element_at(lp_map, t), F.lit(OOV_LOGPROB)),
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_tokens"),
         F.round(
             F.when(n > 0, total_lp / n).otherwise(F.lit(0.0)), 6
@@ -547,9 +539,6 @@ def dsir_logratio_score(
     df: DataFrame,
     target_vocab: list[tuple[str, int]],
     raw_vocab: list[tuple[str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_logprob: float = -20.0,
 ) -> DataFrame:
     """DSIR-style importance weight (Xie et al. 2023, Data Selection
     via Importance Resampling, arXiv:2302.03169 — the hashed-ngram
@@ -563,7 +552,7 @@ def dsir_logratio_score(
 
     Scale shape: the TWO vocabularies fuse into ONE literal
     log-ratio map over their key union (a token absent from a side
-    contributes ``oov_logprob`` for that side; absent from both → 0,
+    contributes ``OOV_LOGPROB`` for that side; absent from both → 0,
     the map's coalesce default), so scoring is a single projection —
     one corpus scan, an aggregate fold per row, no explode, no join,
     no shuffle. Only the two bounded top-K vocabulary aggregates ever
@@ -574,13 +563,12 @@ def dsir_logratio_score(
     r_total = float(sum(c for _, c in raw_vocab))
     t_lp = {tok: math.log(c / t_total) for tok, c in target_vocab}
     r_lp = {tok: math.log(c / r_total) for tok, c in raw_vocab}
-    floor = float(oov_logprob)
     entries = sorted(
-        (tok, t_lp.get(tok, floor) - r_lp.get(tok, floor))
+        (tok, t_lp.get(tok, OOV_LOGPROB) - r_lp.get(tok, OOV_LOGPROB))
         for tok in set(t_lp) | set(r_lp)
     )
     ratio_map = F.expr(_sql_map(entries))
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     n = F.size(toks)
     total = F.aggregate(
         toks,
@@ -589,7 +577,7 @@ def dsir_logratio_score(
         + F.coalesce(F.element_at(ratio_map, t), F.lit(0.0)),
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_tokens"),
         F.round(
             F.when(n > 0, total / n).otherwise(F.lit(0.0)), 6
@@ -601,8 +589,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 128,
     overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split documents into fixed-size token windows with overlap — the
     standard pre-embedding / RAG-indexing step (chunk size in tokens,
@@ -621,9 +607,9 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     base = df.select(
-        F.col(id_col), toks.alias("__t"), F.size(toks).alias("__n")
+        F.col("doc_id"), toks.alias("__t"), F.size(toks).alias("__n")
     ).filter(F.col("__n") > 0)
     n_chunks = F.greatest(
         F.lit(1),
@@ -635,7 +621,7 @@ def chunk_documents(
     return (
         base.withColumn("chunk_idx", idx)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_idx"),
             F.concat_ws(" ", piece).alias("chunk_text"),
             F.least(F.col("__n") - start, F.lit(chunk_tokens))
@@ -647,7 +633,6 @@ def chunk_documents(
 
 def bigram_model(
     df: DataFrame,
-    text_col: str = "text",
     top_k_vocab: int = 1000,
     top_k_bigrams: int = 4000,
 ) -> tuple[list[tuple[str, int]], list[tuple[str, str, int]]]:
@@ -658,13 +643,13 @@ def bigram_model(
     shuffle width is the vocabulary, never the corpus — collected once
     as model artifacts (the IVF-codebook pattern)."""
     uni_q = (
-        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+        df.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), F.col("tok"))
         .limit(top_k_vocab)
     )
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     n = F.size(toks)
     pairs = F.filter(
         F.zip_with(
@@ -701,9 +686,6 @@ def bigram_logprob_score(
     df: DataFrame,
     vocab: list[tuple[str, int]],
     bigrams: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_logprob: float = -20.0,
 ) -> DataFrame:
     """Per-document mean adjacent-pair log-probability under a
     Laplace-smoothed corpus bigram LM — one step closer to the
@@ -715,7 +697,7 @@ def bigram_logprob_score(
 
     for in-vocab w1 (V = vocabulary size; pairs absent from the bigram
     table fall back to the same formula with c(w1,w2)=0), and a fixed
-    ``oov_logprob`` when w1 is out of vocabulary.
+    ``OOV_LOGPROB`` when w1 is out of vocabulary.
 
     Scale shape: both the smoothed bigram log-probabilities and the
     per-w1 backoff enter the plan as literal maps (model-as-literal,
@@ -737,7 +719,7 @@ def bigram_logprob_score(
         _sql_map([(w1, math.log(1.0 / (c + V))) for w1, c in vocab])
     )
 
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     n = F.size(toks)
     pairs = F.filter(
         F.zip_with(
@@ -748,7 +730,7 @@ def bigram_logprob_score(
         lambda s: s["w2"].isNotNull(),
     )
     term = lambda s: F.when(  # noqa: E731
-        F.element_at(bo_map, s["w1"]).isNull(), F.lit(float(oov_logprob))
+        F.element_at(bo_map, s["w1"]).isNull(), F.lit(OOV_LOGPROB)
     ).otherwise(
         F.coalesce(
             F.element_at(bi_map, F.concat_ws(" ", s["w1"], s["w2"])),
@@ -758,7 +740,7 @@ def bigram_logprob_score(
     total_lp = F.aggregate(pairs, F.lit(0.0), lambda acc, s: acc + term(s))
     n_pairs = F.greatest(n - 1, F.lit(0))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_pairs.cast("int").alias("n_pairs"),
         F.round(
             F.when(n_pairs > 0, total_lp / n_pairs).otherwise(F.lit(0.0)), 6
@@ -868,12 +850,7 @@ def canonicalize_text(text: Column) -> Column:
     return F.regexp_replace(normalize_text(text), r"\p{N}+", "0")
 
 
-def tfidf_keywords(
-    df: DataFrame,
-    top_k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_keywords(df: DataFrame, top_k: int = 3) -> DataFrame:
     """Per-document keyword extraction by TF×IDF over the corpus, with a
     LINEAR idf — score = tf × (N+1)/(df+1) as one exact rational —
     instead of the textbook log-idf. Rationale: the ranking feeds
@@ -893,10 +870,10 @@ def tfidf_keywords(
     from stglib_spark.operators.dedup import normalize_text
 
     words = df.select(
-        F.col(id_col),
-        F.explode(tokens(normalize_text(F.col(text_col)))).alias("term"),
+        F.col("doc_id"),
+        F.explode(tokens(normalize_text(F.col("text")))).alias("term"),
     )
-    tf = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # df falls out of tf for free: tf has exactly one row per (doc, term),
     # so count-per-term == count distinct docs — one explode pass total.
     # tf feeds BOTH the df aggregate and the join probe; without a persist
@@ -918,30 +895,27 @@ def tfidf_keywords(
             / (F.col("df") + 1),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), "term")
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "term")
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(top_k))
-        .select(id_col, "rank", "term", "tf", "df", "score")
+        .select("doc_id", "rank", "term", "tf", "df", "score")
     )
 
 
 def quality_logreg_train(
     df: DataFrame,
-    text_col: str = "text",
     iters: int = 3,
     lr: float = 0.5,
-    snap_nd: int = 9,
-    label_threshold: float = 0.75,
 ) -> tuple[list[float], DataFrame]:
     """Train a logistic-regression quality classifier IN the engine
     (the fastText-style quality-filter step of a pretraining pipeline,
     reference-free): features are the micro-rounded corpus quality
     ratios (alpha / punct / stopword — the same driver-oracled
     expressions as ``quality_score``), the label is the heuristic
-    composite score clearing ``label_threshold``, and training is
+    composite score clearing 0.75, and training is
     full-batch gradient descent with the weight vector SNAPPED to a
-    fixed decimal grid after every step (``ivf_refine`` contract: the
+    9-decimal grid after every step (``ivf_refine`` contract: the
     snap is what makes the iteration engine-replayable — per-row
     sigmoid ulps and float summation order both vanish under the
     grid).
@@ -954,12 +928,12 @@ def quality_logreg_train(
 
     from stglib_spark.operators.similarity import _snap_away
 
-    scored = quality_score(df, text_col)
+    scored = quality_score(df)
     feats = scored.select(
         F.col("alpha_ratio").alias("x1"),
         F.col("punct_ratio").alias("x2"),
         F.col("stopword_ratio").alias("x3"),
-        (F.col("quality_score") >= float(label_threshold))
+        (F.col("quality_score") >= 0.75)
         .cast("double")
         .alias("y"),
     )
@@ -993,7 +967,7 @@ def quality_logreg_train(
         n = int(g["n"])
         w = [
             _snap_away(
-                w[j] - float(lr) * (int(g[f"g{j}"]) / 1e6 / n), snap_nd
+                w[j] - float(lr) * (int(g[f"g{j}"]) / 1e6 / n), 9
             )
             for j in range(4)
         ]

@@ -23,11 +23,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 def shift_time(
     df: DataFrame,
-    time_col: str = "time",
     shift_seconds: float = 0.0,
     clock_error: float | None = None,
     clock_drift: float | None = None,
-    series_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Apply burst-center shift, ClockError, and linear ClockDrift ramp.
 
@@ -39,14 +37,14 @@ def shift_time(
          rounded to 1 s (the drift ramp is the only fractional part).
     In long form the linspace fraction is (row_number−1)/(count−1).
     """
-    t = F.col(time_col)
+    t = F.col("time")
     whole = int(shift_seconds) - int(clock_error or 0)
     out = df
     if whole:
         t = t + F.make_dt_interval(secs=F.lit(whole))
     if clock_drift:
-        w = Window.partitionBy(*[F.col(c) for c in series_cols]).orderBy(time_col)
-        wall = Window.partitionBy(*[F.col(c) for c in series_cols])
+        w = Window.orderBy("time")
+        wall = Window.partitionBy()
         frac = (F.row_number().over(w) - F.lit(1)).cast("double") / F.greatest(
             F.count(F.lit(1)).over(wall) - F.lit(1), F.lit(1)
         )
@@ -58,16 +56,14 @@ def shift_time(
             # on the .5 s ties a drift ramp produces — bround
             F.bround(shifted_us.cast("double") / 1e6, 0).cast("long")
         )
-    return out.withColumn(time_col, t)
+    return out.withColumn("time", t)
 
 
 def burst_keys(
     df: DataFrame,
     time_col: str = "time",
     interval_seconds: int = 3600,
-    series_cols: Sequence[str] = (),
     burst_col: str = "burst_time",
-    sample_col: str = "sample",
     tiebreak_col: str | None = None,
     start_offset_seconds: int = 0,
 ) -> DataFrame:
@@ -75,7 +71,7 @@ def burst_keys(
 
     Continuous→burst reshape (waves.py:2037-2091) without any physical
     reshape: burst_time = tumbling-window start, sample = 0-based index
-    within the window. One shuffle on (series, burst window), shared by
+    within the window. One shuffle on the burst window, shared by
     every downstream per-burst operator. ``tiebreak_col`` stabilizes the
     within-window order when timestamps repeat (burst-header formats
     stamp all samples with the burst start time);
@@ -90,18 +86,14 @@ def burst_keys(
     )
     out = df.withColumn(burst_col, win.start)
     order = [F.col(time_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    w = Window.partitionBy(*[F.col(c) for c in series_cols], F.col(burst_col)).orderBy(
-        *order
-    )
-    return out.withColumn(sample_col, F.row_number().over(w) - 1)
+    w = Window.partitionBy(F.col(burst_col)).orderBy(*order)
+    return out.withColumn("sample", F.row_number().over(w) - 1)
 
 
-def wave_duration_trim(
-    df: DataFrame, nsamps: int, sample_col: str = "sample"
-) -> DataFrame:
+def wave_duration_trim(df: DataFrame, nsamps: int) -> DataFrame:
     """Truncate each burst to its first nsamps samples
     (rsk/nc2waves.py:33-42)."""
-    return df.filter(F.col(sample_col) < F.lit(int(nsamps)))
+    return df.filter(F.col("sample") < F.lit(int(nsamps)))
 
 
 def fill_time_gaps(
@@ -143,7 +135,6 @@ def avg_tide_bursts(
     interval_samples: int,
     avg_samples: int,
     interval_seconds: float,
-    series_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Seagauge tide product (sg/cdf2nc.py:147-230 avg_tide_bursts): each
     pressure burst of ``samples_per_burst`` samples is subdivided into
@@ -165,7 +156,7 @@ def avg_tide_bursts(
     import math as _math
 
     rows = _math.ceil(samples_per_burst / interval_samples)
-    keys = [*series_cols, burst_col]
+    keys = [burst_col]
 
     s = df.filter(F.col(sample_col) < samples_per_burst).withColumn(
         "__tide", (F.col(sample_col) / interval_samples).cast("int")
@@ -193,7 +184,6 @@ def avg_tide_bursts(
         + F.col("__tide").cast("long") * F.lit(int(interval_seconds * 1_000_000))
     )
     return out.select(
-        *series_cols,
         tide_time.alias("time"),
         *[F.col(v) for v in value_cols],
     )
@@ -264,13 +254,7 @@ def burst_nan_fill(
     return df.withColumn(value_col, filled)
 
 
-def sessionize(
-    df: DataFrame,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    order_cols: Sequence[str] = ("event_id",),
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Gap-based sessionization (the event-analytics reshape run before
     per-visit rollups): a silence longer than ``gap_seconds`` starts a
     new per-user session. Emits one row per event with an ordinal
@@ -278,12 +262,12 @@ def sessionize(
     aggregate to per-session stats (see queries.ts_sessionize for the
     oracle-checked rollup).
 
-    One window over (user, time[, tiebreakers]) — a single series
+    One window over (user, time, event_id) — a single series
     exchange, the same shape the QA/QC diff rules share — so at 100 TB
     this is one shuffle keyed by user, with AQE handling hot users.
     """
-    w = Window.partitionBy(user_col).orderBy(time_col, *order_cols)
-    us = F.unix_micros(F.col(time_col))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts"))
     gap = us - F.lag(us).over(w)
     is_new = F.when(
         gap.isNull() | (gap > int(gap_seconds) * 1_000_000), F.lit(1)
@@ -296,16 +280,12 @@ def sessionize(
         )
         .withColumn(
             "__user_min_us",
-            F.min("__us").over(Window.partitionBy(user_col)),
+            F.min("__us").over(Window.partitionBy("user_id")),
         )
     )
 
 
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    value_col: str | None = "value",
-) -> DataFrame:
+def session_stats(df: DataFrame, value_col: str | None = "value") -> DataFrame:
     """Per-session rollup over a ``sessionize`` frame: event count,
     ABSOLUTE session start (``start_us``, epoch-µs — the column users
     key dashboards on), start relative to the user's first event
@@ -324,7 +304,7 @@ def session_stats(
         ).cast("long")
         aggs.append(F.sum(cents).alias("value_cents"))
     return (
-        df.groupBy(user_col, "session_id")
+        df.groupBy("user_id", "session_id")
         .agg(*aggs)
         .withColumn("session_id", F.col("session_id").cast("int"))
     )
@@ -334,8 +314,6 @@ def subdivide_bursts(
     df: DataFrame,
     samples_per_subburst: int,
     sub_interval_seconds: float,
-    burst_col: str = "burst_time",
-    sample_col: str = "sample",
 ) -> DataFrame:
     """Split long recorded bursts into smaller analysis bursts — the
     Seagauge ``average_wave_interval`` reshape (sg/wvsnc2waves.py:59-108
@@ -351,15 +329,15 @@ def subdivide_bursts(
     downstream spectral kernels' min-sample gates then reject —
     graceful superset, never silently different numbers."""
     n = int(samples_per_subburst)
-    sub = (F.col(sample_col) / n).cast("long")
+    sub = (F.col("sample") / n).cast("long")
     return df.withColumns(
         {
-            burst_col: F.timestamp_seconds(
-                F.col(burst_col).cast("double")
+            "burst_time": F.timestamp_seconds(
+                F.col("burst_time").cast("double")
                 + sub * float(sub_interval_seconds)
             ),
-            sample_col: F.pmod(F.col(sample_col), F.lit(n)).cast(
-                df.schema[sample_col].dataType.simpleString()
+            "sample": F.pmod(F.col("sample"), F.lit(n)).cast(
+                df.schema["sample"].dataType.simpleString()
             ),
         }
     )
@@ -447,39 +425,24 @@ def average_tide_bursts(
     )
 
 
-def interpolate_na_time(
-    df: DataFrame,
-    value_col: str,
-    time_col: str = "time",
-    by: Sequence[str] = (),
-) -> DataFrame:
+def interpolate_na_time(df: DataFrame, value_col: str) -> DataFrame:
     """Linear time interpolation of nulls — xarray's
     ``interpolate_na(dim="time")`` with its defaults (the sonar height
     series, son/cdf2nc.py:27): a null between two valid samples takes
     the time-weighted linear blend; leading/trailing nulls STAY null
     (xarray does not extrapolate without fill_value). Window
     expressions over the existing time order — last/first non-null
-    value-and-stamp on each side, one projection, no shuffle beyond
-    the (optional) ``by`` partitioning."""
-    by = list(by)
-    w_prev = (
-        Window.partitionBy(*by)
-        .orderBy(time_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_next = (
-        Window.partitionBy(*by)
-        .orderBy(time_col)
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
+    value-and-stamp on each side, one projection over the time order."""
+    w_prev = Window.orderBy("time").rowsBetween(Window.unboundedPreceding, 0)
+    w_next = Window.orderBy("time").rowsBetween(0, Window.unboundedFollowing)
     v = F.col(value_col)
     stamped = F.when(
         v.isNotNull(),
-        F.struct(F.col(time_col).cast("double").alias("t"), v.alias("x")),
+        F.struct(F.col("time").cast("double").alias("t"), v.alias("x")),
     )
     prev = F.last(stamped, ignorenulls=True).over(w_prev)
     nxt = F.first(stamped, ignorenulls=True).over(w_next)
-    t = F.col(time_col).cast("double")
+    t = F.col("time").cast("double")
     frac = (t - prev["t"]) / (nxt["t"] - prev["t"])
     filled = F.when(v.isNotNull(), v).otherwise(
         F.when(

@@ -237,7 +237,6 @@ def transform_velocities(
     heading_col: str = "Heading",
     pitch_col: str = "Pitch",
     roll_col: str = "Roll",
-    out_cols: Sequence[str] = ("u_1205", "v_1206", "w_1204"),
 ) -> DataFrame:
     """Config-driven coordinate transform + magvar rotation, mirroring the
     cdf2nc velocity path (aqd/cdf2nc.py:60-80): BEAM or XYZ → ENU, then
@@ -258,7 +257,7 @@ def transform_velocities(
     magvar = float(config.get("magnetic_variation", 0.0) or 0.0)
     u, v = magvar_rotate(enu[0], enu[1], magvar) if magvar else (enu[0], enu[1])
     return (
-        df.withColumn(out_cols[0], u)
-        .withColumn(out_cols[1], v)
-        .withColumn(out_cols[2], enu[2])
+        df.withColumn("u_1205", u)
+        .withColumn("v_1206", v)
+        .withColumn("w_1204", enu[2])
     )

@@ -39,9 +39,7 @@ def trim_vel(
     df: DataFrame,
     config: dict[str, Any],
     data_vars: list[str] | None = None,
-    bindist_col: str = "bindist",
     pressure_col: str | None = None,
-    brange_col: str | None = None,
 ) -> DataFrame:
     """Side-lobe / water-level / boundary-range bin trimming
     (aqdutils.py:435-658).
@@ -67,7 +65,7 @@ def trim_vel(
     orientation = (config.get("orientation") or "UP").upper()
     beam = float(config.get("beam_angle", 25.0))
     cosb = math.cos(math.radians(beam))
-    bd = F.col(bindist_col)
+    bd = F.col("bindist")
 
     if method == "bin range":
         lo, hi = config["good_bins"]
@@ -103,7 +101,7 @@ def trim_vel(
         if method in ("inst_ht", "inst_ht sl"):
             r: Column = F.lit(float(config["initial_instrument_height"]))
         else:
-            r = F.col(brange_col or "brange")
+            r = F.col("brange")
         if method in ("brange", "inst_ht"):
             keep = bd < r
         elif method in ("brange sl", "inst_ht sl"):
@@ -117,7 +115,6 @@ def trim_vel(
 def drop_all_null_tail_bins(
     df: DataFrame,
     var: str,
-    bindist_col: str = "bindist",
     time_col: str = "time",
 ) -> DataFrame:
     """Last-good-bin truncate (aqdutils.py:638-650): find the FIRST bin (in
@@ -125,17 +122,17 @@ def drop_all_null_tail_bins(
     bin and everything beyond it. One tiny per-bin aggregation (≤ hundreds
     of groups) joined back as a broadcast filter."""
     per_bin = (
-        df.groupBy(bindist_col)
+        df.groupBy("bindist")
         .agg(F.max(F.col(var).isNotNull().cast("int")).alias("__any_valid"))
     )
     first_bad = per_bin.filter(F.col("__any_valid") == 0).agg(
-        F.min(bindist_col).alias("__cut")
+        F.min("bindist").alias("__cut")
     )
     # broadcast the 1-row scalar instead of collecting it: keeps the plan
     # lazy/composable and off the driver
     return (
         df.crossJoin(F.broadcast(first_bad))
-        .filter(F.col("__cut").isNull() | (F.col(bindist_col) < F.col("__cut")))
+        .filter(F.col("__cut").isNull() | (F.col("bindist") < F.col("__cut")))
         .drop("__cut")
     )
 
@@ -213,20 +210,19 @@ def fill_vbper(
     df: DataFrame,
     config: dict[str, Any],
     variables: Sequence[str] = ("Depth", "Stage", "Area", "Range"),
-    vbper_col: str = "VbPercentGood",
 ) -> DataFrame:
     """Vertical-beam percent-good gate (iq.py:711-741 fill_vbper): null
     stage/area/range/depth where VbPercentGood fails the
     ``vbper_threshold`` config. Keep-condition is strictly-greater, as in
     the reference's ``.where(ds.VbPercentGood > threshold)``."""
     thr = config.get("vbper_threshold")
-    if thr is None or vbper_col not in df.columns:
+    if thr is None or "VbPercentGood" not in df.columns:
         return df
-    keep = F.col(vbper_col) > F.lit(float(thr))
+    keep = F.col("VbPercentGood") > F.lit(float(thr))
     return _null_unless(df, keep, [v for v in variables if v in df.columns])
 
 
-def puv_qaqc(df: DataFrame, config: dict[str, Any] | None = None) -> DataFrame:
+def puv_qaqc(df: DataFrame) -> DataFrame:
     """PUV direction QA (core/waves.py:1831-1836 puv_qaqc): null the wave
     direction/azimuth estimates wherever the tail-spliced RMS height is
     null (no valid spectral tail → no trustworthy direction)."""

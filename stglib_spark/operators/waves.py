@@ -500,12 +500,12 @@ def make_puv_kernel(
     return apply_fn
 
 
-def make_puv_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
+def make_puv_ds(df: DataFrame, config: dict) -> DataFrame:
     """Distributed PUV (wrapper semantics of waves.py:1847-1989 /
     sig/nc2waves.py:550-599): shuffle on burst key, ``make_puv_kernel``
     (puv_quick per burst) in Arrow batches."""
-    slim = df.select(BURST, SAMPLE, pressure_col, "u_1205", "v_1206")
-    kernel = make_puv_kernel(config, pressure_col)
+    slim = df.select(BURST, SAMPLE, "P_1ac", "u_1205", "v_1206")
+    kernel = make_puv_kernel(config)
     return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(kernel, puv_schema())
 
 

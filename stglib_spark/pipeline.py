@@ -33,10 +33,18 @@ from stglib_spark.session import read_parquet
 from stglib_spark.sources import ingest
 
 
+def _output_path(config: dict[str, Any], suffix: str) -> str:
+    """``<output_dir>/<filename><suffix>``: every zone and product lands
+    here. ``output_dir`` defaults to the working directory, where the
+    reference's ``runots`` writes its products."""
+    return os.path.join(
+        config.get("output_dir") or os.getcwd(),
+        config.get("filename", "deployment") + suffix,
+    )
+
+
 def _zone_path(config: dict[str, Any], zone: str) -> str:
-    base = config.get("output_dir", "/root/repo/.tmp/zones")
-    name = config.get("filename", "deployment")
-    return os.path.join(base, f"{name}_{zone}")
+    return _output_path(config, f"_{zone}")
 
 
 def _write_zone(
@@ -983,10 +991,7 @@ def export_diwasp_spec(spark: SparkSession, config: dict[str, Any]) -> str:
     xaxisdir = float(
         config.get("diwasp_xdir", config.get("diwasp_xaxisdir", 90.0))
     )
-    out_dir = os.path.join(
-        config.get("output_dir", "/root/repo/.tmp/zones"),
-        config.get("filename", "deployment") + "_spec",
-    )
+    out_dir = _output_path(config, "_spec")
     os.makedirs(out_dir, exist_ok=True)
     name = config.get("filename", "deployment")
     for r in rows:
@@ -1007,7 +1012,7 @@ def run_export_nc(
     """Export a Parquet zone as a CF netCDF file — the reference's final
     output contract (``<filename>-a.nc`` / ``s-a.nc``, core/utils.py:352-
     749 attribute layer; write + compliance check rsk/cdf2nc.py:127-148).
-    Works without xarray via the classic-nc3 writer; global attributes
+    Written by the classic-nc3 writer; global attributes
     come from the merged gatts+YAML config (write_metadata semantics,
     utils.py:831-853) plus the standard CF trio, and the zone's history
     sidecar becomes the ``history`` attribute."""
@@ -1047,10 +1052,7 @@ def run_export_nc(
         "waves": "s-a.nc",
         "diwasp": "s_diwasp-a.nc",
     }.get(zone, f"-{zone}.nc")
-    out = os.path.join(
-        config.get("output_dir", "/root/repo/.tmp/zones"),
-        config.get("filename", "deployment") + suffix,
-    )
+    out = _output_path(config, suffix)
     write_netcdf(df, out, attrs=gattrs)
     return out
 

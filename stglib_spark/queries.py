@@ -11082,12 +11082,12 @@ def wave_dftm_plane_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("burst", "dir_deg", _r6("s").alias("s"))
 
 
-def _imlm_oracle_sql(miter: int = 50, gamma: float = 0.1, alpha: float = 0.1) -> str:
+def _imlm_oracle_sql() -> str:
     """Generate the DuckDB replay of the IMLM relaxation (the filtfilt
     playbook scaled up): the Spark side runs the REAL iterated-maximum-
     likelihood estimator (functions.diwasp.imlm, reference
     lib/pyDIWASP/private/IMLM.py) at the production default iteration
-    count; the oracle unrolls the same ``miter`` relaxation steps as
+    count; the oracle unrolls the same 50 relaxation steps (γ = α = 0.1) as
     chained CTEs. With co-located sensors (kx = 0) and the real transfer
     vectors h(θ) = [1, cosθ, sinθ], every quantity in the algorithm is
     REAL, and each iteration is exactly: six window-sums building the
@@ -11138,14 +11138,14 @@ def _imlm_oracle_sql(miter: int = 50, gamma: float = 0.1, alpha: float = 0.1) ->
       FROM eo_raw
     )"""
     ]
-    for k in range(1, miter + 1):
+    for k in range(1, 51):
         ctes.append(
             f"""s{k} AS (
       SELECT burst, dir_deg, c, s, ss0, eo,
              en / ({dd} * sum(en) OVER (PARTITION BY burst)) AS e,
              t AS t_old
       FROM (
-        SELECT *, e + {gamma} * ((eo - t) + {alpha} * (t - t_old)) AS en
+        SELECT *, e + 0.1 * ((eo - t) + 0.1 * (t - t_old)) AS en
         FROM (
           SELECT *, t_raw / ({dd} * sum(t_raw) OVER (PARTITION BY burst)) AS t
           FROM (
@@ -11175,7 +11175,7 @@ def _imlm_oracle_sql(miter: int = 50, gamma: float = 0.1, alpha: float = 0.1) ->
     fin AS (
       SELECT burst, dir_deg, ss0,
              CASE WHEN isfinite(e) AND e >= 0 THEN e ELSE 0.0 END AS er
-      FROM s{miter}
+      FROM s50
     )
     SELECT burst, dir_deg,
            round(ss0 * er / ({dd} * sum(er) OVER (PARTITION BY burst)), 6) AS s
@@ -13659,8 +13659,8 @@ def corpus_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.kmv_distinct(toks, "tok", ["source"], k=64, seed="kmv1")
 
 
-def _hll_oracle_sql(p: int = 8, seed: str = "hll") -> str:
-    """DuckDB replay of hll_registers + hll_estimate at precision ``p``:
+def _hll_oracle_sql() -> str:
+    """DuckDB replay of hll_registers + hll_estimate at precision 8:
     the same md5 hash60 chain, top-p-bit bucket, length(bin(rem))
     leading-zero rank (both engines print minimal binary), the exact
     decimal(38,0) floor division for the raw estimate, and the SAME
@@ -13668,7 +13668,7 @@ def _hll_oracle_sql(p: int = 8, seed: str = "hll") -> str:
     either engine."""
     import math
 
-    m, w = 1 << p, 60 - p
+    m, w = 1 << 8, 60 - 8
     a_num, a_den = 7213 * m, 10 * (1000 * m + 1079)
     num = a_num * m * m * (1 << (w + 1))
     mask = (1 << w) - 1
@@ -13680,7 +13680,7 @@ def _hll_oracle_sql(p: int = 8, seed: str = "hll") -> str:
     t AS (SELECT source, unnest(string_split(nt, ' ')) AS tok
           FROM norm WHERE nt <> ''),
     h AS (SELECT source,
-                 (('0x' || substring(md5('{seed}' || tok), 1, 15))
+                 (('0x' || substring(md5('hll' || tok), 1, 15))
                   ::UBIGINT)::BIGINT AS hh,
                  tok
           FROM t),
@@ -14279,7 +14279,7 @@ def _winnow_hs_terms(k: int = 15) -> str:
     )
 
 
-def _winnow_ctes(k: int = 15, w: int = 8) -> str:
+def _winnow_ctes() -> str:
     """Winnowing replay shared by the fingerprint and candidate-pair
     oracles: Karp–Rabin per-position polynomial (congruent to the
     engine's per-step/rolling fold mod 2^31−1; max term ≈
@@ -14287,7 +14287,7 @@ def _winnow_ctes(k: int = 15, w: int = 8) -> str:
     window-of-``w`` minima via ROWS BETWEEN, distinct selected values.
     Full windows only — when a doc has < w hashes the first row's
     truncated window is already the global minimum."""
-    M = 2147483647
+    k, w, M = 15, 8, 2147483647
     terms = _winnow_hs_terms(k)
     return f"""
     WITH hs AS (
@@ -14469,7 +14469,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_pos_ctes(k: int = 15, w: int = 8) -> str:
+def _winnow_pos_ctes() -> str:
     """Position-carrying winnowing replay (`text.
     winnow_fingerprint_positions`): same per-position Karp–Rabin
     polynomial, but the window minimum is taken over the packed key
@@ -14477,7 +14477,7 @@ def _winnow_pos_ctes(k: int = 15, w: int = 8) -> str:
     occurrence of the minimal hash — so the selected (fp, pos) pairs
     replay the engine's tie-break bit-for-bit. Key < (M−1)·2^32 + i,
     inside int64 for any document under 2^33 chars."""
-    M = 2147483647
+    k, w, M = 15, 8, 2147483647
     terms = _winnow_hs_terms(k)
     return f"""
     WITH hs AS (
@@ -14501,7 +14501,7 @@ def _winnow_pos_ctes(k: int = 15, w: int = 8) -> str:
     )"""
 
 
-_WINNOW_SPAN_GAP = 15 + 8 - 1  # max_gap default = w + k − 1
+_WINNOW_SPAN_GAP = 15 + 8 - 1  # winnow_match_spans' run break, w + k − 1
 
 # Shared by the span and span-excision oracles: positions → df-cut →
 # position cap → diagonal islands → spans (1-based inclusive offsets).

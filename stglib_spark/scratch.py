@@ -29,13 +29,15 @@ _BASE = os.path.join(tempfile.gettempdir(), "stglib_spark_scratch")
 _SESSION_ROOT: str | None = None
 
 
-def _pid_alive(pid: int) -> bool:
+def _pid_alive(pid: int | str) -> bool:
+    """False for a dead or malformed pid; True for a live one, also one
+    owned by someone else (leave it alone)."""
     try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
+        os.kill(int(pid), 0)
+    except (ValueError, ProcessLookupError):
         return False
     except PermissionError:
-        return True  # exists, owned by someone else — leave it alone
+        return True
     return True
 
 

@@ -20,6 +20,8 @@ import sys
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 
+from stglib_spark.scratch import _pid_alive
+
 logger = logging.getLogger(__name__)
 
 TABLES = (
@@ -307,16 +309,6 @@ def _archive_key(spark_home: str) -> str | None:
     except OSError:
         return None
     return digest.hexdigest()[:16]
-
-
-def _pid_alive(pid: str) -> bool:
-    try:
-        os.kill(int(pid), 0)
-    except (ValueError, ProcessLookupError):
-        return False
-    except PermissionError:
-        return True
-    return True
 
 
 def _size(path: str | None) -> str | None:

@@ -162,9 +162,7 @@ def read_abss(
     return spark.createDataFrame(rdd, ABSS_SCHEMA)
 
 
-def read_abss_aux(
-    spark: SparkSession, path: str, config: dict[str, Any] | None = None
-) -> DataFrame:
+def read_abss_aux(spark: SparkSession, path: str) -> DataFrame:
     """Auxiliary channels → (time, burst_number, aux_sample_number,
     <channels...>) frame; units ride as column metadata."""
     from stglib_spark.attrs import apply_var_attrs

@@ -39,8 +39,6 @@ def read_jsonl_corpus(
     path: str,
     text_field: str = "text",
     id_field: str | None = None,
-    source_field: str | None = "source",
-    schema: StructType | None = None,
 ) -> DataFrame:
     """jsonl[.gz] at ``path`` (file, directory, or glob) → canonical
     documents frame (doc_id bigint, text, source, n_chars).
@@ -52,15 +50,12 @@ def read_jsonl_corpus(
     rows are dropped (they carry nothing any downstream operator can
     use); ``source`` falls back to the input file name."""
     raw = (
-        spark.read.schema(schema or JSONL_SCHEMA)
+        spark.read.schema(JSONL_SCHEMA)
         .json(path)
         .withColumn("__file", F.input_file_name())
     )
     raw = raw.filter(F.col(text_field).isNotNull())
-    if source_field and source_field in raw.columns:
-        src = F.coalesce(F.col(source_field), F.col("__file"))
-    else:
-        src = F.col("__file")
+    src = F.coalesce(F.col("source"), F.col("__file"))
     if id_field:
         ident = F.col(id_field)
         doc_id = (

@@ -32,19 +32,15 @@ def flatten_mat(variables: dict[str, Any]) -> dict[str, Any]:
     return out
 
 
-def read_mat(
-    spark: SparkSession, path: str, columns: list[str] | None = None
-) -> DataFrame:
+def read_mat(spark: SparkSession, path: str) -> DataFrame:
     """Read a .mat vendor export → long DataFrame.
 
     Array variables sharing the longest leading dimension become columns
     (one row per index); everything else (scalars, strings) is attached as
-    constant metadata columns. ``columns`` restricts the selection."""
+    constant metadata columns."""
     from stglib_spark.functions.mat5 import loadmat
 
     flat = flatten_mat(loadmat(path))
-    if columns:
-        flat = {k: v for k, v in flat.items() if k in columns}
 
     arrays: dict[str, np.ndarray] = {}
     scalars: dict[str, Any] = {}

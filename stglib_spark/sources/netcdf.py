@@ -3,12 +3,11 @@
 The reference's inter-stage format is netCDF (``-raw.cdf`` / ``b.nc``);
 this engine's inter-stage format is Parquet (SURVEY §7.1 three-zone
 design), with netCDF only at the edges for interop with existing stglib
-consumers. When xarray/netCDF4 are installed they are used directly;
-otherwise the pure-Python classic netCDF-3 codec
-(:mod:`stglib_spark.functions.netcdf3`) keeps both directions working —
-the same CF attribute layer (units/long_name/standard_name per variable,
-global Conventions/title/history, ``core/utils.py:352-749``) rides as
-column metadata either way.
+consumers. Both directions go through the pure-Python classic netCDF-3
+codec (:mod:`stglib_spark.functions.netcdf3`); the CF attribute layer
+(units/long_name/standard_name per variable, global
+Conventions/title/history, ``core/utils.py:352-749``) rides as column
+metadata.
 """
 
 from __future__ import annotations
@@ -75,26 +74,11 @@ def _decode_cf_time(values: "np.ndarray", units: str) -> list:
     return [epoch + dt.timedelta(seconds=float(v) * scale) for v in values]
 
 
-def _have_xarray():
-    try:
-        import xarray
-
-        return xarray
-    except ImportError:
-        return None
-
-
 @register_adapter("netcdf")
 def read_netcdf(spark: SparkSession, path: str, config: dict[str, Any]) -> DataFrame:
     """netCDF → DataFrame via a driver-side load (edge-only; fine for the
-    reference's single-deployment file sizes). xarray when available,
-    else the classic-netCDF3 codec."""
-    xr = _have_xarray()
-    if xr is not None:
-        ds = xr.open_dataset(path)
-        pdf = ds.to_dataframe().reset_index()
-        return spark.createDataFrame(pdf)
-
+    reference's single-deployment file sizes) with the classic-netCDF3
+    codec."""
     from stglib_spark.functions.netcdf3 import read_nc3
 
     nc = read_nc3(path)
@@ -152,7 +136,6 @@ def write_netcdf(
     df: DataFrame,
     path: str,
     attrs: dict[str, Any] | None = None,
-    profile_cols: set[str] | None = None,
 ) -> None:
     """DataFrame → CF netCDF (export edge; collect-to-driver is acceptable
     only for final per-deployment products, mirroring the reference's
@@ -160,28 +143,13 @@ def write_netcdf(
     ``stglib_spark.attrs.apply_var_attrs`` becomes per-variable netCDF
     attributes. Long-form profile frames (a ``bin`` index column +
     ``bindist`` axis) pivot back to 2-D (time, bindist) variables, the
-    reference's native shape. ``profile_cols`` pins which columns are 2-D;
-    without it the writer infers from the data (a column whose values vary
-    across bins for some timestamp), which is deterministic for a given
-    frame but can demote a bin-constant profile — pass the set explicitly
-    when downstream readers require a stable shape."""
-    xr = _have_xarray()
+    reference's native shape. A column is 2-D when its values vary across
+    bins for some timestamp — deterministic for a given frame, though a
+    bin-constant profile exports 1-D."""
     from stglib_spark.attrs import collect_var_attrs
 
     var_attrs = collect_var_attrs(df)
-    pdf = df.toPandas()
-
-    if xr is not None:
-        ds = xr.Dataset.from_dataframe(pdf.set_index("time"))
-        ds.attrs.update(attrs or {})
-        for var, meta in var_attrs.items():
-            if var in ds:
-                ds[var].attrs.update(meta)
-            elif var in ds.coords:
-                ds[var].attrs.update(meta)
-        ds.to_netcdf(path, unlimited_dims=["time"])
-    else:
-        _write_netcdf3(pdf, path, var_attrs, attrs or {}, profile_cols)
+    _write_netcdf3(df.toPandas(), path, var_attrs, attrs or {})
 
     # post-write CF check, like the reference's check_compliance call
     # after every nc write (rsk/cdf2nc.py:148); non-fatal by design
@@ -195,7 +163,6 @@ def _write_netcdf3(
     path: str,
     var_attrs: dict[str, dict[str, Any]],
     global_attrs: dict[str, Any],
-    profile_cols: set[str] | None = None,
 ) -> None:
     from stglib_spark.functions.netcdf3 import write_nc3
 
@@ -229,13 +196,10 @@ def _write_netcdf3(
                 isinstance(v, str) for v in series
             ):
                 continue  # array columns are not representable in classic nc3
-            if profile_cols is not None:
-                is_2d = col in profile_cols and series.dtype != object
-            else:
-                per_time_count = piv.groupby("time", sort=True)[col].nunique(
-                    dropna=False
-                )
-                is_2d = series.dtype != object and (per_time_count > 1).any()
+            per_time_count = piv.groupby("time", sort=True)[col].nunique(
+                dropna=False
+            )
+            is_2d = series.dtype != object and (per_time_count > 1).any()
             if is_2d:
                 mat = (
                     piv.pivot_table(index="time", columns="bin", values=col,

@@ -584,17 +584,13 @@ def read_pd0_bt(spark: SparkSession, path: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def encode_pd0(
-    ensembles: list[dict[str, Any]],
-    ncells: int = 4,
-    nbeams: int = 4,
-    cell_len_cm: int = 100,
-    bin1_cm: int = 150,
-) -> bytes:
+def encode_pd0(ensembles: list[dict[str, Any]], ncells: int = 4) -> bytes:
     """Minimal spec-conformant PD0 byte stream: fixed + variable leader,
-    velocity, correlation, echo, percent-good per ensemble (checksummed).
-    The in-memory core of write_pd0, reusable for synthesized payloads
-    (src_pd0_roundtrip drives the real parser over it)."""
+    velocity, correlation, echo, percent-good per ensemble (checksummed),
+    4 beams, 1 m cells, first bin at 1.5 m. The in-memory core of
+    write_pd0, reusable for synthesized payloads (src_pd0_roundtrip
+    drives the real parser over it)."""
+    nbeams = 4
     out = bytearray()
     for e in ensembles:
         fixed = bytearray(59)
@@ -611,10 +607,10 @@ def encode_pd0(
             nbeams,
             ncells,
             1,
-            cell_len_cm,
+            100,  # cell length, cm
             88,
         )
-        struct.pack_into("<H", fixed, 32, bin1_cm)
+        struct.pack_into("<H", fixed, 32, 150)  # bin 1 distance, cm
 
         var = bytearray(65)
         t = e["time"]
@@ -773,10 +769,7 @@ def write_pd0(
     path: str,
     ensembles: list[dict[str, Any]],
     ncells: int = 4,
-    nbeams: int = 4,
-    cell_len_cm: int = 100,
-    bin1_cm: int = 150,
 ) -> None:
     """Write a minimal spec-conformant PD0 file (see encode_pd0)."""
     with open(path, "wb") as f:
-        f.write(encode_pd0(ensembles, ncells, nbeams, cell_len_cm, bin1_cm))
+        f.write(encode_pd0(ensembles, ncells))

@@ -95,15 +95,15 @@ def _truthy(cfg: dict, key: str) -> bool:
     return bool(np.asarray(v).ravel()[0])
 
 
-def _scalar(cfg: dict, key: str, default: float | None = None) -> float | None:
+def _scalar(cfg: dict, key: str) -> float | None:
     v = cfg.get(key)
     if v is None:
-        return default
+        return None
     if isinstance(v, str):
         try:
             return float(v)
         except ValueError:
-            return default
+            return None
     return float(np.asarray(v).ravel()[0])
 
 

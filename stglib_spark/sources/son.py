@@ -280,10 +280,10 @@ def encode_81r(scans: list[dict[str, Any]], data_bits: int = 8) -> bytes:
     return bytes(out)
 
 
-def write_81r(path: str, scans: list[dict[str, Any]], data_bits: int = 8) -> None:
+def write_81r(path: str, scans: list[dict[str, Any]]) -> None:
     """File-based .81R fixture writer (round-trip tests)."""
     with open(path, "wb") as f:
-        f.write(encode_81r(scans, data_bits=data_bits))
+        f.write(encode_81r(scans))
 
 
 def assign_sweep_sets(df: DataFrame) -> DataFrame:

@@ -56,10 +56,10 @@ def _named_csv(
     )
 
 
-def _keep_timed(df: DataFrame, tcol: str = "time") -> DataFrame:
+def _keep_timed(df: DataFrame) -> DataFrame:
     """Drop preamble/header/footer rows: anything whose time failed to
     parse. Distributed equivalent of pandas skiprows/skipfooter."""
-    return df.filter(F.col(tcol).isNotNull())
+    return df.filter(F.col("time").isNotNull())
 
 
 def _cast_doubles(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -3,7 +3,7 @@
 The reference attaches units/standard_name/epic_code to every output
 variable; our carrier is StructField.metadata. These tests assert the
 attrs survive apply → parquet round-trip → collect, and that the netCDF
-edge adapter copies them onto xarray variables when xarray is present.
+edge adapter copies them onto the exported file's variables.
 """
 
 import os
@@ -45,9 +45,10 @@ def test_apply_collect_roundtrip(spark, tmp_path):
 
 
 def test_netcdf_export_carries_attrs(spark, tmp_path):
-    """Export works with or without xarray (pure classic-nc3 fallback)."""
+    """The classic-nc3 export carries global and per-variable attrs."""
     import datetime
 
+    from stglib_spark.functions.netcdf3 import read_nc3
     from stglib_spark.sources.netcdf import write_netcdf
 
     rows = [
@@ -58,21 +59,10 @@ def test_netcdf_export_carries_attrs(spark, tmp_path):
     )
     path = os.path.join(tmp_path, "out.nc")
     write_netcdf(df, path, attrs={"MOORING": "1076"})
-    try:
-        import xarray as xr
-
-        ds = xr.open_dataset(path)
-        gattrs = dict(ds.attrs)
-        p1 = dict(ds["P_1"].attrs)
-        t28 = dict(ds["T_28"].attrs)
-        ds.close()
-    except ImportError:
-        from stglib_spark.functions.netcdf3 import read_nc3
-
-        nc = read_nc3(path)
-        gattrs = nc["attrs"]
-        p1 = nc["variables"]["P_1"]["attrs"]
-        t28 = nc["variables"]["T_28"]["attrs"]
+    nc = read_nc3(path)
+    gattrs = nc["attrs"]
+    p1 = nc["variables"]["P_1"]["attrs"]
+    t28 = nc["variables"]["T_28"]["attrs"]
     assert gattrs["MOORING"] == "1076"
     assert p1["units"] == "dbar"
     assert t28["standard_name"] == "sea_water_temperature"

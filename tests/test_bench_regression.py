@@ -4,11 +4,13 @@ threshold flags, crashed-run rejection."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 from bench_regression import compare, load_bench, main
 
 
@@ -91,7 +93,7 @@ def test_purge_and_import_swaps_checkouts(tmp_path):
 
     from bench_regression import _purge_and_import
 
-    repo = "/root/repo"
+    repo = REPO
     wt = str(tmp_path / "wt")
     saved_modules = {
         m: mod

@@ -13,12 +13,13 @@ import pytest
 
 from stglib_spark.__main__ import main
 
-TMP = "/root/repo/.tmp/cli_test"
+@pytest.fixture(scope="module")
+def tmp_dir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("cli_test"))
 
 
 @pytest.fixture(scope="module")
-def cli_fixture(spark):
-    os.makedirs(TMP, exist_ok=True)
+def cli_fixture(spark, tmp_dir):
     # small continuous scalar series (6 h at 1 min) with one spike
     t0 = pd.Timestamp("2024-06-01 00:00:00")
     rows = [
@@ -30,19 +31,18 @@ def cli_fixture(spark):
         for i in range(360)
     ]
     rows.insert(0, {"Time": "2024-05-30 00:00:00.000", "Pressure": 0.0, "Temperature": 0.0})
-    pd.DataFrame(rows).to_csv(os.path.join(TMP, "in.csv"), index=False)
+    pd.DataFrame(rows).to_csv(os.path.join(tmp_dir, "in.csv"), index=False)
 
-    with open(os.path.join(TMP, "gatts.txt"), "w") as f:
+    with open(os.path.join(tmp_dir, "gatts.txt"), "w") as f:
         f.write("MOORING; 9999\n")
         f.write("Deployment_date; 2024-06-01 00:00:00\n")
         f.write("Recovery_date; 2024-06-02 00:00:00\n")
         f.write("initial_instrument_height; 0.5\n")
-    with open(os.path.join(TMP, "config.yaml"), "w") as f:
+    with open(os.path.join(tmp_dir, "config.yaml"), "w") as f:
         f.write("filename: clitest\n")
-        f.write(f"input_path: {TMP}/in.csv\n")
+        f.write(f"input_path: {tmp_dir}/in.csv\n")
         f.write("T_28_max: 50.0\n")
-    yield TMP
-    shutil.rmtree(TMP, ignore_errors=True)
+    return tmp_dir
 
 
 def test_cli_list_adapters(capsys):
@@ -59,19 +59,19 @@ def test_cli_unknown_step(cli_fixture):
     assert main(["rbr_csv", "bogus_step"]) == 2
 
 
-def test_cli_ingest_then_clean(cli_fixture, spark):
+def test_cli_ingest_then_clean(cli_fixture, spark, tmp_dir):
     rc = main(
         [
             "rbr_csv",
             "csv2cdf",
-            f"{TMP}/gatts.txt",
-            f"{TMP}/config.yaml",
+            f"{tmp_dir}/gatts.txt",
+            f"{tmp_dir}/config.yaml",
             "--output-dir",
-            TMP,
+            tmp_dir,
         ]
     )
     assert rc == 0
-    raw = spark.read.parquet(os.path.join(TMP, "clitest_raw"))
+    raw = spark.read.parquet(os.path.join(tmp_dir, "clitest_raw"))
     assert raw.count() == 361  # clip happens in cdf2nc, not ingest
     assert "P_1" in raw.columns  # EPIC rename applied at ingest
 
@@ -79,40 +79,40 @@ def test_cli_ingest_then_clean(cli_fixture, spark):
         [
             "rbr_csv",
             "cdf2nc",
-            f"{TMP}/gatts.txt",
-            f"{TMP}/config.yaml",
+            f"{tmp_dir}/gatts.txt",
+            f"{tmp_dir}/config.yaml",
             "--output-dir",
-            TMP,
+            tmp_dir,
         ]
     )
     assert rc == 0
-    clean = spark.read.parquet(os.path.join(TMP, "clitest_clean"))
+    clean = spark.read.parquet(os.path.join(tmp_dir, "clitest_clean"))
     assert clean.count() == 360  # out-of-window row clipped
     # T_28_max rule nulled the spike, row retained
     assert clean.filter("T_28 IS NULL").count() == 1
     # gatts value flowed through (instrument height → water_depth)
     assert "water_depth" in clean.columns
     # history sidecar written with audit note
-    with open(os.path.join(TMP, "clitest_clean.meta.json")) as f:
+    with open(os.path.join(tmp_dir, "clitest_clean.meta.json")) as f:
         meta = json.load(f)
     assert any("QA/QC" in h for h in meta["history"])
     assert any("T_28" in var for var in meta["notes"])
 
 
-def test_cli_exportnc_step(cli_fixture, spark):
+def test_cli_exportnc_step(cli_fixture, spark, tmp_dir):
     """exportnc emits the reference's final CF netCDF product from the
     clean zone (classic-nc3 in this container), with gatts globals, the
     history sidecar, and per-variable attrs carried."""
     for step in ("csv2cdf", "cdf2nc"):
         assert main(
-            ["rbr_csv", step, f"{TMP}/gatts.txt", f"{TMP}/config.yaml",
-             "--output-dir", TMP]
+            ["rbr_csv", step, f"{tmp_dir}/gatts.txt", f"{tmp_dir}/config.yaml",
+             "--output-dir", tmp_dir]
         ) == 0
     assert main(
-        ["rbr_csv", "exportnc", f"{TMP}/gatts.txt", f"{TMP}/config.yaml",
-         "--output-dir", TMP]
+        ["rbr_csv", "exportnc", f"{tmp_dir}/gatts.txt", f"{tmp_dir}/config.yaml",
+         "--output-dir", tmp_dir]
     ) == 0
-    out = os.path.join(TMP, "clitest-a.nc")
+    out = os.path.join(tmp_dir, "clitest-a.nc")
     assert os.path.exists(out)
 
     from stglib_spark.functions.netcdf3 import read_nc3
@@ -131,35 +131,34 @@ def test_cli_exportnc_step(cli_fixture, spark):
     assert os.path.exists(out + ".cfcheck.txt")
 
 
-def test_cli_dedup_step(spark):
+def test_cli_dedup_step(spark, tmp_dir):
     """`python -m stglib_spark corpus dedup --input <documents.parquet>`
     runs the shared-intermediate dedup stage end-to-end."""
     import os
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
-    docs = f"{TMP}/cli_docs.parquet"
+    docs = f"{tmp_dir}/cli_docs.parquet"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     ).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/dedup.yaml", "w").write(
+    open(f"{tmp_dir}/dedup.yaml", "w").write(
         "filename: clidedup\njaccard_threshold: 0.5\n"
     )
     assert main(
-        ["corpus", "dedup", None, f"{TMP}/dedup.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "dedup", None, f"{tmp_dir}/dedup.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
     import pyarrow.parquet as pq
 
-    pairs = pq.read_table(f"{TMP}/clidedup_dedup").to_pandas()
+    pairs = pq.read_table(f"{tmp_dir}/clidedup_dedup").to_pandas()
     assert {"doc_a", "doc_b", "jaccard"} <= set(pairs.columns)
     assert (pairs["jaccard"] >= 0.5).all()
-    assert os.path.isdir(f"{TMP}/clidedup_candidates")
-    assert os.path.isdir(f"{TMP}/clidedup_shingles")
+    assert os.path.isdir(f"{tmp_dir}/clidedup_candidates")
+    assert os.path.isdir(f"{tmp_dir}/clidedup_shingles")
 
 
-def test_cli_corpus_step(spark):
+def test_cli_corpus_step(spark, tmp_dir):
     """`python -m stglib_spark corpus corpus --input <documents.parquet>`
     runs the curation stage: quality/census/mix/packs zones, with the
     pack spans tiling each shard and the mix a subset of the corpus."""
@@ -167,29 +166,28 @@ def test_cli_corpus_step(spark):
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
-    docs = f"{TMP}/cli_docs2.parquet"
+    docs = f"{tmp_dir}/cli_docs2.parquet"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     ).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/corpus.yaml", "w").write(
+    open(f"{tmp_dir}/corpus.yaml", "w").write(
         "filename: clicorpus\npack_seq_len: 256\npack_shards: 4\n"
     )
     assert main(
-        ["corpus", "corpus", None, f"{TMP}/corpus.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "corpus", None, f"{tmp_dir}/corpus.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
     import pyarrow.parquet as pq
 
-    quality = pq.read_table(f"{TMP}/clicorpus_quality").to_pandas()
+    quality = pq.read_table(f"{tmp_dir}/clicorpus_quality").to_pandas()
     assert {"doc_id", "lang_pred", "n_tokens", "quality_bucket"} <= set(
         quality.columns
     )
-    census = pq.read_table(f"{TMP}/clicorpus_census").to_pandas()
+    census = pq.read_table(f"{tmp_dir}/clicorpus_census").to_pandas()
     assert abs(census["token_share"].sum() - 1.0) < 1e-4
-    mix = pq.read_table(f"{TMP}/clicorpus_mix").to_pandas()
+    mix = pq.read_table(f"{tmp_dir}/clicorpus_mix").to_pandas()
     assert 0 < len(mix) <= len(quality)
-    packs = pq.read_table(f"{TMP}/clicorpus_packs").to_pandas()
+    packs = pq.read_table(f"{tmp_dir}/clicorpus_packs").to_pandas()
     # spans tile each shard's token stream
     for shard, grp in packs.groupby("shard"):
         grp = grp.sort_values("start_offset")
@@ -202,35 +200,34 @@ def test_cli_corpus_step(spark):
     assert set(packs["doc_id"]) <= set(mix["doc_id"])
 
 
-def test_cli_corpus_step_with_token_budget(spark):
+def test_cli_corpus_step_with_token_budget(spark, tmp_dir):
     """mix_token_budget caps the mix zone's total tokens (per-shard
     budget split) while keeping packs consistent with the capped mix."""
     import os
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
-    docs = f"{TMP}/cli_docs3.parquet"
+    docs = f"{tmp_dir}/cli_docs3.parquet"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     ).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/corpus_budget.yaml", "w").write(
+    open(f"{tmp_dir}/corpus_budget.yaml", "w").write(
         "filename: clibudget\npack_seq_len: 256\npack_shards: 4\n"
         "mix_token_budget: 4000\n"
     )
     assert main(
-        ["corpus", "corpus", None, f"{TMP}/corpus_budget.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "corpus", None, f"{tmp_dir}/corpus_budget.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
     import pyarrow.parquet as pq
 
-    mix = pq.read_table(f"{TMP}/clibudget_mix").to_pandas()
+    mix = pq.read_table(f"{tmp_dir}/clibudget_mix").to_pandas()
     assert 0 < mix["n_tokens"].sum() <= 4000
-    packs = pq.read_table(f"{TMP}/clibudget_packs").to_pandas()
+    packs = pq.read_table(f"{tmp_dir}/clibudget_packs").to_pandas()
     assert set(packs["doc_id"]) <= set(mix["doc_id"])
 
 
-def test_cli_corpusall_chains_dedup_into_curation(spark):
+def test_cli_corpusall_chains_dedup_into_curation(spark, tmp_dir):
     """corpusall: raw docs (with an injected near-duplicate) -> dedup
     zones -> deduped zone without the non-canonical copy -> packs built
     from survivors only."""
@@ -241,7 +238,6 @@ def test_cli_corpusall_chains_dedup_into_curation(spark):
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
     base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
@@ -249,25 +245,25 @@ def test_cli_corpusall_chains_dedup_into_curation(spark):
     dup = base.filter(F.col("doc_id") == 1).select(
         (F.col("doc_id") + 500000).alias("doc_id"), "text"
     )
-    docs = f"{TMP}/cli_docs4.parquet"
+    docs = f"{tmp_dir}/cli_docs4.parquet"
     base.unionByName(dup).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/corpusall.yaml", "w").write(
+    open(f"{tmp_dir}/corpusall.yaml", "w").write(
         "filename: cliall\njaccard_threshold: 0.8\npack_seq_len: 256\n"
         "pack_shards: 4\n"
     )
     assert main(
-        ["corpus", "corpusall", None, f"{TMP}/corpusall.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "corpusall", None, f"{tmp_dir}/corpusall.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
-    deduped = pq.read_table(f"{TMP}/cliall_deduped").to_pandas()
+    deduped = pq.read_table(f"{tmp_dir}/cliall_deduped").to_pandas()
     assert 500001 not in set(deduped["doc_id"])  # non-canonical copy dropped
     assert 1 in set(deduped["doc_id"])           # canonical copy kept
-    packs = pq.read_table(f"{TMP}/cliall_packs").to_pandas()
+    packs = pq.read_table(f"{tmp_dir}/cliall_packs").to_pandas()
     assert set(packs["doc_id"]) <= set(deduped["doc_id"])
-    assert os.path.isdir(f"{TMP}/cliall_quality")
+    assert os.path.isdir(f"{tmp_dir}/cliall_quality")
 
 
-def test_cli_corpus_materializes_sequences(spark):
+def test_cli_corpus_materializes_sequences(spark, tmp_dir):
     """pack_materialize: true adds a sequences zone of trainer-ready
     rows whose full packs are exactly pack_seq_len tokens."""
     import os
@@ -276,20 +272,19 @@ def test_cli_corpus_materializes_sequences(spark):
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
-    docs = f"{TMP}/cli_docs5.parquet"
+    docs = f"{tmp_dir}/cli_docs5.parquet"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     ).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/corpus_seq.yaml", "w").write(
+    open(f"{tmp_dir}/corpus_seq.yaml", "w").write(
         "filename: cliseq\npack_seq_len: 128\npack_shards: 4\n"
         "pack_materialize: true\n"
     )
     assert main(
-        ["corpus", "corpus", None, f"{TMP}/corpus_seq.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "corpus", None, f"{tmp_dir}/corpus_seq.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
-    seqs = pq.read_table(f"{TMP}/cliseq_sequences").to_pandas()
+    seqs = pq.read_table(f"{tmp_dir}/cliseq_sequences").to_pandas()
     assert len(seqs) > 0
     last = seqs.groupby("shard")["pack_id"].transform("max")
     full = seqs[seqs["pack_id"] != last]
@@ -299,7 +294,7 @@ def test_cli_corpus_materializes_sequences(spark):
     ).all()
 
 
-def test_cli_corpus_with_boilerplate_cleaning(spark):
+def test_cli_corpus_with_boilerplate_cleaning(spark, tmp_dir):
     """boilerplate_min_doc_frac adds a cleaned zone: a line injected in
     every document is stripped before quality scoring."""
     import os
@@ -309,25 +304,24 @@ def test_cli_corpus_with_boilerplate_cleaning(spark):
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
-    docs = f"{TMP}/cli_docs6.parquet"
+    docs = f"{tmp_dir}/cli_docs6.parquet"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id",
         F.concat(F.lit("SHARED BANNER\n"), F.col("text")).alias("text"),
     ).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/corpus_bp.yaml", "w").write(
+    open(f"{tmp_dir}/corpus_bp.yaml", "w").write(
         "filename: clibp\nboilerplate_min_doc_frac: 0.5\n"
     )
     assert main(
-        ["corpus", "corpus", None, f"{TMP}/corpus_bp.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "corpus", None, f"{tmp_dir}/corpus_bp.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
-    cleaned = pq.read_table(f"{TMP}/clibp_cleaned").to_pandas()
+    cleaned = pq.read_table(f"{tmp_dir}/clibp_cleaned").to_pandas()
     assert not cleaned["text"].str.contains("SHARED BANNER").any()
-    assert os.path.isdir(f"{TMP}/clibp_quality")
+    assert os.path.isdir(f"{tmp_dir}/clibp_quality")
 
 
-def test_cli_corpus_with_dup_span_excision(spark):
+def test_cli_corpus_with_dup_span_excision(spark, tmp_dir):
     """dup_span_ngram adds a despanned zone: a 6-token span injected into
     every document survives only in the minimum-doc_id document."""
     import os
@@ -337,29 +331,28 @@ def test_cli_corpus_with_dup_span_excision(spark):
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
-    docs = f"{TMP}/cli_docs7.parquet"
+    docs = f"{tmp_dir}/cli_docs7.parquet"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id",
         F.concat(
             F.lit("alpha beta gamma delta epsilon zeta "), F.col("text")
         ).alias("text"),
     ).write.mode("overwrite").parquet(docs)
-    open(f"{TMP}/corpus_span.yaml", "w").write(
+    open(f"{tmp_dir}/corpus_span.yaml", "w").write(
         "filename: clispan\ndup_span_ngram: 6\n"
     )
     assert main(
-        ["corpus", "corpus", None, f"{TMP}/corpus_span.yaml",
-         "--input", docs, "--output-dir", TMP]
+        ["corpus", "corpus", None, f"{tmp_dir}/corpus_span.yaml",
+         "--input", docs, "--output-dir", tmp_dir]
     ) == 0
-    out = pq.read_table(f"{TMP}/clispan_despanned").to_pandas()
+    out = pq.read_table(f"{tmp_dir}/clispan_despanned").to_pandas()
     hits = out[out["text"].str.contains("alpha beta gamma")]
     src = pq.read_table(docs).to_pandas()
     assert list(hits["doc_id"]) == [src["doc_id"].min()]
-    assert os.path.isdir(f"{TMP}/clispan_quality")
+    assert os.path.isdir(f"{tmp_dir}/clispan_quality")
 
 
-def test_cli_nc2diwasp_step(spark):
+def test_cli_nc2diwasp_step(spark, tmp_dir):
     """`python -m stglib_spark <inst> nc2diwasp gatts config` runs the
     directional-spectra stage against an existing clean zone and writes
     the diwasp zone (closing the one CLI step without a direct test)."""
@@ -369,7 +362,6 @@ def test_cli_nc2diwasp_step(spark):
 
     from stglib_spark.__main__ import main
 
-    os.makedirs(TMP, exist_ok=True)
     base_epoch = 1622505600
     b = (F.col("id") / 64).cast("long")
     i = F.pmod(F.col("id"), 64)
@@ -383,8 +375,8 @@ def test_cli_nc2diwasp_step(spark):
         ((F.pmod(5 * i + 3 * b + 4, 16) - 8) / 64.0).alias("u_1205"),
         ((F.pmod(3 * i + 11 * b + 9, 16) - 8) / 64.0).alias("v_1206"),
     )
-    clean.write.mode("overwrite").parquet(f"{TMP}/clidiwasp_clean")
-    open(f"{TMP}/diwasp.yaml", "w").write(
+    clean.write.mode("overwrite").parquet(f"{tmp_dir}/clidiwasp_clean")
+    open(f"{tmp_dir}/diwasp.yaml", "w").write(
         "filename: clidiwasp\n"
         "sample_interval: 0.5\n"
         "pressure_sensor_height: 0.5\n"
@@ -396,18 +388,18 @@ def test_cli_nc2diwasp_step(spark):
         "diwasp_ndirs: 12\n"
     )
     assert main(
-        ["rbr_csv", "nc2diwasp", None, f"{TMP}/diwasp.yaml",
-         "--output-dir", TMP]
+        ["rbr_csv", "nc2diwasp", None, f"{tmp_dir}/diwasp.yaml",
+         "--output-dir", tmp_dir]
     ) == 0
     import pyarrow.parquet as pq
 
-    out = pq.read_table(f"{TMP}/clidiwasp_diwasp").to_pandas()
+    out = pq.read_table(f"{tmp_dir}/clidiwasp_diwasp").to_pandas()
     assert len(out) == 2
     assert set(out["diwasp_type"]) == {"puv"}
     assert (out["wh_4061"] > 0).all()
 
 
-def test_cli_mediadedup_video_rejects_max_hamming_past_pigeonhole(spark):
+def test_cli_mediadedup_video_rejects_max_hamming_past_pigeonhole(spark, tmp_dir):
     """`mediadedup` on video reads `phash_max_hamming` and `phash_blocks`
     from the config; a Hamming bound above blocks−1 would silently miss
     near-duplicate frame pairs, so the stage raises instead of writing a
@@ -416,23 +408,22 @@ def test_cli_mediadedup_video_rejects_max_hamming_past_pigeonhole(spark):
 
     from stglib_spark.functions.media import encode_avi
 
-    os.makedirs(TMP, exist_ok=True)
     frames = [np.full((12, 22, 3), 16 * f, np.uint8) for f in range(3)]
-    media = f"{TMP}/cli_videos.parquet"
+    media = f"{tmp_dir}/cli_videos.parquet"
     spark.createDataFrame(
         [(1, bytearray(encode_avi(frames, fps=4.0)))],
         "media_id long, content binary",
     ).write.mode("overwrite").parquet(media)
-    open(f"{TMP}/mediadedup.yaml", "w").write(
+    open(f"{tmp_dir}/mediadedup.yaml", "w").write(
         "filename: climedia\n"
         "media_kind: video\n"
         "phash_max_hamming: 4\n"
         "phash_blocks: 4\n"
     )
-    shutil.rmtree(f"{TMP}/climedia_pairs", ignore_errors=True)
+    shutil.rmtree(f"{tmp_dir}/climedia_pairs", ignore_errors=True)
     with pytest.raises(ValueError, match="pigeonhole"):
         main(
-            ["media", "mediadedup", None, f"{TMP}/mediadedup.yaml",
-             "--input", media, "--output-dir", TMP]
+            ["media", "mediadedup", None, f"{tmp_dir}/mediadedup.yaml",
+             "--input", media, "--output-dir", tmp_dir]
         )
-    assert not os.path.exists(f"{TMP}/climedia_pairs")
+    assert not os.path.exists(f"{tmp_dir}/climedia_pairs")

@@ -7,8 +7,6 @@ from __future__ import annotations
 import gzip
 import json
 import os
-import shutil
-import tempfile
 
 import pytest
 
@@ -16,8 +14,8 @@ from stglib_spark.sources.jsonl import read_jsonl_corpus
 
 
 @pytest.fixture(scope="module")
-def jl_dir():
-    d = tempfile.mkdtemp(prefix="jl", dir="/root/repo/.tmp")
+def jl_dir(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("jl"))
     rows = [
         {"text": "alpha beta gamma", "source": "web"},
         {"text": "delta epsilon", "source": "books"},
@@ -31,8 +29,7 @@ def jl_dir():
     with gzip.open(os.path.join(d, "b.jsonl.gz"), "wt") as f:
         f.write(json.dumps({"text": "zeta eta", "id": "77"}) + "\n")
         f.write(json.dumps({"text": "alpha beta gamma"}) + "\n")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+    return d
 
 
 def test_jsonl_schema_and_null_drop(spark, jl_dir):
@@ -66,25 +63,21 @@ def test_jsonl_explicit_id_field(spark, jl_dir):
     assert got["alpha beta gamma"] is not None  # absent id -> hashed
 
 
-def test_corpus_stage_ingests_jsonl(spark, jl_dir):
+def test_corpus_stage_ingests_jsonl(spark, jl_dir, tmp_path):
+    import pyarrow.parquet as pq
+
     from stglib_spark.pipeline import run_corpus
 
-    out = tempfile.mkdtemp(prefix="jlout", dir="/root/repo/.tmp")
-    try:
-        paths = run_corpus(
-            spark,
-            {
-                "filename": "jl",
-                "documents_path": jl_dir,
-                "documents_format": "jsonl",
-                "output_dir": out,
-                "pack_shards": 2,
-                "pack_seq_len": 4,
-            },
-        )
-        import pyarrow.parquet as pq
-
-        q = pq.read_table(paths["quality"]).to_pandas()
-        assert len(q) == 5
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    paths = run_corpus(
+        spark,
+        {
+            "filename": "jl",
+            "documents_path": jl_dir,
+            "documents_format": "jsonl",
+            "output_dir": str(tmp_path),
+            "pack_shards": 2,
+            "pack_seq_len": 4,
+        },
+    )
+    q = pq.read_table(paths["quality"]).to_pandas()
+    assert len(q) == 5

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import numpy as np
 import pandas as pd
@@ -20,14 +19,9 @@ from stglib_spark.pipeline import _zone_path, run_all, run_clean
 from stglib_spark.sources import ingest
 from stglib_spark.sources.binary import write_demo_file
 
-TMP = "/root/repo/.tmp/pipeline_test"
-
-
 @pytest.fixture(scope="module")
-def fixture_dir():
-    os.makedirs(TMP, exist_ok=True)
-    yield TMP
-    shutil.rmtree(TMP, ignore_errors=True)
+def fixture_dir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("pipeline_test"))
 
 
 @pytest.fixture(scope="module")
@@ -61,7 +55,7 @@ def burst_csv(fixture_dir):
     rows.insert(0, {"Time": "2024-05-31 10:00:00.000", "Pressure": 0.1, "Temperature": 99.0})
     rows[100]["Temperature"] = 60.0  # T_28_max victim
     pdf = pd.DataFrame(rows)
-    path = os.path.join(TMP, "burst.csv")
+    path = os.path.join(fixture_dir, "burst.csv")
     pdf.to_csv(path, index=False)
     return path
 
@@ -69,7 +63,6 @@ def burst_csv(fixture_dir):
 CONFIG = {
     "instrument": "rbr_csv",
     "filename": "rbrtest",
-    "output_dir": TMP,
     "Deployment_date": "2024-06-01 00:00:00",
     "Recovery_date": "2024-06-02 00:00:00",
     "samples_per_burst": 512,
@@ -88,8 +81,8 @@ CONFIG = {
 }
 
 
-def test_pipeline_end_to_end(spark, burst_csv):
-    cfg = dict(CONFIG, input_path=burst_csv)
+def test_pipeline_end_to_end(spark, burst_csv, fixture_dir):
+    cfg = dict(CONFIG, input_path=burst_csv, output_dir=fixture_dir)
     paths = run_all(spark, cfg)
 
     raw = spark.read.parquet(paths["raw"])
@@ -157,7 +150,20 @@ def test_generic_csv_adapter(spark, fixture_dir):
     assert df.count() == 20
 
 
-def test_run_diwasp_stage(spark, burst_csv):
+def test_zone_root_defaults_to_working_directory(
+    spark, burst_csv, tmp_path, monkeypatch
+):
+    """Without ``output_dir`` a step writes its zone under the working
+    directory, where the reference's ``runots`` writes its products."""
+    from stglib_spark.pipeline import run_ingest
+
+    monkeypatch.chdir(tmp_path)
+    path = run_ingest(spark, dict(CONFIG, input_path=burst_csv, filename="cwd"))
+    assert path == str(tmp_path / "cwd_raw")
+    assert spark.read.parquet(path).count() == 5121
+
+
+def test_run_diwasp_stage(spark, burst_csv, fixture_dir):
     """nc2diwasp stage on a pressure-only deployment: falls back to the
     'pres' estimator input and recovers the injected wave's Hs/Tp."""
     from stglib_spark.pipeline import run_clean, run_diwasp, run_ingest
@@ -165,6 +171,7 @@ def test_run_diwasp_stage(spark, burst_csv):
     cfg = dict(
         CONFIG,
         input_path=burst_csv,
+        output_dir=fixture_dir,
         filename="diwasptest",
         diwasp_method="DFTM",
         diwasp_nfreqs=24,
@@ -191,7 +198,13 @@ def test_run_waves_puv_branch(spark, burst_csv, fixture_dir):
 
     from stglib_spark.pipeline import _zone_path, run_waves
 
-    cfg = dict(CONFIG, input_path=burst_csv, filename="puvtest", puv=True)
+    cfg = dict(
+        CONFIG,
+        input_path=burst_csv,
+        output_dir=fixture_dir,
+        filename="puvtest",
+        puv=True,
+    )
     # synthesize a clean zone with u/v orbital velocities alongside P_1
     fs, spb, n_bursts = 2.0, 512, 10
     rows = []
@@ -224,14 +237,13 @@ def test_run_waves_puv_branch(spark, burst_csv, fixture_dir):
     assert any(c.startswith("Hrms") or c == "azr" or c == "phir" for c in cols), cols
 
 
-def test_run_xy_stage(spark):
+def test_run_xy_stage(spark, fixture_dir):
     """nc2xy: polar sweeps → cartesian images (son/nc2xy.py:67-123)."""
     import pandas as _pd
 
     from stglib_spark.pipeline import _zone_path, run_xy
 
-    cfg = {"filename": "sonartest", "output_dir": TMP, "sonar_range": 2.0, "sonar_dxy": 0.5}
-    os.makedirs(TMP, exist_ok=True)
+    cfg = {"filename": "sonartest", "output_dir": fixture_dir, "sonar_range": 2.0, "sonar_dxy": 0.5}
     t = _pd.Timestamp("2024-06-01")
     rows = []
     for ti in range(2):
@@ -257,7 +269,7 @@ def test_run_xy_stage(spark):
     assert out.filter("sonar_image IS NOT NULL").count() > 0
 
 
-def test_run_clean_velocity_stack(spark):
+def test_run_clean_velocity_stack(spark, fixture_dir):
     """Profile-velocity deployment (F5 shape) through run_clean: BEAM→ENU
     transform, AGC gate, water-level side-lobe trim, audit history."""
     import pandas as _pd
@@ -266,7 +278,7 @@ def test_run_clean_velocity_stack(spark):
 
     cfg = {
         "filename": "veltest",
-        "output_dir": TMP,
+        "output_dir": fixture_dir,
         "Deployment_date": "2024-06-01 00:00:00",
         "Recovery_date": "2024-06-02 00:00:00",
         "AQDCoordinateSystem": "BEAM",
@@ -281,7 +293,6 @@ def test_run_clean_velocity_stack(spark):
         "velocity_agc_min": 30.0,
         "trim_method": "water level",
     }
-    os.makedirs(TMP, exist_ok=True)
     t0 = _pd.Timestamp("2024-06-01 01:00:00")
     rows = []
     for ti in range(20):
@@ -321,15 +332,14 @@ def test_run_clean_velocity_stack(spark):
     assert "BEAM→ENU" in hist and "AGC" in hist and "water level" in hist
 
 
-def test_split_profiles_partitioned_write(spark):
+def test_split_profiles_partitioned_write(spark, fixture_dir):
     """split_profiles → clean zone partitioned per profile (the
     reference's one-nc-per-cast, rsk/cdf2nc.py:212-239)."""
     import pandas as _pd
 
     from stglib_spark.pipeline import _zone_path, run_clean
 
-    cfg = {"filename": "proftest", "output_dir": TMP, "split_profiles": True}
-    os.makedirs(TMP, exist_ok=True)
+    cfg = {"filename": "proftest", "output_dir": fixture_dir, "split_profiles": True}
     t0 = _pd.Timestamp("2024-06-01")
     rows = [
         ((t0 + _pd.Timedelta(seconds=i)).to_pydatetime(), i // 10, 10.0 + i)
@@ -360,7 +370,7 @@ def test_average_burst_int_recast(spark):
     assert got[1] == (15, 2.0)
 
 
-def test_config_driven_filters_in_clean(spark):
+def test_config_driven_filters_in_clean(spark, fixture_dir):
     """<var>_lowpass_filt and <var>_med_filt config keys smooth the
     variable in run_clean and keep the _unfiltered copy
     (core/filter.py:98-229 dispatch)."""
@@ -370,12 +380,11 @@ def test_config_driven_filters_in_clean(spark):
 
     cfg = {
         "filename": "filttest",
-        "output_dir": TMP,
+        "output_dir": fixture_dir,
         "sample_interval": 1.0,
         "T_28_lowpass_filt": 30.0,  # 30 s cutoff period
         "Turb_med_filt": 5,
     }
-    os.makedirs(TMP, exist_ok=True)
     t0 = _pd.Timestamp("2024-06-01")
     n = 600
     tt = np.arange(n)
@@ -792,7 +801,7 @@ def test_profile_vertical_coordinates(spark, fixture_dir):
     assert out[0]["bin_depth"] == pytest.approx(8.0 - 0.5)
 
 
-def test_wavedat_tolerance_prefill(spark, burst_csv):
+def test_wavedat_tolerance_prefill(spark, burst_csv, fixture_dir):
     """wavedat_tolerance (waves.py:1992-2034): null samples within
     tolerance are nearest-filled before the spectral chain, so a burst
     with a few nulled samples still yields the injected wave stats."""
@@ -801,6 +810,7 @@ def test_wavedat_tolerance_prefill(spark, burst_csv):
     cfg = dict(
         CONFIG,
         input_path=burst_csv,
+        output_dir=fixture_dir,
         filename="wavetol",
         wavedat_tolerance=2.0,
     )

@@ -101,20 +101,20 @@ def test_minhash_lsh_band_join_is_equi_join(spark):
 def test_token_jaccard_verify_has_no_cross_join(spark):
     """The registered dedup_token_jaccard is the LSH→verify chain: every
     join is an equi-join (band-hash buckets, then doc_id lookups) — no
-    theta/cross join ever touches document rows. The all-pairs fallback
-    requires an explicit opt-in (allow_all_pairs=True)."""
+    theta/cross join ever touches document rows, and the verifier has no
+    all-pairs fallback: ``candidate_pairs`` is a required argument."""
     plan = plan_of(spark, "dedup_token_jaccard")
     assert count(plan, r"CartesianProduct") == 0
     assert count(plan, r"BroadcastNestedLoopJoin") == 0
 
-    import pytest as _pytest
+    import inspect
 
     from stglib_spark.operators import dedup as dedup_ops
-    from stglib_spark.session import load_table
 
-    docs = load_table(spark, SF, "documents")
-    with _pytest.raises(ValueError, match="all-pairs"):
-        dedup_ops.ngram_jaccard_pairs(docs)
+    param = inspect.signature(dedup_ops.ngram_jaccard_pairs).parameters[
+        "candidate_pairs"
+    ]
+    assert param.default is inspect.Parameter.empty
 
 
 def test_real_bmp_decode_prunes_to_doc_id(spark):

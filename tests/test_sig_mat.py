@@ -20,8 +20,6 @@ from stglib_spark.sources.sig_mat import (
     sig_group_attrs,
 )
 
-TMP = "/root/repo/.tmp"
-
 
 def _datenum(d: dt.datetime) -> float:
     frac = (d - dt.datetime(d.year, d.month, d.day)).total_seconds() / 86400.0

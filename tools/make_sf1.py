@@ -1,16 +1,19 @@
 """Scale up the driver-generated sf0.1 parquet tables by replication.
 
 Default invocation reproduces the historical behavior (sf0.1 x10 ->
-.tmp/sf1). --k 100 --dst /root/repo/.tmp/sf10 generates the sf10 set
+.tmp/sf1 under the repo root). --k 100 --dst .tmp/sf10 generates the sf10 set
 used by tools/measure_scaling.py. Replication keeps joins consistent
 (shifted orderkeys), time series valid (shifted epochs), and ids unique
 (shifted id spaces); document TEXT repeats verbatim, which makes the
 dedup tier's near-dup density scale-realistic (every clone is a true
 near-duplicate the pipeline must catch).
 """
-import sys; sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 import argparse
 import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -18,7 +21,7 @@ from stglib_spark.session import get_spark, load_table
 
 ap = argparse.ArgumentParser()
 ap.add_argument("--src", default="/root/testdata/sf0.1")
-ap.add_argument("--dst", default="/root/repo/.tmp/sf1")
+ap.add_argument("--dst", default=os.path.join(REPO, ".tmp", "sf1"))
 ap.add_argument("--k", type=int, default=10, help="replication factor")
 args = ap.parse_args()
 

@@ -9,7 +9,7 @@ fixture.
 
 Usage:
     python tools/make_sf1.py                                   # sf1
-    python tools/make_sf1.py --k 100 --dst /root/repo/.tmp/sf10
+    python tools/make_sf1.py --k 100 --dst .tmp/sf10
     python tools/measure_scaling.py --out /tmp/scaling.json
 
 Protocol: one warm pass at sf0.01 (codegen+JIT), then N timed passes
@@ -17,13 +17,16 @@ per (query, sf) — smallest sf first so page cache favors the LARGE
 runs least — median reported. Run on an idle box; load averages are
 recorded so contamination is visible in the artifact.
 """
-import sys; sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 import argparse
 import json
 import math
 import os
 import statistics
+import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DEFAULT_QUERIES = [
     # the top-5 sf1 rows by cost (VERDICT r13 plan audit) + minhash
@@ -36,8 +39,8 @@ DEFAULT_QUERIES = [
 ]
 DEFAULT_POINTS = [
     ("/root/testdata/sf0.1", 0.1),
-    ("/root/repo/.tmp/sf1", 1.0),
-    ("/root/repo/.tmp/sf10", 10.0),
+    (os.path.join(REPO, ".tmp", "sf1"), 1.0),
+    (os.path.join(REPO, ".tmp", "sf10"), 10.0),
 ]
 
 
@@ -57,7 +60,7 @@ def main() -> None:
     ap.add_argument("--queries", nargs="*", default=DEFAULT_QUERIES)
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--sf-dirs", nargs="*", default=None,
-                    help="dir:scale pairs, e.g. /root/repo/.tmp/sf1:1.0")
+                    help="dir:scale pairs, e.g. .tmp/sf1:1.0")
     ap.add_argument("--append", action="store_true",
                     help="append rows to an existing --out artifact "
                          "(replacing same-named queries) — used to "
