@@ -116,5 +116,10 @@ class History:
     def insert_note(self, var: str, message: str) -> None:
         self.notes.setdefault(var, []).append(message)
 
-    def as_attr(self) -> str:
-        return "; ".join(self.entries)
+    def copy(self) -> "History":
+        """An independent copy: entries added to either side later do not
+        reach the other."""
+        other = History()
+        other.entries = list(self.entries)
+        other.notes = {k: list(v) for k, v in self.notes.items()}
+        return other

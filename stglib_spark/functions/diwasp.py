@@ -414,50 +414,3 @@ def read_spec_text(path):
         raise ValueError(f"{path}: missing 999 separator")
     S = vals[3 + nf + nd + 1:].reshape(nf, nd)
     return xaxisdir, freqs, dirs, S
-
-
-def spec_hsig(freqs, dirs, S):
-    """Significant wave height of a directional spectral matrix —
-    rectangular-rule double integral on the (uniform) freq/dir grid,
-    Hs = 4·√(ΣΣ S · df · ddir) (reference
-    ``lib/pyDIWASP/private/hsig.py:3-23``; assumes at least 2 points
-    per axis, like the reference)."""
-    freqs = np.asarray(freqs, dtype=float)
-    dirs = np.asarray(dirs, dtype=float)
-    S = np.real(np.asarray(S))
-    df = freqs[1] - freqs[0]
-    ddir = dirs[1] - dirs[0]
-    return 4.0 * np.sqrt(np.sum(S) * df * ddir)
-
-
-def infospec(xaxisdir, freqs, dirs, S):
-    """Summary statistics of a directional spectrum — the reference's
-    ``infospec`` (lib/pyDIWASP/infospec.py:6-56) without the console
-    display: returns ``(hsig, tp, dtp, dp, dtp_compass, dp_compass)``.
-
-    Tp is 1/f at the first maximum of the direction-summed spectrum
-    (plain row sum, no df weighting — the reference's convention); DTp
-    is the direction of the 2-D maximum within that frequency row; Dp
-    is the direction with the highest frequency-summed energy; compass
-    bearings convert via (180 + xaxisdir − D) mod 360
-    (infospec.py:59-60 compangle)."""
-    freqs = np.asarray(freqs, dtype=float)
-    dirs = np.asarray(dirs, dtype=float)
-    S = np.real(np.asarray(S))
-    row_sum = S.sum(axis=1)
-    fi = int(np.argmax(row_sum))
-    tp = 1.0 / freqs[fi]
-    dtp = float(dirs[int(np.argmax(S[fi, :]))])
-    dp = float(dirs[int(np.argmax(S.sum(axis=0)))])
-
-    def compass(d):
-        return float((180.0 + xaxisdir - d) % 360.0)
-
-    return (
-        float(spec_hsig(freqs, dirs, S)),
-        float(tp),
-        dtp,
-        dp,
-        compass(dtp),
-        compass(dp),
-    )

@@ -1,15 +1,13 @@
-"""Aggregation operators: burst/interval averaging, gated means, circular
-means, min/max attrs, boundary detection.
+"""Aggregation operators: interval averaging, gated means, circular
+means, boundary detection.
 
 Reference semantics:
-- ``average_burst`` — mean over the sample dim (``aqd/aqdutils.py:1717-1740``).
 - ``ds_mean_count_minf`` — mean gated on a minimum valid fraction
   (``core/utils.py:2044-2086``): if count(valid) < minf·n → null.
 - vector (circular) mean of angles (``utils.py:1907-1923``).
 - interval averaging with duration subsetting (``mar.py:259-331``,
   ``sig/cdf2nc.py:320-379``): average only the first D seconds of each
   interval window.
-- ``add_min_max`` per-variable min/max (``utils.py:183-235``).
 - ``brange`` boundary detection: argmax of amplitude over bins
   (``sig/cdf2nc.py:1728-1777``) → ``max_by``.
 
@@ -19,7 +17,6 @@ one shuffle on the group key; at 100 TB this is the minimal-movement plan.
 
 from __future__ import annotations
 
-import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -34,31 +31,17 @@ def mean_minf(value: Column, minf: float, n: Column | int) -> Column:
     return F.when(F.count(value) >= min_count, F.avg(value)).otherwise(F.lit(None))
 
 
+def _vector_mean_deg(angle_deg: Column) -> Column:
+    """Vector mean of angles in degrees, atan2(mean sin, mean cos), in
+    (−180, 180] (utils.py:1907-1923)."""
+    rad = F.radians(angle_deg)
+    return F.degrees(F.atan2(F.avg(F.sin(rad)), F.avg(F.cos(rad))))
+
+
 def circular_mean_deg(angle_deg: Column) -> Column:
     """Vector mean of angles in degrees → [0, 360) (utils.py:1907-1923):
     atan2(mean sin, mean cos), wrapped positive."""
-    rad = F.radians(angle_deg)
-    mean_deg = F.degrees(F.atan2(F.avg(F.sin(rad)), F.avg(F.cos(rad))))
-    return (mean_deg + 360.0) % 360.0
-
-
-def average_burst(
-    df: DataFrame,
-    burst_cols: Sequence[str],
-    value_cols: Sequence[str],
-) -> DataFrame:
-    """Mean over the sample dim per burst (aqdutils.py:1717-1740). Integer
-    input columns are re-cast to their original type after the mean, matching
-    the reference's dtype restore (aqdutils.py:1731-1735)."""
-    int_types = {"tinyint", "smallint", "int", "bigint"}
-    dtypes = dict(df.dtypes)
-    aggs = []
-    for v in value_cols:
-        agg = F.avg(F.col(v))
-        if dtypes.get(v) in int_types:
-            agg = agg.cast(dtypes[v])
-        aggs.append(agg.alias(v))
-    return df.groupBy(*[F.col(c) for c in burst_cols]).agg(*aggs)
+    return (_vector_mean_deg(angle_deg) + 360.0) % 360.0
 
 
 def interval_average(
@@ -89,8 +72,9 @@ def interval_average(
       against ``int(minf · expected_n)`` — sig/cdf2nc.py:341/360 gates
       on the FIXED per-burst sample count (the reference gap-fills
       first so every interval has the full slot count), not on the
-      interval's own row count. Without it the legacy
-      fraction-of-own-rows gate applies (irregular series).
+      interval's own row count. Without it the gate is
+      ``int(minf · rows in the interval)`` (irregular series). Both are
+      :func:`mean_minf`.
     - ``poison``: mar.py:279-315 ``avg_cont`` semantics — the record is
       NaN-padded to whole intervals and averaged with plain ``np.mean``
       (not nanmean), so an incomplete final interval or any nulled
@@ -127,32 +111,17 @@ def interval_average(
     for v in value_cols:
         c = F.col(v)
         if v in vector_cols:
-            rad = F.radians(c)
-            aggs.append(
-                F.degrees(
-                    F.atan2(F.avg(F.sin(rad)), F.avg(F.cos(rad)))
-                ).alias(v)
-            )
+            aggs.append(_vector_mean_deg(c).alias(v))
         elif poison:
             aggs.append(
                 F.when(F.count(c) == F.lit(int(expected_n)), F.avg(c)).alias(v)
             )
-        elif minf is not None and expected_n is not None:
-            aggs.append(
-                F.when(
-                    F.count(c) >= F.lit(int(float(minf) * int(expected_n))),
-                    F.avg(c),
-                ).otherwise(F.lit(None)).alias(v)
-            )
         elif minf is not None:
-            # expected samples unknown a priori in irregular series: gate on
-            # fraction of the interval's own row count (null values count
-            # against the fraction, matching ds_mean_count_minf)
-            aggs.append(
-                F.when(
-                    F.count(c) >= F.lit(float(minf)) * F.count(F.lit(1)), F.avg(c)
-                ).otherwise(F.lit(None)).alias(v)
-            )
+            # without an a-priori slot count (irregular series) the
+            # interval's own row count stands in: null values count
+            # against the fraction, as in ds_mean_count_minf
+            n = int(expected_n) if expected_n is not None else F.count(F.lit(1))
+            aggs.append(mean_minf(c, minf, n).alias(v))
         else:
             aggs.append(F.avg(c).alias(v))
     return (
@@ -161,17 +130,6 @@ def interval_average(
         .withColumn(time_col, F.col("__win.start"))
         .drop("__win")
     )
-
-
-def add_min_max(df: DataFrame, value_cols: Sequence[str]) -> dict[str, tuple]:
-    """Per-variable (min, max) in one aggregation pass (utils.py:183-235);
-    destined for column metadata / sidecar attrs."""
-    aggs = []
-    for v in value_cols:
-        aggs.append(F.min(v).alias(f"{v}__min"))
-        aggs.append(F.max(v).alias(f"{v}__max"))
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {v: (row[f"{v}__min"], row[f"{v}__max"]) for v in value_cols}
 
 
 def top_third_mean_threshold(

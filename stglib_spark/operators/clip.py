@@ -3,12 +3,13 @@
 Reference semantics: ``stglib/core/utils.py:73-180`` (``clip_ds``: keep rows
 in [Deployment_date, Recovery_date], or index ranges ``good_ens``, or
 multi-range ``good_dates``), ``utils.py:1812-1854`` (``clip_ds_prf``
-vertical clip), ``rsk/cdf2nc.py:396-438`` (``profile_clip_ds``).
+vertical clip). Whole-profile selection (``rsk/cdf2nc.py:396-438``) is
+:func:`stglib_spark.operators.profiles.profile_clip`.
 
-These are the ONLY operators that delete rows — QA/QC rules null cells
-(see :mod:`stglib_spark.operators.qaqc`). All compile to plain filters so
-Catalyst pushes them into the parquet scan (partition pruning + min/max
-row-group skipping at scale).
+These and ``profile_clip`` are the ONLY operators that delete rows —
+QA/QC rules null cells (see :mod:`stglib_spark.operators.qaqc`). All
+compile to plain filters so Catalyst pushes them into the parquet scan
+(partition pruning + min/max row-group skipping at scale).
 """
 
 from __future__ import annotations
@@ -66,19 +67,6 @@ def clip_ds_prf(
         return df
     lo, hi = config["good_bindist"]
     return df.filter(F.col(bindist_col).between(F.lit(lo), F.lit(hi)))
-
-
-def profile_clip_ds(df: DataFrame, config: dict[str, Any]) -> DataFrame:
-    """Keep whole profiles listed in ``good_profiles`` (rsk/cdf2nc.py:396-438)."""
-    if config.get("good_profiles") is None:
-        return df
-    return df.filter(F.col("profile").isin(list(config["good_profiles"])))
-
-
-def drop_vars(df: DataFrame, config: dict[str, Any]) -> DataFrame:
-    """Drop user-listed variables (core/qaqc.py:677-693)."""
-    cols = config.get("drop_vars") or []
-    return df.drop(*[c for c in cols if c in df.columns])
 
 
 def trim_max_wp(df: DataFrame, config: dict[str, Any]) -> DataFrame:

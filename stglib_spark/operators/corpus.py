@@ -89,18 +89,6 @@ def contaminated_ids(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    ngram: int = 13,
-) -> DataFrame:
-    """Benchmark decontamination, removal half: the corpus minus every
-    document flagged by ``contaminated_ids`` (left-anti join on id —
-    equi-join, AQE-broadcastable since the contaminated set is small)."""
-    bad = contaminated_ids(docs, benchmark, ngram=ngram)
-    return docs.join(bad.select("doc_id"), "doc_id", "left_anti")
-
-
 def duplicate_ngram_fraction(
     df: DataFrame,
     ngram: int = 3,

@@ -138,40 +138,6 @@ def audio_stats(df: DataFrame) -> DataFrame:
     return df.select("media_id", "content").mapInPandas(fn, out_schema)
 
 
-def resize_images(
-    df: DataFrame,
-    target_w: int = 224,
-    target_h: int = 224,
-) -> DataFrame:
-    """image binary → resized binary: decode (BMP/PNM/PNG), nearest
-    resize, re-encode as BMP. Output keeps the MEDIA_SCHEMA contract
-    with updated dims; an unsupported payload raises
-    ``UnsupportedMediaError``."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from stglib_spark.functions.media import (
-            decode_image,
-            encode_bmp,
-            resize_nearest,
-        )
-
-        for pdf in batches:
-            out = pdf.copy()
-            new_content = []
-            for content in pdf["content"]:
-                payload = bytes(content) if content is not None else b""
-                img = decode_image(payload)
-                new_content.append(
-                    encode_bmp(resize_nearest(img, target_w, target_h))
-                )
-            out["content"] = new_content
-            out["width"] = target_w
-            out["height"] = target_h
-            yield out
-
-    return df.mapInPandas(fn, df.schema)
-
-
 def sample_video_frames(
     df: DataFrame,
     n_frames: int = 8,

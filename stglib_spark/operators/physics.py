@@ -1,5 +1,5 @@
 """Physical derivations — pressure/depth, salinity/conductance, SSC,
-water level, dispersion relation — all native Column math.
+water level — all native Column math.
 
 Reference semantics:
 - ``pres2dep`` seawater depth from pressure (``core/utils.py:1926-1985``,
@@ -11,8 +11,6 @@ Reference semantics:
 - ``salinity_from_spcon`` / ``spcon_from_salinity`` Schemel polynomials
   (``utils.py:1494-1532``).
 - ``turbidity_to_ssc`` linear calibration (``utils.py:2006-2041``).
-- ``qkfs`` surface-wave dispersion ω,h → k, 3 Newton iterations
-  (Wiberg & Sherwood 2009; ``core/waves.py:988-1007``).
 - transfer function Kp = cosh(k·z)/cosh(k·h) (``core/waves.py:778-803``).
 """
 
@@ -76,32 +74,6 @@ def turbidity_to_ssc(turb: Column, coefs: list[float]) -> Column:
     for c in coefs[1:]:
         out = out * turb + F.lit(float(c))
     return out
-
-
-def qkfs(omega: Column, h: Column) -> Column:
-    """Dispersion ω, h → wavenumber k (core/waves.py:988-1007, Wiberg &
-    Sherwood 2009): x = ω²h/g; start kh = √x for x<1 else x; three Newton
-    iterations of f = kh·tanh(kh) − x.
-
-    Implemented as a ``aggregate`` (fold) over a 3-element sequence so
-    each Newton step is evaluated exactly ONCE per row.  A naive unroll
-    substitutes kh into itself ~7× per step (kh appears 7 times in the
-    update), giving a ~7³-node expression tree that blows past the
-    JIT/codegen budget and is re-evaluated subexpression-by-subexpression
-    in interpreted mode — ~2.5s at sf0.1 vs ~0.3s for this fold, and the
-    gap widens with data size.  No UDF: tanh/exp stay JVM-side."""
-    x = omega * omega * h / F.lit(G)
-    kh0 = F.when(x < 1.0, F.sqrt(x)).otherwise(x)
-    return (
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(3)),
-            kh0,
-            lambda kh, _i: kh
-            - (kh * F.tanh(kh) - x)
-            / (F.tanh(kh) + kh * (F.lit(1.0) - F.tanh(kh) * F.tanh(kh))),
-        )
-        / h
-    )
 
 
 def make_bin_depth(

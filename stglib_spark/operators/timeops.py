@@ -126,69 +126,6 @@ def fill_time_gaps(
     return grid.join(df, [*series_cols, time_col], "left")
 
 
-def avg_tide_bursts(
-    df: DataFrame,
-    burst_col: str,
-    sample_col: str,
-    value_cols: Sequence[str],
-    samples_per_burst: int,
-    interval_samples: int,
-    avg_samples: int,
-    interval_seconds: float,
-) -> DataFrame:
-    """Seagauge tide product (sg/cdf2nc.py:147-230 avg_tide_bursts): each
-    pressure burst of ``samples_per_burst`` samples is subdivided into
-    ceil(n/interval_samples) tide intervals of ``interval_samples``
-    samples; each interval's value is the mean of its FIRST
-    ``avg_samples`` samples, timestamped burst_start + i·interval.
-
-    The reference pads short bursts with NaN and uses plain ``np.mean``,
-    so an interval whose first ``avg_samples`` slots aren't ALL present
-    and valid yields a fill value — replicated here with a count gate.
-    Output keeps EVERY interval slot of every burst (missing data → null),
-    exactly like the reference's reshape: one row per (burst, interval).
-
-    Long-form Spark shape: interval index is pure column arithmetic on the
-    sample number (no reshape); the full slot grid comes from exploding a
-    ``sequence`` per burst (tiny: rows-per-burst × bursts) left-joined
-    with the aggregated means — one shuffle on the burst key.
-    """
-    import math as _math
-
-    rows = _math.ceil(samples_per_burst / interval_samples)
-    keys = [burst_col]
-
-    s = df.filter(F.col(sample_col) < samples_per_burst).withColumn(
-        "__tide", (F.col(sample_col) / interval_samples).cast("int")
-    )
-    in_avg = (F.col(sample_col) % interval_samples) < avg_samples
-    aggs = []
-    for v in value_cols:
-        valid = F.when(in_avg & F.col(v).isNotNull(), 1).otherwise(0)
-        aggs.append(
-            F.when(
-                F.sum(valid) == avg_samples,
-                F.avg(F.when(in_avg, F.col(v))),
-            ).alias(v)
-        )
-    means = s.groupBy(*keys, "__tide").agg(*aggs)
-
-    grid = (
-        df.select(*keys)
-        .distinct()
-        .withColumn("__tide", F.explode(F.sequence(F.lit(0), F.lit(rows - 1))))
-    )
-    out = grid.join(means, [*keys, "__tide"], "left")
-    tide_time = F.timestamp_micros(
-        F.unix_micros(F.col(burst_col))
-        + F.col("__tide").cast("long") * F.lit(int(interval_seconds * 1_000_000))
-    )
-    return out.select(
-        tide_time.alias("time"),
-        *[F.col(v) for v in value_cols],
-    )
-
-
 def burst_nan_fill(
     df: DataFrame,
     value_col: str,

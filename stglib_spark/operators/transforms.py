@@ -109,7 +109,7 @@ def beam2enu_columns(
     of multiply-adds each, fully codegen'd; no UDF.
 
     Supports 3-beam (Aquadopp 3×3) AND 4-beam (Signature/RDI) matrices:
-    a 4×4 ``Beam2xyz`` (sig_mat.sig_group_attrs / pd0_transform_matrix)
+    a 4×4 ``Beam2xyz`` (sig_mat.parse_sig_file / pd0_transform_matrix)
     contributes its first three rows — X, Y, Z; the fourth is the error
     velocity and does not rotate (sig/cdf2nc.py Beam2xyz application).
     ``beam_cols`` must match the matrix column count.

@@ -1,17 +1,15 @@
 """Velocity profile trims and signal-quality gates.
 
 Reference: ``stglib/aqd/aqdutils.py`` — ``trim_vel`` :435-658 (water-level /
-side-lobe / brange / inst-height / bin-range trims + last-good-bin
-truncate), ``fill_agc``/``fill_cor`` :1631-1714 (AGC & correlation gates),
+side-lobe / brange / inst-height / bin-range trims),
+``fill_agc``/``fill_cor`` :1631-1714 (AGC & correlation gates),
 and the SNR gates ``stglib/iq.py:661-708`` / ``stglib/vec/cdf2nc.py:628-675``.
 
 Spark-first shape: data is long-form — one row per (time, bindist) with
 velocity value columns; the instrument pressure / boundary range is a plain
 column on the row (broadcast-joined beforehand if it came from a companion
 table). Every trim is then a single ``when(keep, v)`` projection over the
-scan — no shuffle at any scale; the only multi-row dependency is the
-last-good-bin truncate, which is one aggregation over bins (tiny: ≤ a few
-hundred distinct bins regardless of data size) broadcast back as a filter.
+scan — no shuffle at any scale.
 """
 
 from __future__ import annotations
@@ -112,31 +110,6 @@ def trim_vel(
     return _null_unless(df, keep, data_vars)
 
 
-def drop_all_null_tail_bins(
-    df: DataFrame,
-    var: str,
-    time_col: str = "time",
-) -> DataFrame:
-    """Last-good-bin truncate (aqdutils.py:638-650): find the FIRST bin (in
-    bindist order) whose values are null at every time step, and delete that
-    bin and everything beyond it. One tiny per-bin aggregation (≤ hundreds
-    of groups) joined back as a broadcast filter."""
-    per_bin = (
-        df.groupBy("bindist")
-        .agg(F.max(F.col(var).isNotNull().cast("int")).alias("__any_valid"))
-    )
-    first_bad = per_bin.filter(F.col("__any_valid") == 0).agg(
-        F.min("bindist").alias("__cut")
-    )
-    # broadcast the 1-row scalar instead of collecting it: keeps the plan
-    # lazy/composable and off the driver
-    return (
-        df.crossJoin(F.broadcast(first_bad))
-        .filter(F.col("__cut").isNull() | (F.col("bindist") < F.col("__cut")))
-        .drop("__cut")
-    )
-
-
 def fill_agc(df: DataFrame, config: dict[str, Any]) -> DataFrame:
     """AGC gates (aqdutils.py:1631-1664): null transformed velocities where
     average echo intensity AGC_1202 is outside [velocity_agc_min,
@@ -220,15 +193,3 @@ def fill_vbper(
         return df
     keep = F.col("VbPercentGood") > F.lit(float(thr))
     return _null_unless(df, keep, [v for v in variables if v in df.columns])
-
-
-def puv_qaqc(df: DataFrame) -> DataFrame:
-    """PUV direction QA (core/waves.py:1831-1836 puv_qaqc): null the wave
-    direction/azimuth estimates wherever the tail-spliced RMS height is
-    null (no valid spectral tail → no trustworthy direction)."""
-    sentinel = "Hrmsu_tail"
-    if sentinel not in df.columns:
-        return df
-    keep = F.col(sentinel).isNotNull()
-    targets = [c for c in ("phir", "azr", "phir_tail", "azr_tail") if c in df.columns]
-    return _null_unless(df, keep, targets)

@@ -534,9 +534,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
                     F.col("HeadAngle"), F.col("Hdg_1215")
                 ),
             )
-        son_history = History()
-        son_history.entries = list(history.entries)
-        son_history.notes = {k: list(v) for k, v in history.notes.items()}
+        son_history = history.copy()
         son_history.insert_history("Averaged sonar sweeps.")
         _write_zone(avg, config, "sonavg", son_history)
 
@@ -571,11 +569,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
                     float(burst_dur) if burst_dur is not None else None
                 ),
             )
-            tide_history = History()
-            tide_history.entries = list(history.entries)
-            tide_history.notes = {
-                k: list(v) for k, v in history.notes.items()
-            }
+            tide_history = history.copy()
             tide_history.insert_history(
                 f"Averaged tide bursts over "
                 f"{config['average_tide_interval']} s intervals "
@@ -651,9 +645,7 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
             averaged = averaged.withColumn(
                 "Hdg_1215", F.pmod(F.col("Hdg_1215"), F.lit(360.0))
             )
-        avg_history = History()
-        avg_history.entries = list(history.entries)
-        avg_history.notes = {k: list(v) for k, v in history.notes.items()}
+        avg_history = history.copy()
         histtext = f"Averaged over {config['average_interval']} s intervals."
         if config.get("mean_minf") and expected_n is not None:
             # the reference's audit sentence (sig/cdf2nc.py:358-364)
@@ -1234,7 +1226,6 @@ def run_corpus(spark: SparkSession, config: dict[str, Any]) -> dict[str, str]:
         base = read_jsonl_corpus(
             spark,
             config["documents_path"],
-            text_field=config.get("jsonl_text_field", "text"),
             id_field=config.get("jsonl_id_field"),
         )
         history.insert_history("Ingested jsonl corpus (content-addressed ids).")

@@ -2154,7 +2154,7 @@ def coord_beam2enu_4beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-beam (Signature/RDI Janus) BEAM→ENU: the 4×4 Beam2xyz matrix
     contributes its XYZ rows; same 9-term native-trig projection shape as
     coord_beam2enu but with four beam inputs (sig/cdf2nc.py Beam2xyz
-    application; matrices come from sig_group_attrs/pd0_transform_matrix
+    application; matrices come from parse_sig_file/pd0_transform_matrix
     in real deployments)."""
     # no spread(): these are scan-speed projections — repartitioning a
     # multi-partition fact scan for extra parallelism costs more than the
@@ -9620,7 +9620,10 @@ def ts_seagauge_tides(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seagauge tide product (sg/cdf2nc.py:147-230): hourly 60-sample
     bursts subdivided into four 15-sample tide intervals; each interval =
     mean of its first 10 samples, gated on all 10 being present (the
-    reference's NaN-padded np.mean), timestamped burst + i·15 min."""
+    reference's NaN-padded np.mean), timestamped burst + i·15 min. The
+    row index stands for the sample at one sample a minute, so the
+    production ``timeops.average_tide_bursts`` runs with a 900 s
+    interval, 600 s duration and a 3600 s burst."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy(F.date_trunc("hour", F.col("ts"))).orderBy(
         "ts", "event_id"
@@ -9630,15 +9633,15 @@ def ts_seagauge_tides(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
         (F.row_number().over(w) - 1).alias("samp"),
     )
-    out = timeops.avg_tide_bursts(
+    out = timeops.average_tide_bursts(
         s,
+        interval_seconds=900.0,
+        duration_seconds=600.0,
+        sample_rate_hz=1 / 60,
+        value_cols=["value"],
         burst_col="bt",
         sample_col="samp",
-        value_cols=["value"],
-        samples_per_burst=60,
-        interval_samples=15,
-        avg_samples=10,
-        interval_seconds=900.0,
+        burst_duration_seconds=3600.0,
     )
     return out.select("time", _r6("value").alias("value"))
 

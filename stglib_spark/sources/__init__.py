@@ -45,7 +45,6 @@ def ingest(
 
 
 from stglib_spark.sources import csv as _csv  # noqa: E402,F401  (registers adapters)
-from stglib_spark.sources import binary as _binary  # noqa: E402,F401
 from stglib_spark.sources import netcdf as _netcdf  # noqa: E402,F401
 from stglib_spark.sources import vendor_csv as _vendor_csv  # noqa: E402,F401
 
@@ -125,8 +124,7 @@ def _rdi(spark: SparkSession, path: str, config: dict[str, Any]) -> DataFrame:
 @register_adapter("abss")
 def _abss(spark: SparkSession, path: str, config: dict[str, Any]) -> DataFrame:
     """AQUAscat1000R burst .mat ingest (abss.py:14-233): long
-    (time, bin, transducer) backscatter frame; read_abss_aux exposes the
-    auxiliary channels at their own grain."""
+    (time, bin, transducer) backscatter frame."""
     from stglib_spark.sources.abss_mat import read_abss
 
     return read_abss(spark, path, config)

@@ -13,10 +13,11 @@ concatenated along ``time``:
   names (``abss.py:197-205``).
 
 Spark shape: the acoustic product is long form — one row per
-(burst, bin, transducer) with its own bindist — and the auxiliary
-channels are a second DataFrame at (burst, aux_sample) grain (different
-grains never share a frame). Many-burst deployments parse one file per
-executor task, replacing the reference's serial tqdm loop + concat.
+(burst, bin, transducer) with its own bindist. The auxiliary channels
+are parsed but not ingested: they sit at (burst, aux_sample) grain, and
+different grains never share a frame. Many-burst deployments parse one
+file per executor task, replacing the reference's serial tqdm loop +
+concat.
 """
 
 from __future__ import annotations
@@ -160,52 +161,3 @@ def read_abss(
         lambda p: _burst_rows(parse_abss_file(p))
     )
     return spark.createDataFrame(rdd, ABSS_SCHEMA)
-
-
-def read_abss_aux(spark: SparkSession, path: str) -> DataFrame:
-    """Auxiliary channels → (time, burst_number, aux_sample_number,
-    <channels...>) frame; units ride as column metadata."""
-    from stglib_spark.attrs import apply_var_attrs
-
-    paths = _abss_paths(path)
-    first = parse_abss_file(paths[0])
-    names = sorted(first["aux"])
-    schema = StructType(
-        [
-            StructField("time", TimestampType(), False),
-            StructField("burst_number", LongType(), True),
-            StructField("aux_sample_number", IntegerType(), False),
-        ]
-        + [StructField(n, DoubleType(), True) for n in names]
-    )
-
-    def rows_for(p: str) -> list[tuple]:
-        g = parse_abss_file(p)
-        n = max((len(v) for _u, v in g["aux"].values()), default=0)
-        out = []
-        for i in range(n):
-            # .get(): a burst file missing a first-file channel (mid-
-            # deployment reconfiguration) null-fills instead of failing
-            # the task; channels absent from file 1 are not representable
-            # in the schema and are dropped (documented limitation)
-            vals = []
-            for name in names:
-                chan = g["aux"].get(name)
-                vals.append(
-                    float(chan[1][i])
-                    if chan is not None and i < len(chan[1])
-                    else None
-                )
-            out.append(tuple([g["time"], g["burst_number"], i + 1] + vals))
-        return out
-
-    if len(paths) == 1:
-        df = spark.createDataFrame(rows_for(paths[0]), schema)
-    else:
-        from stglib_spark.session import ensure_package_shipped
-
-        ensure_package_shipped(spark)
-        rdd = spark.sparkContext.parallelize(paths, len(paths)).flatMap(rows_for)
-        df = spark.createDataFrame(rdd, schema)
-    extra = {n: {"units": first["aux"][n][0]} for n in names if first["aux"][n][0]}
-    return apply_var_attrs(df, extra)

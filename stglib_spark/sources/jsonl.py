@@ -37,47 +37,47 @@ JSONL_SCHEMA = StructType(
 def read_jsonl_corpus(
     spark: SparkSession,
     path: str,
-    text_field: str = "text",
     id_field: str | None = None,
 ) -> DataFrame:
     """jsonl[.gz] at ``path`` (file, directory, or glob) → canonical
     documents frame (doc_id bigint, text, source, n_chars).
 
-    ``id_field`` uses the dump's own id (hashed to 64 bits if
-    non-numeric); otherwise doc_id is the content address
-    ``xxhash64(input_file, text, occurrence-within-(file,text))`` —
-    deterministic across runs, no global counter. Null/absent text
-    rows are dropped (they carry nothing any downstream operator can
-    use); ``source`` falls back to the input file name."""
+    The text is ``JSONL_SCHEMA``'s ``text`` field. ``id_field`` names
+    another field of ``JSONL_SCHEMA`` that carries the dump's own id
+    (hashed to 64 bits if non-numeric); any other name raises
+    ``ValueError`` before a file is read. Without it doc_id is the
+    content address ``xxhash64(input_file, text,
+    occurrence-within-(file,text))`` — deterministic across runs, no
+    global counter. Null/absent text rows are dropped (they carry
+    nothing any downstream operator can use); ``source`` falls back to
+    the input file name."""
+    if id_field and id_field not in JSONL_SCHEMA.fieldNames():
+        raise ValueError(
+            f"id field {id_field!r} is not in the jsonl schema; "
+            f"fields: {JSONL_SCHEMA.fieldNames()}"
+        )
     raw = (
         spark.read.schema(JSONL_SCHEMA)
         .json(path)
         .withColumn("__file", F.input_file_name())
     )
-    raw = raw.filter(F.col(text_field).isNotNull())
+    raw = raw.filter(F.col("text").isNotNull())
     src = F.coalesce(F.col("source"), F.col("__file"))
     if id_field:
+        # every JSONL_SCHEMA field is a string
         ident = F.col(id_field)
-        doc_id = (
-            ident.cast("long")
-            if isinstance(raw.schema[id_field].dataType, StringType) is False
-            else F.coalesce(
-                ident.cast("long"), F.xxhash64(ident)
-            )
-        )
+        doc_id = F.coalesce(ident.cast("long"), F.xxhash64(ident))
     else:
         occ = (
             F.row_number().over(
-                Window.partitionBy("__file", text_field).orderBy(
-                    F.lit(1)
-                )
+                Window.partitionBy("__file", "text").orderBy(F.lit(1))
             )
             - 1
         )
-        doc_id = F.xxhash64(F.col("__file"), F.col(text_field), occ)
+        doc_id = F.xxhash64(F.col("__file"), F.col("text"), occ)
     return raw.select(
         doc_id.alias("doc_id"),
-        F.col(text_field).alias("text"),
+        F.col("text"),
         src.alias("source"),
-        F.length(text_field).cast("long").alias("n_chars"),
+        F.length("text").cast("long").alias("n_chars"),
     )

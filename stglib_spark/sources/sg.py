@@ -1,22 +1,22 @@
-"""SBE 26plus Seagauge ingest: .hex metadata + .wb wave-burst files.
+"""SBE 26plus Seagauge ingest: .wb wave-burst files.
 
-Reference: ``stglib/sg/sgutils.py:13-176`` — ``read_hex`` (instrument /
-calibration metadata key-value scan), ``read_wb`` (burst text: a ``*``
-header line per burst carrying burst number, start time in seconds since
-2000-01-01, and sample count, followed by rows of 4 pressure values),
-``int_to_date`` epoch-2000 seconds.
+Reference: ``stglib/sg/sgutils.py:102-176`` — ``read_wb`` (burst text: a
+``*`` header line per burst carrying burst number, start time in seconds
+since 2000-01-01, and sample count, followed by rows of 4 pressure
+values), ``int_to_date`` epoch-2000 seconds. The ``.hex`` metadata scan
+(``read_hex``, :13-101) is not ported: its SG* attributes come in
+through the config.
 
-Spark shape: metadata parse is driver-side config (tiny file); burst data
-go ``binaryFile → mapPartitions`` so each deployment file is one task and
-rows come out in canonical burst long form (time, burst_number, sample,
-P_1) — no driver row handling, same scale pattern as the PD0 reader.
+Spark shape: burst data go ``binaryFile → mapPartitions`` so each
+deployment file is one task and rows come out in canonical burst long
+form (time, burst_number, sample, P_1) — no driver row handling, same
+scale pattern as the PD0 reader.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import re
-from typing import Any, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -30,45 +30,6 @@ from pyspark.sql.types import (
 )
 
 EPOCH_2000 = dt.datetime(2000, 1, 1)
-
-# metadata line → attr key; ``(n)`` = whitespace token index of the value
-_HEX_PATTERNS: list[tuple[str, str, int]] = [
-    ("Software Version", "SGSoftwareVersion", 2),
-    ("quartz pressure sensor", "SGPressureSensorSerial", 6),
-    ("tide samples/day", "SGTideSamplesPerDay", 3),
-    ("wave bursts/day", "SGWaveBurstsPerDay", 3),
-    ("total recorded tide measurements", "SGNumberOfTideMeasurements", 5),
-    ("total recorded wave bursts", "SGNumberOfWaveBursts", 5),
-]
-_CAL_RE = re.compile(r"^\s*\*?\s*(U0|Y1|Y2|Y3|C1|C2|C3|D1|D2|T1|T2|T3|T4|M|B|OFFSET|TA0|TA1|TA2|TA3)\s*=\s*([-+0-9.eE]+)")
-
-
-def read_sg_hex_meta(path: str) -> dict[str, Any]:
-    """Driver-side .hex metadata scan (sgutils.py:13-101): returns the
-    SG* attribute dict that parameterizes tide/wave processing."""
-    meta: dict[str, Any] = {}
-    with open(path, errors="replace") as f:
-        for row in f:
-            row = row.rstrip()
-            if "S>DD" in row:
-                break
-            col = row.split()
-            for needle, key, idx in _HEX_PATTERNS:
-                if needle in row and len(col) > idx:
-                    meta[key] = col[idx]
-            if "tide measurement: interval" in row:
-                meta["SGTideInterval"] = col[4]
-                meta["SGTideDuration"] = col[8]
-            elif "wave samples/burst" in row:
-                meta["SGWaveSamples"] = col[0].lstrip("*")
-                meta["SGSample_rate"] = col[4]
-                meta["SGBurstDuration"] = col[8]
-            else:
-                m = _CAL_RE.match(row)
-                if m:
-                    meta[f"SGCalibration{m.group(1)}"] = float(m.group(2))
-    return meta
-
 
 SG_WB_SCHEMA = StructType(
     [

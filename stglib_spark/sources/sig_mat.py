@@ -481,20 +481,3 @@ def read_signature_mat(
         df = apply_var_attrs(df, {k: v for k, v in extra.items() if v})
         out[ftype] = df
     return out
-
-
-def sig_group_attrs(path: str) -> dict[str, dict[str, Any]]:
-    """Per-ftype attr dicts (data_type, sample_mode, SIG-prefixed Config,
-    Beam2xyz) from the first file — the job-parameter twin of the
-    reference's ds.attrs."""
-    if not os.path.isfile(path):
-        matches = sorted(glob.glob(f"{path}_*.mat"), key=lambda p: (len(p), p))
-        path = matches[0]
-    parsed = parse_sig_file(path)
-    return {
-        ft: dict(
-            g["attrs"],
-            beam2xyz=None if g["beam2xyz"] is None else g["beam2xyz"].tolist(),
-        )
-        for ft, g in parsed.items()
-    }

@@ -457,18 +457,6 @@ def lisst_burst_keys(df: DataFrame) -> DataFrame:
     )
 
 
-def read_lop_meta(path: str) -> dict[str, Any]:
-    """Driver-side .lop metadata parse (lisst.py:487-500): `key: value`
-    lines become LISST<key> config attributes."""
-    meta: dict[str, Any] = {}
-    with open(path, errors="replace") as f:
-        for line in f:
-            parts = line.split(":", 1)
-            if len(parts) > 1:
-                meta[f"LISST{parts[0].replace(' ', '')}"] = parts[1].strip()
-    return meta
-
-
 # ---------------------------------------------------------------- TROLL
 
 

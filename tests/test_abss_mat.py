@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from stglib_spark.functions.mat5 import savemat
-from stglib_spark.sources.abss_mat import parse_abss_file, read_abss, read_abss_aux
+from stglib_spark.sources.abss_mat import parse_abss_file, read_abss
 
 NBIN, NTX, NAUX = 6, 2, 8
 
@@ -61,18 +61,6 @@ def test_read_abss_multifile(spark, tmp_path):
     assert r["mean_abs_data"] == pytest.approx(v1["AbsMean"][0, 0])
     # grain is unique
     assert df.select("time", "bin_number", "transducer_number").distinct().count() == len(rows)
-
-
-def test_read_abss_aux(spark, tmp_path):
-    d = str(tmp_path)
-    v1 = _fixture(os.path.join(d, "b1.mat"), dt.datetime(2023, 8, 1, 12), 1)
-    aux = read_abss_aux(spark, d)
-    rows = aux.orderBy("aux_sample_number").collect()
-    assert len(rows) == NAUX
-    assert rows[0]["Pressure"] == pytest.approx(v1["AuxData"][0, 0])
-    assert rows[3]["BatteryVolts"] == pytest.approx(v1["AuxData"][3, 2])
-    meta = {f.name: dict(f.metadata) for f in aux.schema.fields if f.metadata}
-    assert meta["Pressure"]["units"] == "dBar"
 
 
 def test_abss_adapter_registered(spark, tmp_path):

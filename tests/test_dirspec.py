@@ -469,32 +469,6 @@ def test_export_diwasp_spec_stage(spark, tmp_path):
     assert S[1, 2] == (1 * 6 + 2 + 2) / 3.0
 
 
-def test_infospec_matches_reference_conventions():
-    """infospec argmax conventions: Tp from the direction-summed row
-    maximum (first max wins), DTp within that row, Dp from the
-    frequency-summed column maximum, compass = (180 + xaxisdir - D)
-    mod 360, Hsig by the rectangular double integral."""
-    import numpy as np
-
-    from stglib_spark.functions.diwasp import infospec, spec_hsig
-
-    freqs = np.array([0.05, 0.10, 0.15, 0.20])
-    dirs = np.array([0.0, 90.0, 180.0, 270.0])
-    S = np.zeros((4, 4))
-    S[1, 2] = 5.0   # peak row f=0.10, peak dir 180
-    S[1, 0] = 1.0
-    S[3, 3] = 3.0
-    S[2, 3] = 2.5   # column 270 sums to 5.5 > column 180's 5.0 -> Dp=270
-    hs, tp, dtp, dp, dtpc, dpc = infospec(90.0, freqs, dirs, S)
-    assert tp == 1.0 / 0.10
-    assert dtp == 180.0
-    assert dp == 270.0
-    assert dtpc == (180.0 + 90.0 - 180.0) % 360.0 == 90.0
-    assert dpc == (180.0 + 90.0 - 270.0) % 360.0 == 0.0
-    assert hs == 4.0 * np.sqrt(S.sum() * 0.05 * 90.0)
-    assert spec_hsig(freqs, dirs, S) == hs
-
-
 def test_spec_text_roundtrip_property():
     """Property: any finite-double spectrum survives the text container
     bit-exactly."""

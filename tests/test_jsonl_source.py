@@ -63,6 +63,15 @@ def test_jsonl_explicit_id_field(spark, jl_dir):
     assert got["alpha beta gamma"] is not None  # absent id -> hashed
 
 
+def test_jsonl_id_field_outside_schema_rejected(spark, jl_dir):
+    """A dump whose id sits in a field the read schema does not carry
+    fails up front, naming the fields it could use."""
+    with pytest.raises(
+        ValueError, match=r"'doc'.*\['text', 'id', 'source', 'lang', 'url'\]"
+    ):
+        read_jsonl_corpus(spark, jl_dir, id_field="doc")
+
+
 def test_corpus_stage_ingests_jsonl(spark, jl_dir, tmp_path):
     import pyarrow.parquet as pq
 

@@ -142,22 +142,6 @@ def test_decode_features_real_in_spark(spark):
     )
 
 
-def test_resize_images_real_in_spark(spark):
-    from stglib_spark.operators.multimodal import resize_images
-
-    img = _gradient(32, 20)
-    row = (1, "image", bytearray(encode_ppm(img)), "image/ppm", 20, 32, None)
-    df = spark.createDataFrame(
-        [row],
-        "media_id long, kind string, content binary, mime string, "
-        "width int, height int, duration_ms int",
-    )
-    out = resize_images(df, target_w=8, target_h=8).collect()[0]
-    assert out["width"] == 8 and out["height"] == 8
-    back = decode_bmp(bytes(out["content"]))
-    np.testing.assert_array_equal(back, resize_nearest(img, 8, 8))
-
-
 # --------------------------------------------------------------------------
 # PNG (zlib DEFLATE) — round trips plus hand-FORWARD-filtered fixtures so
 # every unfilter branch (Sub/Up/Average/Paeth) is inverted against an

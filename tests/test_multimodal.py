@@ -8,7 +8,6 @@ import pytest
 from stglib_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     decode_features,
-    resize_images,
     sample_video_frames,
 )
 
@@ -52,31 +51,6 @@ def test_decode_features_contract(spark):
     for k, color in colors.items():
         assert all(abs(x - color / 255.0) < 1e-6 for x in rows[k].feature)
     assert rows[0].feature == rows[2].feature
-
-
-def test_resize_images_keeps_schema(spark):
-    """Resize re-encodes each image as a BMP of the target size and
-    keeps the MEDIA_SCHEMA contract with updated dims."""
-    from stglib_spark.functions.media import decode_bmp
-
-    df = spark.createDataFrame(
-        [
-            (0, "image", bytearray(_constant_bmp(30, 16, 12)), "image/bmp",
-             16, 12, None),
-            (1, "image", bytearray(_constant_bmp(90, 20, 10)), "image/bmp",
-             20, 10, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = resize_images(df, 64, 48)
-    rows = {r.media_id: r for r in out.collect()}
-    assert len(rows) == 2
-    assert all(r.width == 64 and r.height == 48 for r in rows.values())
-    for k, color in ((0, 30), (1, 90)):
-        img = decode_bmp(bytes(rows[k].content))
-        assert img.shape == (48, 64, 3)
-        assert (img == color).all()
-    assert out.schema == df.schema
 
 
 def test_video_frame_sampling(spark):

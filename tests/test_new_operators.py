@@ -59,17 +59,6 @@ def test_trim_vel_water_level_sl(spark):
     assert vals == [1.0, 2.0, None, None]
 
 
-def test_drop_all_null_tail_bins(spark):
-    rows = []
-    for t in range(3):
-        for b, v in [(1.0, 1.0), (2.0, None), (3.0, 2.0), (4.0, None)]:
-            rows.append((t, b, v))
-    df = spark.createDataFrame(rows, "t INT, bindist DOUBLE, U DOUBLE")
-    out = velocity.drop_all_null_tail_bins(df, "U", time_col="t")
-    # bin 2.0 is the FIRST all-null bin → keep only bindist < 2.0
-    assert sorted({r["bindist"] for r in out.collect()}) == [1.0]
-
-
 def test_ragged_index(spark):
     df = spark.createDataFrame(
         [(1, i) for i in range(3)] + [(2, i) for i in range(5)] + [(4, 0)],
@@ -159,8 +148,8 @@ def test_burst_nan_fill(spark):
     assert got[(3, 0)] is None  # nearest non-null beyond tolerance
 
 
-def test_fill_vbper_and_puv_qaqc(spark):
-    from stglib_spark.operators.velocity import fill_vbper, puv_qaqc
+def test_fill_vbper(spark):
+    from stglib_spark.operators.velocity import fill_vbper
 
     df = spark.createDataFrame(
         [(1, 5.0, 25.0), (2, 6.0, 15.0), (3, 7.0, 20.0)],
@@ -170,14 +159,6 @@ def test_fill_vbper_and_puv_qaqc(spark):
     assert out[1] == 5.0
     assert out[2] is None
     assert out[3] is None  # strictly-greater keep, iq.py:731
-
-    puv = spark.createDataFrame(
-        [(1, 0.5, 30.0, 120.0), (2, None, 40.0, 130.0)],
-        "id INT, Hrmsu_tail DOUBLE, phir DOUBLE, azr DOUBLE",
-    )
-    got = {r["id"]: (r["phir"], r["azr"]) for r in puv_qaqc(puv).collect()}
-    assert got[1] == (30.0, 120.0)
-    assert got[2] == (None, None)
 
 
 def test_simhash_near_pairs_blocks_and_validation(spark):
@@ -484,32 +465,6 @@ def test_stratified_sample_deterministic_and_bounded(spark):
         ).collect()
     )
     assert a != c
-
-
-def test_decontaminate_removes_flagged_docs(spark):
-    """The removal half: docs sharing a 3-gram with the benchmark vanish,
-    clean docs survive."""
-    from stglib_spark.operators.corpus import contaminated_ids, decontaminate
-
-    bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "totally unrelated text about oceanography instruments"),
-            (2, "he said the quick brown fox appeared"),  # shares 3-grams
-            (3, "quick brown foxes are unrelated plural"),
-        ],
-        "doc_id long, text string",
-    )
-    bad = {
-        r["doc_id"]: r["n_hit_grams"]
-        for r in contaminated_ids(docs, bench, ngram=3).collect()
-    }
-    assert set(bad) == {2} and bad[2] >= 2
-    clean = sorted(r["doc_id"] for r in decontaminate(docs, bench, ngram=3).collect())
-    assert clean == [1, 3]
 
 
 def test_redact_pii_placeholders_and_order(spark):
@@ -1649,6 +1604,25 @@ def test_interval_average_sig_fixed_expected_gate(spark):
         minf=0.5,
     ).toPandas()
     np.testing.assert_allclose(legacy["v"].iloc[0], 1.5)
+    # without expected_n the own-row gate truncates like mean_minf
+    # (utils.py:2067 min_count = int(n·minf)): 2 valid of 5 rows, minf
+    # 0.5 → 2 >= int(2.5) passes
+    sparse = spark.createDataFrame(
+        [
+            (t0 + dt.timedelta(seconds=s), v)
+            for s, v in enumerate([0.0, None, 1.0, None, None])
+        ],
+        "time timestamp, v double",
+    )
+    own = interval_average(
+        sparse,
+        time_col="time",
+        interval_seconds=10,
+        duration_seconds=None,
+        value_cols=["v"],
+        minf=0.5,
+    ).toPandas()
+    np.testing.assert_allclose(own["v"].iloc[0], 0.5)
 
 
 def test_interval_average_vector_cols_unwrapped(spark):

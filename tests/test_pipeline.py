@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from stglib_spark.operators.waves import qkfs_np
 from stglib_spark.pipeline import _zone_path, run_all, run_clean
 from stglib_spark.sources import ingest
-from stglib_spark.sources.binary import write_demo_file
 
 @pytest.fixture(scope="module")
 def fixture_dir(tmp_path_factory):
@@ -118,20 +117,6 @@ def test_pipeline_end_to_end(spark, burst_csv, fixture_dir):
     for r in rows:
         assert r.wh_4061 == pytest.approx(expected_hs, rel=2e-2)
         assert r.wp_peak == pytest.approx(8.0, rel=0.05)
-
-
-def test_binary_ensemble_adapter(spark, fixture_dir):
-    path = os.path.join(fixture_dir, "demo.bin")
-    ensembles = [
-        (1700000000000000 + i * 1000000, [float(i), float(i) * 2, 3.0])
-        for i in range(50)
-    ]
-    write_demo_file(path, ensembles)
-    df = ingest(spark, "binary_ensemble", path, {})
-    rows = df.orderBy("seq").collect()
-    assert len(rows) == 50
-    assert rows[10].vals == [10.0, 20.0, 3.0]
-    assert rows[0].time is not None
 
 
 def test_generic_csv_adapter(spark, fixture_dir):
@@ -352,22 +337,6 @@ def test_split_profiles_partitioned_write(spark, fixture_dir):
     subdirs = {d for d in os.listdir(path) if d.startswith("profile=")}
     assert subdirs == {"profile=0", "profile=1", "profile=2"}
     assert spark.read.parquet(path).count() == 30
-
-
-def test_average_burst_int_recast(spark):
-    """Integer vars keep their dtype through the burst mean
-    (aqdutils.py:1717-1740)."""
-    from stglib_spark.operators.aggregations import average_burst
-
-    df = spark.createDataFrame(
-        [(1, 10, 1.5), (1, 20, 2.5), (2, 31, 3.5)],
-        "burst int, counts bigint, temp double",
-    )
-    out = average_burst(df, ["burst"], ["counts", "temp"])
-    types = dict(out.dtypes)
-    assert types["counts"] == "bigint" and types["temp"] == "double"
-    got = {r["burst"]: (r["counts"], r["temp"]) for r in out.collect()}
-    assert got[1] == (15, 2.0)
 
 
 def test_config_driven_filters_in_clean(spark, fixture_dir):

@@ -17,7 +17,6 @@ from stglib_spark.sources.sig_mat import (
     matlab2datetime,
     parse_sig_file,
     read_signature_mat,
-    sig_group_attrs,
 )
 
 
@@ -219,10 +218,6 @@ def test_read_signature_multifile_distributed(spark, tmp_path):
         for r in burst.selectExpr("date(time) AS d").distinct().collect()
     )
     assert [str(d) for d in days] == ["2023-05-01", "2023-05-02"]
-
-    attrs = sig_group_attrs(base)
-    assert attrs["burst"]["sample_mode"] == "BURST"
-    assert attrs["burst"]["beam2xyz"] == np.eye(4).tolist()
 
 
 def test_sig_through_pipeline(spark, tmp_path):

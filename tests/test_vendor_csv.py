@@ -308,17 +308,6 @@ def test_lisst_burst_mode(tmp_path, spark):
     assert got[4]["burst_time"] == got[4]["time"]
 
 
-def test_lop_meta(tmp_path):
-    from stglib_spark.sources.vendor_csv import read_lop_meta
-
-    p = str(tmp_path / "dep.lop")
-    with open(p, "w") as f:
-        f.write("Serial Number: 2048\nMeasurement Mode: burst\nnot-a-kv-line\n")
-    meta = read_lop_meta(p)
-    assert meta["LISSTSerialNumber"] == "2048"
-    assert meta["LISSTMeasurementMode"] == "burst"
-
-
 def test_lisst_burst_mode_leading_partial(tmp_path, spark):
     """A record that starts mid-burst keeps its complete bursts; the
     leading fragment is dropped (regression: full-burst size must come

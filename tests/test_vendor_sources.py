@@ -1,4 +1,4 @@
-"""Round-trip tests for the Seagauge .wb/.hex and RBR .rsk readers."""
+"""Round-trip tests for the Seagauge .wb and RBR .rsk readers."""
 
 import datetime as dt
 import sqlite3
@@ -6,7 +6,7 @@ import sqlite3
 import pytest
 
 from stglib_spark.sources.rsk import read_rsk, rsk_sampling_attrs
-from stglib_spark.sources.sg import parse_wb, read_sg_hex_meta, read_sg_wb
+from stglib_spark.sources.sg import parse_wb, read_sg_wb
 
 
 def _write_wb(path, bursts):
@@ -35,27 +35,6 @@ def test_sg_wb_roundtrip(tmp_path, spark):
     assert rows[0]["sample"] == 1 and rows[0]["P_1"] == pytest.approx(10.0)
     assert rows[8]["time"] == dt.datetime(2000, 1, 1, 1)
     assert rows[8]["burst_number"] == 1
-
-
-def test_sg_hex_meta(tmp_path):
-    p = str(tmp_path / "dep.hex")
-    with open(p, "w") as f:
-        f.write(
-            "Software Version 1.2\n"
-            "tide measurement: interval = 10.0 minutes, duration = 60 seconds\n"
-            "*1024 wave samples/burst at 4.00 scans/sec, duration = 256 seconds\n"
-            "U0 = 5.821459e+00\n"
-            "TA0 = 2.3e-04\n"
-            "S>DD\n"
-            "ignored binary tail\n"
-        )
-    meta = read_sg_hex_meta(p)
-    assert meta["SGSoftwareVersion"] == "1.2"
-    assert meta["SGTideInterval"] == "10.0"
-    assert meta["SGWaveSamples"] == "1024"
-    assert meta["SGSample_rate"] == "4.00"
-    assert meta["SGCalibrationU0"] == pytest.approx(5.821459)
-    assert meta["SGCalibrationTA0"] == pytest.approx(2.3e-4)
 
 
 def test_parse_wb_ignores_trailing_garbage():
