@@ -11,17 +11,17 @@ nperseg=next_pow2(nsamps/nsegs), nsegs default 16), ``elevation_spectra``
 (:867-897), moments/stats (:936-961: m_n = ∫Pnn·fⁿ df trapezoid,
 Hs = 4√m0, Tm = √(m0/m2), Tp = 1/f_peak with 0-frequency guarded).
 
-Spark-first design: one ``applyInPandas`` over the burst key computes the
-whole per-burst spectral chain vectorized in NumPy (the FFT-class math
-that genuinely needs Python — SURVEY §7.1). ``applyInPandas`` calls the
-kernel once per group, so each call gets exactly one burst; the streaming
-twins (``streaming/bursts.py``) likewise run it on one closed burst. The
-kernels' ``groupby`` loop over bursts only serves direct callers that pass
-a frame of several bursts. One burst per task-side call is exactly the
-reference's one parallel axis (its dask Client fans out one future per
-burst, core/waves.py:263-306) — here Spark's shuffle gives the same
-embarrassing parallelism across executors, scaling linearly with cluster
-size at 100 TB.
+One burst at a time. Every wave product — waves, elevation waves, PUV,
+fused waves+PUV and DIWASP (``operators/dirspec.py``) — is a *body*
+built once from ``config``: it maps one burst's value arrays, sorted by
+``SAMPLE``, to a dict of output fields, or to ``None`` to skip the
+burst. ``per_burst`` runs a body as one ``applyInPandas`` over the burst
+key and fixes its output by the schema; the streaming twins
+(``streaming/bursts.py``) call the same body on the arrays of a burst
+the watermark closed. One body call per burst is the reference's one
+parallel axis (its dask Client fans out one future per burst,
+core/waves.py:263-306); Spark's shuffle on the burst key spreads the
+bursts over the executors the same way.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -46,6 +46,77 @@ from stglib_spark.functions.signal import next_power_of_2, welch_psd
 BURST, SAMPLE = "burst_time", "sample"
 
 G = 9.81
+
+
+def per_burst(
+    df: DataFrame,
+    value_cols: list[str],
+    body: Callable[..., dict | None],
+    schema: StructType,
+) -> DataFrame:
+    """Run ``body`` once per burst of ``df``. Only ``BURST``, ``SAMPLE``
+    and ``value_cols`` cross into Python; each burst's samples are sorted
+    by ``SAMPLE`` and handed to ``body`` as float arrays in
+    ``value_cols`` order. The body's dict becomes the burst's one row of
+    ``schema``; a ``None`` gives no row. A body that raises fails the
+    stage naming the burst: skipping it would write a zone that looks
+    complete."""
+    names = schema.fieldNames()
+
+    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(SAMPLE)
+        bt = pdf[BURST].iloc[0]
+        row = None
+        if not pd.isna(bt):  # samples with no burst key form no burst
+            try:
+                row = body(*(pdf[c].to_numpy(dtype=float) for c in value_cols))
+            except Exception as exc:
+                raise ValueError(f"burst {bt} failed: {exc}") from exc
+        rows = [] if row is None else [{BURST: bt, **row}]
+        return pd.DataFrame(rows, columns=names)
+
+    slim = df.select(BURST, SAMPLE, *value_cols)
+    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(apply_fn, schema)
+
+
+def gap_filled(x: np.ndarray) -> np.ndarray | None:
+    """``x`` with its NaN samples linearly interpolated, or ``None`` when
+    over 10% of them are NaN: the reference fills gaps within a burst
+    (core/waves.py:1992-2034) and rejects a burst with more."""
+    if not np.isnan(x).any():
+        return x
+    good = np.isfinite(x)
+    if good.mean() < 0.9:
+        return None
+    idx = np.arange(len(x))
+    return np.interp(idx, idx[good], x[good])
+
+
+def welch_nperseg(nsamps: int, nsegs: int) -> int:
+    """The reference's Welch segment length for a burst of ``nsamps``
+    samples: next_pow2(nsamps/nsegs) (core/waves.py:95-99, :746-770),
+    at least 8."""
+    return max(next_power_of_2(int(nsamps / nsegs)), 8)
+
+
+def spectral_stats(f: np.ndarray, pspec: np.ndarray, water_depth: float) -> dict:
+    """One burst's ``wave_stats_schema`` fields from its spectrum
+    (core/waves.py:936-961): m_n = ∫pspec·fⁿ df by trapezoid,
+    Hs = 4√m0, Tm = √(m0/m2), Tp = 1/f_peak with a 0-frequency peak
+    guarded. An all-NaN spectrum gives NaN statistics."""
+    m0 = float(np.trapz(pspec, f))
+    m2 = float(np.trapz(pspec * f**2, f))
+    fp = f[int(np.argmax(np.nan_to_num(pspec, nan=0.0)))]
+    return {
+        "frequency": f.tolist(),
+        "pspec": pspec.tolist(),
+        "m0": m0,
+        "m2": m2,
+        "wh_4061": 4.0 * np.sqrt(m0),
+        "wp_4060": np.sqrt(m0 / m2) if m2 and np.isfinite(m2) else float("nan"),
+        "wp_peak": 1.0 / fp if fp > 0 else float("nan"),
+        "water_depth": water_depth,
+    }
 
 
 def qkfs_np(omega: np.ndarray, h: float) -> np.ndarray:
@@ -129,39 +200,30 @@ def make_dspec_tail_np(
     return out
 
 
-def burst_wave_stats_kernel(
-    pdf: pd.DataFrame,
-    sample_rate: float,
-    sensor_height: float,
-    nsegs: int = 16,
-    noise: float = 0.9,
-    fcut: float | None = None,
-    kpmin: float | None = None,
-    pressure_col: str = "P_1ac",
-) -> pd.DataFrame:
-    """Per-burst spectral chain on a pandas frame of samples: one burst
-    under ``applyInPandas``; a direct caller may pass several, which the
-    ``groupby`` loop splits."""
-    rows = []
-    for bt, grp in pdf.groupby(BURST, sort=True):
-        grp = grp.sort_values(SAMPLE)
-        p = grp[pressure_col].to_numpy(dtype=float)
-        if len(p) < 8 or np.isnan(p).all():
-            continue
-        # NaN pre-fill within burst (waves.py:1992-2034 nearest fill):
-        if np.isnan(p).any():
-            idx = np.arange(len(p))
-            good = np.isfinite(p)
-            if good.mean() < 0.9:  # >10% NaN → reject burst (reference gate)
-                continue
-            p = np.interp(idx, idx[good], p[good])
-        nsamps = len(p)
-        nfft = max(next_power_of_2(int(nsamps / nsegs)), 8)
-        f, pxx = welch_psd(p, fs=sample_rate, nperseg=nfft)
-        h = float(np.mean(p)) + sensor_height  # depth = mean pressure + z
+def waves_body(config: dict) -> Callable[[np.ndarray], dict | None]:
+    """The per-burst body of ``make_waves_ds`` (core/waves.py:571-681):
+    pressure → gap fill → Welch PSD → depth = mean pressure + sensor
+    height → Kp = cosh(k·z)/cosh(k·h) → Pnn = Pxx/Kp² → user cutoff or
+    Jones & Monismith cutoff → f⁻⁴ tail → ``spectral_stats``. A burst
+    under 8 samples or over 10% NaN is skipped."""
+    sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
+    z, _ = sensor_heights(config)
+    nsegs = int(config.get("spec_nsegs", 16))
+    noise = float(config.get("wave_fractional_noise", 0.9))
+    fcut = config.get("wave_fcut")
+    kpmin = config.get("wave_Kpmin")
+
+    def body(p: np.ndarray) -> dict | None:
+        if len(p) < 8:
+            return None
+        p = gap_filled(p)
+        if p is None:
+            return None
+        f, pxx = welch_psd(p, fs=sample_rate, nperseg=welch_nperseg(len(p), nsegs))
+        h = float(np.mean(p)) + z
         k = qkfs_np(2 * np.pi * f, h)
         with np.errstate(invalid="ignore", over="ignore"):
-            kp = np.cosh(k * sensor_height) / np.cosh(k * h)
+            kp = np.cosh(k * z) / np.cosh(k * h)
         kp[np.isnan(k)] = 1.0
         with np.errstate(divide="ignore", invalid="ignore"):
             pnn = pxx / kp**2
@@ -169,107 +231,36 @@ def burst_wave_stats_kernel(
             tailind = make_user_cutoff_np(f, kp, fcut, kpmin)
         else:
             tailind = define_cutoff_np(f, pxx, kp, noise)
-        pspec = make_tail_np(f, pnn, tailind)
-        m0 = float(np.trapz(pspec, f)) if np.isfinite(pspec).any() else float("nan")
-        m2 = (
-            float(np.trapz(pspec * f**2, f)) if np.isfinite(pspec).any() else float("nan")
-        )
-        wh = 4.0 * np.sqrt(m0)
-        wp_mean = np.sqrt(m0 / m2) if m2 and np.isfinite(m2) else float("nan")
-        ps = np.nan_to_num(pspec, nan=0.0)
-        fp = f[int(np.argmax(ps))]
-        wp_peak = 1.0 / fp if fp > 0 else float("nan")
-        rows.append(
-            {
-                BURST: bt,
-                "frequency": f.tolist(),
-                "pspec": pspec.tolist(),
-                "m0": m0,
-                "m2": m2,
-                "wh_4061": wh,
-                "wp_4060": wp_mean,
-                "wp_peak": wp_peak,
-                "water_depth": h,
-            }
-        )
-    cols = [
-        BURST,
-        "frequency",
-        "pspec",
-        "m0",
-        "m2",
-        "wh_4061",
-        "wp_4060",
-        "wp_peak",
-        "water_depth",
-    ]
-    return pd.DataFrame(rows, columns=cols)
+        return spectral_stats(f, make_tail_np(f, pnn, tailind), h)
+
+    return body
 
 
-def burst_wave_stats_elev_kernel(
-    pdf: pd.DataFrame,
-    sample_rate: float,
-    nsegs: int = 16,
-    elev_col: str = "elev",
-) -> pd.DataFrame:
-    """Per-burst wave statistics from direct sea-surface elevation
-    (core/waves.py:684-743 ``make_waves_ds_elev``): Welch PSD of the
-    elevation series, band-limited to [1/(burst_duration/32),
-    min(2 Hz, Nyquist)], Pnn = Pxx directly — no Kp transfer, no noise
-    cutoff, no f⁻⁴ tail — then the same m0/m2 → Hs/Tm/Tp stats."""
-    rows = []
-    for bt, grp in pdf.groupby(BURST, sort=True):
-        grp = grp.sort_values(SAMPLE)
-        e = grp[elev_col].to_numpy(dtype=float)
-        if len(e) < 8 or np.isnan(e).all():
-            continue
-        if np.isnan(e).any():
-            idx = np.arange(len(e))
-            good = np.isfinite(e)
-            if good.mean() < 0.9:
-                continue
-            e = np.interp(idx, idx[good], e[good])
-        nsamps = len(e)
-        nfft = max(next_power_of_2(int(nsamps / nsegs)), 8)
-        f, pxx = welch_psd(e, fs=sample_rate, nperseg=nfft)
-        # frequency band (waves.py:709-722): ≥32 whole periods per burst,
-        # ≤ lesser of 2 Hz and Nyquist
-        flo = np.round(1.0 / (nsamps / sample_rate / 32.0), 3)
+def waves_elev_body(config: dict) -> Callable[[np.ndarray], dict | None]:
+    """The per-burst body of ``make_waves_ds_elev`` (core/waves.py:684-743):
+    surface elevation → gap fill → Welch PSD band-limited to
+    [1/(burst_duration/32), min(2 Hz, Nyquist)] (:709-722) → Pnn = Pxx
+    directly, with no Kp transfer, cutoff or f⁻⁴ tail →
+    ``spectral_stats``. A burst under 8 samples, over 10% NaN or with no
+    frequency in the band is skipped."""
+    sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
+    nsegs = int(config.get("spec_nsegs", 16))
+
+    def body(e: np.ndarray) -> dict | None:
+        if len(e) < 8:
+            return None
+        e = gap_filled(e)
+        if e is None:
+            return None
+        f, pxx = welch_psd(e, fs=sample_rate, nperseg=welch_nperseg(len(e), nsegs))
+        flo = np.round(1.0 / (len(e) / sample_rate / 32.0), 3)
         fhi = min(2.0, sample_rate / 2.0)
         ind = (f >= flo) & (f <= fhi)
-        f, pnn = f[ind], pxx[ind]
-        if not len(f):
-            continue
-        m0 = float(np.trapz(pnn, f))
-        m2 = float(np.trapz(pnn * f**2, f))
-        wh = 4.0 * np.sqrt(m0)
-        wp_mean = np.sqrt(m0 / m2) if m2 and np.isfinite(m2) else float("nan")
-        fp = f[int(np.argmax(np.nan_to_num(pnn, nan=0.0)))]
-        rows.append(
-            {
-                BURST: bt,
-                "frequency": f.tolist(),
-                "pspec": pnn.tolist(),
-                "m0": m0,
-                "m2": m2,
-                "wh_4061": wh,
-                "wp_4060": wp_mean,
-                "wp_peak": 1.0 / fp if fp > 0 else float("nan"),
-                "water_depth": float("nan"),
-            }
-        )
-    cols = [
-        BURST,
-        "frequency",
-        "pspec",
-        "m0",
-        "m2",
-        "wh_4061",
-        "wp_4060",
-        "wp_peak",
-        "water_depth",
-    ]
-    return pd.DataFrame(rows, columns=cols)
+        if not ind.any():
+            return None
+        return spectral_stats(f[ind], pxx[ind], float("nan"))
+
+    return body
 
 
 def make_waves_ds_elev(
@@ -279,21 +270,9 @@ def make_waves_ds_elev(
 ) -> DataFrame:
     """Distributed make_waves_ds_elev (core/waves.py:684-743): wave
     statistics from a direct surface-elevation measurement (Geolux radar
-    ``elev``, Signature ``brangeAST``, ABSS ``brange``). Same shuffle
-    shape as the pressure chain — one Arrow batch per burst."""
-    sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
-    nsegs = int(config.get("spec_nsegs", 16))
-    slim = df.select(BURST, SAMPLE, elev_col)
-
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return burst_wave_stats_elev_kernel(
-            pdf,
-            sample_rate=sample_rate,
-            nsegs=nsegs,
-            elev_col=elev_col,
-        )
-
-    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(apply_fn, wave_stats_schema())
+    ``elev``, Signature ``brangeAST``, ABSS ``brange``), ``waves_elev_body``
+    per burst."""
+    return per_burst(df, [elev_col], waves_elev_body(config), wave_stats_schema())
 
 
 def puv_quick_np(
@@ -459,54 +438,38 @@ def sensor_heights(config: dict) -> tuple[float, float]:
     return zp, float(zuv) if zuv is not None else zp
 
 
-def make_puv_kernel(
-    config: dict,
-    pressure_col: str = "P_1ac",
-    u_col: str = "u_1205",
-    v_col: str = "v_1206",
-) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """The per-burst body of ``make_puv_ds`` built from ``config``: a
-    pandas frame of samples (one burst under ``applyInPandas``; a direct
-    caller may pass several) → one ``puv_schema`` row per burst. Bursts under 32 samples or with all-NaN pressure are
-    skipped. Depth per burst = mean pressure + sensor height."""
+def puv_body(config: dict) -> Callable[..., dict | None]:
+    """The per-burst body of ``make_puv_ds``: ``puv_quick_np`` on
+    (p, u, v) with depth = mean pressure + sensor height, NaN pressure
+    filled with that mean and NaN velocity with 0. A burst under 32
+    samples or with all-NaN pressure is skipped."""
     fs = 1.0 / float(config.get("sample_interval", 1.0))
     zp, zuv = sensor_heights(config)
     fft_length = int(config.get("puv_fft_length", 512))
 
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for bt, grp in pdf.groupby(BURST, sort=True):
-            grp = grp.sort_values(SAMPLE)
-            p = grp[pressure_col].to_numpy(dtype=float)
-            u = grp[u_col].to_numpy(dtype=float)
-            v = grp[v_col].to_numpy(dtype=float)
-            if len(p) < 32 or np.isnan(p).all():
-                continue
-            depth = float(np.nanmean(p)) + zp
-            out = puv_quick_np(
-                np.nan_to_num(p, nan=float(np.nanmean(p))),
-                np.nan_to_num(u),
-                np.nan_to_num(v),
-                depth,
-                zp,
-                zuv,
-                fs,
-                fft_length=fft_length,
-            )
-            out[BURST] = bt
-            rows.append(out)
-        return pd.DataFrame(rows, columns=[BURST] + _PUV_FIELDS)
+    def body(p: np.ndarray, u: np.ndarray, v: np.ndarray) -> dict | None:
+        if len(p) < 32 or np.isnan(p).all():
+            return None
+        p_mean = float(np.nanmean(p))
+        return puv_quick_np(
+            np.nan_to_num(p, nan=p_mean),
+            np.nan_to_num(u),
+            np.nan_to_num(v),
+            p_mean + zp,
+            zp,
+            zuv,
+            fs,
+            fft_length=fft_length,
+        )
 
-    return apply_fn
+    return body
 
 
 def make_puv_ds(df: DataFrame, config: dict) -> DataFrame:
     """Distributed PUV (wrapper semantics of waves.py:1847-1989 /
-    sig/nc2waves.py:550-599): shuffle on burst key, ``make_puv_kernel``
-    (puv_quick per burst) in Arrow batches."""
-    slim = df.select(BURST, SAMPLE, "P_1ac", "u_1205", "v_1206")
-    kernel = make_puv_kernel(config)
-    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(kernel, puv_schema())
+    sig/nc2waves.py:550-599): ``puv_body`` per burst."""
+    cols = ["P_1ac", "u_1205", "v_1206"]
+    return per_burst(df, cols, puv_body(config), puv_schema())
 
 
 def wave_stats_schema() -> StructType:
@@ -525,64 +488,35 @@ def wave_stats_schema() -> StructType:
     )
 
 
-def make_waves_kernel(config: dict, pressure_col: str = "P_1ac") -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """The per-burst body of ``make_waves_ds`` built from ``config``:
-    ``burst_wave_stats_kernel`` over a pandas frame of samples (one burst
-    under ``applyInPandas``; a direct caller may pass several) → one
-    ``wave_stats_schema`` row per burst it keeps."""
-    sample_rate = 1.0 / float(config.get("sample_interval", 1.0))
-    z, _ = sensor_heights(config)
-    nsegs = int(config.get("spec_nsegs", 16))
-    noise = float(config.get("wave_fractional_noise", 0.9))
-    fcut = config.get("wave_fcut")
-    kpmin = config.get("wave_Kpmin")
-
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return burst_wave_stats_kernel(
-            pdf,
-            sample_rate=sample_rate,
-            sensor_height=z,
-            nsegs=nsegs,
-            noise=noise,
-            fcut=fcut,
-            kpmin=kpmin,
-            pressure_col=pressure_col,
-        )
-
-    return apply_fn
-
-
 def make_waves_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
-    """Distributed make_waves_ds (core/waves.py:571-681): shuffle on the
-    burst key, spectral chain per burst (``make_waves_kernel``) inside
-    Arrow batches. Only the (burst, sample, pressure) columns cross into
-    Python — project before grouping so the Arrow transfer is minimal."""
-    slim = df.select(BURST, SAMPLE, pressure_col)
-    kernel = make_waves_kernel(config, pressure_col)
-    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(kernel, wave_stats_schema())
+    """Distributed make_waves_ds (core/waves.py:571-681): ``waves_body``
+    per burst; only the (burst, sample, pressure) columns cross into
+    Python."""
+    return per_burst(df, [pressure_col], waves_body(config), wave_stats_schema())
+
+
+def waves_puv_body(config: dict) -> Callable[..., dict | None]:
+    """The per-burst body of ``make_waves_puv_ds``: the ``waves_body``
+    fields merged with the ``puv_body`` fields, or with NaN PUV fields
+    (null in the zone) when PUV skips a burst the wave chain keeps."""
+    waves, puv = waves_body(config), puv_body(config)
+    no_puv = dict.fromkeys(_PUV_FIELDS, float("nan"))
+
+    def body(p: np.ndarray, u: np.ndarray, v: np.ndarray) -> dict | None:
+        row = waves(p)
+        if row is None:
+            return None
+        return {**row, **(puv(p, u, v) or no_puv)}
+
+    return body
 
 
 def make_waves_puv_ds(df: DataFrame, config: dict, pressure_col: str = "P_1ac") -> DataFrame:
     """``make_waves_ds`` LEFT JOIN ``make_puv_ds`` on ``burst_time`` as
     one shuffle and one Arrow stage (the reference's nc2waves with
-    ``puv: true``, sig/nc2waves.py:550-599): the (burst, sample, p, u, v)
-    projection is shuffled once, and each batch runs
-    ``make_waves_kernel`` and ``make_puv_kernel`` and left-merges the
-    PUV row onto the wave row. A burst the wave chain keeps but PUV
-    skips (< 32 samples) carries null PUV columns. Only the pressure
-    column varies between callers; the others are the clean zone's
-    fixed names."""
-    slim = df.select(BURST, SAMPLE, pressure_col, "u_1205", "v_1206")
-    waves = make_waves_kernel(config, pressure_col)
-    puv = make_puv_kernel(config, pressure_col)
-
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = waves(pdf)
-        # reindex, not merge: an empty PUV frame has an object-typed key
-        matched = puv(pdf).set_index(BURST).reindex(out[BURST])
-        for name in _PUV_FIELDS:
-            out[name] = matched[name].to_numpy(dtype=float)
-        return out
-
+    ``puv: true``, sig/nc2waves.py:550-599): ``waves_puv_body`` per
+    burst. Only the pressure column varies between callers; the others
+    are the clean zone's fixed names."""
+    cols = [pressure_col, "u_1205", "v_1206"]
     schema = StructType(wave_stats_schema().fields + puv_schema().fields[1:])
-    return pin_grouping(slim, BURST).groupBy(BURST).applyInPandas(apply_fn, schema)
+    return per_burst(df, cols, waves_puv_body(config), schema)

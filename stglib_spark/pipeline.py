@@ -503,12 +503,26 @@ def run_clean(spark: SparkSession, config: dict[str, Any]) -> str:
     clean = observed.select(
         *[c for c in result.df.columns if not c.startswith("__")]
     )
+    # drop_vars (core/qaqc.py:677-693): the listed variables leave the
+    # zone after the rule engine; a name the zone lacks is recorded
+    drop_vars = config.get("drop_vars") or []
+    if isinstance(drop_vars, str):
+        drop_vars = [drop_vars]
+    dropped = [c for c in drop_vars if c in clean.columns]
+    if dropped:
+        clean = clean.drop(*dropped)
 
     def _audit_notes() -> None:
         for key, count in get_counts().items():
             var, rule = key.split(":", 1)
             history.insert_note(var, f"{rule}: {count} values nulled.")
         history.insert_history("Applied QA/QC rule engine.")
+        if drop_vars:
+            absent = [c for c in drop_vars if c not in dropped]
+            history.insert_history(
+                f"Dropped variables {dropped} (drop_vars); not in the "
+                f"dataset: {absent}."
+            )
 
     split = "profile" if config.get("split_profiles") else None
     path = _write_zone(
@@ -980,9 +994,7 @@ def export_diwasp_spec(spark: SparkSession, config: dict[str, Any]) -> str:
         .orderBy("burst_time")
         .collect()
     )
-    xaxisdir = float(
-        config.get("diwasp_xdir", config.get("diwasp_xaxisdir", 90.0))
-    )
+    xaxisdir = float(config.get("diwasp_xdir", 90.0))
     out_dir = _output_path(config, "_spec")
     os.makedirs(out_dir, exist_ok=True)
     name = config.get("filename", "deployment")

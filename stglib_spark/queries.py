@@ -10986,7 +10986,7 @@ def wave_elev_stats_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 2..4, and the trapezoid moments m0/m2 → Hs/Tm/Tp collapse to
     3-term closed forms DuckDB evaluates by direct summation. The Spark
     side runs the REAL engine chain (make_waves_ds_elev →
-    burst_wave_stats_elev_kernel — the same rfft path the Geolux radar /
+    waves_elev_body — the same rfft path the Geolux radar /
     Signature brangeAST products ride, reference core/waves.py:684-743)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy(F.date_trunc("day", F.col("ts"))).orderBy(

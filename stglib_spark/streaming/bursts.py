@@ -362,7 +362,7 @@ def streaming_diff_gate(
 def _burst_window_kernel(
     events: DataFrame,
     value_cols: list[str],
-    kernel: Callable,
+    body: Callable,
     out_schema: StructType,
     burst_seconds: int,
     watermark: str,
@@ -371,12 +371,11 @@ def _burst_window_kernel(
     """The state machinery of the per-burst twins: each burst's
     (``time_col``, *``value_cols``) samples accumulate in keyed state
     per ``burst_seconds`` window; when the watermark passes the burst
-    end, ``kernel`` — a batch operator's per-burst body — runs once
-    over them as one pandas batch (``burst_time`` = window start,
-    ``sample`` = rank in event time, one column per ``value_cols``)
-    and its rows are projected onto ``out_schema`` with ``n``, the
-    number of samples held. A burst the kernel skips emits nothing,
-    exactly as in batch.
+    end, ``body`` — a batch operator's per-burst body — runs once on
+    them, one float array per ``value_cols`` in event-time order, and
+    its fields become one ``out_schema`` row with ``burst_time`` = the
+    window start and ``n``, the number of samples held. A burst the
+    body skips emits nothing, exactly as in batch.
 
     Scale shape: state per open burst = that burst's samples (bounded by
     burst length × sample rate, the same bound the batch Arrow group
@@ -393,25 +392,19 @@ def _burst_window_kernel(
         + [StructField(f"v{i}", ArrayType(DoubleType())) for i in range(len(value_cols))]
     )
     step_us = int(burst_seconds) * 1_000_000
+    names = out_schema.fieldNames()
 
     def close(key, pdf_iter, state):
         burst_us = int(key[0])  # numpy int64 breaks the JSON state codec
         if state.hasTimedOut:
             ts_us, *vals = state.get
             order = np.argsort(np.asarray(ts_us))
-            pdf = pd.DataFrame(
-                {
-                    "burst_time": pd.to_datetime(burst_us, unit="us"),
-                    "sample": np.arange(len(order)),
-                    **{
-                        c: np.asarray(v, dtype=float)[order]
-                        for c, v in zip(value_cols, vals)
-                    },
-                }
-            )
             state.remove()
-            out = kernel(pdf).assign(n=len(order))
-            yield out[out_schema.fieldNames()]
+            row = body(*(np.asarray(v, dtype=float)[order] for v in vals))
+            if row is not None:
+                burst_time = pd.to_datetime(burst_us, unit="us")
+                row = {**row, "burst_time": burst_time, "n": len(order)}
+                yield pd.DataFrame([row], columns=names)
             return
         ts_us, *vals = state.get if state.exists else ([],) * (1 + len(value_cols))
         ts_us, vals = list(ts_us), [list(v) for v in vals]
@@ -450,23 +443,22 @@ def streaming_wave_stats(
     """Streaming twin of the per-burst spectral wave statistics
     (``make_waves_ds``, core/waves.py:571-681): samples accumulate in
     keyed state per burst window (``_burst_window_kernel``); when the
-    watermark passes the burst end the batch body
-    ``waves.make_waves_kernel`` runs over them and one row of wave
-    statistics (burst_time, wh_4061, wp_4060, wp_peak, m0, n) is
-    emitted — batch/stream parity by construction, not by
-    re-implementation."""
+    watermark passes the burst end the batch body ``waves.waves_body``
+    runs on them and one row of wave statistics (burst_time, wh_4061,
+    wp_4060, wp_peak, m0, n) is emitted — batch/stream parity by
+    construction, not by re-implementation."""
     from pyspark.sql.types import DoubleType, LongType, StructField, TimestampType
 
-    from stglib_spark.operators.waves import make_waves_kernel
+    from stglib_spark.operators.waves import waves_body
 
     out_schema = StructType(
         [StructField("burst_time", TimestampType())]
         + [StructField(c, DoubleType()) for c in ("wh_4061", "wp_4060", "wp_peak", "m0")]
         + [StructField("n", LongType())]
     )
-    kernel = make_waves_kernel(config or {}, pressure_col)
     return _burst_window_kernel(
-        events, [pressure_col], kernel, out_schema, burst_seconds, watermark, time_col
+        events, [pressure_col], waves_body(config or {}), out_schema,
+        burst_seconds, watermark, time_col,
     )
 
 
@@ -483,20 +475,19 @@ def streaming_puv(
     """Streaming twin of the PUV directional wave analysis
     (``make_puv_ds`` / core/waves.py:1024-1351): p/u/v triplets
     accumulate in keyed state per burst (``_burst_window_kernel``); the
-    batch body ``waves.make_puv_kernel`` — its burst guard included —
-    runs when the watermark closes the burst. Same state bound as
+    batch body ``waves.puv_body`` — its burst guard included — runs when
+    the watermark closes the burst. Same state bound as
     ``streaming_wave_stats`` (one open burst's samples × 3 channels)."""
     from pyspark.sql.types import DoubleType, LongType, StructField, TimestampType
 
-    from stglib_spark.operators.waves import _PUV_FIELDS, make_puv_kernel
+    from stglib_spark.operators.waves import _PUV_FIELDS, puv_body
 
     out_schema = StructType(
         [StructField("burst_time", TimestampType()), StructField("n", LongType())]
         + [StructField(name, DoubleType()) for name in _PUV_FIELDS]
     )
-    kernel = make_puv_kernel(config or {}, pressure_col, u_col, v_col)
     return _burst_window_kernel(
-        events, [pressure_col, u_col, v_col], kernel, out_schema,
+        events, [pressure_col, u_col, v_col], puv_body(config or {}), out_schema,
         burst_seconds, watermark, time_col,
     )
 

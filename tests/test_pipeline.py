@@ -1096,6 +1096,28 @@ def test_scale_offset_calibration(spark, tmp_path):
     assert any("offset" in n for n in meta["notes"].get("Pressure", []))
 
 
+def test_drop_vars_leave_the_clean_zone(spark, tmp_path):
+    """drop_vars (core/qaqc.py:677-693): a listed variable the zone
+    carries is gone from the clean zone; the History names it and the
+    listed name the zone does not carry."""
+    cfg = {
+        "output_dir": str(tmp_path),
+        "filename": "drop",
+        "drop_vars": ["Tx_1211", "Turb"],
+    }
+    raw = spark.createDataFrame(
+        [("2021-06-01 00:00:00", 10.0, 20.0), ("2021-06-01 00:01:00", 12.0, 21.0)],
+        "ts string, Pressure double, Tx_1211 double",
+    ).select(F.col("ts").cast("timestamp").alias("time"), "Pressure", "Tx_1211")
+    raw.write.mode("overwrite").parquet(_zone_path(cfg, "raw"))
+    path = run_clean(spark, cfg)
+    cols = spark.read.parquet(path).columns
+    assert "Tx_1211" not in cols and "Pressure" in cols
+    meta = json.load(open(path + ".meta.json"))
+    line = next(h for h in meta["history"] if "drop_vars" in h)
+    assert "['Tx_1211']" in line and "['Turb']" in line
+
+
 def test_marotte_clean_spd2uv_and_correct_mag_var(spark, tmp_path):
     """Tilt-current-meter clean path (mar.py:88-96): u/v from
     speed/heading, CF renames, magvar ONLY when correct_mag_var TRUE."""

@@ -232,25 +232,21 @@ def test_wave_stats_recovers_known_hs():
     """FIXTURES invariant 1: Welch→Hs on a monochromatic wave recovers the
     injected significant height within rtol 1e-2 (test_stglib.py:338-343
     tolerance); Tp exact."""
-    from stglib_spark.operators.waves import burst_wave_stats_kernel, qkfs_np
+    from stglib_spark.operators.waves import qkfs_np, waves_body
 
     fs, T, a = 4.0, 8.0, 0.5
     t = np.arange(4096) / fs
     p = 10.0 + a * np.sin(2 * np.pi / T * t)
-    pdf = pd.DataFrame(
-        {
-            "burst_time": pd.Timestamp("2024-01-01"),
-            "sample": np.arange(len(t)),
-            "P_1ac": p,
-        }
+    body = waves_body(
+        {"sample_interval": 1 / fs, "pressure_sensor_height": 0.5, "wave_Kpmin": 0.1}
     )
-    out = burst_wave_stats_kernel(pdf, sample_rate=fs, sensor_height=0.5, kpmin=0.1)
+    out = body(p)
     h = 10.5
     k = qkfs_np(np.array([2 * np.pi / T]), h)[0]
     kp = np.cosh(k * 0.5) / np.cosh(k * h)
     expected_hs = 4 * np.sqrt(a**2 / 2) / kp
-    assert abs(out.wh_4061[0] - expected_hs) / expected_hs < 1e-2
-    assert out.wp_peak[0] == pytest.approx(T)
+    assert abs(out["wh_4061"] - expected_hs) / expected_hs < 1e-2
+    assert out["wp_peak"] == pytest.approx(T)
 
 
 def test_puv_variance_preservation():
@@ -271,22 +267,15 @@ def test_wave_stats_elev_recovers_known_hs():
     monochromatic surface elevation of amplitude a gives Hs = 4·√(a²/2)
     directly; Tp exact; frequency band clipped to ≥32 periods per burst
     and ≤ min(2 Hz, Nyquist)."""
-    from stglib_spark.operators.waves import burst_wave_stats_elev_kernel
+    from stglib_spark.operators.waves import waves_elev_body
 
     fs, T, a = 4.0, 8.0, 0.5
     t = np.arange(4096) / fs
     e = a * np.sin(2 * np.pi / T * t)
-    pdf = pd.DataFrame(
-        {
-            "burst_time": pd.Timestamp("2024-01-01"),
-            "sample": np.arange(len(t)),
-            "elev": e,
-        }
-    )
-    out = burst_wave_stats_elev_kernel(pdf, sample_rate=fs)
+    out = waves_elev_body({"sample_interval": 1 / fs})(e)
     expected_hs = 4 * np.sqrt(a**2 / 2)
-    assert abs(out.wh_4061[0] - expected_hs) / expected_hs < 1e-2
-    assert out.wp_peak[0] == pytest.approx(T)
-    f = np.array(out.frequency[0])
+    assert abs(out["wh_4061"] - expected_hs) / expected_hs < 1e-2
+    assert out["wp_peak"] == pytest.approx(T)
+    f = np.array(out["frequency"])
     assert f.min() >= 1.0 / (4096 / fs / 32.0) - 1e-9
     assert f.max() <= 2.0

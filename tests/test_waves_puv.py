@@ -129,3 +129,48 @@ def test_fused_waves_puv_equals_waves_left_join_puv(spark):
                 assert g[c] == w[c] or (np.isnan(g[c]) and np.isnan(w[c])), c
             else:
                 assert g[c] == w[c], c
+
+
+@pytest.mark.parametrize("kind", ["pressure", "elevation", "diwasp_pres"])
+def test_gap_gate_shared_by_the_bodies(kind):
+    """The pressure, elevation and DIWASP ``pres`` bodies share one gap
+    gate: a burst with 15% NaN samples yields no row, and one with 5%
+    NaN yields the row of its linearly filled series."""
+    from stglib_spark.operators.dirspec import diwasp_body
+    from stglib_spark.operators.waves import waves_body, waves_elev_body
+
+    cfg = {
+        "sample_interval": 0.5,
+        "pressure_sensor_height": 0.5,
+        "wave_Kpmin": 0.2,
+        "diwasp": "pres",
+        "diwasp_method": "DFTM",
+        "diwasp_nfft": 64,
+        "diwasp_nfreqs": 16,
+        "diwasp_ndirs": 12,
+        "diwasp_dres": 36,
+    }
+    n = 512
+    x = 0.5 * np.cos(2 * np.pi * np.arange(n) * 0.5 / 8.0)
+    if kind == "elevation":
+        body = waves_elev_body(cfg)
+    else:
+        x = x + 9.5
+        body = waves_body(cfg)
+    if kind == "diwasp_pres":
+        fit, still = diwasp_body(cfg), np.zeros(n)
+        body = lambda p: fit(p, still, still)  # noqa: E731
+    rng = np.random.default_rng(3)
+    idx = np.arange(n)
+
+    def holed(frac):
+        y = x.copy()
+        y[rng.choice(idx[1:-1], int(frac * n), replace=False)] = np.nan
+        return y
+
+    assert body(holed(0.15)) is None
+    y = holed(0.05)
+    good = np.isfinite(y)
+    row = body(y)
+    assert row is not None
+    np.testing.assert_equal(row, body(np.interp(idx, idx[good], y[good])))
